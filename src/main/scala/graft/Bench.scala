@@ -303,10 +303,15 @@ object Bench {
     // per-key diffs survive. Guarded so a scratch run (a /tmp fixture,
     // ANOTHER SCALE FACTOR, a different cwd) can never clobber the
     // committed sf0.1 artifact — see [[benchLocalEligible]].
-    if (benchLocalEligible(sfDir,
-        java.nio.file.Files.exists(java.nio.file.Paths.get("build.sbt")), cpus))
+    // A contract-dir run skipped only for its core count says so on
+    // stderr, so a missing artifact update is never silent.
+    val cwdHasBuild = java.nio.file.Files.exists(java.nio.file.Paths.get("build.sbt"))
+    if (benchLocalEligible(sfDir, cwdHasBuild, cpus))
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_LOCAL.json"), json.getBytes("UTF-8"))
+    else if (benchLocalEligible(sfDir, cwdHasBuild, "32"))
+      System.err.println(s"[bench] BENCH_LOCAL.json not written: local[$cpus], " +
+        "the committed artifact is pinned to 32 cores")
     println(json)
     spark.stop()
   }

@@ -38,14 +38,7 @@ object Tables {
     // Written timestamps must be µs (DuckDB's native unit).
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    graft.functions.SortedLongIntersectSize.register(spark)
-    graft.functions.MinHashSignature.register(spark)
-    graft.functions.MinHashSketchAgg.register(spark)
-    graft.functions.GramMatrixAgg.register(spark)
-    graft.functions.CharBigramRunCounts.register(spark)
-    graft.functions.VecMath.register(spark)
-    graft.functions.SimHash.register(spark)
-    graft.functions.Bloom.register(spark)
+    graft.functions.FunctionTable.register(spark)
     // Driver-built sessions don't set spark.sql.extensions — attach the
     // optimizer rule at runtime (idempotent; extraOptimizations run at
     // the end of the optimizer batch list).

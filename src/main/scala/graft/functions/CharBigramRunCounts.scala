@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -77,9 +76,4 @@ object CharBigramRunCounts {
     }
     new GenericArrayData(counts)
   }
-
-  /** Register `char_bigram_run_counts(text)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_bigram_run_counts", exprs => CharBigramRunCounts(exprs(0)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -145,11 +144,4 @@ object GramMatrixAgg {
       dim = newDim
     }
   }
-
-  /** Register as `gram_matrix_agg(longArray)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_matrix_agg",
-      exprs => GramMatrixAgg(exprs.head),
-      "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -43,14 +42,4 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object MinHashSignature {
-  /** Register as `minhash_signature(arr, nHashes)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature",
-      exprs => MinHashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]),
-      "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
@@ -81,14 +80,4 @@ case class MinHashSketchAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren.head)
-}
-
-object MinHashSketchAgg {
-  /** Register as `minhash_sketch(tokenHash, k)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sketch",
-      exprs => MinHashSketchAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]),
-      "scala_udf")
 }

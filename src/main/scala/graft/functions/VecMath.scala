@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
@@ -194,16 +193,5 @@ object VecMath {
     }
     if (bad.isEmpty) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(s"$fn: ${bad.mkString("; ")}")
-  }
-
-  /** Register `vec_dot(a, b)`, `vec_norm_sq(a)`, `vec_l2q_dist(q, svec, n)`
-    * (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_norm_sq", exprs => VecNormSq(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_l2q_dist", exprs => VecL2QDist(exprs(0), exprs(1), exprs(2)), "scala_udf")
   }
 }

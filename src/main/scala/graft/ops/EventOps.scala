@@ -16,8 +16,9 @@ object EventOps extends OpGroup {
   /** (priority, month-index, revenue-cents) monthly rollup shared by the
     * two trend-test ops (`ts_mann_kendall`, `ts_theil_sen`) — both sides
     * of each op's pair self-join read it, so without materialization the
-    * orders scan would run four times per key. Same one-checkpoint /
-    * Caches-release shape as PipelineOps.bigramFrame.
+    * orders scan would run four times per key. One eager checkpoint,
+    * released by Caches once both keys have run (the shape of
+    * PipelineOps.spanFrame).
     */
   private val mkMonthlyCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]

@@ -409,38 +409,11 @@ object PipelineOps extends OpGroup {
       sigs
     })
 
-  /** (doc_id, lang, k) exploded bigram keys of text_bigram_likelihood —
-    * the frame feeds BOTH sides of the model⋈scoring self-join, and
-    * without materialization Spark recomputes the split/md5/explode over
-    * the full corpus once per branch (the round-7 verdict measured the
-    * recompute at up to 8.5 s of the 10 s key budget at sf0.1). One
-    * eager localCheckpoint makes both branches read the compact 3-column
-    * frame; Caches releases it the moment the key reports done. The
-    * repartition spreads the explode across all cores (documents.parquet
-    * is a single file → one input partition otherwise).
-    */
-  private val bigramCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def bigramFrame(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.Caches.memo(bigramCache, (s, dir), {
-      val bg = Tables.t(s, dir, "documents")
-        .withColumn("w", split(col("text"), " "))
-        .filter(size(col("w")) >= 2)
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("lang"), explode(expr(
-          "transform(sequence(1, size(w) - 1), i -> substring(md5(concat_ws(' ', slice(w, i, 2))), 1, 16))"))
-          .as("k"))
-        .localCheckpoint(true)
-      graft.Caches.track(s, dir, "bigram_frame", Set("text_bigram_likelihood"),
-        () => bigramCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      bg
-    })
-
   /** (doc_id, k) exploded 8-token span keys shared by text_dup_spans and
-    * text_span_novelty — same double-branch shape as [[bigramFrame]]
-    * (span→group aggregates and the per-doc join both consume it), same
-    * one-checkpoint fix; released once both consumer keys have run.
+    * text_span_novelty: the span→group aggregates and the per-doc join
+    * both consume it, so without materialization Spark recomputes the
+    * split/md5/explode over the full corpus once per branch. One eager
+    * checkpoint, released once both consumer keys have run.
     */
   private val spanCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
@@ -1316,59 +1289,66 @@ object PipelineOps extends OpGroup {
       .groupBy("label")
       .agg(expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)").as("cemb"))
 
+  /** Largest centroid table [[kmeansLoop]] folds back into its rounds:
+    * k above this fails the loop instead of collecting and broadcasting
+    * an unbounded literal.
+    */
+  private[graft] val KmeansMaxCentroids = 4096
+
   /** 3 Lloyd rounds over a quantized frame (vec_id, label, qv) → the
     * final (vec_id, c) assignment, eagerly checkpointed. Seeds from the
-    * label column (k = |labels|). Per round: one scan + a (k×dim)-bounded
-    * centroid shuffle; each round's assignment is EAGERLY
-    * localCheckpointed so the plan does not grow with iterations, and the
-    * previous round's blocks are released the moment the next
-    * materializes (a lazy next would release lineage-truncated blocks it
-    * still needs). Distances are compare-only doubles computed
+    * label column, so k is the seed label vocabulary.
+    *
+    * The centroid table is k×dim model state: each round `collect()`s it
+    * to the driver — k rows of (cell, dim longs, count), i.e. k×dim
+    * longs — and folds it back as an array literal, so each round is ONE
+    * job: a map-side assignment expression feeding the `vec_sum` centroid
+    * sums, whose only exchange is one partial buffer per (task, cell).
+    * A seed vocabulary above [[KmeansMaxCentroids]] fails with an error
+    * naming the bound. Only the final assignment checkpoints, which also
+    * severs the returned frame's lineage from the (shared) quantized
+    * corpus, so the caller's releaseCheckpoint frees exactly its own
+    * blocks. Distances are compare-only doubles computed
     * index-order-identically on both engines (vec_kmeans_step's
-    * determinism argument). The caller owns releasing the RETURNED
-    * frame's checkpoint.
+    * determinism argument).
     */
   private[graft] def kmeansLoop(
       q: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    // 3 Lloyd rounds. The centroid table is k×dim MODEL state (k = the
-    // label vocabulary that seeds the loop) — collected per round (the
-    // thrMap / occupied-levels pattern: parameters, never per-row data)
-    // and folded back as an array literal, so each round is ONE job: a
-    // map-side assignment expression feeding the partial-aggregating
-    // centroid sums, whose only exchange is k×dim rows. The old shape
-    // paid per round a corpus SortMergeJoin (q exchanged + sorted
-    // against the assignment checkpoint), a broadcast build, a corpus
-    // crossJoin + argmin exchange and an assignment checkpoint. Only
-    // the FINAL assignment checkpoints — which also severs the returned
-    // frame's lineage from the (shared) quantized corpus, so callers'
-    // releaseCheckpoint frees exactly their own blocks.
-    def centsOf(df: org.apache.spark.sql.DataFrame,
-        assignCol: String): Seq[(Int, Seq[Long], Long)] =
-      df.select(col(assignCol).as("clabel"), posexplode(col("qv")).as(Seq("pos", "v")))
-        .groupBy("clabel", "pos")
-        .agg(sum("v").as("sv"), count(lit(1)).as("n"))
-        .groupBy("clabel")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), s -> s.sv)").as("svec"),
-          max("n").as("n"))
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Long](1), r.getLong(2))).toSeq
-    // argmin by (dist, clabel) over the literal centroids — array_min on
-    // structs is the same lexicographic ordering as the old
-    // min(struct(dist, clabel)) aggregate, so the tie-break is
-    // byte-identical. The literal rides in as a column (SQL lambda
-    // aliases do not survive the Column API).
-    def withAssign(cents: Seq[(Int, Seq[Long], Long)],
-        out: String): org.apache.spark.sql.DataFrame =
-      q.withColumn("cents", typedLit(cents))
-        .withColumn(out, expr(
-          """array_min(transform(cents, c ->
-               struct(vec_l2q_dist(qv, c._2, c._3) AS dist, c._1 AS clabel))).clabel"""))
-        .drop("cents")
-    var cents = centsOf(q, "label")
+    def collectCents(sums: org.apache.spark.sql.DataFrame): Seq[(Int, Seq[Long], Long)] = {
+      val cents = sums.collect()
+      require(cents.length <= KmeansMaxCentroids,
+        s"kmeansLoop: ${cents.length} centroids exceed KmeansMaxCentroids=" +
+          s"$KmeansMaxCentroids (k is the seed label vocabulary)")
+      cents.map(r => (r.getInt(0), r.getSeq[Long](1), r.getLong(2))).toSeq
+    }
+    var cents = collectCents(vecSums(q, "qv", "label"))
     for (_ <- 1 to 2)
-      cents = centsOf(withAssign(cents, "ac"), "ac")
-    withAssign(cents, "c").select("vec_id", "c").localCheckpoint(true)
+      cents = collectCents(kmeansRound(q, cents))
+    kmeansAssign(q, cents, "c").select("vec_id", "c").localCheckpoint(true)
   }
+
+  /** `q` plus column `out`: each vector's nearest centroid of the literal
+    * table `cents` (cell, Σqv, n). argmin by (dist, clabel) — array_min
+    * on structs is the same lexicographic ordering as a
+    * min(struct(dist, clabel)) aggregate, so ties go to the lowest cell.
+    * The literal rides in as a column (SQL lambda aliases do not survive
+    * the Column API).
+    */
+  private def kmeansAssign(q: org.apache.spark.sql.DataFrame,
+      cents: Seq[(Int, Seq[Long], Long)], out: String): org.apache.spark.sql.DataFrame =
+    q.withColumn("cents", typedLit(cents))
+      .withColumn(out, expr(
+        """array_min(transform(cents, c ->
+             struct(vec_l2q_dist(qv, c._2, c._3) AS dist, c._1 AS clabel))).clabel"""))
+      .drop("cents")
+
+  /** One Lloyd round of [[kmeansLoop]]: (cell, svec, n) centroid sums of
+    * `q` re-assigned against `cents` — factored so [[innerProbes]] dumps
+    * the exact round plan.
+    */
+  private[graft] def kmeansRound(q: org.apache.spark.sql.DataFrame,
+      cents: Seq[(Int, Seq[Long], Long)]): org.apache.spark.sql.DataFrame =
+    vecSums(kmeansAssign(q, cents, "ac"), "qv", "ac")
 
   /** The 1e-3-quantized corpus (vec_id, label, qv). LAZY checkpoint
     * (round-9 verdict item 6): q truncates lineage + caches after its
@@ -1446,13 +1426,23 @@ object PipelineOps extends OpGroup {
   private[graft] def trainedCellSums(
       qv: org.apache.spark.sql.DataFrame,
       assign: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    qv.join(assign, "vec_id")
-      .select(col("c"), posexplode(col("qv")).as(Seq("pos", "v")))
-      .groupBy("c", "pos")
-      .agg(sum("v").as("sv"), count(lit(1)).as("n"))
-      .groupBy("c")
-      .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), s -> s.sv)").as("svec"),
-        max("n").as("n"))
+    vecSums(qv.join(assign, "vec_id"), "qv", "c")
+
+  /** (keys…, svec, n): per group the exact element-wise BIGINT sum of the
+    * long-vector column `vec` (`vec_sum`, [[graft.functions.VecSumAgg]])
+    * and the count of rows with at least one element — one
+    * partial-aggregating exchange. Null and empty vectors are dropped
+    * first, so a group made only of them disappears, as under the
+    * posexplode → (key, pos) sum → regroup form this replaced. The drop
+    * sits in the map-side stage; dropping n = 0 groups after the
+    * aggregate instead costs one more generated stage per call site.
+    */
+  private[graft] def vecSums(
+      df: org.apache.spark.sql.DataFrame, vec: String,
+      keys: String*): org.apache.spark.sql.DataFrame =
+    df.filter(size(col(vec)) > 0)
+      .groupBy(keys.map(col): _*)
+      .agg(expr(s"vec_sum($vec)").as("svec"), count(lit(1)).as("n"))
 
   /** (c, cemb) sv/n double centroids from the exact-integer sidecar —
     * bit-identical whether the sidecar came from the in-session frames
@@ -4019,14 +4009,7 @@ object PipelineOps extends OpGroup {
         val e = Tables.t(s, dir, "embeddings")
         val qemb = e.filter(col("vec_id") === 0).select(col("embedding").as("qemb"))
         val (qv, assign, _) = trainedCellRoute(s, dir)
-        val cent = qv.join(assign, "vec_id")
-          .select(col("c"), posexplode(col("qv")).as(Seq("pos", "v")))
-          .groupBy("c", "pos")
-          .agg(sum("v").as("sv"), count(lit(1)).as("n"))
-          .groupBy("c")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), s -> s.sv)").as("svec"),
-            max("n").as("n"))
-          .select(col("c"), expr("transform(svec, x -> CAST(x AS DOUBLE) / n)").as("cemb"))
+        val cent = centroidsFromSums(trainedCellSums(qv, assign))
         val crk = cent.crossJoin(broadcast(qemb))
           .withColumn("cdot", expr(
             "aggregate(zip_with(cemb, qemb, (x, y) -> x * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (a, x) -> a + x)"))
@@ -4131,13 +4114,7 @@ object PipelineOps extends OpGroup {
         val sub = qv.select(col("vec_id"), col("label"), explode(expr(
             "transform(sequence(0, 7), s -> named_struct('s', s, 'sq', slice(qv, s * 8 + 1, 8)))")).as("x"))
           .select(col("vec_id"), col("label"), col("x.s").as("s"), col("x.sq").as("sq"))
-        val cb = sub
-          .select(col("s"), col("label").as("cl"), posexplode(col("sq")).as(Seq("pos", "v")))
-          .groupBy("s", "cl", "pos")
-          .agg(sum("v").as("sv"), count(lit(1)).as("n"))
-          .groupBy("s", "cl")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), t -> t.sv)").as("svec"),
-            max("n").as("n"))
+        val cb = vecSums(sub, "sq", "s", "label").withColumnRenamed("label", "cl")
         val codes = sub.join(cand, Seq("vec_id"), "leftsemi")
           .join(broadcast(cb), Seq("s"))
           .withColumn("dist", expr("vec_l2q_dist(sq, svec, n)"))
@@ -4231,13 +4208,7 @@ object PipelineOps extends OpGroup {
         val e = Tables.t(s, dir, "embeddings")
         val qemb = e.filter(col("vec_id") === 0).select(col("embedding").as("qemb"))
         val (qv, assign, topCells) = trainedCellRoute(s, dir)
-        val cent = qv.join(assign, "vec_id")
-          .select(col("c"), posexplode(col("qv")).as(Seq("pos", "v")))
-          .groupBy("c", "pos")
-          .agg(sum("v").as("sv"), count(lit(1)).as("n"))
-          .groupBy("c")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), t -> t.sv)").as("svec"),
-            max("n").as("n"))
+        val cent = trainedCellSums(qv, assign)
         val resExpr =
           "zip_with(%s, svec, (a, b) -> CAST(ROUND(CAST(a AS DOUBLE) - CAST(b AS DOUBLE) / n, 0) AS BIGINT))"
         val rq = qv.join(assign, "vec_id").join(broadcast(cent), "c")
@@ -4262,13 +4233,7 @@ object PipelineOps extends OpGroup {
         // recipe per subspace: assignments by compare-only double
         // distance, centroids exact BIGINT sums.
         def cbOf(a: org.apache.spark.sql.DataFrame) =
-          sub.join(a, Seq("vec_id", "s"))
-            .select(col("s"), col("cl"), posexplode(col("sq")).as(Seq("pos", "v")))
-            .groupBy("s", "cl", "pos")
-            .agg(sum("v").as("sv"), count(lit(1)).as("n"))
-            .groupBy("s", "cl")
-            .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), t -> t.sv)").as("svec"),
-              max("n").as("n"))
+          vecSums(sub.join(a, Seq("vec_id", "s")), "sq", "s", "cl")
         val c1r = cbOf(sub.select(col("vec_id"), col("s"), col("label").as("cl")))
         val a1r = sub.join(broadcast(c1r), Seq("s"))
           .withColumn("dist", expr("vec_l2q_dist(sq, svec, n)"))
@@ -4484,26 +4449,14 @@ object PipelineOps extends OpGroup {
         val assign = kmeansLoop(exist)
         graft.Caches.track(s, dir, "index_upsert_state", Set("vec_index_upsert"),
           () => { graft.Caches.releaseCheckpoint(exist); graft.Caches.releaseCheckpoint(assign) })
-        val cOld = exist.join(assign, "vec_id")
-          .select(col("c").as("clabel"), posexplode(col("qv")).as(Seq("pos", "v")))
-          .groupBy("clabel", "pos")
-          .agg(sum("v").as("sv"), count(lit(1)).as("n"))
-          .groupBy("clabel")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), s -> s.sv)").as("svec"),
-            max("n").as("n"))
+        val cOld = trainedCellSums(exist, assign).withColumnRenamed("c", "clabel")
         val batch = quant(e.filter(col("vec_id") % 10 === 0))
         val bAssign = batch.crossJoin(broadcast(cOld))
           .withColumn("dist", expr("vec_l2q_dist(qv, svec, n)"))
           .groupBy("vec_id")
           .agg(min(struct(col("dist"), col("clabel"))).as("m"))
           .select(col("vec_id"), col("m.clabel").as("c"))
-        val bSums = batch.join(bAssign, "vec_id")
-          .select(col("c").as("clabel"), posexplode(col("qv")).as(Seq("pos", "v")))
-          .groupBy("clabel", "pos")
-          .agg(sum("v").as("bsv"), count(lit(1)).as("bn"))
-          .groupBy("clabel")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, bsv))), s -> s.bsv)").as("bsvec"),
-            max("bn").as("bn"))
+        val bSums = trainedCellSums(batch, bAssign).toDF("clabel", "bsvec", "bn")
         val dd = "(CAST(o + b AS DOUBLE) / CAST(n + n_added AS DOUBLE)" +
           " - CAST(o AS DOUBLE) / CAST(n AS DOUBLE))"
         cOld.join(bSums, Seq("clabel"), "left")
@@ -4690,13 +4643,7 @@ object PipelineOps extends OpGroup {
         val (qv, assign) = kmeansTrained(s, dir)
         val sums = trainedCellSums(qv, assign)
         val tombs = assign.filter(col("vec_id") % 7 === 3)
-        val dSums = qv.join(tombs, "vec_id")
-          .select(col("c"), posexplode(col("qv")).as(Seq("pos", "v")))
-          .groupBy("c", "pos")
-          .agg(sum("v").as("dv"), count(lit(1)).as("dn"))
-          .groupBy("c")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, dv))), s -> s.dv)").as("dvec"),
-            max("dn").as("dn"))
+        val dSums = trainedCellSums(qv, tombs).toDF("c", "dvec", "dn")
         val dd = "(CAST(o - d AS DOUBLE) / CAST(n - n_deleted AS DOUBLE)" +
           " - CAST(o AS DOUBLE) / CAST(n AS DOUBLE))"
         val rep = sums.join(dSums, Seq("c"), "left")
@@ -5278,13 +5225,7 @@ object PipelineOps extends OpGroup {
         val q = Tables.t(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             expr("transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))").as("qv"))
-        val cent = q
-          .select(col("label").as("clabel"), posexplode(col("qv")).as(Seq("pos", "v")))
-          .groupBy("clabel", "pos")
-          .agg(sum("v").as("sv"), count(lit(1)).as("n"))
-          .groupBy("clabel")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), s -> s.sv)").as("svec"),
-            max("n").as("n"))
+        val cent = vecSums(q, "qv", "label").withColumnRenamed("label", "clabel")
         // Distance via the codegen'd vec_l2q_dist (bit-identical double
         // sequence to the interpreted HOF it replaced — ExpressionSuite
         // pins it); argmin via min(struct(dist, clabel)) — struct ordering
@@ -5360,12 +5301,8 @@ object PipelineOps extends OpGroup {
         val q = Tables.t(s, dir, "embeddings")
           .select(col("vec_id"), col("label"), col("embedding"),
             expr("transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))").as("qv"))
-        val cent = q
-          .select(col("label").as("clabel"), posexplode(col("qv")).as(Seq("pos", "v")))
-          .groupBy("clabel", "pos")
-          .agg(sum("v").as("sv"))
-          .groupBy("clabel")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), s -> s.sv)").as("svec"))
+        val cent = vecSums(q, "qv", "label")
+          .select(col("label").as("clabel"), col("svec"))
         val ranked = q.join(broadcast(cent), col("label") === col("clabel"))
           .withColumn("cnum", expr(
             "aggregate(zip_with(qv, svec, (x, y) -> x * y), CAST(0 AS BIGINT), (a, x) -> a + x)"))
@@ -6249,13 +6186,7 @@ object PipelineOps extends OpGroup {
         val sub = q.select(col("vec_id"), col("label"), explode(expr(
             "transform(sequence(0, 7), s -> named_struct('s', s, 'sq', slice(qv, s * 8 + 1, 8)))")).as("x"))
           .select(col("vec_id"), col("label"), col("x.s").as("s"), col("x.sq").as("sq"))
-        val cb = sub
-          .select(col("s"), col("label").as("cl"), posexplode(col("sq")).as(Seq("pos", "v")))
-          .groupBy("s", "cl", "pos")
-          .agg(sum("v").as("sv"), count(lit(1)).as("n"))
-          .groupBy("s", "cl")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), t -> t.sv)").as("svec"),
-            max("n").as("n"))
+        val cb = vecSums(sub, "sq", "s", "label").withColumnRenamed("label", "cl")
         // Encode: per (vec, subspace) the nearest codeword — the same
         // codegen'd distance + min(struct) argmin as vec_kmeans_step.
         val codes = sub.join(broadcast(cb), Seq("s"))
@@ -7484,15 +7415,26 @@ object PipelineOps extends OpGroup {
     // filter signal. log-probabilities are deliberately avoided: libm
     // log differs in the last ulp across engines and a float sum is
     // order-dependent — integer count mass is engine-exact and
-    // order-independent. At 100 TB: bigrams shuffle as 16-hex md5
-    // prefixes (16 B each), the model table is vocab²-bounded (broadcast
-    // or bucketed), both aggs partial map-side, scoring is one keyed
-    // equi join — linear in corpus tokens.
+    // order-independent. One pass: each exploded bigram row picks up its
+    // corpus count c₁₂ from a count window partitioned by (lang, bigram)
+    // — the model table never exists as a frame, so no self-join and no
+    // checkpoint of the exploded corpus; null-lang docs are dropped
+    // first, as the model join's null key did. The repartition spreads
+    // the split/md5/explode across all cores (documents.parquet is one
+    // file, so one input partition otherwise). At 100 TB: bigrams
+    // shuffle once as 16-hex md5 prefixes (16 B each) keyed by (lang,
+    // bigram), then the per-doc sums partial-aggregate map-side — linear
+    // in corpus tokens.
     Op("text_bigram_likelihood",
       (s, dir) => {
-        val bg = bigramFrame(s, dir)
-        val model = bg.groupBy("lang", "k").agg(count(lit(1)).as("c12"))
-        bg.join(model, Seq("lang", "k"))
+        Tables.t(s, dir, "documents")
+          .withColumn("w", split(col("text"), " "))
+          .filter(size(col("w")) >= 2 && col("lang").isNotNull)
+          .repartition(s.sparkContext.defaultParallelism)
+          .select(col("doc_id"), col("lang"), explode(expr(
+            "transform(sequence(1, size(w) - 1), i -> substring(md5(concat_ws(' ', slice(w, i, 2))), 1, 16))"))
+            .as("k"))
+          .withColumn("c12", count(lit(1)).over(Window.partitionBy("lang", "k")))
           .groupBy("doc_id", "lang")
           .agg(count(lit(1)).as("n_bigrams"), sum("c12").as("freq_mass"))
           .withColumn("avg_freq",
@@ -11005,9 +10947,9 @@ object PipelineOps extends OpGroup {
     * round (checkpoints included) and returns the round frame
     * PRE-checkpoint, through the SAME factored round function the loop
     * calls ([[pagerankRound]], [[louvainSweep]], [[kcoreInduce]],
-    * [[bfsHop]]) — the dump is the loop's plan by construction, not a
-    * replica that can drift. Dev/evidence tool only: nothing in the query
-    * paths reads this map.
+    * [[bfsHop]], [[kmeansRound]]) — the dump is the loop's plan by
+    * construction, not a replica that can drift. Dev/evidence tool (and
+    * PlanSuite's round pins): nothing in the query paths reads this map.
     */
   private[graft] def innerProbes: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
     "graph_pagerank_round1_inner" -> ((s, dir) => {
@@ -11051,6 +10993,18 @@ object PipelineOps extends OpGroup {
         if (mutualKnnEdgeCount(s, dir) <= graphBroadcastCap(s)) broadcast _ else identity _
       val keep = kcoreSurvivors(edges0).localCheckpoint(true)
       kcoreInduce(edges0, keep, small)
+    }),
+    "vec_kmeans_round1_inner" -> ((s, dir) => {
+      // kmeansLoop's first re-assignment round against the label-seeded
+      // centroids. The corpus is the quantization projection itself
+      // rather than quantCorpus's lazy checkpoint, so the probe pins no
+      // blocks; the round above the leaf is the loop's.
+      val q = Tables.t(s, dir, "embeddings")
+        .select(col("vec_id"), col("label"),
+          expr("transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))").as("qv"))
+      val seed = vecSums(q, "qv", "label").collect()
+        .map(r => (r.getInt(0), r.getSeq[Long](1), r.getLong(2))).toSeq
+      kmeansRound(q, seed)
     }),
     "graph_bfs_hop1_inner" -> ((s, dir) => {
       val m = mutualKnnEdges(s, dir)

@@ -896,7 +896,7 @@ object StreamOps extends OpGroup {
               .select(col("vec_id"), col("c"), col("qv"))
           }
           val splitDir =
-            try fSplit.get(300, java.util.concurrent.TimeUnit.SECONDS)
+            try fSplit.get()
             finally splitPool.shutdownNow()
           def src = s.readStream
             .schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
@@ -954,13 +954,6 @@ object StreamOps extends OpGroup {
           val delta = s.read
             .schema("vec_id BIGINT, c INT, qv ARRAY<BIGINT>")
             .parquet(live.map(p => s"$root/delta/$p").toIndexedSeq: _*)
-          def cellSums(rows: DataFrame) = rows
-            .select(col("c"), posexplode(col("qv")).as(Seq("pos", "v")))
-            .groupBy("c", "pos")
-            .agg(sum("v").as("sv"), count(lit(1)).as("n"))
-            .groupBy("c")
-            .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), s -> s.sv)")
-              .as("svec"), max("n").as("n"))
           val baseRows = exist.join(assign, "vec_id").select("c", "qv")
           // Materialized ONCE (top-k rows): served feeds the equality
           // audit's collect AND the returned frame — unmaterialized, the
@@ -969,7 +962,7 @@ object StreamOps extends OpGroup {
           val served = PipelineOps.ivfProbeServe(s, dir,
             assign.union(delta.select("vec_id", "c")),
             PipelineOps.centroidsFromSums(
-              cellSums(baseRows.union(delta.select("c", "qv")))))
+              PipelineOps.vecSums(baseRows.union(delta.select("c", "qv")), "qv", "c")))
             .localCheckpoint(true)
           graft.Caches.track(s, dir, "stream_upsert_served",
             Set("stream_index_upsert"),
@@ -980,7 +973,7 @@ object StreamOps extends OpGroup {
           val truth = PipelineOps.ivfProbeServe(s, dir,
             assign.union(oneShot.select("vec_id", "c")),
             PipelineOps.centroidsFromSums(
-              cellSums(baseRows.union(oneShot.select("c", "qv")))))
+              PipelineOps.vecSums(baseRows.union(oneShot.select("c", "qv")), "qv", "c")))
           def typedRows(df: DataFrame) = df.collect()
             .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
             .sortBy(t => (t._1, t._2)).toSeq

@@ -3,7 +3,7 @@ package graft.plans
 import graft.functions._
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -30,37 +30,19 @@ object VecSelfDotRule extends Rule[LogicalPlan] {
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` wires the whole
-  * library into a session at build time — every custom function plus the
-  * optimizer rule — with no imperative `Tables.conf` call. This is the
-  * integration path for a cluster deployment (spark-defaults.conf /
-  * spark-submit --conf); the imperative registration in `Tables.conf`
-  * remains for driver-built sessions that predate the config.
+  * library into a session at build time — every function of
+  * [[graft.functions.FunctionTable]] plus the optimizer rule and the
+  * as-of planner strategy — with no imperative `Tables.conf` call. This
+  * is the integration path for a cluster deployment (spark-defaults.conf
+  * / spark-submit --conf); `Tables.conf` registers the same table
+  * imperatively on driver-built sessions that predate the config.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
-
-  private val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("vec_dot", "vec_dot(a, b) - dot product of two float vectors",
-      es => VecDot(es(0), es(1))),
-    ("vec_norm_sq", "vec_norm_sq(a) - squared L2 norm of a float vector",
-      es => VecNormSq(es(0))),
-    ("simhash60", "simhash60(hs) - 60-bit SimHash over token hashes",
-      es => SimHash60(es(0))),
-    ("sorted_intersect_size",
-      "sorted_intersect_size(a, b) - |a ∩ b| of two sorted long arrays",
-      es => SortedLongIntersectSize(es(0), es(1))),
-    ("minhash_signature",
-      "minhash_signature(arr, k) - k-slot MinHash signature of a hash array",
-      es => MinHashSignature(es(0), es(1).eval().asInstanceOf[Int])),
-    ("minhash_sketch",
-      "minhash_sketch(th, k) - k-slot MinHash sketch aggregate over hashes",
-      es => MinHashSketchAgg(es(0), es(1).eval().asInstanceOf[Int])))
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    functions.foreach { case (name, usage, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
+    FunctionTable.all.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo("graft", null, f.name, f.usage, ""), f.builder))
     }
     ext.injectOptimizerRule(_ => VecSelfDotRule)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)

@@ -331,6 +331,64 @@ class ExpressionSuite extends AnyFunSuite {
     }
   }
 
+  /** The posexplode → (key, pos) sum → regroup formulation vec_sum
+    * replaced, as (key, svec, n) rows ordered by key.
+    */
+  private def explodeSums(df: org.apache.spark.sql.DataFrame, key: String) =
+    df.select(col(key), posexplode(col("qv")).as(Seq("pos", "v")))
+      .groupBy(key, "pos")
+      .agg(sum("v").as("sv"), count(lit(1)).as("n"))
+      .groupBy(key)
+      .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), s -> s.sv)").as("svec"),
+        max("n").as("n"))
+      .orderBy(key).collect().toSeq
+
+  private def nativeSums(df: org.apache.spark.sql.DataFrame, key: String) =
+    ops.PipelineOps.vecSums(df, "qv", key).orderBy(key).collect().toSeq
+
+  test("vec_sum: equals the explode formulation on the quantized embeddings") {
+    Tables.conf(spark)
+    val q = Tables.t(spark, sf0001, "embeddings")
+      .select(col("label"),
+        expr("transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))").as("qv"))
+    val want = explodeSums(q, "label")
+    assert(want.nonEmpty)
+    assert(nativeSums(q, "label") == want)
+  }
+
+  test("vec_sum: degenerate inputs match the explode formulation") {
+    Tables.conf(spark)
+    def v(xs: java.lang.Long*): Seq[java.lang.Long] = xs // boxed: elements may be null
+    val df = Seq[(Int, Seq[java.lang.Long])](
+      (1, v(1L, 2L, 3L)), (1, v(4L, 5L)), (1, null), (1, v()),  // ragged + null + empty
+      (2, null), (2, v()),                                       // only null/empty: no group
+      (3, v(null, 7L)), (3, v(null)),                            // all-null position
+      (4, v(null)),                                              // one all-null vector
+      (5, v(Long.MaxValue)), (5, v(-1L, 0L)))                    // large but in range
+      .toDF("k", "qv").repartition(3)
+    val want = explodeSums(df, "k")
+    assert(want.map(_.getInt(0)) == Seq(1, 3, 4, 5))
+    assert(nativeSums(df, "k") == want)
+    // Bare vec_sum over a group of only null/empty vectors is null.
+    assert(df.filter(col("k") === 2).selectExpr("vec_sum(qv)").head().isNullAt(0))
+  }
+
+  test("vec_sum: over-2^63 position sums throw instead of silently wrapping") {
+    Tables.conf(spark)
+    // One row per partition: the overflow happens in the merge of the two
+    // partial buffers; coalesced to one partition, in the update.
+    val df = spark.sparkContext.parallelize(Seq(Seq(Long.MaxValue), Seq(1L)), 2).toDF("qv")
+    def chain(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
+    for (input <- Seq(df, df.coalesce(1))) {
+      val e = intercept[Exception] {
+        input.selectExpr("vec_sum(qv)").collect()
+      }
+      assert(chain(e).exists(_.isInstanceOf[ArithmeticException]),
+        s"expected ArithmeticException in cause chain, got: $e")
+    }
+  }
+
   test("gram_matrix_agg: over-2^63 cells throw instead of silently wrapping") {
     Tables.conf(spark)
     // 4e9 * 4e9 = 1.6e19 > Long.MaxValue: the per-row product must fail

@@ -652,14 +652,36 @@ class PlanSuite extends AnyFunSuite {
       "both branches must consume the one materialized span frame")
   }
 
-  test("text_bigram_likelihood: model and scoring read one materialized bigram frame") {
+  test("text_bigram_likelihood: one corpus scan, bigram counts from a (lang, k) window") {
     val p = plan("text_bigram_likelihood")
-    assert(p.contains("ExistingRDD") && !p.contains("Scan parquet"),
-      "model build + scoring must consume the one checkpointed bigram frame")
+    assert("""\(\d+\) Scan parquet""".r.findAllIn(p).size == 1,
+      "the corpus must be scanned exactly once")
+    assert("""\(\d+\) Window\b""".r.findFirstIn(p).isDefined &&
+        """hashpartitioning\(lang#\d+, k#\d+""".r.findFirstIn(p).isDefined,
+      "each bigram's corpus count must come from a window partitioned by (lang, k)")
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+      "no model self-join")
+    assert(!p.contains("ExistingRDD"),
+      "the exploded corpus must not be checkpointed")
     assert(p.contains("partial_"),
-      "the (lang, bigram) model agg must partial-aggregate map-side")
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      "scoring must stay a keyed equi join")
+      "the per-doc sums must partial-aggregate map-side")
+  }
+
+  test("k-means round and trained cell sums aggregate with vec_sum, never explode") {
+    def formatted(df: DataFrame) =
+      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val round = formatted(ops.PipelineOps.innerProbes("vec_kmeans_round1_inner")(spark, sf0001))
+    val q = Tables.t(spark, sf0001, "embeddings")
+      .select(col("vec_id"),
+        expr("transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))").as("qv"))
+    val assign = Tables.t(spark, sf0001, "embeddings").select(col("vec_id"), col("label").as("c"))
+    val sums = formatted(ops.PipelineOps.trainedCellSums(q, assign))
+    for ((name, p) <- Seq("k-means round" -> round, "trainedCellSums" -> sums)) {
+      assert(p.contains("vec_sum"), s"$name must sum with vec_sum:\n$p")
+      assert(!p.contains("Generate"), s"$name must not explode vectors to rows:\n$p")
+    }
+    assert("hashpartitioning\\(".r.findAllIn(round).size == 1,
+      s"a k-means round has one exchange, the partial sums':\n$round")
   }
 
   test("round-8 keys: kmeans state checkpointed, KS window sharded per group, triangles keyed, recall top-k") {

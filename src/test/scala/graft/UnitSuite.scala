@@ -1310,4 +1310,23 @@ class UnitSuite extends AnyFunSuite {
       (1, 1, 2L, 10000000L), (1, 2, 2L, 14000000L), (1, 3, 1L, 15000000L),
       (2, 2, 2L, 20000000L), (2, 3, 1L, 20000000L), (3, 3, 1L, 25000000L)))
   }
+
+  test("function table: Tables.conf and GraftExtensions expose the same names") {
+    // The imperative path, measured on a fresh session: what conf adds
+    // to the built-in registry.
+    val fresh = spark.newSession()
+    def names(s: org.apache.spark.sql.SparkSession) =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    val builtin = names(fresh)
+    Tables.conf(fresh)
+    val viaConf = names(fresh) -- builtin
+    // The spark.sql.extensions path: what the extension set injects.
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.plans.GraftExtensions().apply(ext)
+    val viaExt = org.apache.spark.sql.ExtensionsProbe.injectedFunctionNames(ext)
+    assert(viaConf == viaExt,
+      s"conf-only=${viaConf -- viaExt}, extensions-only=${viaExt -- viaConf}")
+    assert(viaConf == graft.functions.FunctionTable.all.map(_.name).toSet)
+    assert(viaConf.contains("vec_sum"))
+  }
 }
