@@ -183,7 +183,7 @@ object Bench {
       if (reps > 1) {
         reruns(name) = reps - 1
         // Keep the first (cold) time visible: reruns of keys that memoize
-        // shared frames (tokCache etc.) are warm by construction, so
+        // shared fixtures (graft.Fixture) are warm by construction, so
         // min-of-reps alone could launder real cache-build cost — the
         // artifact carries both, and BenchBudgetSuite gates the cold time
         // at a looser bound.

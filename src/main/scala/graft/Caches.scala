@@ -1,57 +1,62 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import scala.jdk.CollectionConverters._
 
-/** Lifecycle registry for the per-(session, sfDir) materialized frames the
-  * op groups share (simhash signatures/edges/labels, n-gram shingles).
+/** Lifecycle registry for the artifacts the op groups share per
+  * (session, sfDir): checkpointed frames (signature tables, kNN graphs,
+  * trained quantizers) and scratch directory layouts. A shared artifact
+  * is declared once as a [[Fixture]]; per-invocation artifacts call
+  * [[track]] directly.
   *
-  * Those frames are `localCheckpoint(true)`-ed so consumers read a compact
-  * artifact instead of re-running an interpreted pipeline per candidate
-  * pair — but a checkpoint pins block-manager blocks until the session
-  * dies. Over a full 132-key Bench/Verify pass the pinned blocks would
-  * otherwise accumulate monotonically (round-4 verdict, "what's wrong"
-  * #4). Each cache therefore registers its full consumer-key set here;
-  * [[keyDone]] (called by Bench and Verify after every key) releases the
-  * blocks the moment the last consumer has run. On a real cluster the
-  * same role is played by dropping the persisted signature table when the
-  * dedup stage of the pipeline completes.
+  * A `localCheckpoint` pins block-manager blocks until the session dies,
+  * so every tracked artifact carries its consumer-key set and a release
+  * closure. The harness reports each finished key through [[keyDone]];
+  * the release fires the moment the artifact's last consumer has run.
+  * The invariants:
+  *
+  *  - Release happens at the last SCHEDULED consumer. A pass that
+  *    declares its key set ([[schedule]]) intersects every consumer set
+  *    with it, so a restricted run never waits on keys it will not run.
+  *    Without a schedule the full consumer set applies.
+  *  - The completion ledger is monotone. A key reported done stays done
+  *    for the (session, sfDir) until [[releaseAll]] or session stop, so
+  *    an artifact built late (by a later consumer, after an earlier one
+  *    ran or failed) is seeded with the consumers that already ran.
+  *  - The first build wins payer attribution. Each artifact name records
+  *    the key that was running ([[noteRunningKey]]) when it was first
+  *    registered; a rebuild never overwrites it ([[cachePayers]]).
+  *  - A throwing builder can be retried. [[memo]] caches only a returned
+  *    value, and a failed build registers nothing.
+  *  - Nothing pins a stopped session. Every registration sweeps the
+  *    registry, the memo locks and the session-keyed side maps
+  *    ([[sweepWith]], which includes every fixture's memo map) of
+  *    sessions whose context has stopped.
   */
 object Caches {
 
   /** getOrElseUpdate with the builder run under a PER-KEY monitor.
-    * TrieMap.getOrElseUpdate may evaluate the thunk TWICE under a
-    * concurrent first use (putIfAbsent discards the loser), and the
-    * shared-frame builders have side effects — an eager localCheckpoint
-    * plus a [[track]] registration whose replacement fires the previous
-    * entry's release, unpersisting the winner's still-in-use blocks
-    * (localCheckpoints are unrecoverable once unpersisted). The harness
-    * runs keys sequentially, but a library user driving two queries
-    * concurrently on one session must not hit that race. The monitor is
-    * per (cache, key) — not the whole map (round-9 advice): a builder is
-    * a full Spark job plus an eager localCheckpoint, so serializing two
-    * DIFFERENT keys' builds behind one map-wide lock would convoy exactly
-    * the concurrent-library-user scenario this guard protects. Builder
-    * chains only ever nest in one direction (op cache → Tables cache) and
-    * always on their own key, so the per-key monitors cannot deadlock.
+    * TrieMap.getOrElseUpdate may evaluate the thunk twice under a
+    * concurrent first use, and the shared-artifact builders have side
+    * effects (an eager localCheckpoint plus a [[track]] registration
+    * whose replacement would release the winner's blocks). The monitor
+    * is per (cache, key), not per map: a build is a full Spark job, and
+    * serializing two different keys' builds behind one lock would convoy
+    * concurrent library callers. Builder chains nest in one direction
+    * only (op fixture → Tables cache), each on its own key, so the
+    * monitors cannot deadlock.
     *
-    * The lock entry is SELF-CLEANING: once the value is cached, the fast
-    * path never consults [[memoLocks]] again, so the winner RETIRES its
-    * cell on the way out. Retirement is a tombstone, not a bare removal
-    * (round-12 advice): the winner sets `dead` under the cell's own
-    * monitor before unmapping it, and every acquirer re-checks `dead`
-    * after entering the monitor — a late waiter that was parked across
-    * the removal (plus a cache eviction, plus a new arrival minting a
-    * fresh cell) therefore never runs the side-effecting builder under
-    * the retired monitor; it loops and joins the fresh cell like any new
-    * arrival, so at most one LIVE cell per key can ever guard a build.
-    * This bounds memoLocks for ANY key shape (round-11 advice: keys
-    * without a SparkSession inside — a plain String, say — never matched
-    * the stopped-session sweep and accumulated forever). Only a THROWING
-    * builder leaves its cell behind, live (deliberate: waiters serialize
-    * the retry behind the same monitor rather than stampeding the
-    * builder); session-bearing keys are then reaped by the sweep in
-    * [[track]].
+    * The lock cell is self-cleaning: once the value is cached the fast
+    * path never consults [[memoLocks]] again, so the winner retires its
+    * cell on the way out. Retirement is a tombstone: the winner sets
+    * `dead` under the cell's monitor before unmapping it, and every
+    * acquirer re-checks `dead` after entering the monitor, so a waiter
+    * parked across the removal joins a fresh cell instead of building
+    * under the retired one. That bounds [[memoLocks]] for any key shape.
+    * A throwing builder leaves its cell live and mapped, so waiters
+    * retry the build one at a time behind the same monitor; cells of
+    * stopped sessions are reaped by the sweep in [[track]].
     */
   def memo[K, V](cache: scala.collection.concurrent.TrieMap[K, V], key: K, build: => V): V = {
     cache.get(key) match {
@@ -91,17 +96,11 @@ object Caches {
     */
   private final class LockCell { var dead: Boolean = false }
 
-  /** Lock-map key hashing the CACHE by reference identity. A plain
-    * `(cache, key)` tuple hashes the TrieMap by CONTENTS (Scala
-    * collections define content-based equals/hashCode, mutable ones
-    * included), so a lock stored while the cache held one entry set is
-    * unfindable after ANY mutation — two threads memoizing the same key
-    * could then acquire different locks and run the side-effecting
-    * builder twice (the round-11 advice finding), and the stopped-session
-    * sweep's remove would miss the bucket and leak entries pinning dead
-    * sessions. Identity hashing makes the key stable for the cache
-    * object's lifetime; the logical key keeps its normal value equality
-    * (it's an immutable tuple at every call site).
+  /** Lock-map key hashing the CACHE by reference identity. Scala maps
+    * hash by contents, so a `(cache, key)` tuple would rehash after any
+    * cache mutation: two threads memoizing the same key could take
+    * different locks, and the sweep's remove would miss the bucket.
+    * The logical key keeps its value equality.
     */
   private final class LockKey(val cache: AnyRef, val key: Any) {
     override def hashCode: Int = System.identityHashCode(cache) ^ key.##
@@ -129,36 +128,9 @@ object Caches {
   private val entries = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), Entry]
 
-  // Keys already reported via keyDone for a (session, sfDir) pass. A cache
-  // normally registers during its FIRST consumer's run, but if a consumer
-  // runs (or fails) before the cache exists — e.g. text_simhash throws
-  // before simhash_sigs registers, then text_simhash_neardup builds it —
-  // the late registration must still learn that the earlier consumer
-  // already ran, or its done-set can never fill and the blocks stay
-  // pinned for the rest of the pass. track() seeds Entry.done from here.
-  // The ledger is MONOTONE: a firing release does NOT clear its consumer
-  // keys (see the inline note in keyDone and the "ledger is monotone"
-  // test) — only releaseAll or session stop resets it.
-  private val completed = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Set[String]]
-
-  // Keys actually SCHEDULED for a (session, sfDir) pass. When present,
-  // track() intersects each cache's declared consumer set with it, so a
-  // RESTRICTED run (Verify/InvarianceSweep key subset, a single-key dev
-  // loop) releases a shared cache at its last *scheduled* consumer
-  // instead of pinning blocks forever waiting for keys that will never
-  // run (round-16 advice item 2). No entry = full consumer sets — a
-  // library user who never declares a schedule keeps the conservative
-  // behavior. Cleared by releaseAll and the stopped-session sweep.
-  private val scheduled = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Set[String]]
-
-  // Session-keyed SIDE maps (test seams: persistRootSeam, runBatchSeam)
-  // registered for the stopped-session sweep. Unlike entries/completed/
-  // scheduled these hold no blocks — but their keys carry SparkSessions,
-  // so without a purge path every stopped session's SessionState would be
-  // retained forever in a long-lived process (round-18 advice item 1).
-  // Purged in [[track]]'s sweep and per-(session, dir) in [[releaseAll]].
+  // Session-keyed maps cleared per (session, sfDir) by releaseAll and
+  // purged of stopped sessions by track's sweep: the completion ledger,
+  // the schedule, every fixture's memo map and the ops' test seams.
   private val sweepables = new java.util.concurrent.CopyOnWriteArrayList[
     scala.collection.concurrent.TrieMap[(SparkSession, String), _]]()
 
@@ -171,6 +143,15 @@ object Caches {
     m
   }
 
+  // Keys reported via keyDone for a (session, sfDir) pass — the monotone
+  // ledger that seeds a late registration's done-set.
+  private val completed = sweepWith(scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), Set[String]])
+
+  // Keys scheduled for a (session, sfDir) pass; absent = full consumer sets.
+  private val scheduled = sweepWith(scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), Set[String]])
+
   /** Declare the exact key set this pass will run for (session, sfDir).
     * Subsequent track() registrations release at their last scheduled
     * consumer. Call before the first key runs (a cache registered before
@@ -179,19 +160,9 @@ object Caches {
   def schedule(s: SparkSession, dir: String, keys: Set[String]): Unit =
     scheduled.put((s, dir), keys)
 
-  // Which bench key PAID each shared-cache build (round-19 verdict item
-  // 9): shared-cache cold builds land on whichever consumer runs first,
-  // so when the key registry grows the build migrates to a different key
-  // and cross-round per-key diffs read as regressions (r19:
-  // text_hashing_tfidf 0.55→1.36 s was the tokenTf build moving — family
-  // total flat). Bench marks the running key around each timed rep;
-  // track() stamps the FIRST registration of each cache name with it, and
-  // Bench emits the map as "cache_payer" in the artifact. Advisory
-  // telemetry only — no query path reads it. NOT registered with
-  // sweepWith: releaseAll clears every sweepable for (session, dir), and
-  // Bench's isolated-rerun pass calls releaseAll per breach key — the
-  // attribution of the MAIN pass must survive that. Stopped sessions are
-  // purged explicitly in [[track]]'s sweep instead.
+  // The running bench key and the first-build payer per artifact name.
+  // Deliberately NOT sweepables: Bench's isolated reruns call releaseAll
+  // per key, and the main pass's attribution must survive that.
   private val runningKey = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), String]
   private val payers = scala.collection.concurrent.TrieMap
@@ -204,9 +175,10 @@ object Caches {
   def noteRunningKey(s: SparkSession, dir: String, key: String): Unit =
     runningKey.put((s, dir), key)
 
-  /** First-build payer per cache name for (session, sfDir), registration
-    * order. First-wins: an isolated-rerun rebuild must not overwrite the
-    * main pass's cold-build attribution.
+  /** First-build payer per artifact name for (session, sfDir), in
+    * registration order. Advisory telemetry (Bench's `cache_payer`): a
+    * shared build lands on whichever consumer runs first, so per-key
+    * times must be read against it. No query path reads it.
     */
   def cachePayers(s: SparkSession, dir: String): Seq[(String, String)] =
     payers.get((s, dir)).map(m => m.synchronized(m.toSeq)).getOrElse(Nil)
@@ -216,7 +188,7 @@ object Caches {
     * the internally cached RDD — unpersisting that RDD frees the blocks
     * (the DataFrame itself holds no other state).
     */
-  def releaseCheckpoint(df: DataFrame): Unit =
+  def releaseCheckpoint(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _              => ()
@@ -230,65 +202,36 @@ object Caches {
     */
   def track(s: SparkSession, dir: String, name: String,
             consumers: Set[String], release: () => Unit): Unit = {
-    // Drop entries of stopped sessions — their blocks died with the
+    // Drop state of stopped sessions — their blocks died with the
     // session; retaining the closures would pin dead SessionStates.
-    entries.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) entries.remove(k)
-    }
-    completed.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) completed.remove(k)
-    }
-    scheduled.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) scheduled.remove(k)
-    }
-    runningKey.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) runningKey.remove(k)
-    }
-    payers.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) payers.remove(k)
-    }
-    sweepables.forEach { m =>
-      m.keys.foreach { k =>
-        if (k._1.sparkContext.isStopped) m.remove(k)
-      }
-    }
-    // Memo keys are tuples of ANY arity with the session in some slot
-    // (2-tuples in the op caches, 3-tuples in Tables.t) — sweep by
-    // scanning the product, not by a fixed-shape pattern, or the
-    // 3-tuple locks would pin stopped sessions forever. The remove uses
-    // the iterated LockKey instance itself, whose hash is
-    // identity-stable, so the bucket is always found (the content-hash
-    // tuple key this replaced rehashed with current cache contents and
-    // leaked).
-    // Removal here skips the tombstone handshake [[memo]]'s success path
-    // uses: these cells belong to STOPPED sessions, where any retried
-    // builder throws on first Spark touch — a duplicate execution has no
-    // side effect left to duplicate, and tombstoning would park this
-    // thread behind a possibly-running (doomed) builder.
+    def stopped(ls: SparkSession) = ls.sparkContext.isStopped
+    entries.keys.foreach(k => if (stopped(k._1)) entries.remove(k))
+    runningKey.keys.foreach(k => if (stopped(k._1)) runningKey.remove(k))
+    payers.keys.foreach(k => if (stopped(k._1)) payers.remove(k))
+    sweepables.forEach(m => m.keys.foreach(k => if (stopped(k._1)) m.remove(k)))
+    // Memo keys are tuples of any arity with the session in some slot,
+    // so scan the product. The removal skips memo's tombstone handshake:
+    // a retried builder of a stopped session throws on its first Spark
+    // call, so a duplicate run has no side effect left to duplicate.
     memoLocks.keys.foreach { lk =>
       lk.key match {
         case k: Product if k.productIterator.exists {
-              case ls: SparkSession => ls.sparkContext.isStopped
+              case ls: SparkSession => stopped(ls)
               case _                => false
             } =>
           memoLocks.remove(lk)
         case _ => ()
       }
     }
-    // Restricted consumer view: consumers outside the declared schedule
-    // will never report keyDone, so waiting on them pins blocks for the
-    // rest of the pass. The builder key itself is always scheduled when
-    // a schedule exists (the cache is being built from its run), so the
-    // intersection cannot go empty on a scheduled pass; the guard covers
-    // a direct library call made OUTSIDE the declared schedule.
+    // Restricted consumer view. The building key is scheduled whenever a
+    // schedule exists, so the intersection is empty only for a library
+    // call made outside the schedule — which keeps the full set.
     val eff0 = scheduled.get((s, dir)).map(consumers.intersect).getOrElse(consumers)
     val eff = if (eff0.isEmpty) consumers else eff0
     val e = new Entry(eff, release)
-    // Seed with consumers that already ran this pass (failure path: the
-    // cache is being built by a LATER consumer). The builder itself can't
-    // be in the seed — its keyDone fires only after its query fn returns.
+    // Seed with consumers that already ran this pass. The builder itself
+    // is never in the seed: its keyDone fires after its query fn returns.
     e.done = eff.intersect(completed.getOrElse((s, dir), Set.empty))
-    // Payer attribution (first build wins — see [[cachePayers]]).
     runningKey.get((s, dir)).foreach { k =>
       val m = payers.getOrElseUpdate((s, dir),
         scala.collection.mutable.LinkedHashMap.empty[String, String])
@@ -309,18 +252,11 @@ object Caches {
       if (es == s && edir == dir && e.consumers(key)) {
         e.synchronized { e.done += key }
         if (e.done == e.consumers) {
+          // The ledger keeps this entry's keys: clearing them would starve
+          // a later registration with an overlapping consumer set. A
+          // rebuild after its pass completed therefore seeds full and
+          // releases at its next consumer's report — perf-only.
           entries.remove(id).foreach(_.release())
-          // The ledger stays MONOTONE — clearing this entry's keys here
-          // would starve a cache that registers later in the same pass
-          // with an overlapping consumer set (its seed would miss keys
-          // that already ran → done can never fill → blocks pinned for
-          // the rest of the pass, the exact leak this registry exists to
-          // prevent). The cost: a cache REBUILT after its pass completed
-          // seeds full and releases at its next consumer's report — a
-          // fresh rebuild per re-run consumer (release closures also
-          // evict the op-side frame caches, so consumers never touch an
-          // unpersisted checkpoint), which is perf-only and exactly what
-          // per-rep isolation measurement wants.
         }
       }
     }
@@ -341,16 +277,79 @@ object Caches {
   def activeEntries(s: SparkSession, dir: String): Set[String] =
     entries.keys.collect { case (es, edir, name) if es == s && edir == dir => name }.toSet
 
-  /** Release every cache tracked for (session, sfDir) immediately.
-    * Test-facing: lets a suite start from a clean slate regardless of
-    * what ran before it.
+  /** Release every cache tracked for (session, sfDir) immediately and
+    * reset its ledger and schedule. Lets a pass or a suite start from a
+    * clean slate regardless of what ran before it.
     */
   def releaseAll(s: SparkSession, dir: String): Unit = {
     entries.keys.foreach { case id @ (es, edir, _) =>
       if (es == s && edir == dir) entries.remove(id).foreach(_.release())
     }
-    completed.remove((s, dir))
-    scheduled.remove((s, dir))
     sweepables.forEach(_.remove((s, dir)))
+  }
+}
+
+/** One shared artifact per (session, sfDir), declared once: its name, its
+  * consumer keys and its builder. `apply(s, dir)` is the whole lifecycle —
+  * the first call builds under [[Caches.memo]]'s per-key monitor and
+  * registers one [[Caches.track]] entry (which also records the payer);
+  * when the last scheduled consumer reports done, the entry evicts the
+  * memo and runs `release`, and the next call rebuilds. The memo map is
+  * registered with [[Caches.sweepWith]], so stopped sessions are purged
+  * and [[Caches.releaseAll]] clears it.
+  *
+  * Every fixture registers itself in [[Fixture.all]]: the consumer sets
+  * are checked against the key registry, and [[Setups.warm]] builds the
+  * `layout` fixtures (scratch directories written before their consumer
+  * runs) from it.
+  */
+final class Fixture[V] private[graft] (
+    val name: String,
+    val consumers: Set[String],
+    val layout: Boolean,
+    build: (SparkSession, String) => V,
+    release: (SparkSession, V) => Unit) {
+
+  private val built = Caches.sweepWith(
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), V])
+
+  def apply(s: SparkSession, dir: String): V =
+    Caches.memo(built, (s, dir), {
+      val v = build(s, dir)
+      Caches.track(s, dir, name, consumers, () => {
+        built.remove((s, dir), v)
+        release(s, v)
+      })
+      v
+    })
+
+  Fixture.registered.add(this)
+}
+
+object Fixture {
+  private val registered = new java.util.concurrent.CopyOnWriteArrayList[Fixture[_]]()
+
+  /** A checkpoint fixture: `release` unpersists the checkpointed frames
+    * the value holds — the value itself, or the DataFrame fields of a
+    * tuple.
+    */
+  def apply[V](name: String, consumers: Set[String])(
+      build: (SparkSession, String) => V): Fixture[V] =
+    new Fixture(name, consumers, layout = false, build, (_: SparkSession, v: V) =>
+      v match {
+        case df: Dataset[_] => Caches.releaseCheckpoint(df)
+        case p: Product => p.productIterator.foreach {
+          case df: Dataset[_] => Caches.releaseCheckpoint(df)
+          case _              => ()
+        }
+        case _ => ()
+      })
+
+  /** Every declared fixture, in declaration order. Fixtures are members
+    * of the op groups, so this loads the key registry first.
+    */
+  def all: Seq[Fixture[_]] = {
+    locally(SparkEntry.all)
+    registered.asScala.toSeq
   }
 }

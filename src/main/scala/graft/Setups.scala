@@ -2,39 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Untimed warm-up of the shared demo/setup writes ([[Tables.sharedWrite]]).
+/** Untimed warm-up of the scratch directory layouts ([[Tables.layout]]).
   *
-  * Four keys demonstrate a READ/JOIN mechanism over a layout they must
+  * Some keys demonstrate a read or join mechanism over a layout they must
   * first write (DPP over a partitioned fact, merge join over bucketed
   * tables, box report over a z-ordered layout, file-count proof over a
-  * compacted layout). The write is fixture, not mechanism — Bench calls
-  * [[warm]] in its untimed preamble so each key's measured time is the
-  * probe (round-6 verdict item 5). Verify is untimed and simply builds
-  * lazily inside the op. On a real cluster these layouts are tables that
-  * already exist; timing their one-off construction inside the probe was
-  * measuring the harness, not the operator.
+  * compacted layout, log replay over a transaction log). The write is
+  * fixture, not mechanism: Bench calls [[warm]] in its untimed preamble
+  * so each key's measured time is the probe. On a real cluster these
+  * layouts are tables that already exist. Verify is untimed and builds
+  * them lazily inside the op.
   */
 object Setups {
-  private val all: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "join_dpp_prune" -> ((s, d) => { ops.JoinOps.dppDemo(s, d); () }),
-    "join_bucketed_colocated" -> ((s, d) => { ops.JoinOps.bucketedDemo(s, d); () }),
-    "src_zorder_write" -> ((s, d) => { ops.SourceOps.zorderDemo(s, d); () }),
-    "etl_compact_files" -> ((s, d) => { ops.EtlOps.compactDemo(s, d); () }),
-    // Round-19 verdict item 4: the shared 3-commit txn-log fixture
-    // (4 data files + 3 log commits over customer) was built inside the
-    // first consumer's timed region; the log replay/read is the
-    // mechanism, the fixture write is not. Keyed on every consumer so an
-    // isolated rerun of ANY of the three also gets it untimed; the build
-    // is memoized (Tables.sharedWrite), so the duplicate entries are free.
-    "src_txn_log_snapshot" -> ((s, d) => { ops.SourceOps.txnLogDemo(s, d); () }),
-    "src_txn_log_time_travel" -> ((s, d) => { ops.SourceOps.txnLogDemo(s, d); () }),
-    "src_txn_log_compact" -> ((s, d) => { ops.SourceOps.txnLogDemo(s, d); () }))
 
-  /** Build the setup layouts whose consumer key is in `keys`; failures are
+  /** Build every layout fixture with a consumer in `keys`; failures are
     * swallowed (the op itself will retry and surface the real error).
     */
   def warm(s: SparkSession, dir: String, keys: String => Boolean): Unit =
-    all.foreach { case (k, f) =>
-      if (keys(k)) try f(s, dir) catch { case _: Throwable => () }
+    Fixture.all.filter(f => f.layout && f.consumers.exists(keys)).foreach { f =>
+      try f(s, dir) catch { case _: Throwable => () }
     }
 }

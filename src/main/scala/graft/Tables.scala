@@ -147,38 +147,27 @@ object Tables {
     finally walk.close()
   } catch { case _: Throwable => () }
 
-  /** One-time demo/setup write per (session, sfDir, name). The write-shaped
-    * ops (DPP fact layout, z-order layout, compaction fixture, bucketed
-    * tables) used to rebuild their demonstration datasets on EVERY
-    * invocation, so Bench timed the setup write instead of the probe the
-    * key demonstrates (round-6 verdict nit #1). First call builds the
-    * dataset under a tmp dir and registers a [[Caches]] release for its
-    * consumer keys; the release (fired by keyDone when the last consumer
-    * has run) deletes the dir eagerly and evicts the memo — scratch space
-    * is bounded by the keys in flight, not the whole 167-key pass, and a
-    * later re-run transparently rebuilds. `extraRelease` drops any
-    * session-catalog state the setup created (bucketed tables).
+  /** A scratch directory layout as a [[Fixture]]: the demo datasets the
+    * write-shaped ops (DPP fact layout, z-order layout, compaction input,
+    * bucketed tables, txn log) read. `write` fills a fresh tmp dir once
+    * per (session, sfDir); the release deletes the dir and runs
+    * `extraRelease` (catalog state the write created), so scratch space
+    * is bounded by the keys in flight and a later call rebuilds.
+    * [[Setups.warm]] builds layouts before their consumers are timed.
     */
-  private val setupCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), String]
-
-  def sharedWrite(s: SparkSession, dir: String, name: String,
-      consumers: Set[String], extraRelease: () => Unit = () => ())(
-      write: String => Unit): String = {
-    setupCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) setupCache.remove(k)
-    }
-    graft.Caches.memo(setupCache, (s, dir, name), {
-      val out = tmpDir(s"graft_$name")
-      write(out)
-      Caches.track(s, dir, name, consumers, () => {
-        setupCache.remove((s, dir, name))
-        extraRelease()
+  def layout(name: String, consumers: Set[String],
+      extraRelease: SparkSession => Unit = _ => ())(
+      write: (SparkSession, String, String) => Unit): Fixture[String] =
+    new Fixture[String](name, consumers, layout = true,
+      (s, dir) => {
+        val out = tmpDir(s"graft_$name")
+        write(s, dir, out)
+        out
+      },
+      (s, out) => {
+        extraRelease(s)
         deleteRecursively(java.nio.file.Paths.get(out))
       })
-      out
-    })
-  }
 
   /** Scratch root: prefer the tmpfs at /dev/shm (java.io.tmpdir is on a
     * disk-backed filesystem in this container, and the round-trip /

@@ -22,8 +22,8 @@ object EtlOps extends OpGroup {
     * dir, then re-clustered so each dir gets one writer. Built once per
     * (session, sfDir); released after the consumer key runs.
     */
-  def compactDemo(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    Tables.sharedWrite(s, dir, "compact_demo", Set("etl_compact_files")) { b =>
+  val compactDemo: graft.Fixture[String] =
+    Tables.layout("compact_demo", Set("etl_compact_files")) { (s, dir, b) =>
       val e = Tables.t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       e.repartition(8)
@@ -358,7 +358,7 @@ object EtlOps extends OpGroup {
     // (hash-cluster rows by the dir key so writer tasks and dirs are 1:1).
     Op("etl_compact_files",
       (s, dir) => {
-        // Fragment + compact once per (session, sfDir) (Tables.sharedWrite;
+        // Fragment + compact once per (session, sfDir) (Tables.layout;
         // Bench warms it untimed) — the key then times the read-back proof
         // (one file per partition dir), which is what the op demonstrates.
         val base = EtlOps.compactDemo(s, dir)

@@ -20,20 +20,14 @@ object EventOps extends OpGroup {
     * released by Caches once both keys have run (the shape of
     * PipelineOps.spanFrame).
     */
-  private val mkMonthlyCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def mkMonthly(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.Caches.memo(mkMonthlyCache, (s, dir), {
-      val m = Tables.t(s, dir, "orders")
+  private val mkMonthly = graft.Fixture("mk_monthly", Set("ts_mann_kendall", "ts_theil_sen")) {
+    (s, dir) =>
+      Tables.t(s, dir, "orders")
         .groupBy(col("o_orderpriority").as("grp"),
           (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).cast("int").as("t"))
         .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")).as("cents"))
         .localCheckpoint(true)
-      graft.Caches.track(s, dir, "mk_monthly", Set("ts_mann_kendall", "ts_theil_sen"),
-        () => mkMonthlyCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      m
-    })
+  }
 
   val ops: Seq[Op] = Seq(
     Op("ts_tumbling",

@@ -24,8 +24,8 @@ object JoinOps extends OpGroup {
     * never fires. On a cluster both ARE tables — this models them.
     * Built once per (session, sfDir); released after the consumer runs.
     */
-  def dppDemo(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    Tables.sharedWrite(s, dir, "dpp_demo", Set("join_dpp_prune")) { out =>
+  val dppDemo: graft.Fixture[String] =
+    Tables.layout("dpp_demo", Set("join_dpp_prune")) { (s, dir, out) =>
       Tables.t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .repartition(col("event_type"))
@@ -41,14 +41,14 @@ object JoinOps extends OpGroup {
     * the join key as external tables at a tmp path. Built once per
     * (session, sfDir); release also drops the catalog entries.
     */
-  def bucketedDemo(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    Tables.sharedWrite(s, dir, "buck_demo", Set("join_bucketed_colocated"),
-      extraRelease = () => {
+  val bucketedDemo: graft.Fixture[String] =
+    Tables.layout("buck_demo", Set("join_bucketed_colocated"),
+      extraRelease = s => {
         try {
           s.sql("DROP TABLE IF EXISTS graft_buck_lineitem")
           s.sql("DROP TABLE IF EXISTS graft_buck_orders")
         } catch { case _: Throwable => () }
-      }) { base =>
+      }) { (s, dir, base) =>
       s.sql("DROP TABLE IF EXISTS graft_buck_lineitem")
       s.sql("DROP TABLE IF EXISTS graft_buck_orders")
       // Pre-repartition on the bucket column: repartition's hash IS the
@@ -661,7 +661,7 @@ object JoinOps extends OpGroup {
     // surviving partitions', not the table's, with zero query rewrite.
     Op("join_dpp_prune",
       (s, dir) => {
-        // Setup write shared per (session, sfDir) via Tables.sharedWrite —
+        // Setup write shared per (session, sfDir) via Tables.layout —
         // the partitioned layout is the fixture, the DPP probe is the
         // demonstrated mechanism; Bench warms the fixture untimed so the
         // key's time measures the pruned join, not the write.

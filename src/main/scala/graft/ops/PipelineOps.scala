@@ -183,10 +183,32 @@ object PipelineOps extends OpGroup {
     * done). Tuple: (post-merge state st1, maintained counts pc2,
     * round-1 rows (lang, lft, rgt, cnt)).
     */
-  private val bpePrefixCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        Seq[(String, String, String, Long)])]
+  private val bpePrefix = graft.Fixture("bpe_round1_prefix",
+      Set("text_bpe_train", "text_bpe_train_budget")) { (s, dir) =>
+    val p = "\u0001"
+    // documents.parquet is a single file -> a single input partition;
+    // spread the per-round passes across all cores (the simhashSigs
+    // repartition discipline) BEFORE the first checkpoint so every
+    // round inherits the layout.
+    val st0 = Tables.t(s, dir, "documents")
+      .repartition(s.sparkContext.defaultParallelism)
+      .withColumn("gtext", expr(
+        s"""IF(contains(text, '$p'),
+            CAST(raise_error('text_bpe_train: input text contains the U+0001 token delimiter') AS STRING),
+            text)"""))
+      .select(col("lang"),
+        expr(s"concat('$p', array_join(split(gtext, ''), '$p$p'), '$p')").as("merged"))
+      .localCheckpoint(true)
+    val pc1 = bpeFullPairCount(st0).localCheckpoint(true)
+    val r1 = bpeTopOf(pc1)
+    val ck1 = bpeApplyWithDelta(st0,
+      r1.map(t => t._1 -> t._2).toMap, r1.map(t => t._1 -> t._3).toMap)
+      .localCheckpoint(true)
+    val pc2 = bpeFoldCounts(pc1, ck1).localCheckpoint(true)
+    graft.Caches.releaseCheckpoint(st0)
+    graft.Caches.releaseCheckpoint(pc1)
+    (ck1.select("lang", "merged"), pc2, r1)
+  }
 
   /** Shuffle width for the trainer's pair-VOCABULARY-bounded exchanges
     * (counts, folds, argmax — never corpus-sized; the corpus passes are
@@ -196,43 +218,6 @@ object PipelineOps extends OpGroup {
     */
   private def bpeStatePartitions(s: org.apache.spark.sql.SparkSession): String =
     s.conf.getOption("spark.graft.bpe.statePartitions").getOrElse("4")
-
-  private def bpePrefix(
-      s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        Seq[(String, String, String, Long)]) =
-    graft.Caches.memo(bpePrefixCache, (s, dir), {
-      val p = "\u0001"
-      // documents.parquet is a single file -> a single input partition;
-      // spread the per-round passes across all cores (the simhashSigs
-      // repartition discipline) BEFORE the first checkpoint so every
-      // round inherits the layout.
-      val st0 = Tables.t(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("gtext", expr(
-          s"""IF(contains(text, '$p'),
-              CAST(raise_error('text_bpe_train: input text contains the U+0001 token delimiter') AS STRING),
-              text)"""))
-        .select(col("lang"),
-          expr(s"concat('$p', array_join(split(gtext, ''), '$p$p'), '$p')").as("merged"))
-        .localCheckpoint(true)
-      val pc1 = bpeFullPairCount(st0).localCheckpoint(true)
-      val r1 = bpeTopOf(pc1)
-      val ck1 = bpeApplyWithDelta(st0,
-        r1.map(t => t._1 -> t._2).toMap, r1.map(t => t._1 -> t._3).toMap)
-        .localCheckpoint(true)
-      val pc2 = bpeFoldCounts(pc1, ck1).localCheckpoint(true)
-      graft.Caches.releaseCheckpoint(st0)
-      graft.Caches.releaseCheckpoint(pc1)
-      val st1 = ck1.select("lang", "merged")
-      graft.Caches.track(s, dir, "bpe_round1_prefix",
-        Set("text_bpe_train", "text_bpe_train_budget"),
-        () => bpePrefixCache.remove((s, dir)).foreach { case (a, b, _) =>
-          graft.Caches.releaseCheckpoint(a)
-          graft.Caches.releaseCheckpoint(b)
-        })
-      (st1, pc2, r1)
-    })
 
   /** Per-language argmax of a pair-count frame, collected: |langs| driver
     * scalars per round (the thrMap / occupied-levels pattern — never
@@ -381,33 +366,22 @@ object PipelineOps extends OpGroup {
     * spreads the signature computation across all cores (documents.parquet
     * is a single file → a single input partition otherwise). On a real
     * cluster the same role is played by persisting the signature table
-    * (it is the reusable artifact of a dedup pipeline).
+    * (it is the reusable artifact of a dedup pipeline). The consumers are
+    * every key whose op (directly or via the edge/label fixtures) can
+    * trigger a simhash-family build.
     */
-  private val sigCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  /** Keys whose op (directly or via the edge/label caches) can trigger a
-    * simhash-family cache build — once ALL have run, the caches are dead
-    * weight and [[graft.Caches]] releases their pinned blocks.
-    */
-  private val SimConsumers = Set(
-    "text_simhash", "text_simhash_neardup", "text_dedup_clusters", "text_dedup_keep_best",
-    "text_dedup_incremental", "text_simhash_radius_sweep", "corpus_prep_pipeline_v2",
-    "corpus_prep_pipeline_v3", "vec_index_persist_reload")
-
-  private def simhashSigs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.Caches.memo(sigCache, (s, dir), {
-      val sigs = Tables.t(s, dir, "documents")
-        .select("doc_id", "text")
-        .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("hs",
-          expr(s"transform(array_distinct(split(text, ' ')), t -> ${md5Long("t")})"))
-        .select(col("doc_id"), expr("simhash60(hs)").as("simhash"))
-        .localCheckpoint(true)
-      graft.Caches.track(s, dir, "simhash_sigs", SimConsumers,
-        () => sigCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      sigs
-    })
+  private val simhashSigs = graft.Fixture("simhash_sigs", Set(
+      "text_simhash", "text_simhash_neardup", "text_dedup_clusters", "text_dedup_keep_best",
+      "text_dedup_incremental", "text_simhash_radius_sweep", "corpus_prep_pipeline_v2",
+      "corpus_prep_pipeline_v3", "vec_index_persist_reload")) { (s, dir) =>
+    Tables.t(s, dir, "documents")
+      .select("doc_id", "text")
+      .repartition(s.sparkContext.defaultParallelism)
+      .withColumn("hs",
+        expr(s"transform(array_distinct(split(text, ' ')), t -> ${md5Long("t")})"))
+      .select(col("doc_id"), expr("simhash60(hs)").as("simhash"))
+      .localCheckpoint(true)
+  }
 
   /** (doc_id, k) exploded 8-token span keys shared by text_dup_spans and
     * text_span_novelty: the span→group aggregates and the per-doc join
@@ -415,24 +389,17 @@ object PipelineOps extends OpGroup {
     * split/md5/explode over the full corpus once per branch. One eager
     * checkpoint, released once both consumer keys have run.
     */
-  private val spanCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def spanFrame(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.Caches.memo(spanCache, (s, dir), {
-      val sp = Tables.t(s, dir, "documents")
-        .withColumn("w", split(col("text"), " "))
-        .filter(size(col("w")) >= 8)
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(1, size(w) - 7), i -> substring(md5(concat_ws(' ', slice(w, i, 8))), 1, 16))"))
-          .as("k"))
-        .localCheckpoint(true)
-      graft.Caches.track(s, dir, "span_frame",
-        Set("text_dup_spans", "text_span_novelty", "text_novelty_curve"),
-        () => spanCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      sp
-    })
+  private val spanFrame = graft.Fixture("span_frame",
+      Set("text_dup_spans", "text_span_novelty", "text_novelty_curve")) { (s, dir) =>
+    Tables.t(s, dir, "documents")
+      .withColumn("w", split(col("text"), " "))
+      .filter(size(col("w")) >= 8)
+      .repartition(s.sparkContext.defaultParallelism)
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(1, size(w) - 7), i -> substring(md5(concat_ws(' ', slice(w, i, 8))), 1, 16))"))
+        .as("k"))
+      .localCheckpoint(true)
+  }
 
   /** (doc_id, lang, tok, tf) per-document term frequencies — the
     * inverted-index artifact shared by the featurization family
@@ -445,24 +412,17 @@ object PipelineOps extends OpGroup {
     * (documents.parquet is a single file → one input partition
     * otherwise).
     */
-  private val tokenTfCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def tokenTf(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.Caches.memo(tokenTfCache, (s, dir), {
-      val tf = Tables.t(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("lang"),
-          explode(split(col("text"), " ")).as("tok"))
-        .where(length(col("tok")) > 0)
-        .groupBy("doc_id", "lang", "tok").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true)
-      graft.Caches.track(s, dir, "token_tf",
-        Set("text_hashing_tfidf", "text_lm_perplexity", "text_zipf_fit",
-          "text_oov_rate"),
-        () => tokenTfCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      tf
-    })
+  private val tokenTf = graft.Fixture("token_tf",
+      Set("text_hashing_tfidf", "text_lm_perplexity", "text_zipf_fit",
+        "text_oov_rate")) { (s, dir) =>
+    Tables.t(s, dir, "documents")
+      .repartition(s.sparkContext.defaultParallelism)
+      .select(col("doc_id"), col("lang"),
+        explode(split(col("text"), " ")).as("tok"))
+      .where(length(col("tok")) > 0)
+      .groupBy("doc_id", "lang", "tok").agg(count(lit(1)).as("tf"))
+      .localCheckpoint(true)
+  }
 
   /** Band buckets larger than this refine on a secondary half-band key
     * instead of joining all-pairs. 500 caps the per-bucket join at
@@ -581,16 +541,10 @@ object PipelineOps extends OpGroup {
     * checkpoint both shares the banding work and truncates lineage for
     * the cluster loop.
     */
-  private val edgeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def simhashSigPairs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.Caches.memo(edgeCache, (s, dir), {
-      val sp = simhashSigPairsWithCap(s, dir, SimBucketCap).localCheckpoint(true)
-      graft.Caches.track(s, dir, "simhash_edges", SimConsumers - "text_simhash",
-        () => edgeCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      sp
-    })
+  private val simhashSigPairs = graft.Fixture("simhash_edges",
+      simhashSigs.consumers - "text_simhash") { (s, dir) =>
+    simhashSigPairsWithCap(s, dir, SimBucketCap).localCheckpoint(true)
+  }
 
   /** Doc-level pair expansion over the cached signature pairs — the
     * text_simhash_neardup surface.
@@ -633,8 +587,35 @@ object PipelineOps extends OpGroup {
     * traffic is one 1-row sum per round (the convergence check), never
     * the data.
     */
-  private val labelCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val clusterLabels = graft.Fixture("cluster_labels",
+      Set("text_dedup_clusters", "text_dedup_keep_best", "corpus_prep_pipeline_v2",
+        "corpus_prep_pipeline_v3", "corpus_dedup_weighted")) { (s, dir) =>
+    // The COLLAPSED graph (rep↔rep pairs + member→rep stars), not the
+    // expanded pair list: identical components, edge count linear in
+    // duplicate docs instead of quadratic in cohort sizes. Checkpointed
+    // so the CC loop's repeated reads don't replay the expansion joins;
+    // released as soon as the labels materialize.
+    val collapsed = simhashCollapsedEdges(s, dir).localCheckpoint(true)
+    val labels = connectedComponents(collapsed)
+    graft.Caches.releaseCheckpoint(collapsed)
+    // Converged subgraph labels + every untouched doc as its own
+    // singleton cluster. Broadcast only under the same size guard the
+    // propagation loop uses — past it (edge-incident set too big for the
+    // driver) the singleton join falls back to a shuffle, same as the
+    // loop's joins. The count is one action on the materialized frame.
+    val labJoin =
+      if (labels.count() <= BroadcastLabelCap)
+        broadcast(labels).withColumnRenamed("label", "sub_label")
+      else labels.withColumnRenamed("label", "sub_label")
+    val out = Tables.t(s, dir, "documents")
+      .select(col("doc_id").as("node"))
+      .join(labJoin, Seq("node"), "left")
+      .select(col("node"),
+        coalesce(col("sub_label"), col("node")).as("label"))
+      .localCheckpoint(true)
+    graft.Caches.releaseCheckpoint(labels)
+    out
+  }
 
   /** Label frames at or under this row count broadcast into the CC loop's
     * per-round joins and the final singleton join; above it both fall
@@ -1183,53 +1164,6 @@ object PipelineOps extends OpGroup {
   }
 
 
-  private def clusterLabels(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.Caches.memo(labelCache, (s, dir), {
-      // The COLLAPSED graph (rep↔rep pairs + member→rep stars), not the
-      // expanded pair list: identical components, edge count linear in
-      // duplicate docs instead of quadratic in cohort sizes. Checkpointed
-      // so the CC loop's repeated reads don't replay the expansion joins;
-      // released as soon as the labels materialize.
-      val collapsed = simhashCollapsedEdges(s, dir).localCheckpoint(true)
-      val labels = connectedComponents(collapsed)
-      graft.Caches.releaseCheckpoint(collapsed)
-      // Converged subgraph labels + every untouched doc as its own
-      // singleton cluster. Broadcast only under the same size guard the
-      // propagation loop uses — past it (edge-incident set too big for the
-      // driver) the singleton join falls back to a shuffle, same as the
-      // loop's joins. The count is one action on the materialized frame.
-      val labJoin =
-        if (labels.count() <= BroadcastLabelCap)
-          broadcast(labels).withColumnRenamed("label", "sub_label")
-        else labels.withColumnRenamed("label", "sub_label")
-      val out = Tables.t(s, dir, "documents")
-        .select(col("doc_id").as("node"))
-        .join(labJoin, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("sub_label"), col("node")).as("label"))
-        .localCheckpoint(true)
-      graft.Caches.releaseCheckpoint(labels)
-      graft.Caches.track(s, dir, "cluster_labels",
-        Set("text_dedup_clusters", "text_dedup_keep_best", "corpus_prep_pipeline_v2",
-          "corpus_prep_pipeline_v3", "corpus_dedup_weighted"),
-        () => labelCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      out
-    })
-
-  private val mutualEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  /** Mutual-3NN edge set over the embeddings (a↔b kept iff each is in the
-    * other's IVF-blocked cosine top-[[MutualKnnK]], stored once as a < b),
-    * checkpointed and shared by the whole graph_* / walk family — the kNN
-    * build is the expensive stage (the blocked pair join), so its cost is
-    * paid once per pass. Since round 19 the candidate blocking is the
-    * TRAINED coarse quantizer ([[ivfProbes]], nprobe=2), not the
-    * supervised label column — a real corpus has no labels; the `l`
-    * column on each stored edge is the A-endpoint's label, carried for
-    * per-label rollups only.
-    */
-
   /** k of the mutual-kNN graph. Degree is bounded by k, so every derived
     * degree-indexed table (the Adamic-Adar micro-weight CASE) is generated
     * FROM this constant — raising k regenerates the weights instead of
@@ -1363,52 +1297,6 @@ object PipelineOps extends OpGroup {
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))").as("qv"))
       .localCheckpoint(false)
-
-  /** (quantized corpus, trained 3-round assignment) — the TRAINED coarse
-    * quantizer, built once per (session, sfDir) and shared by
-    * vec_kmeans_train (the membership report) and vec_ivf_trained_topk
-    * (the retrieval route over trained cells — round-12 verdict item 3:
-    * the index artifact the label-cell ops simplify away). On a real
-    * cluster this pair IS the persisted IVF index: the assignment table
-    * partitioned by cell plus the centroid table, trained nightly and
-    * reused by every query until retrain.
-    */
-  private val kmeansCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
-
-  private def kmeansTrained(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    graft.Caches.memo(kmeansCache, (s, dir), {
-      val q = quantCorpus(s, dir)
-      val fin = kmeansLoop(q)
-      graft.Caches.track(s, dir, "kmeans_trained",
-        // Since round 19 the trained quantizer also blocks the kNN-graph
-        // fixture builds (ivfProbes), so every mutualKnnEdges /
-        // hnswUpperEdges consumer is a transitive consumer here — listing
-        // them keeps the (tiny, k×dim-bounded) qv/assign checkpoints
-        // pinned until the LAST graph key, instead of releasing after the
-        // vec_ivf_* family and re-running 3 Lloyd rounds when a later
-        // graph key rebuilds its edge cache.
-        Set("vec_kmeans_train", "vec_ivf_trained_topk", "vec_ivf_pq_topk",
-          "vec_ivf_probe_sweep", "vec_pq_residual_topk", "vec_ivf_cell_stats",
-          "vec_index_persist_reload", "vec_index_delete", "vec_knn_graph_ivf",
-          "vec_ivf_merge_shards",
-          "vec_semantic_dedup_ivf", "corpus_prep_pipeline_v3", "graph_scc",
-          "graph_triangle_count", "graph_connected_components",
-          "graph_label_prop_step", "graph_adamic_adar", "vec_graph_greedy_search",
-          "vec_graph_beam_search", "graph_louvain_step", "graph_louvain_converge",
-          "graph_louvain_multilevel", "graph_kcore_peel", "vec_hnsw_search",
-          "vec_hnsw_build", "graph_bfs_hops", "graph_modularity",
-          "vec_hnsw_batch_search", "vec_hnsw_persist_search",
-          "graph_pagerank_persist_serve"),
-        () => kmeansCache.remove((s, dir)).foreach { case (qf, af) =>
-          graft.Caches.releaseCheckpoint(qf)
-          graft.Caches.releaseCheckpoint(af)
-        })
-      (q, fin)
-    })
 
   /** TRAINED-cell IVF routing: (quantized corpus, trained assignment,
     * top-3 probed cells for the vec_id=0 query by centroid cosine) —
@@ -1563,9 +1451,6 @@ object PipelineOps extends OpGroup {
       .withColumn("lay", expr(HnswLayerCase))
       .select("vec_id", "label", "embedding", "lay")
 
-  private val hnswEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
   /** Upper-layer HNSW edges: one (lvl 1..4, a, b) frame of mutual-3NN
     * graphs over the nodes of height ≥ lvl, query node INCLUDED in the
     * kNN build (the mutualKnnEdges convention — consumers filter
@@ -1581,44 +1466,36 @@ object PipelineOps extends OpGroup {
     * vec_hnsw_build (per-layer edge counts) and the search keys (the
     * descent's express lanes).
     */
-  private def hnswUpperEdges(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.memo(hnswEdgeCache, (s, dir), {
-      val lay = hnswLayerAssign(s, dir).filter(col("lay") >= 1)
-      val probes = ivfProbes(s, dir)
-      val (_, assign) = kmeansTrained(s, dir)
-      val qa = probes
-        .join(lay.select(col("vec_id"), col("embedding").as("ea"),
-          col("lay").as("laya")), "vec_id")
-        .select(col("vec_id").as("a"), col("ea"), col("laya"), col("pc"))
-      val cand = assign
-        .join(lay.select(col("vec_id"), col("embedding").as("eb"),
-          col("lay").as("layb")), "vec_id")
-        .select(col("c").as("pc"), col("vec_id").as("b"), col("eb"), col("layb"))
-      val w = Window.partitionBy("lvl", "a").orderBy(desc("sim"), asc("b"))
-      val knn = qa.join(cand, Seq("pc"))
-        .filter(col("a") =!= col("b"))
-        .withColumn("sim", expr("vec_dot(ea, eb)")
-          / (Tables.safeNorm("ea") * Tables.safeNorm("eb")))
-        .select(col("a"), col("b"), col("sim"),
-          explode(expr("sequence(1, least(laya, layb))")).as("lvl"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= MutualKnnK)
-        .select("lvl", "a", "b")
-      val upper = knn.filter(col("a") < col("b"))
-        .join(knn.select(col("lvl"), col("b").as("a"), col("a").as("b")),
-          Seq("lvl", "a", "b"), "leftsemi")
-        .select("lvl", "a", "b")
-        .localCheckpoint(true)
-      graft.Caches.track(s, dir, "hnsw_layer_edges",
-        Set("vec_hnsw_build", "vec_hnsw_search", "vec_hnsw_batch_search",
-          "vec_hnsw_persist_search"),
-        () => hnswEdgeCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      upper
-    })
-
-  private val mutualCcCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val hnswUpperEdges = graft.Fixture("hnsw_layer_edges",
+      Set("vec_hnsw_build", "vec_hnsw_search", "vec_hnsw_batch_search",
+        "vec_hnsw_persist_search")) { (s, dir) =>
+    val lay = hnswLayerAssign(s, dir).filter(col("lay") >= 1)
+    val probes = ivfProbes(s, dir)
+    val (_, assign) = kmeansTrained(s, dir)
+    val qa = probes
+      .join(lay.select(col("vec_id"), col("embedding").as("ea"),
+        col("lay").as("laya")), "vec_id")
+      .select(col("vec_id").as("a"), col("ea"), col("laya"), col("pc"))
+    val cand = assign
+      .join(lay.select(col("vec_id"), col("embedding").as("eb"),
+        col("lay").as("layb")), "vec_id")
+      .select(col("c").as("pc"), col("vec_id").as("b"), col("eb"), col("layb"))
+    val w = Window.partitionBy("lvl", "a").orderBy(desc("sim"), asc("b"))
+    val knn = qa.join(cand, Seq("pc"))
+      .filter(col("a") =!= col("b"))
+      .withColumn("sim", expr("vec_dot(ea, eb)")
+        / (Tables.safeNorm("ea") * Tables.safeNorm("eb")))
+      .select(col("a"), col("b"), col("sim"),
+        explode(expr("sequence(1, least(laya, layb))")).as("lvl"))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= MutualKnnK)
+      .select("lvl", "a", "b")
+    knn.filter(col("a") < col("b"))
+      .join(knn.select(col("lvl"), col("b").as("a"), col("a").as("b")),
+        Seq("lvl", "a", "b"), "leftsemi")
+      .select("lvl", "a", "b")
+      .localCheckpoint(true)
+  }
 
   /** Connected-component labels of [[mutualKnnEdges]], computed ONCE per
     * (session, sfDir) and shared by graph_connected_components and
@@ -1631,18 +1508,35 @@ object PipelineOps extends OpGroup {
     * PERF_NOTES). The returned frame is connectedComponents' own
     * checkpoint; Caches releases it once both consumers have run.
     */
-  private def mutualCcLabels(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.memo(mutualCcCache, (s, dir), {
-      val labels = connectedComponents(mutualKnnEdges(s, dir).select("a", "b"))
-      graft.Caches.track(s, dir, "mutual_cc_labels",
-        Set("graph_connected_components", "graph_pagerank_persist_serve"),
-        () => mutualCcCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      labels
-    })
+  private val mutualCcLabels = graft.Fixture("mutual_cc_labels",
+      Set("graph_connected_components", "graph_pagerank_persist_serve")) { (s, dir) =>
+    connectedComponents(mutualKnnEdges(s, dir).select("a", "b"))
+  }
 
-  private val directedKnnCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+  /** Mutual-3NN edge set over the embeddings (a↔b kept iff each is in the
+    * other's IVF-blocked cosine top-[[MutualKnnK]], stored once as a < b),
+    * checkpointed and shared by the whole graph_* / walk family — the kNN
+    * build is the expensive stage (the blocked pair join), so its cost is
+    * paid once per pass. The candidate blocking is the TRAINED coarse
+    * quantizer ([[ivfProbes]], nprobe=2), not the supervised label
+    * column — a real corpus has no labels; the `l`
+    * column on each stored edge is the A-endpoint's label, carried for
+    * per-label rollups only.
+    */
+  private val mutualKnnEdges: graft.Fixture[org.apache.spark.sql.DataFrame] =
+    graft.Fixture("mutual_knn_edges",
+      Set("graph_triangle_count", "graph_connected_components",
+        "graph_label_prop_step", "graph_adamic_adar", "vec_graph_greedy_search",
+        "vec_graph_beam_search", "graph_louvain_step", "graph_louvain_converge",
+        "graph_louvain_multilevel", "graph_kcore_peel", "vec_hnsw_search",
+        "vec_hnsw_build", "graph_bfs_hops", "graph_modularity",
+        "vec_hnsw_batch_search", "vec_hnsw_persist_search",
+        "graph_pagerank_persist_serve")) { (s, dir) =>
+    val knn = directedKnnEdges(s, dir)
+    knn.filter(col("a") < col("b"))
+      .join(knn.select(col("b").as("a"), col("a").as("b")), Seq("a", "b"), "leftsemi")
+      .localCheckpoint(true)
+  }
 
   /** DIRECTED top-[[MutualKnnK]] kNN edges (l, a, b): a → b iff b is in
     * a's IVF-blocked cosine top-k (a ≠ b; `l` is a's label, carried for
@@ -1654,67 +1548,65 @@ object PipelineOps extends OpGroup {
     * a's neighbor does NOT make a b's — the asymmetry is what gives the
     * digraph nontrivial strongly-connected structure).
     */
-  private[graft] def directedKnnEdges(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.memo(directedKnnCache, (s, dir), {
-      val e = Tables.t(s, dir, "embeddings")
-      val probes = ivfProbes(s, dir)
-      val (_, assign) = kmeansTrained(s, dir)
-      val qa = probes
-        .join(e.select(col("vec_id"), col("label").as("l"),
-          col("embedding").as("ea")), "vec_id")
-        .select(col("l"), col("vec_id").as("a"), col("ea"), col("pc"))
-      val cand = assign
-        .join(e.select(col("vec_id"), col("embedding").as("eb")), "vec_id")
-        .select(col("c").as("pc"), col("vec_id").as("b"), col("eb"))
-      val w = Window.partitionBy("a").orderBy(desc("sim"), asc("b"))
-      // rk/sim ride the checkpoint (round 19): vec_knn_graph_ivf's output
-      // IS this frame plus its audit flag, so the key reuses the fixture
-      // instead of re-running the identical IVF-blocked pair join; the
-      // graph consumers project (l, a, b) and never read the extras.
-      val knn = qa.join(cand, Seq("pc"))
-        .filter(col("a") =!= col("b"))
-        .withColumn("sim", expr("vec_dot(ea, eb)")
-          / (Tables.safeNorm("ea") * Tables.safeNorm("eb")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= MutualKnnK)
-        .select(col("l"), col("a"), col("rk"), col("b"), col("sim"))
-        .localCheckpoint(true)
-      graft.Caches.track(s, dir, "directed_knn_edges",
-        Set("vec_knn_graph_ivf",
-          "graph_scc", "graph_triangle_count", "graph_connected_components",
-          "graph_label_prop_step", "graph_adamic_adar", "vec_graph_greedy_search",
-          "vec_graph_beam_search", "graph_louvain_step", "graph_louvain_converge",
-          "graph_louvain_multilevel", "graph_kcore_peel", "vec_hnsw_search",
-          "vec_hnsw_build", "graph_bfs_hops", "graph_modularity",
-          "vec_hnsw_batch_search", "vec_hnsw_persist_search",
-          "graph_pagerank_persist_serve"),
-        () => directedKnnCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      knn
-    })
+  private[graft] val directedKnnEdges: graft.Fixture[org.apache.spark.sql.DataFrame] =
+    graft.Fixture("directed_knn_edges",
+      mutualKnnEdges.consumers ++ Set("vec_knn_graph_ivf", "graph_scc")) { (s, dir) =>
+    val e = Tables.t(s, dir, "embeddings")
+    val probes = ivfProbes(s, dir)
+    val (_, assign) = kmeansTrained(s, dir)
+    val qa = probes
+      .join(e.select(col("vec_id"), col("label").as("l"),
+        col("embedding").as("ea")), "vec_id")
+      .select(col("l"), col("vec_id").as("a"), col("ea"), col("pc"))
+    val cand = assign
+      .join(e.select(col("vec_id"), col("embedding").as("eb")), "vec_id")
+      .select(col("c").as("pc"), col("vec_id").as("b"), col("eb"))
+    val w = Window.partitionBy("a").orderBy(desc("sim"), asc("b"))
+    // rk/sim ride the checkpoint: vec_knn_graph_ivf's output
+    // IS this frame plus its audit flag, so the key reuses the fixture
+    // instead of re-running the identical IVF-blocked pair join; the
+    // graph consumers project (l, a, b) and never read the extras.
+    qa.join(cand, Seq("pc"))
+      .filter(col("a") =!= col("b"))
+      .withColumn("sim", expr("vec_dot(ea, eb)")
+        / (Tables.safeNorm("ea") * Tables.safeNorm("eb")))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= MutualKnnK)
+      .select(col("l"), col("a"), col("rk"), col("b"), col("sim"))
+      .localCheckpoint(true)
+  }
 
-  private val sccCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (org.apache.spark.sql.DataFrame, Int)]
+  /** (quantized corpus, trained 3-round assignment) — the TRAINED coarse
+    * quantizer, built once per (session, sfDir) and shared by the
+    * vec_ivf_* family (membership report, retrieval over trained cells).
+    * On a real cluster this pair IS the persisted IVF index: the
+    * assignment table partitioned by cell plus the centroid table,
+    * trained nightly and reused by every query until retrain. It also
+    * blocks the kNN-graph fixture builds ([[ivfProbes]]), so every
+    * [[directedKnnEdges]] consumer is a consumer here: the
+    * (k×dim-bounded) checkpoints stay pinned until the last graph key
+    * instead of re-running the Lloyd rounds when a later graph key
+    * rebuilds its edges.
+    */
+  private val kmeansTrained: graft.Fixture[
+      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] =
+    graft.Fixture("kmeans_trained",
+      directedKnnEdges.consumers ++ Set("vec_kmeans_train", "vec_ivf_trained_topk",
+        "vec_ivf_pq_topk", "vec_ivf_probe_sweep", "vec_pq_residual_topk",
+        "vec_ivf_cell_stats", "vec_index_persist_reload", "vec_index_delete",
+        "vec_ivf_merge_shards", "vec_semantic_dedup_ivf",
+        "corpus_prep_pipeline_v3")) { (s, dir) =>
+    val q = quantCorpus(s, dir)
+    (q, kmeansLoop(q))
+  }
 
   /** graph_scc's converged (node, scc) labels + peel count over
     * [[directedKnnEdges]], memoized per (session, sfDir) so bench iso
     * reruns don't redo the peeling loop; released once the consumer runs.
     */
-  private def sccLabels(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.sql.DataFrame, Int) =
-    graft.Caches.memo(sccCache, (s, dir), {
-      val pair = stronglyConnectedComponents(
-        directedKnnEdges(s, dir).select("a", "b"))
-      graft.Caches.track(s, dir, "scc_labels", Set("graph_scc"),
-        () => sccCache.remove((s, dir))
-          .foreach(p => graft.Caches.releaseCheckpoint(p._1)))
-      pair
-    })
-
-  private val labelKnnCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val sccLabels = graft.Fixture("scc_labels", Set("graph_scc")) { (s, dir) =>
+    stronglyConnectedComponents(directedKnnEdges(s, dir).select("a", "b"))
+  }
 
   /** Label-blocked cosine top-[[MutualKnnK]] (a, rk, b, sim) — the
     * supervised comparison graph. Built once per (session, sfDir)
@@ -1722,46 +1614,22 @@ object PipelineOps extends OpGroup {
     * vec_knn_graph_ivf's in-band recall audit flags against it; the two
     * keys used to run the identical |V|²/|labels| pair join twice.
     */
-  private def labelKnnEdges(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.memo(labelKnnCache, (s, dir), {
-      val e = Tables.t(s, dir, "embeddings")
-      val la = e.select(col("label").as("la"), col("vec_id").as("a"),
-        col("embedding").as("ea"))
-      val lb = e.select(col("label").as("lb"), col("vec_id").as("b"),
-        col("embedding").as("eb"))
-      val w = Window.partitionBy("a").orderBy(desc("sim"), asc("b"))
-      val knn = la.join(lb, col("la") === col("lb") && col("a") =!= col("b"))
-        .withColumn("sim", expr("vec_dot(ea, eb)")
-          / (Tables.safeNorm("ea") * Tables.safeNorm("eb")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= MutualKnnK)
-        .select(col("a"), col("rk"), col("b"), col("sim"))
-        .localCheckpoint(true)
-      graft.Caches.track(s, dir, "label_knn_edges",
-        Set("vec_knn_graph", "vec_knn_graph_ivf"),
-        () => labelKnnCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      knn
-    })
-
-  private def mutualKnnEdges(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.memo(mutualEdgeCache, (s, dir), {
-      val knn = directedKnnEdges(s, dir)
-      val mutual = knn.filter(col("a") < col("b"))
-        .join(knn.select(col("b").as("a"), col("a").as("b")), Seq("a", "b"), "leftsemi")
-        .localCheckpoint(true)
-      graft.Caches.track(s, dir, "mutual_knn_edges",
-        Set("graph_triangle_count", "graph_connected_components",
-          "graph_label_prop_step", "graph_adamic_adar", "vec_graph_greedy_search",
-          "vec_graph_beam_search", "graph_louvain_step", "graph_louvain_converge",
-          "graph_louvain_multilevel", "graph_kcore_peel", "vec_hnsw_search",
-          "vec_hnsw_build", "graph_bfs_hops", "graph_modularity",
-          "vec_hnsw_batch_search", "vec_hnsw_persist_search",
-          "graph_pagerank_persist_serve"),
-        () => mutualEdgeCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      mutual
-    })
+  private val labelKnnEdges = graft.Fixture("label_knn_edges",
+      Set("vec_knn_graph", "vec_knn_graph_ivf")) { (s, dir) =>
+    val e = Tables.t(s, dir, "embeddings")
+    val la = e.select(col("label").as("la"), col("vec_id").as("a"),
+      col("embedding").as("ea"))
+    val lb = e.select(col("label").as("lb"), col("vec_id").as("b"),
+      col("embedding").as("eb"))
+    val w = Window.partitionBy("a").orderBy(desc("sim"), asc("b"))
+    la.join(lb, col("la") === col("lb") && col("a") =!= col("b"))
+      .withColumn("sim", expr("vec_dot(ea, eb)")
+        / (Tables.safeNorm("ea") * Tables.safeNorm("eb")))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= MutualKnnK)
+      .select(col("a"), col("rk"), col("b"), col("sim"))
+      .localCheckpoint(true)
+  }
 
   /** |mutual-kNN edges| memoized per (session, sfDir) — round-19 verdict
     * item 10: the kcore/bfs/louvain broadcast gates each paid a `count()`
@@ -1978,44 +1846,17 @@ object PipelineOps extends OpGroup {
     * walk conf window (callers invoke these before entering it — the
     * round-15 warm-the-caches advice). The unfused (distributed) shape
     * stays per-call: only PlanSuite's dual-shape equality run uses it.
-    *
-    * PARTIAL-RUN CAVEAT (round-16 advice): the consumer set is the full
-    * walk family, so a session that runs only a subset of the walk keys
-    * (single-key verify, ad-hoc library use) keeps these corpus-edge-
-    * sized blocks pinned until `Caches.releaseAll(session, sfDir)` or
-    * session stop — call releaseAll after a partial pass. The full
-    * Bench/Verify passes release them via keyDone as designed; a
-    * scheduler-aware consumer set is deliberately NOT attempted because
-    * no key knows at build time which family members the caller will
-    * still run (an undershot set would release blocks a later key needs,
-    * which is unrecoverable for a localCheckpoint).
     */
-  private val walkEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), org.apache.spark.sql.DataFrame]
+  private val walkSym0Cached = graft.Fixture("walk_sym0",
+      Set("vec_graph_greedy_search", "vec_graph_beam_search", "vec_hnsw_search",
+        "vec_hnsw_batch_search")) { (s, dir) =>
+    walkSym0(s, dir, mutualKnnEdges(s, dir), fused = true)
+  }
 
-  private val WalkConsumers = Set("vec_graph_greedy_search",
-    "vec_graph_beam_search", "vec_hnsw_search", "vec_hnsw_batch_search")
-
-  private def walkSym0Cached(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.memo(walkEdgeCache, (s, dir, "sym0"), {
-      val df = walkSym0(s, dir, mutualKnnEdges(s, dir), fused = true)
-      graft.Caches.track(s, dir, "walk_sym0", WalkConsumers,
-        () => walkEdgeCache.remove((s, dir, "sym0"))
-          .foreach(graft.Caches.releaseCheckpoint))
-      df
-    })
-
-  private def walkLevelEdgesCached(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.Caches.memo(walkEdgeCache, (s, dir, "lvl"), {
-      val df = walkLevelEdges(s, dir, hnswUpperEdges(s, dir), fused = true)
-      graft.Caches.track(s, dir, "walk_level_edges",
-        Set("vec_hnsw_search", "vec_hnsw_batch_search"),
-        () => walkEdgeCache.remove((s, dir, "lvl"))
-          .foreach(graft.Caches.releaseCheckpoint))
-      df
-    })
+  private val walkLevelEdgesCached = graft.Fixture("walk_level_edges",
+      Set("vec_hnsw_search", "vec_hnsw_batch_search")) { (s, dir) =>
+    walkLevelEdges(s, dir, hnswUpperEdges(s, dir), fused = true)
+  }
 
   /** The |Q|=1 multi-layer HNSW serve walk (vec_hnsw_search's body,
     * factored so vec_hnsw_persist_search serves from RELOADED layer
@@ -10119,13 +9960,12 @@ object PipelineOps extends OpGroup {
             // key — greedy/beam/hnsw/batch all read the same checkpoints).
             val levelEdges = walkLevelEdgesCached(s, dir)
             val sym0 = walkSym0Cached(s, dir)
-            val (descNodes, beamed, foundId, foundSim, exact) =
-              try {
-                val w = hnswServeWalk(s, dir, entry, occupied, levelEdges, sym0)
-                // Join the truth leg BEFORE the pool shutdown interrupts
-                // its (possibly still running) job.
-                (w._1, w._2, w._3, w._4, fExact.get())
-              } finally exPool.shutdownNow()
+            // Join the truth leg BEFORE the walk's conf window opens: a
+            // job still planning inside narrowWalkConf would inherit its
+            // session-wide narrow conf.
+            val exact = try fExact.get() finally exPool.shutdownNow()
+            val (descNodes, beamed, foundId, foundSim) =
+              hnswServeWalk(s, dir, entry, occupied, levelEdges, sym0)
             exact match {
               case Some((vid, esim)) => s.range(1).select(
                 lit(topLayer).as("top_layer"),

@@ -15,10 +15,10 @@ object SourceOps extends OpGroup {
 
   /** src_zorder_write's fixture: orders written partitioned by z-range
     * bucket. Built once per (session, sfDir); released after the consumer
-    * key runs (Tables.sharedWrite).
+    * key runs (Tables.layout).
     */
-  def zorderDemo(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    Tables.sharedWrite(s, dir, "zorder_demo", Set("src_zorder_write")) { o =>
+  val zorderDemo: graft.Fixture[String] =
+    Tables.layout("zorder_demo", Set("src_zorder_write")) { (s, dir, o) =>
       Tables.t(s, dir, "orders")
         .withColumn("z", expr(zorderSpark))
         .withColumn("zbucket",
@@ -259,7 +259,7 @@ object SourceOps extends OpGroup {
     Op("src_zorder_write",
       (s, dir) => {
         // The z-ordered layout is written once per (session, sfDir)
-        // (Tables.sharedWrite; Bench warms it untimed) — the key's time
+        // (Tables.layout; Bench warms it untimed) — the key's time
         // then measures the read-back box report that PROVES the layout
         // prunes, which is the mechanism under demonstration.
         val out = SourceOps.zorderDemo(s, dir)
@@ -1072,23 +1072,13 @@ object SourceOps extends OpGroup {
     * per (session, sfDir); released after both consumer keys run):
     * commit 0 adds f0 (custkey%3=0) + f1 (%3=1), commit 1 adds f2
     * (%3=2), commit 2 atomically rewrites f1 as f3 with acctbal+100.
+    * Setups.warm builds it untimed: the log replay/read is the mechanism
+    * the keys demonstrate, the fixture write is not.
     */
-  /** Setups.warm hook: build the shared txn-log fixture untimed (round-19
-    * verdict item 4 — the 4-file + 3-commit write was landing inside the
-    * FIRST consumer's timed region; the replay/read is the mechanism the
-    * keys demonstrate, the fixture write is not — the round-6 precedent
-    * that moved the other demo layouts to Setups).
-    */
-  private[graft] def txnLogDemo(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    txnLogFixture(s, dir); ()
-  }
-
-  private def txnLogFixture(
-      s: org.apache.spark.sql.SparkSession, dir: String): String =
-    Tables.sharedWrite(s, dir, "txnlog_demo",
+  private val txnLogFixture: graft.Fixture[String] =
+    Tables.layout("txnlog_demo",
       Set("src_txn_log_snapshot", "src_txn_log_time_travel",
-        "src_txn_log_compact")) { root =>
+        "src_txn_log_compact")) { (s, dir, root) =>
       val c = Tables.t(s, dir, "customer")
         .select("c_custkey", "c_mktsegment", "c_acctbal")
       def writeFile(name: String, df: org.apache.spark.sql.DataFrame): Unit =

@@ -154,7 +154,6 @@ object StreamOps extends OpGroup {
     */
   private[graft] def splitDir(s: SparkSession, sfDir: String, n: Int): String =
     graft.Caches.memo(splitCache, (s, sfDir, n), {
-      val root = Tables.tmpDir("graft_stream_split")
       val lateWinUs = 55L * 60 * 1000000 // < the 1 h watermark delay
       val ev = Tables.events(s, sfDir)
         .withColumn("us", Tables.ntzMicros("ts"))
@@ -168,24 +167,32 @@ object StreamOps extends OpGroup {
                 AND xxhash64(event_id) % 2 = 0
               THEN p0 + 1 ELSE p0 END"""))
         .drop("us", "p0")
-      for (i <- 0 until n) {
-        val stage = Tables.tmpDir("graft_stream_split_stage")
-        cut.filter(col("p") === i).drop("p")
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val listing = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        val part = try listing
-          .filter(f => f.getFileName.toString.startsWith("part-")
-            && f.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        finally listing.close()
-        val dst = java.nio.file.Paths.get(root, s"b$i.parquet")
-        java.nio.file.Files.copy(part, dst)
-        // Staged mtimes: FileStreamSource (latestFirst=false) takes files
-        // oldest-first, so b0 < b1 < b2 fixes the micro-batch order.
-        dst.toFile.setLastModified(1700000000000L + i * 10000L)
-      }
-      root
+      mtimeOrderedDir("graft_stream_split",
+        (0 until n).map(i => cut.filter(col("p") === i).drop("p")))
     })
+
+  /** Lay `batches` out as single-file parquets `b0.parquet`, `b1.parquet`,
+    * ... under a fresh tmp dir, with strictly increasing mtimes:
+    * FileStreamSource (latestFirst=false) takes files oldest-first, so
+    * the order of `batches` is the micro-batch order.
+    */
+  private def mtimeOrderedDir(prefix: String, batches: Seq[DataFrame]): String = {
+    val root = Tables.tmpDir(prefix)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val stage = Tables.tmpDir(s"${prefix}_stage")
+      b.coalesce(1).write.mode("overwrite").parquet(stage)
+      val listing = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
+      val part = try listing
+        .filter(f => f.getFileName.toString.startsWith("part-")
+          && f.getFileName.toString.endsWith(".parquet"))
+        .findFirst().get()
+      finally listing.close()
+      val dst = java.nio.file.Paths.get(root, s"b$i.parquet")
+      java.nio.file.Files.copy(part, dst)
+      dst.toFile.setLastModified(1700000000000L + i * 10000L)
+    }
+    root
+  }
 
   // private[graft]: the checkpoint-recovery drill (EquivalenceSuite)
   // builds its own watermarked query over the same source contract.
@@ -1146,25 +1153,11 @@ object StreamOps extends OpGroup {
     */
   private def embBatchSplitDir(s: SparkSession, sfDir: String): String =
     graft.Caches.memo(embSplitCache, (s, sfDir), {
-      val root = Tables.tmpDir("graft_emb_split")
       val b = Tables.t(s, sfDir, "embeddings")
         .filter(col("vec_id") % 10 === 0)
         .withColumn("p", (pmod(col("vec_id"), lit(30)) / 10).cast("int"))
-      for (i <- 0 until 3) {
-        val stage = Tables.tmpDir("graft_emb_split_stage")
-        b.filter(col("p") === i).drop("p")
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val listing = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        val part = try listing
-          .filter(f => f.getFileName.toString.startsWith("part-")
-            && f.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        finally listing.close()
-        val dst = java.nio.file.Paths.get(root, s"b$i.parquet")
-        java.nio.file.Files.copy(part, dst)
-        dst.toFile.setLastModified(1700000000000L + i * 10000L)
-      }
-      root
+      mtimeOrderedDir("graft_emb_split",
+        (0 until 3).map(i => b.filter(col("p") === i).drop("p")))
     })
 
   private val cdcSplitCache = graft.Caches.sweepWith(
@@ -1178,22 +1171,8 @@ object StreamOps extends OpGroup {
   private def cdcSplitDir(
       s: SparkSession, sfDir: String, changes: DataFrame): String =
     graft.Caches.memo(cdcSplitCache, (s, sfDir), {
-      val root = Tables.tmpDir("graft_cdc_split")
-      Seq(2, 1, 3).zipWithIndex.foreach { case (v, i) =>
-        val stage = Tables.tmpDir("graft_cdc_split_stage")
-        changes.filter(col("ver") === v)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val listing = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        val part = try listing
-          .filter(f => f.getFileName.toString.startsWith("part-")
-            && f.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        finally listing.close()
-        val dst = java.nio.file.Paths.get(root, s"b$i.parquet")
-        java.nio.file.Files.copy(part, dst)
-        dst.toFile.setLastModified(1700000000000L + i * 10000L)
-      }
-      root
+      mtimeOrderedDir("graft_cdc_split",
+        Seq(2, 1, 3).map(v => changes.filter(col("ver") === v)))
     })
 
   /** The recovery op's fixed 3-batch source: [[eventStreamSplit]]

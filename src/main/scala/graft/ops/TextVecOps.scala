@@ -31,22 +31,15 @@ object TextVecOps extends OpGroup {
     * the HOF across cores (documents.parquet is one file → one input
     * partition otherwise).
     */
-  private val tokCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def tokenSets(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.Caches.memo(tokCache, (s, dir), {
-      val d = Tables.t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("lang"),
-          expr("array_sort(transform(array_distinct(split(text, ' ')), t -> xxhash64(t)))").as("toks"))
-        .localCheckpoint(true)
-      graft.Caches.track(s, dir, "token_sets",
-        Set("text_near_dup_jaccard", "text_minhash_lsh"),
-        () => tokCache.remove((s, dir)).foreach(graft.Caches.releaseCheckpoint))
-      d
-    })
+  private val tokenSets = graft.Fixture("token_sets",
+      Set("text_near_dup_jaccard", "text_minhash_lsh")) { (s, dir) =>
+    Tables.t(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("text"))
+      .repartition(s.sparkContext.defaultParallelism)
+      .select(col("doc_id"), col("lang"),
+        expr("array_sort(transform(array_distinct(split(text, ' ')), t -> xxhash64(t)))").as("toks"))
+      .localCheckpoint(true)
+  }
 
   /** Lossless AllPairs/PPJoin prefix-filtered exact-Jaccard pair join
     * (Bayardo et al. WWW'07, Xiao et al. WWW'08), shared by the token

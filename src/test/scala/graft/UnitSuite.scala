@@ -1329,4 +1329,32 @@ class UnitSuite extends AnyFunSuite {
     assert(viaConf == graft.functions.FunctionTable.all.map(_.name).toSet)
     assert(viaConf.contains("vec_sum"))
   }
+
+  test("fixture registry: live consumer keys, unique names, Setups.warm derives from the layouts") {
+    // A typo in a consumer set fails silently at run time: the entry
+    // waits for a key that never reports and pins its blocks until the
+    // session stops. Pin every declaration against the key registry.
+    val fixtures = Fixture.all
+    val keys = SparkEntry.queries.keySet
+    val names = fixtures.map(_.name)
+    assert(names.distinct == names, s"duplicate fixture names: ${names.diff(names.distinct)}")
+    fixtures.foreach { f =>
+      assert(f.consumers.nonEmpty, s"fixture ${f.name} declares no consumer")
+      assert(f.consumers.subsetOf(keys),
+        s"fixture ${f.name} names unknown keys ${f.consumers -- keys}")
+    }
+    val layouts = fixtures.filter(_.layout)
+    assert(layouts.nonEmpty)
+    // A predicate that answers false is asked about every consumer of
+    // every layout and builds nothing: the keys warm consults.
+    val asked = scala.collection.mutable.Set.empty[String]
+    Setups.warm(spark, sf0001, k => { asked += k; false })
+    assert(asked.toSet == layouts.flatMap(_.consumers).toSet)
+    // And a single consumer key builds exactly its own layout.
+    Caches.releaseAll(spark, sf0001)
+    try {
+      Setups.warm(spark, sf0001, Set("src_txn_log_compact"))
+      assert(Caches.activeEntries(spark, sf0001) == Set("txnlog_demo"))
+    } finally Caches.releaseAll(spark, sf0001)
+  }
 }
