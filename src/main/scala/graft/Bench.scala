@@ -84,36 +84,31 @@ object Bench {
     // RocksDB provider preloads its native library for
     // stream_transform_with_state.
     if (SparkEntry.queries.keySet.exists(_.startsWith("stream_"))) {
-      def streamWarm(name: String): Unit = {
+      def streamWarm(name: String, settings: (String, String)*): Unit = {
         val src = Tables.tmpDir(s"graft_warm_$name")
         spark.range(2)
           .selectExpr("id", "timestamp_micros(id * 1000000) AS ts")
           .write.mode("overwrite").parquet(src)
-        val q = spark.readStream
+        val agg = spark.readStream
           .schema("id LONG, ts TIMESTAMP")
           .parquet(src)
           .withWatermark("ts", "1 hour")
           .groupBy(org.apache.spark.sql.functions.window(
             org.apache.spark.sql.functions.col("ts"), "1 hour"))
           .count()
-          .writeStream.outputMode("complete").format("memory").queryName(name)
-          .option("checkpointLocation", Tables.tmpDir(s"graft_warm_${name}_ckpt"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        Scoped(spark, settings: _*) { sc =>
+          sc(agg).writeStream.outputMode("complete").format("memory").queryName(name)
+            .option("checkpointLocation", Tables.tmpDir(s"graft_warm_${name}_ckpt"))
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+            .awaitTermination()
+        }
       }
       try streamWarm("graft_warm_stream") catch { case _: Throwable => () }
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(providerKey)
-      try {
-        spark.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        streamWarm("graft_warm_stream_rocks")
-      } catch { case _: Throwable => () }
-      finally prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
+      try streamWarm("graft_warm_stream_rocks",
+          "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      catch { case _: Throwable => () }
     }
     // --- Contention-robust timing (round-9 verdict item 1) ---------------
     // The r8 driver artifact reported 596 s for a tree the judge re-measured

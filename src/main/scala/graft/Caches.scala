@@ -33,6 +33,9 @@ import scala.jdk.CollectionConverters._
   *    registry, the memo locks and the session-keyed side maps
   *    ([[sweepWith]], which includes every fixture's memo map) of
   *    sessions whose context has stopped.
+  *  - Every key names a parent session. [[memo]] and [[track]] refuse a
+  *    [[Scoped]] clone: a clone shares its parent's context, so the sweep
+  *    would never drop its entries, and no `keyDone` would ever reach it.
   */
 object Caches {
 
@@ -62,6 +65,13 @@ object Caches {
     cache.get(key) match {
       case Some(v) => return v
       case None    => ()
+    }
+    key match {
+      case k: Product => require(!k.productIterator.exists {
+          case ls: SparkSession => Scoped.isClone(ls)
+          case _                => false
+        }, "Caches.memo: a key holds a Scoped clone; key the cache on the parent session")
+      case _ => ()
     }
     val lk = new LockKey(cache, key)
     while (true) {
@@ -202,6 +212,8 @@ object Caches {
     */
   def track(s: SparkSession, dir: String, name: String,
             consumers: Set[String], release: () => Unit): Unit = {
+    require(!Scoped.isClone(s),
+      s"Caches.track($name): called with a Scoped clone; register under the parent session")
     // Drop state of stopped sessions — their blocks died with the
     // session; retaining the closures would pin dead SessionStates.
     def stopped(ls: SparkSession) = ls.sparkContext.isStopped

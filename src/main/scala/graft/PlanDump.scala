@@ -26,9 +26,8 @@ object PlanDump {
     Tables.scratchLocalDir.foreach(d => builder.config("spark.local.dir", d))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Optional session confs, "k=v;k=v" — lets a dump pin the conf-gated
-    // fallback plan (e.g. broadcastNodeCap=0 reproduces the pre-round-19
-    // shuffled shape for the graph-family loops).
+    // Optional session confs, "k=v;k=v" — lets a dump show a key's plan
+    // under another session conf (e.g. spark.sql.adaptive.enabled=false).
     sys.env.get("SPARK_GRAFT_PLAN_CONF").foreach(_.split(';').filter(_.nonEmpty)
       .foreach { kv =>
         kv.split("=", 2) match {

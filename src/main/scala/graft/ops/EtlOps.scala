@@ -324,11 +324,11 @@ object EtlOps extends OpGroup {
             round(col("o_totalprice").cast(DecimalType(18, 2))
                 * lit(BigDecimal("1.05")).cast(DecimalType(3, 2)), 2)
               .cast(DecimalType(18, 2)).cast("double"))
-        val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try restated.repartition(col("o_year"))
-          .write.mode("overwrite").partitionBy("o_year").parquet(out)
-        finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        // Dynamic overwrite for this write only: the writer option
+        // overrides the session's partitionOverwriteMode.
+        restated.repartition(col("o_year"))
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("o_year").parquet(out)
         s.read.parquet(out)
           .groupBy("o_year")
           .agg(count(lit(1)).as("n"),

@@ -185,12 +185,15 @@ object PipelineOps extends OpGroup {
     */
   private val bpePrefix = graft.Fixture("bpe_round1_prefix",
       Set("text_bpe_train", "text_bpe_train_budget")) { (s, dir) =>
+    // Round 1 is the trainer's first round, so it runs under the
+    // trainer's conf ([[BpeConf]]) like the rounds after it.
+    graft.Scoped(s, BpeConf: _*) { sc =>
     val p = "\u0001"
     // documents.parquet is a single file -> a single input partition;
     // spread the per-round passes across all cores (the simhashSigs
     // repartition discipline) BEFORE the first checkpoint so every
     // round inherits the layout.
-    val st0 = Tables.t(s, dir, "documents")
+    val st0 = sc(Tables.t(s, dir, "documents"))
       .repartition(s.sparkContext.defaultParallelism)
       .withColumn("gtext", expr(
         s"""IF(contains(text, '$p'),
@@ -208,16 +211,19 @@ object PipelineOps extends OpGroup {
     graft.Caches.releaseCheckpoint(st0)
     graft.Caches.releaseCheckpoint(pc1)
     (ck1.select("lang", "merged"), pc2, r1)
+    }
   }
 
-  /** Shuffle width for the trainer's pair-VOCABULARY-bounded exchanges
+  /** The trainer's conf. Every exchange it runs is pair-vocabulary-bounded
     * (counts, folds, argmax — never corpus-sized; the corpus passes are
-    * map-only over the checkpointed state). Conf-exposed for cluster
-    * retargeting; the local default keeps the per-round micro-jobs off
-    * the 32-partition scheduling floor.
+    * map-only over the checkpointed state), so 4 shuffle partitions keep
+    * the per-round micro-jobs off the core-count scheduling floor, and
+    * AQE is off: the plans are fully known, and per-stage re-planning only
+    * adds latency to each round. Codegen stays on for the corpus passes.
     */
-  private def bpeStatePartitions(s: org.apache.spark.sql.SparkSession): String =
-    s.conf.getOption("spark.graft.bpe.statePartitions").getOrElse("4")
+  private val BpeConf = Seq(
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.adaptive.enabled" -> "false")
 
   /** Per-language argmax of a pair-count frame, collected: |langs| driver
     * scalars per round (the thrMap / occupied-levels pattern — never
@@ -248,28 +254,12 @@ object PipelineOps extends OpGroup {
   private[graft] def bpeTrain(
       s: org.apache.spark.sql.SparkSession, dir: String, rounds: Int,
       thrDen: Option[Int] = None)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    // Every exchange below is pair-vocabulary-bounded (the corpus passes
-    // are map-only checkpoint scans), so the trainer runs in a narrow
-    // conf window: few shuffle partitions
-    // (spark.graft.bpe.statePartitions) and AQE off — the plans are
-    // fully known and per-stage re-planning only adds latency to the
-    // per-round micro-jobs (the narrowWalkConf precedent; codegen stays
-    // ON for the corpus passes). Restored on every exit path.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.shuffle.partitions", bpeStatePartitions(s))
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try bpeTrainBody(s, dir, rounds, thrDen)
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-  }
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    graft.Scoped(s, BpeConf: _*)(sc => bpeTrainBody(s, sc, dir, rounds, thrDen))
 
   private def bpeTrainBody(
-      s: org.apache.spark.sql.SparkSession, dir: String, rounds: Int,
-      thrDen: Option[Int] = None)
+      s: org.apache.spark.sql.SparkSession, sc: graft.Scope, dir: String,
+      rounds: Int, thrDen: Option[Int])
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     // Round 1 comes from the shared prefix ([[bpePrefix]] — identical
     // for both trainer keys). The merge ledger lives on the DRIVER —
@@ -277,7 +267,8 @@ object PipelineOps extends OpGroup {
     // already used; the merge table returned to callers is ONE local
     // relation built from it (identical rows; consumers normalize order
     // with orderBy(lang, rk)).
-    val (st1, pc2, r1) = bpePrefix(s, dir)
+    val (st1p, pc2p, r1) = bpePrefix(s, dir)
+    val (st1, pc2) = (sc(st1p), sc(pc2p))
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(String, Int, String, String, Long)]
     merges ++= r1.map(t => (t._1, 1, t._2, t._3, t._4))
@@ -1842,9 +1833,9 @@ object PipelineOps extends OpGroup {
     * pass for two identical artifacts. The fused (single-partition)
     * shape is deterministic, so it memoizes exactly like
     * [[mutualKnnEdges]]; [[graft.Caches.track]] releases the blocks when
-    * the last family key reports done. Builders run OUTSIDE the narrow
-    * walk conf window (callers invoke these before entering it — the
-    * round-15 warm-the-caches advice). The unfused (distributed) shape
+    * the last family key reports done. Like every fixture they build
+    * through the parent session, so on its conf, even when first called
+    * from a walk body. The unfused (distributed) shape
     * stays per-call: only PlanSuite's dual-shape equality run uses it.
     */
   private val walkSym0Cached = graft.Fixture("walk_sym0",
@@ -1871,9 +1862,10 @@ object PipelineOps extends OpGroup {
   private def hnswServeWalk(
       s: org.apache.spark.sql.SparkSession, dir: String,
       entry: Long, occupied: Set[Int],
-      levelEdges: org.apache.spark.sql.DataFrame,
-      sym0: org.apache.spark.sql.DataFrame): (Long, Long, Long, Double) =
-    narrowWalkConf(s) {
+      levelEdges0: org.apache.spark.sql.DataFrame,
+      sym00: org.apache.spark.sql.DataFrame): (Long, Long, Long, Double) =
+    narrowWalkConf(s) { sc =>
+      val (levelEdges, sym0) = (sc(levelEdges0), sc(sym00))
       // Descent cuts at the MID and FINAL descended level only
       // (round-16 verdict item 6): the per-level checkpoint was the
       // |Q|=1 walk's fixed-cost floor — each cut is a driver-blocking
@@ -1882,9 +1874,9 @@ object PipelineOps extends OpGroup {
       // codegen off under the walk conf). Byte-identical outputs:
       // checkpoint placement never changes values. All cuts release in
       // a finally (round-16 advice): a throw mid-walk must not strand
-      // their blocks past the conf window.
+      // their blocks.
       val lvls = (4 to 1 by -1).filter(occupied)
-      var st = singleState0(s, dir, entry, track = true)
+      var st = sc(singleState0(s, dir, entry, track = true))
         .localCheckpoint(true)
       var midBeam: org.apache.spark.sql.DataFrame = null
       var finBeam: org.apache.spark.sql.DataFrame = null
@@ -1950,30 +1942,23 @@ object PipelineOps extends OpGroup {
     else base
   }
 
-  /** The narrow conf window every walk runs its |Q|-bounded frames in:
-    * 2 shuffle partitions (the state is query-batch-sized, never
-    * corpus-sized), AQE off (the plans are fully known; adaptive
-    * re-planning only serializes the hop cascade), whole-stage codegen
-    * off (a fused multi-hop level is one deep single-task stage over
-    * single-digit rows — janino compilation costs ~10x its interpreted
-    * runtime, every level). Callers warm the shared corpus-side caches
-    * BEFORE entering (the round-15 advice): only walk frames may
-    * materialize inside. Restores the caller's conf on every exit path.
+  /** The scoped conf every walk runs its |Q|-bounded frames in
+    * ([[graft.Scoped]]): 2 shuffle partitions (the state is
+    * query-batch-sized, never corpus-sized), AQE off (the plans are fully
+    * known; adaptive re-planning only serializes the hop cascade),
+    * whole-stage codegen off (a fused multi-hop level is one deep
+    * single-task stage over single-digit rows — janino compilation costs
+    * ~10x its interpreted runtime, every level). The body rebinds the
+    * walk's edge and state frames with `sc(_)`. The shared corpus-side
+    * fixtures build through the parent session, under its conf, wherever
+    * they are first called.
     */
-  private def narrowWalkConf[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevCg = s.conf.get("spark.sql.codegen.wholeStage", "true")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    try body
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      s.conf.set("spark.sql.codegen.wholeStage", prevCg)
-    }
-  }
+  private def narrowWalkConf[T](s: org.apache.spark.sql.SparkSession)(
+      body: graft.Scope => T): T =
+    graft.Scoped(s,
+      "spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.codegen.wholeStage" -> "false")(body)
 
   /** Batched HNSW descent body (vec_hnsw_batch_search), with the query
     * modulus and the walk shape exposed so PlanSuite can prove both the
@@ -2004,39 +1989,30 @@ object PipelineOps extends OpGroup {
   private[graft] def batchHnswSearch(
       s: org.apache.spark.sql.SparkSession, dir: String,
       mod: Long, fusedWalk: Boolean = true): org.apache.spark.sql.DataFrame = {
-    // Walk frames are |Q|-bounded: pin the op's shuffles narrow and turn
-    // off AQE's per-stage re-plan barrier (the plans are fully known;
-    // adaptive re-planning only serializes the hop cascade). The conf is
-    // set, the walk built EAGERLY (every state frame localCheckpoints),
-    // then restored — the StreamOps conf discipline.
-    // Warm the SHARED corpus-side caches before entering the conf
-    // window: hnswUpperEdges/mutualKnnEdges are memoized localCheckpoints
-    // consumed by the whole graph family — built here on a cold cache
-    // they would materialize interpreted on 2 shuffle partitions and that
-    // layout would be inherited by every later consumer. Building them
-    // (and the one bounded occupied-levels probe) under the caller's conf
-    // keeps codegen + full parallelism for the O(N²/label) kNN joins;
-    // only the |Q|-bounded walk runs inside the window.
+    // Walk frames are |Q|-bounded, so the walk runs under
+    // [[narrowWalkConf]], built EAGERLY (every state frame
+    // localCheckpoints). The corpus-side fixtures and the one bounded
+    // occupied-levels probe plan on the session: codegen + full
+    // parallelism for the O(N²/label) kNN joins.
     val upper = hnswUpperEdges(s, dir)
     val m0 = mutualKnnEdges(s, dir)
-    if (fusedWalk) { walkLevelEdgesCached(s, dir); walkSym0Cached(s, dir) }
     val occupied = upper.groupBy("lvl").count()
       .collect().map(_.getInt(0)).toSet
-    narrowWalkConf(s) {
-      batchHnswSearchBody(s, dir, mod, fusedWalk, upper, m0, occupied)
+    narrowWalkConf(s) { sc =>
+      batchHnswSearchBody(s, sc, dir, mod, fusedWalk, sc(upper), sc(m0), occupied)
     }
   }
 
   private def batchHnswSearchBody(
-      s: org.apache.spark.sql.SparkSession, dir: String,
+      s: org.apache.spark.sql.SparkSession, sc: graft.Scope, dir: String,
       mod: Long, fusedWalk: Boolean,
       upper: org.apache.spark.sql.DataFrame,
       m0: org.apache.spark.sql.DataFrame,
       occupied: Set[Int]): org.apache.spark.sql.DataFrame = {
-    val e = Tables.t(s, dir, "embeddings")
+    val e = sc(Tables.t(s, dir, "embeddings"))
     val q = broadcast(e.filter(pmod(col("vec_id"), lit(mod)) === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb")))
-    val lay = hnswLayerAssign(s, dir)
+    val lay = sc(hnswLayerAssign(s, dir))
     // Global entry candidates: TakeOrdered top-2 by (layer DESC, id) —
     // the 2-deep list covers the query that IS the entry node. The
     // unpartitioned window ranks a 2-row frame (post-limit), not data.
@@ -2055,14 +2031,14 @@ object PipelineOps extends OpGroup {
     // per-level self-loops — "stay where you are" lives inside the edge
     // relation so each hop references the state frame exactly once.
     // Fused shape = the family-shared tracked cache (built by whichever
-    // walk key runs first, outside the conf window via the wrapper's
-    // warm calls; released by Caches when the last family key reports
-    // done). The unfused fallback stays per-call.
+    // walk key runs first, on the session's conf; released by Caches
+    // when the last family key reports done). The unfused fallback stays
+    // per-call and builds under the walk conf.
     val levelEdges =
-      if (fusedWalk) walkLevelEdgesCached(s, dir)
+      if (fusedWalk) sc(walkLevelEdgesCached(s, dir))
       else walkLevelEdges(s, dir, upper, fused = false)
-    // (`occupied` — which levels have real edges — was probed OUTSIDE
-    // the conf window by the wrapper; an edgeless level is provably a
+    // (`occupied` — which levels have real edges — was probed on the
+    // session's conf by the wrapper; an edgeless level is provably a
     // no-op: the greedy step map is the identity there — every query
     // sits on its self-loop — so skipping is EXACT.)
     var st = st0.localCheckpoint(true)
@@ -2089,15 +2065,15 @@ object PipelineOps extends OpGroup {
     // Layer-0 batched ef=4 beam over the shared mutual-kNN graph
     // ([[walkSym0]]/[[beamStep]], shared with the |Q|=1 walk keys).
     val sym0 =
-      if (fusedWalk) walkSym0Cached(s, dir)
+      if (fusedWalk) sc(walkSym0Cached(s, dir))
       else walkSym0(s, dir, m0, fused = false)
     var beam = st.select(col("qid"), col("qemb"), col("cur").as("cid"))
     var midBeam: org.apache.spark.sql.DataFrame = null
     for (i <- 1 to 6) {
       beam = beamStep(sym0, beam, fusedWalk)
       // Mid-chain cut bounds the plan; the final cut pins the whole walk
-      // materialized under the op's conf (the lazy tail would otherwise
-      // replay steps 4-6 at action time under the caller's restored conf).
+      // materialized under the walk conf (the returned lazy tail plans on
+      // the caller's session, and would otherwise replay steps 4-6 there).
       // Each cut supersedes everything upstream of it: after i==3 the
       // descent's final state frame is dead; after i==6 the mid-chain
       // beam and the corpus-edge-sized sym0 are dead — only the returned
@@ -2402,12 +2378,10 @@ object PipelineOps extends OpGroup {
     * ~100-200 MB framed — inside the "few hundred MB is fine" broadcast
     * band and far under the 8 GB/512M-row hard cap. Above the cap the
     * join falls back to the pre-round-19 shuffled shape (identical
-    * integer results either way — the cap is a pure strategy knob), so a
+    * integer results either way — the cap only picks the strategy), so a
     * 100 TB graph whose rank vector outgrows executors still runs.
     */
-  private def pagerankBroadcastCap(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("spark.graft.pagerank.broadcastNodeCap")
-      .map(_.toLong).getOrElse(4000000L)
+  private val PagerankBroadcastCap = 4000000L
 
   /** Shared size gate for the graph family's per-round small-side joins
     * (louvain sweeps/contraction, coarsening levels): the per-node /
@@ -2429,43 +2403,29 @@ object PipelineOps extends OpGroup {
     * default put a single kic at ~8M rows, several-hundred-MB × several
     * relations — too close to the broadcast comfort band). Above the cap
     * every join falls back to the pre-round-19 shuffled shape — identical
-    * integer results, so the knob (`spark.graft.graph.broadcastNodeCap`)
-    * only picks the strategy; a 100 TB graph whose per-node state
-    * outgrows executors still runs.
+    * integer results, so the cap only picks the strategy; a 100 TB graph
+    * whose per-node state outgrows executors still runs.
     */
-  private def graphBroadcastCap(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("spark.graft.graph.broadcastNodeCap")
-      .map(_.toLong).getOrElse(2000000L)
+  private val GraphBroadcastCap = 2000000L
 
-  /** Narrow conf window for the graph family's per-round micro-jobs,
-    * entered ONLY when the broadcast gate already says the graph is
-    * small (`narrow` = the same |E|-cap condition): every exchange in a
-    * round is then a partial-aggregated |V|/|C|-bounded frame, so the
-    * default core-count shuffle width and AQE's per-stage re-planning
-    * only add scheduling latency to each of the loop's many small jobs
-    * (the narrowWalkConf / stream.statePartitions precedent; codegen
-    * stays ON). Above the cap the window is a no-op — the shuffled
-    * fallback keeps full width and AQE (skew handling matters there).
-    * Width is conf-exposed (`spark.graft.graph.statePartitions`) for
-    * cluster retargeting; restored on every exit path.
+  /** Scoped conf for the graph family's per-round micro-jobs
+    * ([[graft.Scoped]]), used ONLY when the broadcast gate already says
+    * the graph is small (`narrow` = the same |E|-cap condition): every
+    * exchange in a round is then a partial-aggregated |V|/|C|-bounded
+    * frame, so the default core-count shuffle width and AQE's per-stage
+    * re-planning only add scheduling latency to each of the loop's many
+    * small jobs (the [[narrowWalkConf]] precedent): 8 shuffle
+    * partitions, AQE off, codegen on. Above the cap the body runs on the
+    * session itself — the shuffled fallback keeps full width and AQE
+    * (skew handling matters there) — and `sc(_)` is the identity.
     */
   private def graphStateConf[T](
-      s: org.apache.spark.sql.SparkSession, narrow: Boolean)(body: => T): T =
-    if (!narrow
-        || s.conf.getOption("spark.graft.graph.stateWindow").contains("off"))
-      body
-    else {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.shuffle.partitions",
-        s.conf.getOption("spark.graft.graph.statePartitions").getOrElse("8"))
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try body
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
-    }
+      s: org.apache.spark.sql.SparkSession, narrow: Boolean)(
+      body: graft.Scope => T): T =
+    if (!narrow) body(new graft.Scope(s))
+    else graft.Scoped(s,
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** ONE synchronous louvain sweep (pre-checkpoint): from checkpointed
     * membership `comm` (n, c) to the next membership (n, c, moved). The
@@ -2590,19 +2550,15 @@ object PipelineOps extends OpGroup {
     * (guide §6): the sidecar frames inherit 32 post-shuffle/checkpoint
     * partitions, so each KB-to-MB artifact was written as up to 32 tiny
     * part files — paying 32 task launches + per-file commit renames on
-    * the write AND 32 file opens on every reload scan. Coalesce to
-    * `spark.graft.persist.outFiles` (default 1 — right for these
-    * KB/MB-scale artifacts; a production table retargets the conf so
-    * files land in the 128 MB-1 GB band, or replaces the coalesce with a
-    * rebalance-on-write). Row content and reload semantics are
+    * the write AND 32 file opens on every reload scan. Coalesce to one
+    * file — right for these KB/MB-scale artifacts; a production table
+    * sizes files into the 128 MB-1 GB band, or replaces the coalesce with
+    * a rebalance-on-write. Row content and reload semantics are
     * unchanged — parquet reads are order-free sets here (every consumer
     * sorts or aggregates).
     */
-  private def writeSidecar(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
-    val n = df.sparkSession.conf.getOption("spark.graft.persist.outFiles")
-      .map(_.toInt).getOrElse(1)
-    df.coalesce(n).write.mode("overwrite").parquet(path)
-  }
+  private def writeSidecar(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(path)
 
   /** ONE pagerank round (pre-checkpoint): broadcast-gated join of the
     * rank/degree state into the checkpointed edge frame, one
@@ -2640,7 +2596,7 @@ object PipelineOps extends OpGroup {
     // exchange+sort SortMergeJoin of 1.17M edge rows against the 16k-row
     // rank table (measured 0.59 s/round; 8 rounds). Now: n and r0 are
     // free projections of the degree checkpoint, and each round is a
-    // broadcast hash join (size-gated, see [[pagerankBroadcastCap]]) —
+    // broadcast hash join (size-gated, see [[PagerankBroadcastCap]]) —
     // no exchange or sort ever touches the edge blocks again.
     val e0 = edges.localCheckpoint(true)
     var r: org.apache.spark.sql.DataFrame = null
@@ -2657,18 +2613,19 @@ object PipelineOps extends OpGroup {
         // Every node has out-edges (precondition), so |deg| = N. One
         // driver scalar; the teleport term is integer arithmetic on it.
         val n = deg.count()
-        val cap = pagerankBroadcastCap(e0.sparkSession)
+        val cap = PagerankBroadcastCap
         def small(df: org.apache.spark.sql.DataFrame) =
           if (n <= cap) broadcast(df) else df
         // Per-round exchanges are partial-aggregated to |V| rows — run
-        // the round loop in the narrow window ([[graphStateConf]], same
-        // small-graph gate as the broadcast).
-        graphStateConf(e0.sparkSession, n <= cap) {
+        // the round loop under [[graphStateConf]] (same small-graph gate
+        // as the broadcast); the final ranks come back on the session.
+        r = graphStateConf(e0.sparkSession, n <= cap) { sc =>
+        val e = sc(e0)
         val scale = 1000000000000L
         val teleport = (15L * scale) / (100L * n)
         // Rank state carries the node's static out-degree so the round
         // join touches ONE small side, not two.
-        r = deg.select(col("src").as("node"), lit(scale / n).as("r"),
+        r = sc(deg).select(col("src").as("node"), lit(scale / n).as("r"),
             col("deg"))
           .localCheckpoint(true)
         var converged = false
@@ -2679,7 +2636,7 @@ object PipelineOps extends OpGroup {
           // checkpoint's |V| rows — the old shape ran a second join job
           // per round just to compare rank frames (measured 0.27-0.43 s
           // of the 0.59 s round).
-          val next = pagerankRound(e0, r, small, teleport)
+          val next = pagerankRound(e, r, small, teleport)
             .localCheckpoint(true)
           val changed = next.filter(col("r") =!= col("prev")).count()
           graft.Caches.releaseCheckpoint(r)
@@ -2687,6 +2644,7 @@ object PipelineOps extends OpGroup {
           rounds += 1
           if (changed == 0) converged = true
         }
+        r
         }
         ok = true
       } finally graft.Caches.releaseCheckpoint(deg)
@@ -2720,13 +2678,13 @@ object PipelineOps extends OpGroup {
       nRanks: Long): org.apache.spark.sql.DataFrame = {
     val floor = ranks.agg(expr("sum(r) div count(1)").as("floor"))
     // The high-rank node set, frontier, and visited set are |V|-bounded —
-    // size-gated broadcast ([[graphBroadcastCap]]), same as the walk keys.
+    // size-gated broadcast ([[GraphBroadcastCap]]), same as the walk keys.
     // `nRanks` (= |ranks|, identical for the reloaded and in-session
     // serves — the sidecar is written from the same frame) is computed
     // ONCE by the caller instead of a count() driver job per serve leg
     // (round-19 verdict item 10).
     val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      if (nRanks <= graphBroadcastCap(s)) broadcast _ else identity _
+      if (nRanks <= GraphBroadcastCap) broadcast _ else identity _
     val high = ranks.crossJoin(broadcast(floor))
       .filter(col("r") >= col("floor")).select("node")
     val he = sym
@@ -8433,21 +8391,22 @@ object PipelineOps extends OpGroup {
           .union(mutual.select(col("l"), col("b").as("n"))).distinct()
         val edges0 = mutual.select("a", "b")
         // Survivor sets are |V|-bounded — size-gated broadcast for the
-        // per-round leftsemi joins ([[graphBroadcastCap]]; shuffled
+        // per-round leftsemi joins ([[GraphBroadcastCap]]; shuffled
         // fallback above the cap). The gate scalar is the shared memoized
         // count ([[mutualKnnEdgeCount]]) — no per-op count() job.
-        val narrow = mutualKnnEdgeCount(s, dir) <= graphBroadcastCap(s)
+        val narrow = mutualKnnEdgeCount(s, dir) <= GraphBroadcastCap
         val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
           if (narrow) broadcast _ else identity _
         // edges0 is NOT a checkpoint of this op — its plan leaf is the
         // SHARED mutual-kNN cache, and releaseCheckpoint walks every
         // LogicalRDD leaf, so releasing it would unpersist the whole
         // graph family's edge set mid-pass. Only frames this loop
-        // checkpointed itself are ever released (the `ne edges0` guards).
-        // Peel-loop micro-jobs run in the narrow window
-        // ([[graphStateConf]], same small-graph gate as the broadcast).
-        graphStateConf(s, narrow) {
-        var edges = edges0
+        // checkpointed itself are ever released (the `ne e0` guards).
+        // Peel-loop micro-jobs run under [[graphStateConf]] (same
+        // small-graph gate as the broadcast).
+        graphStateConf(s, narrow) { sc =>
+        val e0 = sc(edges0)
+        var edges = e0
         var keep: org.apache.spark.sql.DataFrame = null
         var prevEdges: org.apache.spark.sql.DataFrame = null
         var prevN = -1L
@@ -8462,7 +8421,7 @@ object PipelineOps extends OpGroup {
           keep = nk
           val ne = kcoreInduce(edges, keep, small)
             .localCheckpoint(true)
-          Option(prevEdges).filter(_ ne edges0)
+          Option(prevEdges).filter(_ ne e0)
             .foreach(graft.Caches.releaseCheckpoint)
           prevEdges = edges
           edges = ne
@@ -8473,9 +8432,9 @@ object PipelineOps extends OpGroup {
         // The returned plan references ONLY keep (and the shared mutual
         // cache): the edge chain's tail frames can go now; keep stays
         // pinned until the key completes.
-        Option(prevEdges).filter(_ ne edges0)
+        Option(prevEdges).filter(_ ne e0)
           .foreach(graft.Caches.releaseCheckpoint)
-        if (edges ne edges0) graft.Caches.releaseCheckpoint(edges)
+        if (edges ne e0) graft.Caches.releaseCheckpoint(edges)
         val keepFinal = keep
         graft.Caches.track(s, dir, "kcore_keep", Set("graph_kcore_peel"),
           () => graft.Caches.releaseCheckpoint(keepFinal))
@@ -8626,25 +8585,26 @@ object PipelineOps extends OpGroup {
     // plan probe — round-19 verdict item 2.)
     Op("graph_louvain_converge",
       (s, dir) => {
-        val mutual = mutualKnnEdges(s, dir).select("a", "b")
-        val sym = mutual.union(mutual.select(col("b").as("a"), col("a").as("b")))
+        val mutualP = mutualKnnEdges(s, dir).select("a", "b")
+        val symP = mutualP.union(mutualP.select(col("b").as("a"), col("a").as("b")))
         // Loop-invariant degree frame, checkpointed ONCE: the old shape
         // re-derived it from sym (a full edge scan + aggregate) inside
         // TWO broadcast builds per sweep.
-        val deg = sym.groupBy(col("a").as("z")).agg(count(lit(1)).as("dz"))
+        val degP = symP.groupBy(col("a").as("z")).agg(count(lit(1)).as("dz"))
           .localCheckpoint(true)
         val mVal = mutualKnnEdgeCount(s, dir)
         // All per-node/per-community state frames below are |V|- or
-        // |C|-bounded — size-gated broadcast ([[graphBroadcastCap]]; the
+        // |C|-bounded — size-gated broadcast ([[GraphBroadcastCap]]; the
         // round-19 sweep plans had every one of these joins as a
         // SortMergeJoin exchanging+sorting BOTH sides each sweep).
-        val narrow = mVal <= graphBroadcastCap(s)
+        val narrow = mVal <= GraphBroadcastCap
         val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
           if (narrow) broadcast _ else identity _
-        // The whole sweep loop + coarse phase runs its micro-jobs in the
-        // narrow window ([[graphStateConf]]) — round-19 verdict item 3:
-        // the per-sweep cost was plan-depth/scheduling, not exchanges.
-        graphStateConf(s, narrow) {
+        // The whole sweep loop + coarse phase runs its micro-jobs under
+        // [[graphStateConf]] — round-19 verdict item 3: the per-sweep
+        // cost was plan-depth/scheduling, not exchanges.
+        graphStateConf(s, narrow) { sc =>
+        val (mutual, sym, deg) = (sc(mutualP), sc(symP), sc(degP))
         val nodes = sym.select(col("a").as("n")).distinct()
         var comm = nodes.withColumn("c", col("n")).localCheckpoint(true)
         var moves = Vector.empty[Long]
@@ -8878,16 +8838,17 @@ object PipelineOps extends OpGroup {
     // multilevel methods the only community detection that scales.
     Op("graph_louvain_multilevel",
       (s, dir) => {
-        val mutual = mutualKnnEdges(s, dir).select("a", "b")
+        val mutualP = mutualKnnEdges(s, dir).select("a", "b")
         val mVal = mutualKnnEdgeCount(s, dir)
         // Per-level state frames are |C|-bounded and SHRINK level over
         // level — size-gated broadcast, the louvain-converge treatment
-        // ([[graphBroadcastCap]]).
-        val narrow = mVal <= graphBroadcastCap(s)
+        // ([[GraphBroadcastCap]]).
+        val narrow = mVal <= GraphBroadcastCap
         val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
           if (narrow) broadcast _ else identity _
-        // Per-level micro-jobs in the narrow window ([[graphStateConf]]).
-        graphStateConf(s, narrow) {
+        // Per-level micro-jobs under [[graphStateConf]].
+        graphStateConf(s, narrow) { sc =>
+        val mutual = sc(mutualP)
         val nodes = mutual.select(col("a").as("n"))
           .union(mutual.select(col("b").as("n"))).distinct()
         var edges = mutual.withColumn("w", lit(1L)).localCheckpoint(true)
@@ -9176,21 +9137,22 @@ object PipelineOps extends OpGroup {
           .union(m.select(col("l"), col("b").as("n")))
           .groupBy("l").agg(min("n").as("n")).select("n").distinct()
         // Frontier/visited are |V|-bounded — size-gated broadcast for the
-        // per-hop expand + dedup joins ([[graphBroadcastCap]]). Gate
+        // per-hop expand + dedup joins ([[GraphBroadcastCap]]). Gate
         // scalar from the shared memoized count — no per-op count() job.
-        val narrow = mutualKnnEdgeCount(s, dir) <= graphBroadcastCap(s)
+        val narrow = mutualKnnEdgeCount(s, dir) <= GraphBroadcastCap
         val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
           if (narrow) broadcast _ else identity _
-        // Hop-loop micro-jobs in the narrow window ([[graphStateConf]],
-        // same small-graph gate as the broadcast).
-        val visited = graphStateConf(s, narrow) {
-        var vis = seeds.withColumn("hop", lit(0)).localCheckpoint(true)
+        // Hop-loop micro-jobs under [[graphStateConf]] (same
+        // small-graph gate as the broadcast).
+        val vFinal = graphStateConf(s, narrow) { sc =>
+        val edges = sc(sym)
+        var vis = sc(seeds).withColumn("hop", lit(0)).localCheckpoint(true)
         var frontier = vis
         var hop = 0
         var emptied = false
         while (hop < 6 && !emptied) {
           hop += 1
-          val nv = vis.union(bfsHop(sym, frontier, vis, small, hop))
+          val nv = vis.union(bfsHop(edges, frontier, vis, small, hop))
             .localCheckpoint(true)
           frontier = nv.filter(col("hop") === hop)
           emptied = frontier.isEmpty
@@ -9199,7 +9161,6 @@ object PipelineOps extends OpGroup {
         }
         vis
         }
-        val vFinal = visited
         graft.Caches.track(s, dir, "bfs_visited", Set("graph_bfs_hops"),
           () => graft.Caches.releaseCheckpoint(vFinal))
         val nodes = sym.select(col("src").as("n")).distinct()
@@ -9601,7 +9562,7 @@ object PipelineOps extends OpGroup {
     // against the shard's edge frame, total ≈ k·steps vectors scored per
     // query — the navigable-graph promise; the label-blocked graph build
     // amortizes across the whole graph_* family (shared Caches
-    // checkpoint), warmed OUTSIDE the narrow walk conf window.
+    // checkpoint), built on the session's conf, not the walk's.
     Op("vec_graph_greedy_search",
       (s, dir) => {
         val e = Tables.t(s, dir, "embeddings")
@@ -9627,13 +9588,14 @@ object PipelineOps extends OpGroup {
             (round(col("sim"), 3) + 0.0).as("exact_sim"),
             lit(true).as("hit"))
         } else {
-          // Family-shared fused edge frame, built OUTSIDE the conf window
+          // Family-shared fused edge frame, built on the session's conf
           // and released by Caches after the last walk key (round 16 —
           // greedy/beam/hnsw/batch all read the same checkpoint).
           val sym0 = walkSym0Cached(s, dir)
-          val (pathNodes, cur, curSim) = narrowWalkConf(s) {
-            var st = singleState0(s, dir, entryRow.getLong(0), track = true)
-            for (_ <- 1 to 6) st = descentHop(sym0, st, fused = true, track = true)
+          val (pathNodes, cur, curSim) = narrowWalkConf(s) { sc =>
+            val edges = sc(sym0)
+            var st = sc(singleState0(s, dir, entryRow.getLong(0), track = true))
+            for (_ <- 1 to 6) st = descentHop(edges, st, fused = true, track = true)
             // The ONLY driver action of the walk: the final 1-row state.
             val fin = st.head()
             (fin.getAs[String]("path").split(',').distinct.length.toLong,
@@ -9738,7 +9700,8 @@ object PipelineOps extends OpGroup {
     // local optimum and beam=4 reaches the true top-1. At 100 TB:
     // per-step cost is ef·k lookups — ef trades recall for lookups, the
     // HNSW knob; the graph build amortizes across the graph_* family
-    // (shared Caches checkpoint), warmed OUTSIDE the walk conf window.
+    // (shared Caches checkpoint), built on the session's conf, not the
+    // walk's.
     Op("vec_graph_beam_search",
       (s, dir) => {
         val e = Tables.t(s, dir, "embeddings")
@@ -9762,23 +9725,24 @@ object PipelineOps extends OpGroup {
             (round(col("sim"), 3) + 0.0).as("exact_sim"),
             lit(true).as("hit"))
         } else {
-          // Family-shared fused edge frame, built OUTSIDE the conf window
+          // Family-shared fused edge frame, built on the session's conf
           // (round 16; released by Caches after the last walk key).
           val sym0 = walkSym0Cached(s, dir)
-          val (beamed, foundId, foundSim) = narrowWalkConf(s) {
+          val (beamed, foundId, foundSim) = narrowWalkConf(s) { sc =>
             // Mid-chain + final checkpoints only — the batched shape's
             // plan-bounding cuts; the ever-beamed set rides the state as
             // a `seen` array, so ONE head() collect ends the whole walk.
             // The cuts release in a finally (round-16 advice): a throw
-            // mid-walk must not strand their blocks past the conf window.
-            var beam = singleState0(s, dir, entryRow.getLong(0), track = false)
+            // mid-walk must not strand their blocks.
+            val edges = sc(sym0)
+            var beam = sc(singleState0(s, dir, entryRow.getLong(0), track = false))
               .select(col("qid"), col("qemb"), col("cur").as("cid"),
                 array(col("cur")).as("seen"))
             var midBeam: org.apache.spark.sql.DataFrame = null
             var finBeam: org.apache.spark.sql.DataFrame = null
             try {
               for (i <- 1 to 6) {
-                beam = beamStep(sym0, beam, fused = true, trackSeen = true)
+                beam = beamStep(edges, beam, fused = true, trackSeen = true)
                 if (i == 3 || i == 6) {
                   beam = beam.localCheckpoint(true)
                   if (i == 3) midBeam = beam else finBeam = beam
@@ -9940,9 +9904,8 @@ object PipelineOps extends OpGroup {
           case Some(top) =>
             val topLayer = top.getInt(0)
             val entry = top.getLong(1)
-            // Shared corpus-side caches warm OUTSIDE the walk conf window
-            // (the round-15 advice): the per-layer edge checkpoint is
-            // built once for build+search+batch; kNN includes the query
+            // Shared corpus-side fixtures: the per-layer edge checkpoint
+            // is built once for build+search+batch; kNN includes the query
             // node per the layer-0 convention — query-touching edges are
             // excluded by the hop's dst ≠ qid filter, exactly as in the
             // batched shape. The walk itself is vec_hnsw_batch_search's
@@ -9955,17 +9918,17 @@ object PipelineOps extends OpGroup {
             val upper = hnswUpperEdges(s, dir)
             val occupied = upper.groupBy("lvl").count()
               .collect().map(_.getInt(0)).toSet
-            // Family-shared fused edge frames, built OUTSIDE the conf
-            // window (round 16; released by Caches after the last walk
+            // Family-shared fused edge frames, built on the session's
+            // conf (round 16; released by Caches after the last walk
             // key — greedy/beam/hnsw/batch all read the same checkpoints).
             val levelEdges = walkLevelEdgesCached(s, dir)
             val sym0 = walkSym0Cached(s, dir)
-            // Join the truth leg BEFORE the walk's conf window opens: a
-            // job still planning inside narrowWalkConf would inherit its
-            // session-wide narrow conf.
-            val exact = try fExact.get() finally exPool.shutdownNow()
-            val (descNodes, beamed, foundId, foundSim) =
-              hnswServeWalk(s, dir, entry, occupied, levelEdges, sym0)
+            // The truth leg keeps planning on the session while the walk
+            // runs on its scoped clone, so it is joined after the walk.
+            val ((descNodes, beamed, foundId, foundSim), exact) =
+              try (hnswServeWalk(s, dir, entry, occupied, levelEdges, sym0),
+                fExact.get())
+              finally exPool.shutdownNow()
             exact match {
               case Some((vid, esim)) => s.range(1).select(
                 lit(topLayer).as("top_layer"),
@@ -10029,9 +9992,9 @@ object PipelineOps extends OpGroup {
         // (guide §2.6; round-19 verdict item 5: the three sidecar writes,
         // the two reload probes and the two walk-frame checkpoints ran
         // strictly sequentially). Shared in-session cache builds inside
-        // the legs are memo-locked (single build under a race); no leg
-        // touches session conf, and the walk's narrow conf window opens
-        // only after all legs are joined.
+        // the legs are memo-locked (single build under a race). The walk
+        // plans on its own scoped clone ([[narrowWalkConf]]), so the
+        // truth leg keeps the session's conf while both run.
         val root = Tables.tmpDir("graft_hnsw_persist")
         val pool = DriverPool(4)
         // The brute-force truth leg is independent of everything below —
@@ -10809,7 +10772,7 @@ object PipelineOps extends OpGroup {
         .localCheckpoint(true)
       val n = deg.count()
       def small(df: org.apache.spark.sql.DataFrame) =
-        if (n <= pagerankBroadcastCap(s)) broadcast(df) else df
+        if (n <= PagerankBroadcastCap) broadcast(df) else df
       val scale = 1000000000000L
       val r = deg.select(col("src").as("node"), lit(scale / n).as("r"),
         col("deg")).localCheckpoint(true)
@@ -10822,7 +10785,7 @@ object PipelineOps extends OpGroup {
         .localCheckpoint(true)
       val mVal = mutualKnnEdgeCount(s, dir)
       val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        if (mVal <= graphBroadcastCap(s)) broadcast _ else identity _
+        if (mVal <= GraphBroadcastCap) broadcast _ else identity _
       val comm = sym.select(col("a").as("n")).distinct()
         .withColumn("c", col("n")).localCheckpoint(true)
       louvainSweep(sym, deg, mVal, small, comm)
@@ -10830,7 +10793,7 @@ object PipelineOps extends OpGroup {
     "graph_kcore_round1_inner" -> ((s, dir) => {
       val edges0 = mutualKnnEdges(s, dir).select("a", "b")
       val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        if (mutualKnnEdgeCount(s, dir) <= graphBroadcastCap(s)) broadcast _ else identity _
+        if (mutualKnnEdgeCount(s, dir) <= GraphBroadcastCap) broadcast _ else identity _
       val keep = kcoreSurvivors(edges0).localCheckpoint(true)
       kcoreInduce(edges0, keep, small)
     }),
@@ -10854,7 +10817,7 @@ object PipelineOps extends OpGroup {
         .union(m.select(col("l"), col("b").as("n")))
         .groupBy("l").agg(min("n").as("n")).select("n").distinct()
       val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        if (mutualKnnEdgeCount(s, dir) <= graphBroadcastCap(s)) broadcast _ else identity _
+        if (mutualKnnEdgeCount(s, dir) <= GraphBroadcastCap) broadcast _ else identity _
       val visited = seeds.withColumn("hop", lit(0)).localCheckpoint(true)
       visited.union(bfsHop(sym, visited, visited, small, 1))
     }),

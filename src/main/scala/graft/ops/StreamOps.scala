@@ -231,7 +231,9 @@ object StreamOps extends OpGroup {
   /** Incremental variant of [[eventStream]]: reads the [[splitDir]]
     * layout one file per micro-batch. The split files are written from
     * the normalized events frame, so their footer is always µs NTZ —
-    * no three-way format dispatch needed here.
+    * no three-way format dispatch needed here. The crash-and-restart keys
+    * read it with a fixed n = 3, whatever [[sourceBatches]] says: recovery
+    * is only meaningful across several micro-batches.
     */
   private def eventStreamSplit(s: SparkSession, sfDir: String, n: Int): DataFrame = {
     val dir = splitDir(s, sfDir, n)
@@ -242,34 +244,29 @@ object StreamOps extends OpGroup {
       .withColumn("ts", col("ts").cast("timestamp"))
   }
 
-  /** Run a streaming DataFrame to completion into a memory sink, return
-    * the sink contents as a batch DataFrame.
+  /** The streaming queries' shuffle width. Every partition is a state
+    * store instance with its own snapshot/commit per batch, and the
+    * small file sources here cannot use more parallelism than the data
+    * has, so 2, not the session's core count. A query pins it at its
+    * first start: a restart takes the count from its checkpoint.
+    */
+  private val StatePartitions = "spark.sql.shuffle.partitions" -> "2"
+
+  /** The RocksDB state store, which transformWithState requires. */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run a streaming DataFrame to completion into a memory sink and return
+    * the sink contents as a batch DataFrame on `s`. The query starts on a
+    * [[graft.Scoped]] clone carrying [[StatePartitions]] and `extra`: it
+    * snapshots that conf at `start()`, and its sink table is registered
+    * in the clone's catalog, so the sink is read there and comes back
+    * rebound onto `s`.
     */
   private def runToMemory(s: SparkSession, sfDir: String, df: DataFrame,
-      name: String, mode: String): DataFrame = {
-    // One micro-batch into a memory sink doesn't need 32 state-store
-    // partitions — cap the stateful shuffle for the streaming stage only
-    // (the query pins the value at start; restore for batch ops after).
-    // 2, not 4: every partition is a state-store instance with its own
-    // snapshot/commit per batch, and the single-file AvailableNow source
-    // can't use more parallelism than the data has anyway. Round 19:
-    // conf-exposed (spark.graft.stream.statePartitions) so the
-    // state-store-count/parallelism trade can be measured per host and
-    // retargeted on a real cluster without a code change. Validated at
-    // read time (a malformed value otherwise fails deep inside Spark),
-    // and note the value only takes effect for queries starting a FRESH
-    // checkpoint: on restart Spark pins the stateful shuffle partition
-    // count from the checkpoint's offsets log, so retargeting the conf
-    // mid-checkpoint is a silent no-op for recovery paths (round-19
-    // advice item 3).
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val stateParts = s.conf.getOption("spark.graft.stream.statePartitions")
-      .getOrElse("2")
-    require(scala.util.Try(stateParts.trim.toInt).toOption.exists(_ > 0),
-      s"spark.graft.stream.statePartitions must be a positive integer, got '$stateParts'")
-    s.conf.set("spark.sql.shuffle.partitions", stateParts.trim)
-    try {
-      val q = df.writeStream
+      name: String, mode: String, extra: (String, String)*): DataFrame =
+    graft.Scoped(s, StatePartitions +: extra: _*) { sc =>
+      val q = sc(df).writeStream
         .outputMode(mode)
         .format("memory")
         .queryName(name)
@@ -280,11 +277,73 @@ object StreamOps extends OpGroup {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val nBatches = q.recentProgress.count(_.numInputRows > 0)
-      publishBatches(s, sfDir, nBatches) // test-seam publish only
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name)
-  }
+      publishBatches(s, sfDir, q.recentProgress.count(_.numInputRows > 0)) // test-seam publish only
+      sc.session.table(name)
+    }
+
+  /** The poison-pill rig of the crash-and-restart keys. Run 1 of `src`
+    * (from checkpoint `ckpt`, foreachBatch `write`) dies at the worst
+    * point: batch 1's write has landed, its commit has not. Run 2
+    * restarts from the same checkpoint, redelivers batch 1 (same batchId,
+    * same data) and finishes. With `txnLog = Some((dataDir, logDir))`
+    * each batch's write is followed by an `add` record `NNN.json` for
+    * path `b<batchId>` in `logDir` (a replay never sees a half-written
+    * transaction), and the crash audit counts the entries of both dirs
+    * between the runs. Both runs start on one [[graft.Scoped]] clone with
+    * [[StatePartitions]]. Returns (data batches of run 2, files at the
+    * crash, commits at the crash); the crash counts are 0 without a log.
+    */
+  private def crashAndRestart(s: SparkSession, sfDir: String, key: String,
+      src: => DataFrame, ckpt: String, write: (DataFrame, Long) => Unit,
+      txnLog: Option[(java.nio.file.Path, java.nio.file.Path)] = None,
+      mode: String = "append"): (Long, Long, Long) =
+    graft.Scoped(s, StatePartitions) { sc =>
+      def start(bomb: Boolean) = sc(src).writeStream
+        .outputMode(mode)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          write(b, id)
+          if (bomb && id == 1)
+            throw new RuntimeException(
+              "poison pill: crash after the batch write, before its commit")
+          txnLog.foreach { case (_, logDir) =>
+            java.nio.file.Files.write(logDir.resolve(f"$id%03d.json"),
+              s"""{"commit": $id, "action": "add", "path": "b$id"}"""
+                .getBytes("UTF-8"))
+          }
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      val q1 = start(bomb = true)
+      try { q1.awaitTermination(); sys.error("poison pill must kill run 1") }
+      catch {
+        case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
+      }
+      // Mid-crash audit: the orphaned data file exists, the log does not
+      // acknowledge it — replay sees only committed transactions.
+      def countIn(p: java.nio.file.Path): Long = {
+        val ls = java.nio.file.Files.list(p)
+        try ls.count() finally ls.close()
+      }
+      val (files, commits) = txnLog
+        .map { case (data, log) => (countIn(data), countIn(log)) }
+        .getOrElse((0L, 0L))
+      val q2 = start(bomb = false)
+      q2.awaitTermination()
+      // recentProgress is a ring buffer bounded by
+      // numRecentProgressUpdates (default 100): assert the bound so a
+      // grown source layout fails loudly instead of silently
+      // undercounting.
+      val retention = s.conf
+        .get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
+      require(q2.recentProgress.length < retention,
+        s"$key: ${q2.recentProgress.length} progress updates reached the " +
+          s"$retention-entry retention — batch count would undercount; " +
+          "raise the retention or count via a listener")
+      val n = q2.recentProgress.count(_.numInputRows > 0)
+      publishBatches(s, sfDir, n) // test-seam publish only
+      (n.toLong, files, commits)
+    }
 
   val ops: Seq[Op] = Seq(
     // Tumbling 1 h counts with a 1 h watermark; complete mode so all
@@ -481,20 +540,7 @@ object StreamOps extends OpGroup {
         val head = onTime.orderBy(desc("ts")).limit(1)
           .withColumn("ts", expr("ts + INTERVAL 2 HOURS"))
           .withColumn("event_id", col("event_id") + 1000000L)
-        val root = Tables.tmpDir("graft_late_src")
-        Seq(onTime, head, late).zipWithIndex.foreach { case (df, i) =>
-          val stage = Tables.tmpDir("graft_late_stage")
-          df.coalesce(1).write.mode("overwrite").parquet(stage)
-          val listing = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-          val part = try listing
-            .filter(f => f.getFileName.toString.startsWith("part-")
-              && f.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally listing.close()
-          val dst = java.nio.file.Paths.get(root, s"b$i.parquet")
-          java.nio.file.Files.copy(part, dst)
-          dst.toFile.setLastModified(1700000000000L + i * 10000L)
-        }
+        val root = mtimeOrderedDir("graft_late_src", Seq(onTime, head, late))
         val raw = s.readStream
           .schema(rawSchema(org.apache.spark.sql.types.TimestampNTZType))
           .option("maxFilesPerTrigger", 1)
@@ -504,10 +550,8 @@ object StreamOps extends OpGroup {
           .groupBy(window(col("ts"), "1 hour"))
           .agg(count(lit(1)).as("n"))
           .select(col("window.start").cast("timestamp_ntz").as("window_start"), col("n"))
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-        val (sink, dropped, batches) = try {
-          val q = agg.writeStream
+        val (sink, dropped, batches) = graft.Scoped(s, StatePartitions) { sc =>
+          val q = sc(agg).writeStream
             .outputMode("append")
             .format("memory")
             .queryName("graft_stream_late_drop")
@@ -519,8 +563,8 @@ object StreamOps extends OpGroup {
           publishBatches(s, dir, nBatches) // test-seam publish only
           val drops = q.recentProgress
             .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-          (s.table("graft_stream_late_drop"), drops, nBatches.toLong)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          (sc.session.table("graft_stream_late_drop"), drops, nBatches.toLong)
+        }
         sink.agg(count(lit(1)).as("finalized_windows"),
             coalesce(sum("n"), lit(0L)).as("finalized_events"))
           .select(lit(batches).as("n_batches"), lit(nLate).as("late_candidates"),
@@ -579,31 +623,22 @@ object StreamOps extends OpGroup {
     // enables schema evolution + multiple state variables on a
     // long-running 100 TB/day query. transformWithState requires the
     // RocksDB state store provider (state off-heap — the provider a
-    // production query would run anyway); pinned for this query and
-    // restored after. ScalaTest pins the final per-user counts to the
-    // oracle-checked batch per-user counts, same as stream_custom_state.
+    // production query would run anyway), set for this query only.
+    // ScalaTest pins the final per-user counts to the oracle-checked
+    // batch per-user counts, same as stream_custom_state.
     Op("stream_transform_with_state",
       (s, dir) => {
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val users = eventStream(s, dir).select(col("user_id")).as[Long]
-          val counts = users.groupByKey(identity)
-            .transformWithState(new RunningCountProcessor, TimeMode.None(),
-              OutputMode.Append())
-            .toDF("user_id", "running_count")
-          runToMemory(s, dir, counts, "graft_stream_tws", "append")
-            .groupBy("user_id")
-            .agg(max(col("running_count")).as("n_events"))
-            .orderBy("user_id")
-        } finally prev match {
-          case Some(v) => s.conf.set(providerKey, v)
-          case None    => s.conf.unset(providerKey)
-        }
+        val users = eventStream(s, dir).select(col("user_id")).as[Long]
+        val counts = users.groupByKey(identity)
+          .transformWithState(new RunningCountProcessor, TimeMode.None(),
+            OutputMode.Append())
+          .toDF("user_id", "running_count")
+        runToMemory(s, dir, counts, "graft_stream_tws", "append", RocksDb)
+          .groupBy("user_id")
+          .agg(max(col("running_count")).as("n_events"))
+          .orderBy("user_id")
       },
       None),
 
@@ -632,28 +667,19 @@ object StreamOps extends OpGroup {
       (s, dir) => {
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         import s.implicits._
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val src = eventStreamSplit(s, dir, 3)
-            .withWatermark("ts", "1 hour")
-            .select(col("user_id"), col("ts"))
-            .as[(Long, java.sql.Timestamp)]
-          val expiries = src.groupByKey(_._1)
-            .transformWithState(new SessionTtlProcessor, TimeMode.EventTime(),
-              OutputMode.Append())
-            .toDF("user_id", "expired_events", "expiry_ms")
-          runToMemory(s, dir, expiries, "graft_stream_ttl", "append")
-            .groupBy("user_id")
-            .agg(count(lit(1)).as("n_expiries"),
-              sum("expired_events").as("expired_events"))
-            .orderBy("user_id")
-        } finally prev match {
-          case Some(v) => s.conf.set(providerKey, v)
-          case None    => s.conf.unset(providerKey)
-        }
+        val src = eventStreamSplit(s, dir, 3)
+          .withWatermark("ts", "1 hour")
+          .select(col("user_id"), col("ts"))
+          .as[(Long, java.sql.Timestamp)]
+        val expiries = src.groupByKey(_._1)
+          .transformWithState(new SessionTtlProcessor, TimeMode.EventTime(),
+            OutputMode.Append())
+          .toDF("user_id", "expired_events", "expiry_ms")
+        runToMemory(s, dir, expiries, "graft_stream_ttl", "append", RocksDb)
+          .groupBy("user_id")
+          .agg(count(lit(1)).as("n_expiries"),
+            sum("expired_events").as("expired_events"))
+          .orderBy("user_id")
       },
       None),
 
@@ -681,48 +707,16 @@ object StreamOps extends OpGroup {
         Tables.conf(s)
         val sink = Tables.tmpDir("graft_restart_sink")
         val ckpt = Tables.tmpDir("graft_restart_ckpt")
-        def agg = eventStreamSplit3(s, dir)
+        def agg = eventStreamSplit(s, dir, 3)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(col("window.start").cast("timestamp_ntz").as("window_start"),
             col("event_type"), col("n"))
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-        val recoveryBatches = try {
-          def start(bomb: Boolean) = agg.writeStream
-            .outputMode("update")
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              b.write.mode("overwrite").parquet(s"$sink/batchId=$id")
-              if (bomb && id == 1)
-                throw new RuntimeException(
-                  "poison pill: crash after sink write, before batch commit")
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          val q1 = start(bomb = true)
-          try { q1.awaitTermination(); sys.error("poison pill must kill run 1") }
-          catch {
-            case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
-          }
-          val q2 = start(bomb = false)
-          q2.awaitTermination()
-          // recentProgress is a ring buffer bounded by
-          // numRecentProgressUpdates (default 100) — fine for the 3-file
-          // layout, but assert the bound explicitly so a grown source
-          // layout fails loudly instead of silently undercounting
-          // (round-16 advice).
-          val retention = s.conf
-            .get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
-          require(q2.recentProgress.length < retention,
-            s"stream_restart_recovery: ${q2.recentProgress.length} progress " +
-              s"updates reached the $retention-entry retention — batch count " +
-              "would undercount; raise the retention or count via a listener")
-          val n = q2.recentProgress.count(_.numInputRows > 0)
-          publishBatches(s, dir, n) // test-seam publish only
-          n.toLong
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        val (recoveryBatches, _, _) = crashAndRestart(s, dir,
+          "stream_restart_recovery", agg, ckpt,
+          (b, id) => b.write.mode("overwrite").parquet(s"$sink/batchId=$id"),
+          mode = "update")
         // Exactly-once reconstruction: a key's truth is its LATEST
         // batch's row (update mode re-emits changed keys per batch).
         val w = org.apache.spark.sql.expressions.Window
@@ -766,53 +760,12 @@ object StreamOps extends OpGroup {
         java.nio.file.Files.createDirectories(logDir)
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(root, "data"))
-        def src = eventStreamSplit3(s, dir)
+        def src = eventStreamSplit(s, dir, 3)
           .select("event_id", "event_type", "value")
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-        val (recoveryBatches, crashFiles, crashCommits) = try {
-          def start(bomb: Boolean) = src.writeStream
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              b.write.mode("overwrite").parquet(s"$root/data/b$id")
-              if (bomb && id == 1)
-                throw new RuntimeException(
-                  "poison pill: crash after the data write, before the log commit")
-              java.nio.file.Files.write(logDir.resolve(f"$id%03d.json"),
-                s"""{"commit": $id, "action": "add", "path": "b$id"}"""
-                  .getBytes("UTF-8"))
-              ()
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          val q1 = start(bomb = true)
-          try { q1.awaitTermination(); sys.error("poison pill must kill run 1") }
-          catch {
-            case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
-          }
-          // Mid-crash audit: the orphaned data file exists, the log does
-          // not acknowledge it — replay sees only committed transactions.
-          def countIn(p: java.nio.file.Path): Long = {
-            val ls = java.nio.file.Files.list(p)
-            try ls.count() finally ls.close()
-          }
-          val files = countIn(java.nio.file.Paths.get(root, "data"))
-          val commits = countIn(logDir)
-          val q2 = start(bomb = false)
-          q2.awaitTermination()
-          // Same retention guard as stream_restart_recovery (round-17
-          // advice): recentProgress is a bounded ring buffer; a grown
-          // source layout must fail loudly, not silently undercount.
-          val retention = s.conf
-            .get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
-          require(q2.recentProgress.length < retention,
-            s"stream_txn_log_sink: ${q2.recentProgress.length} progress " +
-              s"updates reached the $retention-entry retention — batch count " +
-              "would undercount; raise the retention or count via a listener")
-          val n = q2.recentProgress.count(_.numInputRows > 0)
-          publishBatches(s, dir, n) // test-seam publish only
-          (n.toLong, files, commits)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        val (recoveryBatches, crashFiles, crashCommits) = crashAndRestart(s, dir,
+          "stream_txn_log_sink", src, ckpt,
+          (b, id) => b.write.mode("overwrite").parquet(s"$root/data/b$id"),
+          Some((java.nio.file.Paths.get(root, "data"), logDir)))
         // Snapshot replay over the committed log — the
         // src_txn_log_snapshot mechanism: live = LAST action is add.
         val live = s.read
@@ -910,46 +863,11 @@ object StreamOps extends OpGroup {
             .option("maxFilesPerTrigger", 1)
             .parquet(splitDir)
             .select(col("vec_id"), expr(quantExpr).as("qv"))
-          val prev = s.conf.get("spark.sql.shuffle.partitions")
-          s.conf.set("spark.sql.shuffle.partitions", "2")
-          val (recoveryBatches, crashFiles, crashCommits) = try {
-            def start(bomb: Boolean) = src.writeStream
-              .foreachBatch { (b: DataFrame, id: Long) =>
-                assignToBase(b).write.mode("overwrite")
-                  .parquet(s"$root/delta/b$id")
-                if (bomb && id == 1)
-                  throw new RuntimeException(
-                    "poison pill: crash after the delta write, before the log commit")
-                java.nio.file.Files.write(logDir.resolve(f"$id%03d.json"),
-                  s"""{"commit": $id, "action": "add", "path": "b$id"}"""
-                    .getBytes("UTF-8"))
-                ()
-              }
-              .option("checkpointLocation", ckpt)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            val q1 = start(bomb = true)
-            try { q1.awaitTermination(); sys.error("poison pill must kill run 1") }
-            catch {
-              case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
-            }
-            def countIn(p: java.nio.file.Path): Long = {
-              val ls = java.nio.file.Files.list(p)
-              try ls.count() finally ls.close()
-            }
-            val files = countIn(java.nio.file.Paths.get(root, "delta"))
-            val commits = countIn(logDir)
-            val q2 = start(bomb = false)
-            q2.awaitTermination()
-            val retention = s.conf
-              .get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
-            require(q2.recentProgress.length < retention,
-              s"stream_index_upsert: ${q2.recentProgress.length} progress " +
-                s"updates reached the $retention-entry retention")
-            val n = q2.recentProgress.count(_.numInputRows > 0)
-            publishBatches(s, dir, n) // test-seam publish only
-            (n.toLong, files, commits)
-          } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          val (recoveryBatches, crashFiles, crashCommits) = crashAndRestart(s, dir,
+            "stream_index_upsert", src, ckpt,
+            (b, id) => assignToBase(b).write.mode("overwrite")
+              .parquet(s"$root/delta/b$id"),
+            Some((java.nio.file.Paths.get(root, "delta"), logDir)))
           // Snapshot replay → live deltas → the merged served index.
           val live = s.read
             .schema("commit INT, action STRING, path STRING")
@@ -1076,45 +994,10 @@ object StreamOps extends OpGroup {
             .schema(changeSchema)
             .option("maxFilesPerTrigger", 1)
             .parquet(cdcSplitDir(s, dir, changes))
-          val prev = s.conf.get("spark.sql.shuffle.partitions")
-          s.conf.set("spark.sql.shuffle.partitions", "2")
-          val (recoveryBatches, crashFiles, crashCommits) = try {
-            def start(bomb: Boolean) = src.writeStream
-              .foreachBatch { (b: DataFrame, id: Long) =>
-                b.write.mode("overwrite").parquet(s"$root/delta/b$id")
-                if (bomb && id == 1)
-                  throw new RuntimeException(
-                    "poison pill: crash after the delta write, before the log commit")
-                java.nio.file.Files.write(logDir.resolve(f"$id%03d.json"),
-                  s"""{"commit": $id, "action": "add", "path": "b$id"}"""
-                    .getBytes("UTF-8"))
-                ()
-              }
-              .option("checkpointLocation", ckpt)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            val q1 = start(bomb = true)
-            try { q1.awaitTermination(); sys.error("poison pill must kill run 1") }
-            catch {
-              case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
-            }
-            def countIn(p: java.nio.file.Path): Long = {
-              val ls = java.nio.file.Files.list(p)
-              try ls.count() finally ls.close()
-            }
-            val files = countIn(java.nio.file.Paths.get(root, "delta"))
-            val commits = countIn(logDir)
-            val q2 = start(bomb = false)
-            q2.awaitTermination()
-            val retention = s.conf
-              .get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
-            require(q2.recentProgress.length < retention,
-              s"stream_cdc_apply: ${q2.recentProgress.length} progress " +
-                s"updates reached the $retention-entry retention")
-            val n = q2.recentProgress.count(_.numInputRows > 0)
-            publishBatches(s, dir, n) // test-seam publish only
-            (n.toLong, files, commits)
-          } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          val (recoveryBatches, crashFiles, crashCommits) = crashAndRestart(s, dir,
+            "stream_cdc_apply", src, ckpt,
+            (b, id) => b.write.mode("overwrite").parquet(s"$root/delta/b$id"),
+            Some((java.nio.file.Paths.get(root, "delta"), logDir)))
           // Log replay → live deltas → latest-wins merge → served table.
           val live = s.read
             .schema("commit INT, action STRING, path STRING")
@@ -1174,17 +1057,4 @@ object StreamOps extends OpGroup {
       mtimeOrderedDir("graft_cdc_split",
         Seq(2, 1, 3).map(v => changes.filter(col("ver") === v)))
     })
-
-  /** The recovery op's fixed 3-batch source: [[eventStreamSplit]]
-    * independent of the [[sourceBatches]] test seam (recovery is only
-    * meaningful across multiple micro-batches, whatever the seam says).
-    */
-  private def eventStreamSplit3(s: SparkSession, sfDir: String): DataFrame = {
-    val dir = splitDir(s, sfDir, 3)
-    s.readStream
-      .schema(rawSchema(org.apache.spark.sql.types.TimestampNTZType))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-  }
 }

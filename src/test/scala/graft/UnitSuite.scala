@@ -1357,4 +1357,94 @@ class UnitSuite extends AnyFunSuite {
       assert(Caches.activeEntries(spark, sf0001) == Set("txnlog_demo"))
     } finally Caches.releaseAll(spark, sf0001)
   }
+
+  /** Whether a frame's physical plan is adaptive, and its shuffle widths
+    * (for an adaptive plan, those of its initial plan).
+    */
+  private def shape(df: org.apache.spark.sql.DataFrame): (Boolean, Seq[Int]) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def widths(p: org.apache.spark.sql.execution.SparkPlan) =
+      p.collect { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions }
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => (true, widths(a.executedPlan))
+      case p                        => (false, widths(p))
+    }
+  }
+
+  test("Scoped: a bound frame plans under the scope's conf; the session and its frames keep theirs") {
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(parts != 2 && spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    def agg = spark.range(100).groupBy((col("id") % 7).as("k")).count()
+    val out = Scoped(spark,
+        "spark.sql.shuffle.partitions" -> "2", "spark.sql.adaptive.enabled" -> "false") { sc =>
+      assert(sc.session ne spark)
+      assert(shape(sc(agg)) == ((false, Seq(2))))
+      // Inside the body the session, and a frame planned on it, are untouched.
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == parts.toString)
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      assert(shape(agg) == ((true, Seq(parts))))
+      sc(agg).filter(col("count") > 0)
+    }
+    // A lazily returned frame comes back on the session and plans there.
+    assert(out.sparkSession eq spark)
+    assert(shape(out) == ((true, Seq(parts))))
+    assert(out.count() == 7)
+  }
+
+  test("Scoped: a windowed key never changes the conf of a job planning concurrently on the session") {
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def agg = spark.range(1000).groupBy((col("id") % 5).as("k")).count()
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    val run = pool.submit(new java.util.concurrent.Callable[Long] {
+      def call() = SparkEntry.queries("graph_bfs_hops")(spark, sf0001).count()
+    })
+    val samples = scala.collection.mutable.ArrayBuffer.empty[(Boolean, Seq[Int])]
+    try {
+      while (!run.isDone) samples += shape(agg)
+      assert(run.get() > 0)
+    } finally {
+      pool.shutdown()
+      Caches.keyDone(spark, sf0001, "graph_bfs_hops")
+    }
+    assert(samples.nonEmpty)
+    val off = samples.filter(_ != ((true, Seq(parts))))
+    assert(off.isEmpty, s"${off.size} of ${samples.size} samples planned off the session conf: ${off.distinct}")
+  }
+
+  test("Caches.track refuses a Scoped clone and names the key") {
+    val e = intercept[IllegalArgumentException] {
+      Scoped(spark) { sc =>
+        Caches.track(sc.session, sf0001, "scoped_probe", Set("graph_bfs_hops"), () => ())
+      }
+    }
+    assert(e.getMessage.contains("scoped_probe"))
+    assert(!Caches.activeEntries(spark, sf0001).contains("scoped_probe"))
+  }
+
+  test("Scoped: a clone that started a stream leaves no listener bus on the shared context") {
+    import scala.jdk.CollectionConverters._
+    // LiveListenerBus and the manager's bus are private to Spark; read
+    // them reflectively.
+    def listeners(): Seq[AnyRef] = {
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethod("listeners").invoke(bus)
+        .asInstanceOf[java.util.List[AnyRef]].asScala.toSeq
+    }
+    val src = Tables.tmpDir("graft_scoped_stream")
+    spark.range(3).write.mode("overwrite").parquet(src)
+    val stream = spark.readStream.schema("id LONG").parquet(src)
+    val cloneBus = Scoped(spark) { sc =>
+      sc(stream).writeStream.format("noop")
+        .option("checkpointLocation", Tables.tmpDir("graft_scoped_stream_ckpt"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      val f = sc.session.streams.getClass.getDeclaredField("listenerBus")
+      f.setAccessible(true)
+      val b = f.get(sc.session.streams)
+      assert(listeners().exists(_ eq b))
+      b
+    }
+    assert(!listeners().exists(_ eq cloneBus))
+  }
 }
