@@ -97,11 +97,11 @@ object Bench {
             org.apache.spark.sql.functions.col("ts"), "1 hour"))
           .count()
         Scoped(spark, settings: _*) { sc =>
-          sc(agg).writeStream.outputMode("complete").format("memory").queryName(name)
-            .option("checkpointLocation", Tables.tmpDir(s"graft_warm_${name}_ckpt"))
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
+          org.apache.spark.sql.GraftSqlShim.awaitAndDetach(
+            sc(agg).writeStream.outputMode("complete").format("memory").queryName(name)
+              .option("checkpointLocation", Tables.tmpDir(s"graft_warm_${name}_ckpt"))
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .start())
         }
       }
       try streamWarm("graft_warm_stream") catch { case _: Throwable => () }

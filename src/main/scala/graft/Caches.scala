@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 /** Lifecycle registry for the artifacts the op groups share per
   * (session, sfDir): checkpointed frames (signature tables, kNN graphs,
   * trained quantizers) and scratch directory layouts. A shared artifact
-  * is declared once as a [[Fixture]]; per-invocation artifacts call
-  * [[track]] directly.
+  * is declared once as a [[Fixture]]; the cuts a key makes for itself
+  * are registered by their owner ([[Cut]]), one entry per key run.
   *
   * A `localCheckpoint` pins block-manager blocks until the session dies,
   * so every tracked artifact carries its consumer-key set and a release
@@ -31,8 +31,8 @@ import scala.jdk.CollectionConverters._
   *    value, and a failed build registers nothing.
   *  - Nothing pins a stopped session. Every registration sweeps the
   *    registry, the memo locks and the session-keyed side maps
-  *    ([[sweepWith]], which includes every fixture's memo map) of
-  *    sessions whose context has stopped.
+  *    ([[sweepWith]], which includes every fixture's memo map, and
+  *    [[sweepOnStop]]) of sessions whose context has stopped.
   *  - Every key names a parent session. [[memo]] and [[track]] refuse a
   *    [[Scoped]] clone: a clone shares its parent's context, so the sweep
   *    would never drop its entries, and no `keyDone` would ever reach it.
@@ -138,9 +138,10 @@ object Caches {
   private val entries = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), Entry]
 
-  // Session-keyed maps cleared per (session, sfDir) by releaseAll and
-  // purged of stopped sessions by track's sweep: the completion ledger,
-  // the schedule, every fixture's memo map and the ops' test seams.
+  // Session-keyed maps cleared per (session, sfDir) by releaseAll and,
+  // through sweepOnStop, purged of stopped sessions by track's sweep: the
+  // completion ledger, the schedule, every fixture's memo map and the
+  // ops' test seams.
   private val sweepables = new java.util.concurrent.CopyOnWriteArrayList[
     scala.collection.concurrent.TrieMap[(SparkSession, String), _]]()
 
@@ -150,6 +151,22 @@ object Caches {
   def sweepWith[V](m: scala.collection.concurrent.TrieMap[(SparkSession, String), V])
       : scala.collection.concurrent.TrieMap[(SparkSession, String), V] = {
     sweepables.add(m)
+    sweepOnStop(m)
+  }
+
+  // Every map the stopped-session sweep visits: the sweepables and the
+  // maps registered with sweepOnStop, which releaseAll leaves alone.
+  private val stopSweepables = new java.util.concurrent.CopyOnWriteArrayList[
+    scala.collection.concurrent.TrieMap[Product, _]]()
+
+  /** Register a map whose keys lead with a session for the stopped-session
+    * sweep only and return it. Unlike [[sweepWith]], [[releaseAll]] does
+    * not clear it: for caches a pass keeps across its cold starts (table
+    * footers, stream source layouts).
+    */
+  def sweepOnStop[K <: Product, V](
+      m: scala.collection.concurrent.TrieMap[K, V]): scala.collection.concurrent.TrieMap[K, V] = {
+    stopSweepables.add(m.asInstanceOf[scala.collection.concurrent.TrieMap[Product, _]])
     m
   }
 
@@ -193,22 +210,28 @@ object Caches {
   def cachePayers(s: SparkSession, dir: String): Seq[(String, String)] =
     payers.get((s, dir)).map(m => m.synchronized(m.toSeq)).getOrElse(Nil)
 
-  /** Unpersist the block-manager blocks behind a `localCheckpoint(true)`
-    * frame. The checkpointed Dataset's plan is a [[LogicalRDD]] leaf over
-    * the internally cached RDD — unpersisting that RDD frees the blocks
-    * (the DataFrame itself holds no other state).
+  /** Unpersist the block-manager blocks behind a checkpointed frame. The
+    * frame's plan has a [[LogicalRDD]] leaf over each internally cached
+    * checkpoint RDD; unpersisting that RDD frees the blocks. Inside a
+    * [[Cut]] owner only the owner's own cuts among those leaves are
+    * released; outside one, every leaf no owner holds is.
     */
-  def releaseCheckpoint(df: Dataset[_]): Unit =
+  def releaseCheckpoint(df: Dataset[_]): Unit = {
+    val owner = Cut.owner
     df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _              => ()
+      case lr: LogicalRDD => owner match {
+          case Some(o) => o.release(lr.rdd)
+          case None    => if (!Cut.isHeld(lr.rdd)) lr.rdd.unpersist(blocking = false)
+        }
+      case _ => ()
     }
+  }
 
   /** Register `release` to fire once every key in `consumers` has been
     * reported via [[keyDone]] for this (session, sfDir). Re-registering
-    * the same name (the cache was rebuilt after a release, or a
-    * per-invocation artifact superseded its predecessor) resets the
-    * progress set and releases the replaced artifact immediately.
+    * the same name (the cache was rebuilt after a release, or a key ran
+    * again before its `keyDone`) resets the progress set and releases the
+    * replaced artifact immediately.
     */
   def track(s: SparkSession, dir: String, name: String,
             consumers: Set[String], release: () => Unit): Unit = {
@@ -220,7 +243,10 @@ object Caches {
     entries.keys.foreach(k => if (stopped(k._1)) entries.remove(k))
     runningKey.keys.foreach(k => if (stopped(k._1)) runningKey.remove(k))
     payers.keys.foreach(k => if (stopped(k._1)) payers.remove(k))
-    sweepables.forEach(m => m.keys.foreach(k => if (stopped(k._1)) m.remove(k)))
+    stopSweepables.forEach(m => m.keys.foreach(k => k.productElement(0) match {
+      case ls: SparkSession if stopped(ls) => m.remove(k)
+      case _                               => ()
+    }))
     // Memo keys are tuples of any arity with the session in some slot,
     // so scan the product. The removal skips memo's tombstone handshake:
     // a retried builder of a stopped session throws on its first Spark
@@ -303,10 +329,12 @@ object Caches {
 
 /** One shared artifact per (session, sfDir), declared once: its name, its
   * consumer keys and its builder. `apply(s, dir)` is the whole lifecycle —
-  * the first call builds under [[Caches.memo]]'s per-key monitor and
-  * registers one [[Caches.track]] entry (which also records the payer);
-  * when the last scheduled consumer reports done, the entry evicts the
-  * memo and runs `release`, and the next call rebuilds. The memo map is
+  * the first call builds under [[Caches.memo]]'s per-key monitor and a
+  * fresh [[Cut]] owner, and registers one [[Caches.track]] entry (which
+  * also records the payer); when the last scheduled consumer reports
+  * done, the entry evicts the memo, runs `release` and releases every cut
+  * the build made, and the next call rebuilds. A build that throws
+  * releases its cuts at once and registers nothing. The memo map is
   * registered with [[Caches.sweepWith]], so stopped sessions are purged
   * and [[Caches.releaseAll]] clears it.
   *
@@ -327,10 +355,11 @@ final class Fixture[V] private[graft] (
 
   def apply(s: SparkSession, dir: String): V =
     Caches.memo(built, (s, dir), {
-      val v = build(s, dir)
+      val (v, cuts) = Cut.owned(build(s, dir))
       Caches.track(s, dir, name, consumers, () => {
         built.remove((s, dir), v)
         release(s, v)
+        cuts.releaseAll()
       })
       v
     })
@@ -341,21 +370,10 @@ final class Fixture[V] private[graft] (
 object Fixture {
   private val registered = new java.util.concurrent.CopyOnWriteArrayList[Fixture[_]]()
 
-  /** A checkpoint fixture: `release` unpersists the checkpointed frames
-    * the value holds — the value itself, or the DataFrame fields of a
-    * tuple.
-    */
+  /** A checkpoint fixture: its release is the release of its cuts. */
   def apply[V](name: String, consumers: Set[String])(
       build: (SparkSession, String) => V): Fixture[V] =
-    new Fixture(name, consumers, layout = false, build, (_: SparkSession, v: V) =>
-      v match {
-        case df: Dataset[_] => Caches.releaseCheckpoint(df)
-        case p: Product => p.productIterator.foreach {
-          case df: Dataset[_] => Caches.releaseCheckpoint(df)
-          case _              => ()
-        }
-        case _ => ()
-      })
+    new Fixture(name, consumers, layout = false, build, (_: SparkSession, _: V) => ())
 
   /** Every declared fixture, in declaration order. Fixtures are members
     * of the op groups, so this loads the key registry first.

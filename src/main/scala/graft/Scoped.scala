@@ -21,7 +21,7 @@ final class Scope private[graft] (val session: SparkSession) {
   *
   * {{{
   * Scoped(s, "spark.sql.shuffle.partitions" -> "2") { sc =>
-  *   sc(frame).groupBy(...).agg(...).localCheckpoint(true)
+  *   sc(frame).groupBy(...).agg(...).cut
   * }
   * }}}
   *

@@ -78,19 +78,15 @@ object Tables {
     * schema inference on EVERY call, and a 132-key pass makes hundreds of
     * them against static test data. The cached object is an immutable
     * logical plan — reuse across queries is exactly how a shared metastore
-    * table behaves on a real cluster.
+    * table behaves on a real cluster. Entries of stopped sessions go in
+    * the registry's sweep; [[Caches.releaseAll]] keeps them, so a pass's
+    * cold start does not re-read footers.
     */
-  private val tableCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  private val tableCache = graft.Caches.sweepOnStop(scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), DataFrame])
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     conf(spark)
-    // Evict entries of stopped sessions: a long-lived JVM cycling sessions
-    // (sbt interactive, per-suite sessions) must not retain dead
-    // SessionStates/file indexes through cached plans.
-    tableCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) tableCache.remove(k)
-    }
     graft.Caches.memo(tableCache, (spark, sfDir, name), {
       val df = spark.read.parquet(s"$sfDir/$name.parquet")
       df.schema.fields.foldLeft(df) { (d, f) =>

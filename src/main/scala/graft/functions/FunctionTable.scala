@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
@@ -54,9 +55,15 @@ object FunctionTable {
       "might_contain(bloom, hash) - bloom filter membership test",
       es => BloomFilterMightContain(es(0), es(1))))
 
-  /** Register every function in the session (idempotent). */
-  def register(spark: SparkSession): Unit =
+  /** Register every function the session lacks. A function already in
+    * its registry (an earlier call, the extensions path, or the parent a
+    * cloned session copied it from) is left alone, so a call per query
+    * registers each function once per session.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach(f =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        f.name, f.builder, "scala_udf"))
+      if (!registry.functionExists(FunctionIdentifier(f.name)))
+        registry.createOrReplaceTempFunction(f.name, f.builder, "scala_udf"))
+  }
 }

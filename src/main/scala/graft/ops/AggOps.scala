@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Cut.CutOps
 import graft.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -510,7 +511,7 @@ object AggOps extends OpGroup {
           .withColumn("bucket",
             expr("pmod(CAST(conv(substring(h, 1 + i * 8, 8), 16, 10) AS BIGINT), 256)"))
           .select(col("k"), col("exact"), col("i"), col("bucket"))
-          .localCheckpoint(true)
+          .cut
         val counters = probes.groupBy("i", "bucket").agg(sum("exact").as("c"))
         // Per distinct key: its 4 (i, bucket) probes → broadcast-join the
         // 1024-row counter table → min over i.
@@ -520,8 +521,6 @@ object AggOps extends OpGroup {
           .select(col("k"), col("exact"), col("est"),
             (col("est") >= col("exact")).as("over_ok"))
           .orderBy(col("exact").desc, col("k")).limit(20)
-        graft.Caches.track(s, dir, "countmin_probes", Set("agg_countmin"),
-          () => graft.Caches.releaseCheckpoint(probes))
         out
       },
       Some("""
@@ -947,9 +946,7 @@ object AggOps extends OpGroup {
         val obs = Tables.t(s, dir, "orders")
           .groupBy("o_orderpriority", "o_orderstatus")
           .agg(count(lit(1)).as("obs"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "chi2_cells", Set("agg_chi_square"),
-          () => graft.Caches.releaseCheckpoint(obs))
+          .cut
         // Complete the grid: a level pair that never co-occurs is a REAL
         // zero cell and must contribute (0−e)²/e — dropping it understates
         // the statistic. The grid is |levels|×|levels| (tiny), built from
@@ -1035,9 +1032,7 @@ object AggOps extends OpGroup {
           .groupBy("cents")
           .agg(sum(col("u")).as("c1"), count(lit(1)).as("c"))
           .withColumn("band", expr("cents DIV 1000000"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "mw_byval", Set("agg_mann_whitney"),
-          () => graft.Caches.releaseCheckpoint(byval))
+          .cut
         val wIn = Window.partitionBy("band").orderBy("cents")
           .rowsBetween(Window.unboundedPreceding, 0)
         val inb = byval.withColumn("in_cb", sum(col("c")).over(wIn) - col("c"))
@@ -1327,9 +1322,7 @@ object AggOps extends OpGroup {
             col("o_orderpriority").as("grp"))
           .groupBy("cents", "grp").agg(count(lit(1)).as("cg"))
           .withColumn("band", expr("cents DIV 1000000"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "kw_byval", Set("agg_kruskal_wallis"),
-          () => graft.Caches.releaseCheckpoint(bg))
+          .cut
         val vals = bg.groupBy("cents", "band").agg(sum("cg").as("c"))
         val wIn = Window.partitionBy("band").orderBy("cents")
           .rowsBetween(Window.unboundedPreceding, 0)
@@ -1795,7 +1788,7 @@ object AggOps extends OpGroup {
           .withColumn("r1", row_number().over(
             Window.partitionBy("grp", "salt").orderBy("h")))
           .filter(col("r1") <= 64).select("grp", "h")
-          .localCheckpoint(true)
+          .cut
         // Per-grp fill + 64th-smallest threshold from ONE hash aggregate
         // over the survivors (sort_array makes the list deterministic).
         val fills = cand.groupBy("grp")

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Cut.CutOps
 import graft.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,7 +27,7 @@ object EventOps extends OpGroup {
         .groupBy(col("o_orderpriority").as("grp"),
           (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).cast("int").as("t"))
         .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")).as("cents"))
-        .localCheckpoint(true)
+        .cut
   }
 
   val ops: Seq[Op] = Seq(
@@ -1112,9 +1113,7 @@ object EventOps extends OpGroup {
           .agg(min(col("ts")).as("t0"),
             min(when(col("event_type") === "purchase", col("ts"))).as("tp"),
             max(col("ts")).as("tl"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "km_per_user", Set("ts_survival_km"),
-          () => graft.Caches.releaseCheckpoint(perUser))
+          .cut
         val horizon = perUser.agg(max(col("tl")).as("tend"))
         val subj = perUser.crossJoin(broadcast(horizon))
           .select(
@@ -1199,9 +1198,7 @@ object EventOps extends OpGroup {
           .agg(
             sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
             sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "xcorr_daily", Set("ts_xcorr"),
-          () => graft.Caches.releaseCheckpoint(daily))
+          .cut
         val spine = daily.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
           .select(explode(expr("sequence(d0, d1, interval 1 day)")).as("d"))
         val sx = spine.join(daily.select(col("d"), col("x")), Seq("d"), "left")
@@ -1347,9 +1344,7 @@ object EventOps extends OpGroup {
       (s, dir) => {
         val ud = Tables.events(s, dir)
           .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "wau_user_days", Set("ts_active_users_rolling"),
-          () => graft.Caches.releaseCheckpoint(ud))
+          .cut
         val span = ud.agg(max(col("day")).as("dmax"))
         val dau = ud.groupBy("day").agg(count_distinct(col("user_id")).as("dau"))
         val wau = ud

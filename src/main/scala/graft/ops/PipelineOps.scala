@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Cut.CutOps
 import graft.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -201,13 +202,13 @@ object PipelineOps extends OpGroup {
             text)"""))
       .select(col("lang"),
         expr(s"concat('$p', array_join(split(gtext, ''), '$p$p'), '$p')").as("merged"))
-      .localCheckpoint(true)
-    val pc1 = bpeFullPairCount(st0).localCheckpoint(true)
+      .cut
+    val pc1 = bpeFullPairCount(st0).cut
     val r1 = bpeTopOf(pc1)
     val ck1 = bpeApplyWithDelta(st0,
       r1.map(t => t._1 -> t._2).toMap, r1.map(t => t._1 -> t._3).toMap)
-      .localCheckpoint(true)
-    val pc2 = bpeFoldCounts(pc1, ck1).localCheckpoint(true)
+      .cut
+    val pc2 = bpeFoldCounts(pc1, ck1).cut
     graft.Caches.releaseCheckpoint(st0)
     graft.Caches.releaseCheckpoint(pc1)
     (ck1.select("lang", "merged"), pc2, r1)
@@ -267,8 +268,7 @@ object PipelineOps extends OpGroup {
     // already used; the merge table returned to callers is ONE local
     // relation built from it (identical rows; consumers normalize order
     // with orderBy(lang, rk)).
-    val (st1p, pc2p, r1) = bpePrefix(s, dir)
-    val (st1, pc2) = (sc(st1p), sc(pc2p))
+    val (st1, pc2, r1) = bpePrefix(s, dir)
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(String, Int, String, String, Long)]
     merges ++= r1.map(t => (t._1, 1, t._2, t._3, t._4))
@@ -276,8 +276,8 @@ object PipelineOps extends OpGroup {
       case Some(den) => r1.map(t => t._1 -> ((t._4 + den - 1) / den)).toMap
       case None      => Map.empty
     }
-    var st = st1
-    var pc = pc2
+    var st = sc(st1)
+    var pc = sc(pc2)
     var done = false
     for (r <- 2 to rounds if !done) {
       val topRows = bpeTopOf(pc)
@@ -302,26 +302,20 @@ object PipelineOps extends OpGroup {
           kept.map(t => t._1 -> t._2).toMap,
           kept.map(t => t._1 -> t._3).toMap,
           withDelta = r < rounds)
-          .localCheckpoint(true)
+          .cut
         if (r < rounds) {
-          val pcNext = bpeFoldCounts(pc, ck).localCheckpoint(true)
-          if (pc ne pc2) graft.Caches.releaseCheckpoint(pc)
+          val pcNext = bpeFoldCounts(pc, ck).cut
+          graft.Caches.releaseCheckpoint(pc)
           pc = pcNext
         }
-        if (st ne st1) graft.Caches.releaseCheckpoint(st)
+        graft.Caches.releaseCheckpoint(st)
         st = ck.select("lang", "merged")
       }
     }
-    if (pc ne pc2) graft.Caches.releaseCheckpoint(pc)
-    // The shared prefix frames belong to Caches (released once BOTH
-    // trainer keys report done) — never hand one back to a caller that
-    // will release it: in the theoretical round-2 full stop, copy the
-    // state into a per-invocation checkpoint.
-    val stOut = if (st ne st1) st else st1.localCheckpoint(true)
+    graft.Caches.releaseCheckpoint(pc)
     // The merge table as one local relation (nullability mirrors the old
     // per-round aggregate + union shape exactly: only rk was
-    // non-nullable). The caller-side releaseCheckpoint is a no-op on a
-    // local relation — nothing to unpersist.
+    // non-nullable).
     import org.apache.spark.sql.types._
     val fields = Seq(
       StructField("lang", StringType, nullable = true),
@@ -338,7 +332,7 @@ object PipelineOps extends OpGroup {
     }
     val mtOut = s.createDataFrame(
       java.util.Arrays.asList(rows.toSeq: _*), StructType(fields))
-    (mtOut, stOut)
+    (mtOut, st)
   }
 
   /** 60-bit hash from md5 hex — cross-engine deterministic. */
@@ -364,14 +358,14 @@ object PipelineOps extends OpGroup {
   private val simhashSigs = graft.Fixture("simhash_sigs", Set(
       "text_simhash", "text_simhash_neardup", "text_dedup_clusters", "text_dedup_keep_best",
       "text_dedup_incremental", "text_simhash_radius_sweep", "corpus_prep_pipeline_v2",
-      "corpus_prep_pipeline_v3", "vec_index_persist_reload")) { (s, dir) =>
+      "corpus_prep_pipeline_v3", "corpus_dedup_weighted", "vec_index_persist_reload")) { (s, dir) =>
     Tables.t(s, dir, "documents")
       .select("doc_id", "text")
       .repartition(s.sparkContext.defaultParallelism)
       .withColumn("hs",
         expr(s"transform(array_distinct(split(text, ' ')), t -> ${md5Long("t")})"))
       .select(col("doc_id"), expr("simhash60(hs)").as("simhash"))
-      .localCheckpoint(true)
+      .cut
   }
 
   /** (doc_id, k) exploded 8-token span keys shared by text_dup_spans and
@@ -389,7 +383,7 @@ object PipelineOps extends OpGroup {
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(w) - 7), i -> substring(md5(concat_ws(' ', slice(w, i, 8))), 1, 16))"))
         .as("k"))
-      .localCheckpoint(true)
+      .cut
   }
 
   /** (doc_id, lang, tok, tf) per-document term frequencies — the
@@ -412,7 +406,7 @@ object PipelineOps extends OpGroup {
         explode(split(col("text"), " ")).as("tok"))
       .where(length(col("tok")) > 0)
       .groupBy("doc_id", "lang", "tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .cut
   }
 
   /** Band buckets larger than this refine on a secondary half-band key
@@ -534,7 +528,7 @@ object PipelineOps extends OpGroup {
     */
   private val simhashSigPairs = graft.Fixture("simhash_edges",
       simhashSigs.consumers - "text_simhash") { (s, dir) =>
-    simhashSigPairsWithCap(s, dir, SimBucketCap).localCheckpoint(true)
+    simhashSigPairsWithCap(s, dir, SimBucketCap).cut
   }
 
   /** Doc-level pair expansion over the cached signature pairs — the
@@ -586,7 +580,7 @@ object PipelineOps extends OpGroup {
     // duplicate docs instead of quadratic in cohort sizes. Checkpointed
     // so the CC loop's repeated reads don't replay the expansion joins;
     // released as soon as the labels materialize.
-    val collapsed = simhashCollapsedEdges(s, dir).localCheckpoint(true)
+    val collapsed = simhashCollapsedEdges(s, dir).cut
     val labels = connectedComponents(collapsed)
     graft.Caches.releaseCheckpoint(collapsed)
     // Converged subgraph labels + every untouched doc as its own
@@ -603,7 +597,7 @@ object PipelineOps extends OpGroup {
       .join(labJoin, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("sub_label"), col("node")).as("label"))
-      .localCheckpoint(true)
+      .cut
     graft.Caches.releaseCheckpoint(labels)
     out
   }
@@ -729,7 +723,7 @@ object PipelineOps extends OpGroup {
       // version paid.
       val symRaw = contracted.select(col("a").as("src"), col("b").as("dst"))
         .union(contracted.select(col("b").as("src"), col("a").as("dst")))
-      val sym = symRaw.localCheckpoint(true)
+      val sym = symRaw.cut
       dbgMark("uf contraction + sym checkpoint")
       val symN = sym.count()
       // Seed with the closed-neighborhood min directly (label_0(v) =
@@ -743,7 +737,7 @@ object PipelineOps extends OpGroup {
       var labels = sym.select(col("dst").as("node"), col("src").as("label"))
         .union(sym.select(col("dst").as("node"), col("dst").as("label")))
         .groupBy("node").agg(min("label").as("label"))
-        .localCheckpoint(true)
+        .cut
       // When the touched subgraph fits a broadcast (it does on any corpus
       // where near-dups are cohorts, not the whole set), the per-round
       // joins stream the big edge frame map-side instead of shuffling it
@@ -787,7 +781,7 @@ object PipelineOps extends OpGroup {
         // round-10 symmetric-edge/coalesce rework: 1 sub-step costs an
         // extra round's checkpoint+actions, 3 deepens the per-round plan
         // for no round saved on real convergence profiles).
-        val next = contract(contract(labels)).localCheckpoint(true)
+        val next = contract(contract(labels)).cut
         if (debug) System.err.println(
           f"[cc] round $iter: ${(System.nanoTime() - t0) / 1e9}%.2f s")
         // The superseded round's blocks are unreachable the moment `next`
@@ -814,7 +808,7 @@ object PipelineOps extends OpGroup {
         val all = labels.union(
             selfLoops.join(labels, Seq("node"), "left_anti")
               .select(col("node"), col("node").as("label")))
-          .localCheckpoint(true)
+          .cut
         graft.Caches.releaseCheckpoint(labels)
         all
       }
@@ -984,7 +978,7 @@ object PipelineOps extends OpGroup {
     // consumer of its view has materialized.
     def ckptFresh(df: org.apache.spark.sql.DataFrame)
         : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-      val c = df.localCheckpoint(true)
+      val c = df.cut
       (fresh(c), c)
     }
     val (edges, edgesC) = ckptFresh(proper.coalesce(parts))
@@ -1027,7 +1021,7 @@ object PipelineOps extends OpGroup {
     var rounds = 0
     val refined: org.apache.spark.sql.DataFrame = if (condN == 0) {
       cond.select(col("a").as("node"), col("b").as("scc")).limit(0)
-        .localCheckpoint(true)
+        .cut
     } else if (condN <= condenseDriverCap) {
       // The condensation is metadata-sized: solve it on the driver with
       // the same Tarjan the partitions ran. (Supernode ids are component
@@ -1040,7 +1034,7 @@ object PipelineOps extends OpGroup {
         cond.sparkSession.sparkContext.parallelize(
           stars.map(s => org.apache.spark.sql.Row(s._1, s._2)), 1),
         StructType(Seq(StructField("node", LongType), StructField("scc", LongType))))
-        .localCheckpoint(true)
+        .cut
     } else {
       val nodes = cond.select(col("a").as("node"))
         .union(cond.select(col("b").as("node"))).distinct()
@@ -1131,7 +1125,7 @@ object PipelineOps extends OpGroup {
         throw new IllegalStateException(
           s"SCC refinement stabilized with $bad split (F, B) pairs — algorithm invariant broken")
       }
-      val r = lab.select(col("node"), col("cf").as("scc")).localCheckpoint(true)
+      val r = lab.select(col("node"), col("cf").as("scc")).cut
       graft.Caches.releaseCheckpoint(labC)
       r
     }
@@ -1145,7 +1139,7 @@ object PipelineOps extends OpGroup {
       .select(col("node"), coalesce(col("root"), col("node")).as("super"))
       .join(refined.select(col("node").as("super"), col("scc")), Seq("super"), "left")
       .select(col("node"), coalesce(col("scc"), col("super")).as("scc"))
-      .localCheckpoint(true)
+      .cut
     graft.Caches.releaseCheckpoint(refined)
     graft.Caches.releaseCheckpoint(mappingC)
     graft.Caches.releaseCheckpoint(condC)
@@ -1249,7 +1243,7 @@ object PipelineOps extends OpGroup {
     var cents = collectCents(vecSums(q, "qv", "label"))
     for (_ <- 1 to 2)
       cents = collectCents(kmeansRound(q, cents))
-    kmeansAssign(q, cents, "c").select("vec_id", "c").localCheckpoint(true)
+    kmeansAssign(q, cents, "c").select("vec_id", "c").cut
   }
 
   /** `q` plus column `out`: each vector's nearest centroid of the literal
@@ -1287,7 +1281,7 @@ object PipelineOps extends OpGroup {
     Tables.t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))").as("qv"))
-      .localCheckpoint(false)
+      .cut(eager = false)
 
   /** TRAINED-cell IVF routing: (quantized corpus, trained assignment,
     * top-3 probed cells for the vec_id=0 query by centroid cosine) —
@@ -1485,7 +1479,7 @@ object PipelineOps extends OpGroup {
       .join(knn.select(col("lvl"), col("b").as("a"), col("a").as("b")),
         Seq("lvl", "a", "b"), "leftsemi")
       .select("lvl", "a", "b")
-      .localCheckpoint(true)
+      .cut
   }
 
   /** Connected-component labels of [[mutualKnnEdges]], computed ONCE per
@@ -1526,7 +1520,7 @@ object PipelineOps extends OpGroup {
     val knn = directedKnnEdges(s, dir)
     knn.filter(col("a") < col("b"))
       .join(knn.select(col("b").as("a"), col("a").as("b")), Seq("a", "b"), "leftsemi")
-      .localCheckpoint(true)
+      .cut
   }
 
   /** DIRECTED top-[[MutualKnnK]] kNN edges (l, a, b): a → b iff b is in
@@ -1564,7 +1558,7 @@ object PipelineOps extends OpGroup {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= MutualKnnK)
       .select(col("l"), col("a"), col("rk"), col("b"), col("sim"))
-      .localCheckpoint(true)
+      .cut
   }
 
   /** (quantized corpus, trained 3-round assignment) — the TRAINED coarse
@@ -1619,7 +1613,7 @@ object PipelineOps extends OpGroup {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= MutualKnnK)
       .select(col("a"), col("rk"), col("b"), col("sim"))
-      .localCheckpoint(true)
+      .cut
   }
 
   /** |mutual-kNN edges| memoized per (session, sfDir) — round-19 verdict
@@ -1782,11 +1776,10 @@ object PipelineOps extends OpGroup {
 
   /** Materialize a walk edge frame: single-partition in the fused shape
     * (the whole layer graph lives in one task — how a real HNSW shard
-    * serves), distributed otherwise. Callers MUST release the returned
-    * checkpoint once their walk's final state is materialized.
+    * serves), distributed otherwise.
     */
   private def walkShaped(df: org.apache.spark.sql.DataFrame, fused: Boolean) =
-    (if (fused) df.coalesce(1) else df).localCheckpoint(true)
+    (if (fused) df.coalesce(1) else df).cut
 
   /** All-level HNSW edge frame (lvl, src, dst, demb): the symmetrized
     * upper-layer mutual-kNN edges plus per-level self-loops for every
@@ -1856,8 +1849,8 @@ object PipelineOps extends OpGroup {
     * seeded at the descent endpoint. `levelEdges`/`sym0` are fused walk
     * frames — the family caches or per-call builds over reloaded edges
     * interchangeably. Returns (descent nodes, beamed nodes, found id,
-    * found sim). Runs inside [[narrowWalkConf]]; all cuts release in a
-    * finally.
+    * found sim). Runs inside [[narrowWalkConf]]; its cuts are released
+    * once the walk's answer is collected.
     */
   private def hnswServeWalk(
       s: org.apache.spark.sql.SparkSession, dir: String,
@@ -1872,53 +1865,48 @@ object PipelineOps extends OpGroup {
       // job on a 1-row frame — and the batched beam's own mid+final
       // pattern bounds the plan just as well (≤12 chained hops per cut,
       // codegen off under the walk conf). Byte-identical outputs:
-      // checkpoint placement never changes values. All cuts release in
-      // a finally (round-16 advice): a throw mid-walk must not strand
-      // their blocks.
+      // checkpoint placement never changes values.
       val lvls = (4 to 1 by -1).filter(occupied)
       var st = sc(singleState0(s, dir, entry, track = true))
-        .localCheckpoint(true)
+        .cut
+      var cur = st
+      var doneLvls = 0
+      for (level <- lvls) {
+        val eL = levelEdges.filter(col("lvl") === level)
+        for (_ <- 1 to 6)
+          cur = descentHop(eL, cur, fused = true, track = true)
+        doneLvls += 1
+        if (doneLvls == (lvls.size + 1) / 2 || doneLvls == lvls.size) {
+          val next = cur.cut
+          graft.Caches.releaseCheckpoint(st)
+          st = next
+          cur = next
+        }
+      }
+      val fin = st.head()
+      val descNodes =
+        fin.getAs[String]("path").split(',').distinct.length.toLong
+      // Layer-0 ef=4 beam seeded at the descent endpoint — NOT the
+      // global min id, which is the whole point: the descent has
+      // already navigated near the target before the wide search
+      // spends lookups. Mid-chain + final checkpoints only (the
+      // batched shape's plan-bounding cuts); the ever-beamed set
+      // rides the state as a `seen` array, so ONE head() collect
+      // ends the whole walk.
+      var beam = st.select(col("qid"), col("qemb"), col("cur").as("cid"),
+        array(col("cur")).as("seen"))
       var midBeam: org.apache.spark.sql.DataFrame = null
-      var finBeam: org.apache.spark.sql.DataFrame = null
-      try {
-        var cur = st
-        var doneLvls = 0
-        for (level <- lvls) {
-          val eL = levelEdges.filter(col("lvl") === level)
-          for (_ <- 1 to 6)
-            cur = descentHop(eL, cur, fused = true, track = true)
-          doneLvls += 1
-          if (doneLvls == (lvls.size + 1) / 2 || doneLvls == lvls.size) {
-            val next = cur.localCheckpoint(true)
-            graft.Caches.releaseCheckpoint(st)
-            st = next
-            cur = next
-          }
+      for (i <- 1 to 6) {
+        beam = beamStep(sym0, beam, fused = true, trackSeen = true)
+        if (i == 3 || i == 6) {
+          beam = beam.cut
+          if (i == 3) midBeam = beam
         }
-        val fin = st.head()
-        val descNodes =
-          fin.getAs[String]("path").split(',').distinct.length.toLong
-        // Layer-0 ef=4 beam seeded at the descent endpoint — NOT the
-        // global min id, which is the whole point: the descent has
-        // already navigated near the target before the wide search
-        // spends lookups. Mid-chain + final checkpoints only (the
-        // batched shape's plan-bounding cuts); the ever-beamed set
-        // rides the state as a `seen` array, so ONE head() collect
-        // ends the whole walk.
-        var beam = st.select(col("qid"), col("qemb"), col("cur").as("cid"),
-          array(col("cur")).as("seen"))
-        for (i <- 1 to 6) {
-          beam = beamStep(sym0, beam, fused = true, trackSeen = true)
-          if (i == 3 || i == 6) {
-            beam = beam.localCheckpoint(true)
-            if (i == 3) midBeam = beam else finBeam = beam
-          }
-        }
-        val topRow = beam.orderBy(desc("sim"), asc("cid")).limit(1).head()
-        (descNodes, topRow.getAs[Seq[Long]]("seen").size.toLong,
-          topRow.getAs[Long]("cid"), topRow.getAs[Double]("sim"))
-      } finally Seq(st, midBeam, finBeam).filter(_ != null)
-        .foreach(graft.Caches.releaseCheckpoint)
+      }
+      val topRow = beam.orderBy(desc("sim"), asc("cid")).limit(1).head()
+      Seq(st, midBeam, beam).foreach(graft.Caches.releaseCheckpoint)
+      (descNodes, topRow.getAs[Seq[Long]]("seen").size.toLong,
+        topRow.getAs[Long]("cid"), topRow.getAs[Double]("sim"))
     }
 
   /** 1-row walk state (qid = 0, qemb, cur = entry[, path, cursim]) for
@@ -2041,7 +2029,7 @@ object PipelineOps extends OpGroup {
     // session's conf by the wrapper; an edgeless level is provably a
     // no-op: the greedy step map is the identity there — every query
     // sits on its self-loop — so skipping is EXACT.)
-    var st = st0.localCheckpoint(true)
+    var st = st0.cut
     for (level <- 4 to 1 by -1 if occupied(level)) {
       val eL = levelEdges.filter(col("lvl") === level)
       var cur = st
@@ -2053,15 +2041,15 @@ object PipelineOps extends OpGroup {
       // The new checkpoint materializes eagerly, so the superseded
       // state frame's blocks release immediately — only the latest
       // |Q|-row state ever holds storage.
-      val next = cur.localCheckpoint(true)
+      val next = cur.cut
       graft.Caches.releaseCheckpoint(st)
       st = next
     }
     // levelEdges fed only the descent above; the layer-0 beam reads
     // sym0. The per-call (unfused) copy's corpus-edge-sized blocks are
-    // dead once the final descent state is checkpointed; the fused copy
-    // is the tracked family cache and outlives the call by design.
-    if (!fusedWalk) graft.Caches.releaseCheckpoint(levelEdges)
+    // dead once the final descent state is checkpointed (the fused copy
+    // is a fixture, which this release leaves alone).
+    graft.Caches.releaseCheckpoint(levelEdges)
     // Layer-0 batched ef=4 beam over the shared mutual-kNN graph
     // ([[walkSym0]]/[[beamStep]], shared with the |Q|=1 walk keys).
     val sym0 =
@@ -2079,13 +2067,13 @@ object PipelineOps extends OpGroup {
       // beam and the corpus-edge-sized sym0 are dead — only the returned
       // frame's backing checkpoint survives the call.
       if (i == 3) {
-        beam = beam.localCheckpoint(true)
+        beam = beam.cut
         midBeam = beam
         graft.Caches.releaseCheckpoint(st)
       } else if (i == 6) {
-        beam = beam.localCheckpoint(true)
+        beam = beam.cut
         graft.Caches.releaseCheckpoint(midBeam)
-        if (!fusedWalk) graft.Caches.releaseCheckpoint(sym0)
+        graft.Caches.releaseCheckpoint(sym0)
       }
     }
     val found = beam
@@ -2365,8 +2353,8 @@ object PipelineOps extends OpGroup {
     * the degree-annotated checkpointed edge frame, one
     * partial-aggregating sum, one changed-row scalar to the driver;
     * superseded checkpoints released as the next materializes. Returns
-    * (converged checkpointed (node, r) frame — CALLER releases it — and
-    * the data-dependent round count).
+    * (converged checkpointed (node, r) frame and the data-dependent
+    * round count).
     */
   /** Build-side row cap for the pagerank fixpoint's per-round joins: the
     * rank/degree tables (|V| rows, ~24 B each) are BROADCAST while the
@@ -2598,60 +2586,47 @@ object PipelineOps extends OpGroup {
     // free projections of the degree checkpoint, and each round is a
     // broadcast hash join (size-gated, see [[PagerankBroadcastCap]]) —
     // no exchange or sort ever touches the edge blocks again.
-    val e0 = edges.localCheckpoint(true)
-    var r: org.apache.spark.sql.DataFrame = null
+    val e0 = edges.cut
+    val deg = e0.groupBy("src").agg(count(lit(1)).as("deg")).cut
+    // Every node has out-edges (precondition), so |deg| = N. One driver
+    // scalar; the teleport term is integer arithmetic on it.
+    val n = deg.count()
+    val cap = PagerankBroadcastCap
+    def small(df: org.apache.spark.sql.DataFrame) =
+      if (n <= cap) broadcast(df) else df
     var rounds = 0
-    // On a failure mid-round, release the edge/degree checkpoints AND the
-    // in-flight rank checkpoint (same discipline as hnswServeWalk / the
-    // beam walks); the success path returns `r` for the CALLER to
-    // release, so only the throw leg drops it here.
-    var ok = false
-    try {
-      val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
-      try {
-        // Every node has out-edges (precondition), so |deg| = N. One
-        // driver scalar; the teleport term is integer arithmetic on it.
-        val n = deg.count()
-        val cap = PagerankBroadcastCap
-        def small(df: org.apache.spark.sql.DataFrame) =
-          if (n <= cap) broadcast(df) else df
-        // Per-round exchanges are partial-aggregated to |V| rows — run
-        // the round loop under [[graphStateConf]] (same small-graph gate
-        // as the broadcast); the final ranks come back on the session.
-        r = graphStateConf(e0.sparkSession, n <= cap) { sc =>
-        val e = sc(e0)
-        val scale = 1000000000000L
-        val teleport = (15L * scale) / (100L * n)
-        // Rank state carries the node's static out-degree so the round
-        // join touches ONE small side, not two.
-        r = sc(deg).select(col("src").as("node"), lit(scale / n).as("r"),
-            col("deg"))
-          .localCheckpoint(true)
-        var converged = false
-        while (rounds < maxRounds && !converged) {
-          // The previous rank rides the checkpoint as `prev` (attached by
-          // the same single small-side join that re-attaches deg), so the
-          // convergence scalar is a bare filter-count over the fresh
-          // checkpoint's |V| rows — the old shape ran a second join job
-          // per round just to compare rank frames (measured 0.27-0.43 s
-          // of the 0.59 s round).
-          val next = pagerankRound(e, r, small, teleport)
-            .localCheckpoint(true)
-          val changed = next.filter(col("r") =!= col("prev")).count()
-          graft.Caches.releaseCheckpoint(r)
-          r = next
-          rounds += 1
-          if (changed == 0) converged = true
-        }
-        r
-        }
-        ok = true
-      } finally graft.Caches.releaseCheckpoint(deg)
-    } finally {
-      graft.Caches.releaseCheckpoint(e0)
-      if (!ok && r != null) graft.Caches.releaseCheckpoint(r)
+    // Per-round exchanges are partial-aggregated to |V| rows — run the
+    // round loop under [[graphStateConf]] (same small-graph gate as the
+    // broadcast); the final ranks come back on the session.
+    val r = graphStateConf(e0.sparkSession, n <= cap) { sc =>
+      val e = sc(e0)
+      val scale = 1000000000000L
+      val teleport = (15L * scale) / (100L * n)
+      // Rank state carries the node's static out-degree so the round
+      // join touches ONE small side, not two.
+      var r = sc(deg).select(col("src").as("node"), lit(scale / n).as("r"),
+          col("deg"))
+        .cut
+      var converged = false
+      while (rounds < maxRounds && !converged) {
+        // The previous rank rides the checkpoint as `prev` (attached by
+        // the same single small-side join that re-attaches deg), so the
+        // convergence scalar is a bare filter-count over the fresh
+        // checkpoint's |V| rows — the old shape ran a second join job
+        // per round just to compare rank frames (measured 0.27-0.43 s
+        // of the 0.59 s round).
+        val next = pagerankRound(e, r, small, teleport)
+          .cut
+        val changed = next.filter(col("r") =!= col("prev")).count()
+        graft.Caches.releaseCheckpoint(r)
+        r = next
+        rounds += 1
+        if (changed == 0) converged = true
+      }
+      r
     }
+    graft.Caches.releaseCheckpoint(deg)
+    graft.Caches.releaseCheckpoint(e0)
     // Drop the carried deg column: callers see the original (node, r)
     // contract (the projection sits above the checkpoint, so
     // releaseCheckpoint still finds the LogicalRDD underneath).
@@ -2692,33 +2667,32 @@ object PipelineOps extends OpGroup {
       .join(small(high.select(col("node").as("dst"))), "dst")
       .select("src", "dst")
     val seed = ranks.orderBy(desc("r"), asc("node")).limit(1).select("node")
-    var visited = seed.withColumn("hop", lit(0)).localCheckpoint(true)
+    var visited = seed.withColumn("hop", lit(0)).cut
     var frontier = visited
     var hop = 0
     var emptied = false
-    try {
-      while (hop < 3 && !emptied) {
-        hop += 1
-        val next = he.join(small(frontier.select(col("node").as("src"))), "src")
-          .select(col("dst").as("node")).distinct()
-          .join(small(visited.select("node")), Seq("node"), "leftanti")
-          .withColumn("hop", lit(hop))
-        val nv = visited.union(next).localCheckpoint(true)
-        frontier = nv.filter(col("hop") === hop)
-        emptied = frontier.isEmpty
-        graft.Caches.releaseCheckpoint(visited)
-        visited = nv
-      }
-      val rep = visited.join(comps, "node")
-        .groupBy("hop")
-        .agg(count(lit(1)).as("n_nodes"),
-          countDistinct("label").as("n_comps"))
-        .orderBy("hop")
-        .collect() // ≤ 4 rows — bounded by the hop cap, never data-scale
-        .map(x => (x.getInt(0), x.getLong(1), x.getLong(2))).toSeq
-      import s.implicits._
-      rep.toDF("hop", "n_nodes", "n_comps")
-    } finally graft.Caches.releaseCheckpoint(visited)
+    while (hop < 3 && !emptied) {
+      hop += 1
+      val next = he.join(small(frontier.select(col("node").as("src"))), "src")
+        .select(col("dst").as("node")).distinct()
+        .join(small(visited.select("node")), Seq("node"), "leftanti")
+        .withColumn("hop", lit(hop))
+      val nv = visited.union(next).cut
+      frontier = nv.filter(col("hop") === hop)
+      emptied = frontier.isEmpty
+      graft.Caches.releaseCheckpoint(visited)
+      visited = nv
+    }
+    val rep = visited.join(comps, "node")
+      .groupBy("hop")
+      .agg(count(lit(1)).as("n_nodes"),
+        countDistinct("label").as("n_comps"))
+      .orderBy("hop")
+      .collect() // ≤ 4 rows — bounded by the hop cap, never data-scale
+      .map(x => (x.getInt(0), x.getLong(1), x.getLong(2))).toSeq
+    graft.Caches.releaseCheckpoint(visited)
+    import s.implicits._
+    rep.toDF("hop", "n_nodes", "n_comps")
   }
 
   /** vec_hnsw_search's full oracle, factored to a val because
@@ -3532,27 +3506,10 @@ object PipelineOps extends OpGroup {
               org.apache.spark.sql.DataFrame] {
               def call() = kmeansLoop(qB)
             })
-            val ra =
-              try fa.get()
-              catch { case t: Throwable =>
-                // a's loop failed: drain b (bounded — round-19 advice: an
-                // unbounded get() here would hang the key if b's loop is
-                // itself wedged; past the bound the daemon pool thread is
-                // abandoned to shutdownNow) and release its checkpoint.
-                try graft.Caches.releaseCheckpoint(
-                  fb.get(60, java.util.concurrent.TimeUnit.SECONDS))
-                catch { case _: Throwable => () }
-                throw t
-              }
-            val rb =
-              try fb.get()
-              catch { case t: Throwable =>
-                graft.Caches.releaseCheckpoint(ra); throw t }
-            (ra, rb)
+            // If a's loop fails, b's daemon thread is abandoned to
+            // shutdownNow; its cuts belong to this key either way.
+            (fa.get(), fb.get())
           } finally pool.shutdownNow()
-        graft.Caches.track(s, dir, "ivf_shard_quant", Set("vec_ivf_merge_shards"),
-          () => { graft.Caches.releaseCheckpoint(aAssign)
-                  graft.Caches.releaseCheckpoint(bAssign) })
         val aCells = trainedCellSums(qA, aAssign)
           .select((col("c") * 2).as("c"), col("svec"), col("n"))
         val bCells = trainedCellSums(qB, bAssign)
@@ -3570,9 +3527,7 @@ object PipelineOps extends OpGroup {
           .withColumn("rk", row_number().over(rw))
           .filter(col("rk") === 1)
           .select(col("vec_id"), col("c"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "ivf_merge_reb", Set("vec_ivf_merge_shards"),
-          () => graft.Caches.releaseCheckpoint(reB))
+          .cut
         val nMoved = reB
           .join(bAssign.select(col("vec_id"), (col("c") * 2 + 1).as("oldc")), "vec_id")
           .filter(col("c") =!= col("oldc")).count()
@@ -3589,10 +3544,7 @@ object PipelineOps extends OpGroup {
         val flagged = merged.join(retr, Seq("vec_id"), "left")
           .select(col("vec_id"), col("cluster"), col("cos_sim"),
             coalesce(col("hit"), lit(false)).as("in_retrain_topk"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "ivf_merge_flagged",
-          Set("vec_ivf_merge_shards"),
-          () => graft.Caches.releaseCheckpoint(flagged))
+          .cut
         val hits = flagged.filter(col("in_retrain_topk")).count()
         flagged
           .withColumn("n_moved", lit(nMoved))
@@ -3708,18 +3660,14 @@ object PipelineOps extends OpGroup {
             / (Tables.safeNorm("embedding") * Tables.safeNorm("qemb")))
           .orderBy(desc("rel"), asc("vec_id")).limit(20)
           .select(col("vec_id"), col("embedding"), col("rel"))
-          .localCheckpoint(true)
+          .cut
         val pair = cand.select(col("vec_id").as("a"), col("embedding").as("ea"))
           .crossJoin(broadcast(cand.select(col("vec_id").as("b"), col("embedding").as("eb"))))
           .filter(col("a") =!= col("b"))
           .withColumn("ps", expr("vec_dot(ea, eb)")
             / (Tables.safeNorm("ea") * Tables.safeNorm("eb")))
           .select("a", "b", "ps")
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "mmr_frames", Set("vec_mmr_rerank"), () => {
-          graft.Caches.releaseCheckpoint(cand)
-          graft.Caches.releaseCheckpoint(pair)
-        })
+          .cut
         var selected = Vector.empty[(Long, Double)]
         var exhausted = false
         // Degenerate-corpus guard (round-13 advice): with < 5 non-query
@@ -4020,9 +3968,7 @@ object PipelineOps extends OpGroup {
             "transform(sequence(0, 7), s -> named_struct('s', s, 'sq', slice(rv, s * 8 + 1, 8)))")).as("x"))
           .select(col("vec_id"), col("label"), col("c"),
             col("x.s").as("s"), col("x.sq").as("sq"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "pq_residual_sub", Set("vec_pq_residual_topk"),
-          () => graft.Caches.releaseCheckpoint(sub))
+          .cut
         // Residual sub-codebooks must be TRAINED, not label-seeded: a
         // label's residual mean is ≈0 by construction (the centroid
         // already explained the label structure), so label-mean codebooks
@@ -4039,9 +3985,7 @@ object PipelineOps extends OpGroup {
           .groupBy("vec_id", "s")
           .agg(min(struct(col("dist"), col("cl"))).as("m"))
           .select(col("vec_id"), col("s"), col("m.cl").as("cl"))
-        val cb = cbOf(a1r).localCheckpoint(true)
-        graft.Caches.track(s, dir, "pq_residual_cb", Set("vec_pq_residual_topk"),
-          () => graft.Caches.releaseCheckpoint(cb))
+        val cb = cbOf(a1r).cut
         val cand = assign.join(broadcast(topCells), "c")
           .filter(col("vec_id") =!= 0).select("vec_id", "c")
         val codes = sub.join(cand.select("vec_id"), Seq("vec_id"), "leftsemi")
@@ -4244,10 +4188,8 @@ object PipelineOps extends OpGroup {
           .select(col("vec_id"), col("label"),
             expr("transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))").as("qv"))
         val e = Tables.t(s, dir, "embeddings")
-        val exist = quant(e.filter(col("vec_id") % 10 =!= 0)).localCheckpoint(false)
+        val exist = quant(e.filter(col("vec_id") % 10 =!= 0)).cut(eager = false)
         val assign = kmeansLoop(exist)
-        graft.Caches.track(s, dir, "index_upsert_state", Set("vec_index_upsert"),
-          () => { graft.Caches.releaseCheckpoint(exist); graft.Caches.releaseCheckpoint(assign) })
         val cOld = trainedCellSums(exist, assign).withColumnRenamed("c", "clabel")
         val batch = quant(e.filter(col("vec_id") % 10 === 0))
         val bAssign = batch.crossJoin(broadcast(cOld))
@@ -5378,13 +5320,6 @@ object PipelineOps extends OpGroup {
         val ed0 = base.select(col("sn").as("src"), col("cn").as("dst"))
           .union(base.select(col("cn").as("src"), col("sn").as("dst")))
         val (r, rounds) = pagerankLoop(ed0, maxRounds = 8)
-        // The converged rank frame backs the returned (lazy) top-20 —
-        // release it once the key's action has run (the bpe merge-table
-        // pattern; the original inline loop left it pinned for the
-        // session).
-        graft.Caches.track(s, dir, "pagerank_ranks",
-          Set("graph_pagerank_converge"),
-          () => graft.Caches.releaseCheckpoint(r))
         r.orderBy(desc("r"), asc("node")).limit(20)
           .select(
             when(col("node") % 2 === 0, "customer")
@@ -5460,51 +5395,46 @@ object PipelineOps extends OpGroup {
         val m = mutualKnnEdges(s, dir).select("a", "b")
         val sym = m.select(col("a").as("src"), col("b").as("dst"))
           .union(m.select(col("b").as("src"), col("a").as("dst")))
-        // try/finally (round-18 advice): a failed sidecar write, BFS, or
-        // collect must not leak the fixpoint checkpoint for the session —
-        // the same failure-path discipline pagerankLoop's own rounds
-        // apply. The CC labels are the SHARED [[mutualCcLabels]] cache
+        // The CC labels are the SHARED [[mutualCcLabels]] cache
         // (round-19 item 2a — one CC build serves this key and
         // graph_connected_components); Caches releases them, not us.
         val cc = mutualCcLabels(s, dir)
         val (r, _) = pagerankLoop(sym, maxRounds = 8)
-        val (served, matches) =
+        val root = Tables.tmpDir("graft_graph_persist")
+        writeSidecar(sym, s"$root/edges")
+        writeSidecar(r, s"$root/ranks")
+        writeSidecar(cc, s"$root/comps")
+        // The reloaded serve and the in-session reload-equality serve
+        // are independent BFS loops whose driver-blocking micro-jobs
+        // underfill the executor — run them from two driver threads so
+        // each loop's steps back-fill the other's idle capacity (guide
+        // §2.6; same results, the loops share no mutable state).
+        // One |ranks| scalar for BOTH serve legs' broadcast gates
+        // (the sidecar holds exactly r's rows): a cheap count over
+        // the checkpointed rank frame, not a parquet re-scan per leg.
+        val nRanks = r.count()
+        val pool = DriverPool(2)
+        val (served, inSession) =
           try {
-            val root = Tables.tmpDir("graft_graph_persist")
-            writeSidecar(sym, s"$root/edges")
-            writeSidecar(r, s"$root/ranks")
-            writeSidecar(cc, s"$root/comps")
-            // The reloaded serve and the in-session reload-equality serve
-            // are independent BFS loops whose driver-blocking micro-jobs
-            // underfill the executor — run them from two driver threads so
-            // each loop's steps back-fill the other's idle capacity (guide
-            // §2.6; same results, the loops share no mutable state).
-            // One |ranks| scalar for BOTH serve legs' broadcast gates
-            // (the sidecar holds exactly r's rows): a cheap count over
-            // the checkpointed rank frame, not a parquet re-scan per leg.
-            val nRanks = r.count()
-            val pool = DriverPool(2)
-            val (served, inSession) =
-              try {
-                val fr = pool.submit(new java.util.concurrent.Callable[
-                  org.apache.spark.sql.DataFrame] {
-                  def call() = rankFilteredBfs(s,
-                    s.read.parquet(s"$root/edges"),
-                    s.read.parquet(s"$root/ranks"),
-                    s.read.parquet(s"$root/comps"), nRanks)
-                })
-                val fi = pool.submit(new java.util.concurrent.Callable[
-                  org.apache.spark.sql.DataFrame] {
-                  def call() = rankFilteredBfs(s, sym, r, cc, nRanks)
-                })
-                (fr.get(), fi.get())
-              } finally pool.shutdownNow()
-            def typedRows(df: org.apache.spark.sql.DataFrame) = df.collect()
-              .map(x => (x.getInt(0), x.getLong(1), x.getLong(2)))
-              .sortBy(_._1).toSeq
-            (served, served.schema == inSession.schema &&
-              typedRows(served) == typedRows(inSession))
-          } finally graft.Caches.releaseCheckpoint(r)
+            val fr = pool.submit(new java.util.concurrent.Callable[
+              org.apache.spark.sql.DataFrame] {
+              def call() = rankFilteredBfs(s,
+                s.read.parquet(s"$root/edges"),
+                s.read.parquet(s"$root/ranks"),
+                s.read.parquet(s"$root/comps"), nRanks)
+            })
+            val fi = pool.submit(new java.util.concurrent.Callable[
+              org.apache.spark.sql.DataFrame] {
+              def call() = rankFilteredBfs(s, sym, r, cc, nRanks)
+            })
+            (fr.get(), fi.get())
+          } finally pool.shutdownNow()
+        def typedRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+          .map(x => (x.getInt(0), x.getLong(1), x.getLong(2)))
+          .sortBy(_._1).toSeq
+        val matches = served.schema == inSession.schema &&
+          typedRows(served) == typedRows(inSession)
+        graft.Caches.releaseCheckpoint(r)
         served.withColumn("reload_matches_session", lit(matches))
           .orderBy("hop")
       },
@@ -5750,10 +5680,6 @@ object PipelineOps extends OpGroup {
       (s, dir) => {
         val (mt, st) = bpeTrain(s, dir, 6)
         graft.Caches.releaseCheckpoint(st)
-        // The consolidated merge table backs the returned (lazy) frame —
-        // release it once the key's action has run, not before.
-        graft.Caches.track(s, dir, "bpe_merge_table", Set("text_bpe_train"),
-          () => graft.Caches.releaseCheckpoint(mt))
         mt.orderBy("lang", "rk")
       },
       Some {
@@ -5827,9 +5753,6 @@ object PipelineOps extends OpGroup {
       (s, dir) => {
         val (mt, st) = bpeTrain(s, dir, 12, thrDen = Some(4))
         graft.Caches.releaseCheckpoint(st)
-        graft.Caches.track(s, dir, "bpe_merge_table_budget",
-          Set("text_bpe_train_budget"),
-          () => graft.Caches.releaseCheckpoint(mt))
         mt.orderBy("lang", "rk")
       },
       Some {
@@ -6412,10 +6335,7 @@ object PipelineOps extends OpGroup {
           .join(Tables.t(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
             "vec_id")
           .select("vec_id", "c", "rk", "embedding")
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "corpus_v3_ranked",
-          Set("corpus_prep_pipeline_v3"),
-          () => graft.Caches.releaseCheckpoint(ranked))
+          .cut
         val dropped = ranked.select(col("c").as("ca"), col("rk").as("rka"),
             col("embedding").as("ea"))
           .join(ranked.select(col("c").as("cb"), col("vec_id").as("bid"),
@@ -7119,10 +7039,7 @@ object PipelineOps extends OpGroup {
                      'sk', substring(md5(concat_ws(' ', slice(w, i, k))), 1, 16)))))"""))
             .as("sp"))
           .select(col("doc_id"), col("sp.klen").as("klen"), col("sp.sk").as("sk"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "dup_span_sweep_frame",
-          Set("text_dup_spans_sweep"),
-          () => graft.Caches.releaseCheckpoint(sp))
+          .cut
         val dup = sp.groupBy("klen", "sk")
           .agg(count_distinct(col("doc_id")).as("ndocs"))
           .filter(col("ndocs") >= 2)
@@ -7871,9 +7788,7 @@ object PipelineOps extends OpGroup {
           .groupBy("score")
           .agg(sum(col("pos")).as("c1"), count(lit(1)).as("c"))
           .withColumn("band", expr("CAST(floor(score) AS BIGINT)"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "auc_byval", Set("vec_auc_roc"),
-          () => graft.Caches.releaseCheckpoint(byval))
+          .cut
         val wIn = Window.partitionBy("band").orderBy("score")
           .rowsBetween(Window.unboundedPreceding, 0)
         val inb = byval.withColumn("in_cb", sum(col("c")).over(wIn) - col("c"))
@@ -8098,9 +8013,7 @@ object PipelineOps extends OpGroup {
                i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))""")).as("p"))
           .select(col("p.w1"), col("p.w2"))
           .groupBy("w1", "w2").agg(count(lit(1)).as("cab"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "pmi_bigrams", Set("text_cooccurrence_pmi"),
-          () => graft.Caches.releaseCheckpoint(bgc))
+          .cut
         val tot = bgc.agg(sum("cab").as("nn"))
         bgc
           .withColumn("c1", sum("cab").over(Window.partitionBy("w1")))
@@ -8397,11 +8310,6 @@ object PipelineOps extends OpGroup {
         val narrow = mutualKnnEdgeCount(s, dir) <= GraphBroadcastCap
         val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
           if (narrow) broadcast _ else identity _
-        // edges0 is NOT a checkpoint of this op — its plan leaf is the
-        // SHARED mutual-kNN cache, and releaseCheckpoint walks every
-        // LogicalRDD leaf, so releasing it would unpersist the whole
-        // graph family's edge set mid-pass. Only frames this loop
-        // checkpointed itself are ever released (the `ne e0` guards).
         // Peel-loop micro-jobs run under [[graphStateConf]] (same
         // small-graph gate as the broadcast).
         graphStateConf(s, narrow) { sc =>
@@ -8413,16 +8321,15 @@ object PipelineOps extends OpGroup {
         var lastN = -1L
         var converged = false
         for (_ <- 1 to 6 if !converged) {
-          val nk = kcoreSurvivors(edges).localCheckpoint(true)
+          val nk = kcoreSurvivors(edges).cut
           // The prior round's survivor set feeds nothing once its induced
           // edge set exists — release it (only the FINAL one outlives the
-          // loop, pinned below until the key reports done).
+          // loop, pinned until the key reports done).
           Option(keep).foreach(graft.Caches.releaseCheckpoint)
           keep = nk
           val ne = kcoreInduce(edges, keep, small)
-            .localCheckpoint(true)
-          Option(prevEdges).filter(_ ne e0)
-            .foreach(graft.Caches.releaseCheckpoint)
+            .cut
+          Option(prevEdges).foreach(graft.Caches.releaseCheckpoint)
           prevEdges = edges
           edges = ne
           prevN = lastN
@@ -8432,14 +8339,10 @@ object PipelineOps extends OpGroup {
         // The returned plan references ONLY keep (and the shared mutual
         // cache): the edge chain's tail frames can go now; keep stays
         // pinned until the key completes.
-        Option(prevEdges).filter(_ ne e0)
-          .foreach(graft.Caches.releaseCheckpoint)
-        if (edges ne e0) graft.Caches.releaseCheckpoint(edges)
-        val keepFinal = keep
-        graft.Caches.track(s, dir, "kcore_keep", Set("graph_kcore_peel"),
-          () => graft.Caches.releaseCheckpoint(keepFinal))
+        graft.Caches.releaseCheckpoint(prevEdges)
+        graft.Caches.releaseCheckpoint(edges)
         labels
-          .join(keepFinal.withColumn("in_core", lit(true)), Seq("n"), "left")
+          .join(keep.withColumn("in_core", lit(true)), Seq("n"), "left")
           .groupBy(col("l").as("label"))
           .agg(count(lit(1)).as("n_nodes"),
             sum(when(col("in_core"), 1L).otherwise(0L)).as("n_core"),
@@ -8591,7 +8494,7 @@ object PipelineOps extends OpGroup {
         // re-derived it from sym (a full edge scan + aggregate) inside
         // TWO broadcast builds per sweep.
         val degP = symP.groupBy(col("a").as("z")).agg(count(lit(1)).as("dz"))
-          .localCheckpoint(true)
+          .cut
         val mVal = mutualKnnEdgeCount(s, dir)
         // All per-node/per-community state frames below are |V|- or
         // |C|-bounded — size-gated broadcast ([[GraphBroadcastCap]]; the
@@ -8606,12 +8509,12 @@ object PipelineOps extends OpGroup {
         graphStateConf(s, narrow) { sc =>
         val (mutual, sym, deg) = (sc(mutualP), sc(symP), sc(degP))
         val nodes = sym.select(col("a").as("n")).distinct()
-        var comm = nodes.withColumn("c", col("n")).localCheckpoint(true)
+        var comm = nodes.withColumn("c", col("n")).cut
         var moves = Vector.empty[Long]
         var converged = false
         for (_ <- 1 to 4 if !converged) {
           val next = louvainSweep(sym, deg, mVal, small, comm)
-            .localCheckpoint(true)
+            .cut
           val moved = next.filter(col("moved")).count()
           graft.Caches.releaseCheckpoint(comm)
           comm = next.select("n", "c")
@@ -8620,8 +8523,6 @@ object PipelineOps extends OpGroup {
         }
         graft.Caches.releaseCheckpoint(deg) // sweeps done — coarse phase reads comm only
         val cB = comm
-        graft.Caches.track(s, dir, "louvain_comm", Set("graph_louvain_converge"),
-          () => graft.Caches.releaseCheckpoint(cB))
         // Contract: canonical (least, greatest) community pairs weighted
         // by edge count; intra edges become self-loop weight (counted
         // twice in the coarse degree).
@@ -8665,9 +8566,7 @@ object PipelineOps extends OpGroup {
           .select(col("i").as("c"), col("tj").as("fc0"))
         val cfin = supers.join(small(cmvG), Seq("c"), "left")
           .select(col("c").as("super"), coalesce(col("fc0"), col("c")).as("fc"))
-          .localCheckpoint(true)
-        graft.Caches.track(s, dir, "louvain_cfin", Set("graph_louvain_converge"),
-          () => graft.Caches.releaseCheckpoint(cfin))
+          .cut
         val coarseMoves = cfin.filter(col("super") =!= col("fc")).count()
         val baseFin = cB.join(small(cfin), col("c") === col("super"))
           .select(col("n"), col("fc"))
@@ -8851,9 +8750,9 @@ object PipelineOps extends OpGroup {
         val mutual = sc(mutualP)
         val nodes = mutual.select(col("a").as("n"))
           .union(mutual.select(col("b").as("n"))).distinct()
-        var edges = mutual.withColumn("w", lit(1L)).localCheckpoint(true)
+        var edges = mutual.withColumn("w", lit(1L)).cut
         var self = nodes.select(col("n").as("c"), lit(0L).as("sw"))
-          .localCheckpoint(true)
+          .cut
         def stat(e: org.apache.spark.sql.DataFrame,
             sf: org.apache.spark.sql.DataFrame) = {
           val wdeg = e.select(col("a").as("c"), col("w"))
@@ -8876,9 +8775,9 @@ object PipelineOps extends OpGroup {
         // Each level's 1-row report materializes BEFORE that level's
         // state is released — the output never reaches back into a
         // dropped checkpoint.
-        var out = qrow(0, stat(edges, self)).localCheckpoint(true)
+        var out = qrow(0, stat(edges, self)).cut
         for (level <- 1 to 3) {
-          val kw = stat(edges, self).localCheckpoint(true)
+          val kw = stat(edges, self).cut
           val wsym = edges.select(col("a").as("i"), col("b").as("j"), col("w"))
             .union(edges.select(col("b").as("i"), col("a").as("j"), col("w")))
           val bt = wsym
@@ -8901,7 +8800,7 @@ object PipelineOps extends OpGroup {
             .join(broadcast(mg.select(col("gone").as("c"), col("keep"))),
               Seq("c"), "left")
             .select(col("c"), coalesce(col("keep"), col("c")).as("nc"))
-            .localCheckpoint(true)
+            .cut
           val e2 = edges
             .join(small(mp.select(col("c").as("a"), col("nc").as("na"))), "a")
             .join(small(mp.select(col("c").as("b"), col("nc").as("nb"))), "b")
@@ -8915,15 +8814,15 @@ object PipelineOps extends OpGroup {
             .groupBy(col("nc").as("c")).agg(sum("sw").as("sw0"))
             .join(small(intra), Seq("c"), "left")
             .select(col("c"), (col("sw0") + coalesce(col("iw"), lit(0L))).as("sw"))
-          val eN = inter.localCheckpoint(true)
-          val sN = self2.localCheckpoint(true)
+          val eN = inter.cut
+          val sN = self2.cut
           graft.Caches.releaseCheckpoint(edges)
           graft.Caches.releaseCheckpoint(self)
           graft.Caches.releaseCheckpoint(kw)
           graft.Caches.releaseCheckpoint(mp)
           edges = eN
           self = sN
-          out = out.union(qrow(level, stat(edges, self)).localCheckpoint(true))
+          out = out.union(qrow(level, stat(edges, self)).cut)
         }
         graft.Caches.releaseCheckpoint(edges)
         graft.Caches.releaseCheckpoint(self)
@@ -9146,14 +9045,14 @@ object PipelineOps extends OpGroup {
         // small-graph gate as the broadcast).
         val vFinal = graphStateConf(s, narrow) { sc =>
         val edges = sc(sym)
-        var vis = sc(seeds).withColumn("hop", lit(0)).localCheckpoint(true)
+        var vis = sc(seeds).withColumn("hop", lit(0)).cut
         var frontier = vis
         var hop = 0
         var emptied = false
         while (hop < 6 && !emptied) {
           hop += 1
           val nv = vis.union(bfsHop(edges, frontier, vis, small, hop))
-            .localCheckpoint(true)
+            .cut
           frontier = nv.filter(col("hop") === hop)
           emptied = frontier.isEmpty
           graft.Caches.releaseCheckpoint(vis)
@@ -9161,8 +9060,6 @@ object PipelineOps extends OpGroup {
         }
         vis
         }
-        graft.Caches.track(s, dir, "bfs_visited", Set("graph_bfs_hops"),
-          () => graft.Caches.releaseCheckpoint(vFinal))
         val nodes = sym.select(col("src").as("n")).distinct()
         val reach = nodes.join(vFinal, Seq("n"), "left")
           .groupBy(coalesce(col("hop"), lit(-1)).as("hop"))
@@ -9321,13 +9218,10 @@ object PipelineOps extends OpGroup {
         val cosSim = expr("vec_dot(ea, eb)") /
           (Tables.safeNorm("ea") * Tables.safeNorm("eb"))
         // Pre-batch-trained quantizer (3 Lloyd rounds over pre rows
-        // only); the returned assignment checkpoint is released once
-        // this key's action has run (the pagerank_ranks pattern).
+        // only).
         val qAll = quantCorpus(s, dir)
         val qpre = qAll.filter(col("vec_id") % 10 =!= 0)
         val assign = kmeansLoop(qpre)
-        graft.Caches.track(s, dir, "hnsw_insert_quant", Set("vec_hnsw_insert"),
-          () => graft.Caches.releaseCheckpoint(assign))
         val cellsB = broadcast(trainedCellSums(qpre, assign)
           .select(col("c").as("pc"), col("svec"), col("n")))
         val pw = Window.partitionBy("vec_id").orderBy(asc("dist"), asc("pc"))
@@ -9732,27 +9626,22 @@ object PipelineOps extends OpGroup {
             // Mid-chain + final checkpoints only — the batched shape's
             // plan-bounding cuts; the ever-beamed set rides the state as
             // a `seen` array, so ONE head() collect ends the whole walk.
-            // The cuts release in a finally (round-16 advice): a throw
-            // mid-walk must not strand their blocks.
             val edges = sc(sym0)
             var beam = sc(singleState0(s, dir, entryRow.getLong(0), track = false))
               .select(col("qid"), col("qemb"), col("cur").as("cid"),
                 array(col("cur")).as("seen"))
             var midBeam: org.apache.spark.sql.DataFrame = null
-            var finBeam: org.apache.spark.sql.DataFrame = null
-            try {
-              for (i <- 1 to 6) {
-                beam = beamStep(edges, beam, fused = true, trackSeen = true)
-                if (i == 3 || i == 6) {
-                  beam = beam.localCheckpoint(true)
-                  if (i == 3) midBeam = beam else finBeam = beam
-                }
+            for (i <- 1 to 6) {
+              beam = beamStep(edges, beam, fused = true, trackSeen = true)
+              if (i == 3 || i == 6) {
+                beam = beam.cut
+                if (i == 3) midBeam = beam
               }
-              val top = beam.orderBy(desc("sim"), asc("cid")).limit(1).head()
-              (top.getAs[Seq[Long]]("seen").size.toLong,
-                top.getAs[Long]("cid"), top.getAs[Double]("sim"))
-            } finally Seq(midBeam, finBeam).filter(_ != null)
-              .foreach(graft.Caches.releaseCheckpoint)
+            }
+            val top = beam.orderBy(desc("sim"), asc("cid")).limit(1).head()
+            Seq(midBeam, beam).foreach(graft.Caches.releaseCheckpoint)
+            (top.getAs[Seq[Long]]("seen").size.toLong,
+              top.getAs[Long]("cid"), top.getAs[Double]("sim"))
           }
           exactTop.select(
             lit(beamed).as("beam_nodes"),
@@ -10033,32 +9922,13 @@ object PipelineOps extends OpGroup {
             walkSym0(s, dir, s.read.parquet(s"$root/hnsw_m0"), fused = true)
           }
         })
-        // Join the legs; on a failure drain the siblings (bounded — the
-        // daemon pool is abandoned to shutdownNow past the bound) and
-        // release their checkpoints.
-        def drain[T](f: java.util.concurrent.Future[T])(rel: T => Unit): Unit =
-          try rel(f.get(60, java.util.concurrent.TimeUnit.SECONDS))
-          catch { case _: Throwable => () }
+        // Join the legs. If one fails, the daemon pool is abandoned to
+        // shutdownNow; every leg's cuts belong to this key either way.
         val (entryTop, occupied0, levelEdges0, sym00) =
           try {
-            val nt =
-              try fNodes.get()
-              catch { case t: Throwable =>
-                drain(fUpper)(p => graft.Caches.releaseCheckpoint(p._2))
-                drain(fM0)(graft.Caches.releaseCheckpoint)
-                throw t
-              }
-            val (occ, le) =
-              try fUpper.get()
-              catch { case t: Throwable =>
-                drain(fM0)(graft.Caches.releaseCheckpoint)
-                throw t
-              }
-            val sy =
-              try fM0.get()
-              catch { case t: Throwable =>
-                graft.Caches.releaseCheckpoint(le); throw t
-              }
+            val nt = fNodes.get()
+            val (occ, le) = fUpper.get()
+            val sy = fM0.get()
             // Join the truth leg too BEFORE the shutdown interrupts it
             // (its value is only read in the Some branch, but the job
             // runs regardless).
@@ -10067,10 +9937,6 @@ object PipelineOps extends OpGroup {
           } finally pool.shutdownNow()
         entryTop match {
           case None =>
-            // Empty corpus: the legs still built (empty) walk frames —
-            // release them before emitting the empty result.
-            graft.Caches.releaseCheckpoint(levelEdges0)
-            graft.Caches.releaseCheckpoint(sym00)
             exactTop.select(
               lit(0).as("top_layer"), lit(0L).as("descent_nodes"),
               lit(0L).as("beam_nodes"),
@@ -10085,16 +9951,12 @@ object PipelineOps extends OpGroup {
             // The walk frames were built over the RELOADED edges inside
             // the legs (the family caches are deliberately NOT consulted
             // — the serve path must work in a session that never
-            // trained); released in a finally once the walk's scalars
-            // are out.
-            val (descNodes, beamed, foundId, foundSim, exact) =
-              try {
-                val w = hnswServeWalk(s, dir, entry, occupied0, levelEdges0, sym00)
-                (w._1, w._2, w._3, w._4, fExact.get())
-              } finally {
-                graft.Caches.releaseCheckpoint(levelEdges0)
-                graft.Caches.releaseCheckpoint(sym00)
-              }
+            // trained); released once the walk's scalars are out.
+            val (descNodes, beamed, foundId, foundSim) =
+              hnswServeWalk(s, dir, entry, occupied0, levelEdges0, sym00)
+            val exact = fExact.get()
+            graft.Caches.releaseCheckpoint(levelEdges0)
+            graft.Caches.releaseCheckpoint(sym00)
             exact match {
               case Some((vid, esim)) => s.range(1).select(
                 lit(topLayer).as("top_layer"),
@@ -10753,8 +10615,10 @@ object PipelineOps extends OpGroup {
     * [[bfsHop]], [[kmeansRound]]) — the dump is the loop's plan by
     * construction, not a replica that can drift. Dev/evidence tool (and
     * PlanSuite's round pins): nothing in the query paths reads this map.
+    * Each probe owns its cuts under its own name, like a key
+    * ([[graft.Cut.keyed]]), so PlanDump's `keyDone` releases them.
     */
-  private[graft] def innerProbes: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
+  private[graft] def innerProbes: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
     "graph_pagerank_round1_inner" -> ((s, dir) => {
       // graph_pagerank_converge's edge build + pagerankLoop's prologue.
       val li = Tables.t(s, dir, "lineitem")
@@ -10767,34 +10631,34 @@ object PipelineOps extends OpGroup {
         .distinct()
       val e0 = base.select(col("sn").as("src"), col("cn").as("dst"))
         .union(base.select(col("cn").as("src"), col("sn").as("dst")))
-        .localCheckpoint(true)
+        .cut
       val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
+        .cut
       val n = deg.count()
       def small(df: org.apache.spark.sql.DataFrame) =
         if (n <= PagerankBroadcastCap) broadcast(df) else df
       val scale = 1000000000000L
       val r = deg.select(col("src").as("node"), lit(scale / n).as("r"),
-        col("deg")).localCheckpoint(true)
+        col("deg")).cut
       pagerankRound(e0, r, small, (15L * scale) / (100L * n))
     }),
     "graph_louvain_sweep1_inner" -> ((s, dir) => {
       val mutual = mutualKnnEdges(s, dir).select("a", "b")
       val sym = mutual.union(mutual.select(col("b").as("a"), col("a").as("b")))
       val deg = sym.groupBy(col("a").as("z")).agg(count(lit(1)).as("dz"))
-        .localCheckpoint(true)
+        .cut
       val mVal = mutualKnnEdgeCount(s, dir)
       val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
         if (mVal <= GraphBroadcastCap) broadcast _ else identity _
       val comm = sym.select(col("a").as("n")).distinct()
-        .withColumn("c", col("n")).localCheckpoint(true)
+        .withColumn("c", col("n")).cut
       louvainSweep(sym, deg, mVal, small, comm)
     }),
     "graph_kcore_round1_inner" -> ((s, dir) => {
       val edges0 = mutualKnnEdges(s, dir).select("a", "b")
       val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
         if (mutualKnnEdgeCount(s, dir) <= GraphBroadcastCap) broadcast _ else identity _
-      val keep = kcoreSurvivors(edges0).localCheckpoint(true)
+      val keep = kcoreSurvivors(edges0).cut
       kcoreInduce(edges0, keep, small)
     }),
     "vec_kmeans_round1_inner" -> ((s, dir) => {
@@ -10818,7 +10682,7 @@ object PipelineOps extends OpGroup {
         .groupBy("l").agg(min("n").as("n")).select("n").distinct()
       val small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
         if (mutualKnnEdgeCount(s, dir) <= GraphBroadcastCap) broadcast _ else identity _
-      val visited = seeds.withColumn("hop", lit(0)).localCheckpoint(true)
+      val visited = seeds.withColumn("hop", lit(0)).cut
       visited.union(bfsHop(sym, visited, visited, small, 1))
     }),
     "text_bpe_round2_apply_inner" -> ((s, dir) => {
@@ -10840,7 +10704,7 @@ object PipelineOps extends OpGroup {
       val top2 = bpeTopOf(pc2)
       val ck2 = bpeApplyWithDelta(st1,
         top2.map(t => t._1 -> t._2).toMap,
-        top2.map(t => t._1 -> t._3).toMap).localCheckpoint(true)
+        top2.map(t => t._1 -> t._3).toMap).cut
       bpeFoldCounts(pc2, ck2)
-    }))
+    })).map { case (k, fn) => k -> graft.Cut.keyed(k)(fn) }
 }

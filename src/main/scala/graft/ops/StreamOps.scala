@@ -1,7 +1,8 @@
 package graft.ops
 
+import graft.Cut.CutOps
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -142,11 +143,12 @@ object StreamOps extends OpGroup {
   private def publishBatches(s: SparkSession, sfDir: String, n: Int): Unit =
     runBatchSeam.put((s, sfDir), n)
 
-  private val splitCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), String]
+  // Kept across releaseAll like Tables' table cache; swept on stop.
+  private val splitCache = graft.Caches.sweepOnStop(scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, Int), String])
 
-  private val rawTsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.types.DataType]
+  private val rawTsCache = graft.Caches.sweepOnStop(scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), org.apache.spark.sql.types.DataType])
 
   /** Build (once per session/sfDir/n) the n-file incremental layout.
     * private[graft]: the stream_state_ttl equivalence simulation replays
@@ -276,7 +278,7 @@ object StreamOps extends OpGroup {
         .option("checkpointLocation", Tables.tmpDir("graft_ckpt"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      GraftSqlShim.awaitAndDetach(q)
       publishBatches(s, sfDir, q.recentProgress.count(_.numInputRows > 0)) // test-seam publish only
       sc.session.table(name)
     }
@@ -315,7 +317,7 @@ object StreamOps extends OpGroup {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       val q1 = start(bomb = true)
-      try { q1.awaitTermination(); sys.error("poison pill must kill run 1") }
+      try { GraftSqlShim.awaitAndDetach(q1); sys.error("poison pill must kill run 1") }
       catch {
         case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
       }
@@ -329,7 +331,7 @@ object StreamOps extends OpGroup {
         .map { case (data, log) => (countIn(data), countIn(log)) }
         .getOrElse((0L, 0L))
       val q2 = start(bomb = false)
-      q2.awaitTermination()
+      GraftSqlShim.awaitAndDetach(q2)
       // recentProgress is a ring buffer bounded by
       // numRecentProgressUpdates (default 100): assert the bound so a
       // grown source layout fails loudly instead of silently
@@ -496,7 +498,7 @@ object StreamOps extends OpGroup {
           .option("checkpointLocation", s"$sink/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
+        GraftSqlShim.awaitAndDetach(q)
         publishBatches(s, dir, q.recentProgress.count(_.numInputRows > 0)) // test-seam publish only
         s.read.parquet(s"$sink/b")
           .groupBy("event_type")
@@ -558,7 +560,7 @@ object StreamOps extends OpGroup {
             .option("checkpointLocation", Tables.tmpDir("graft_ckpt_late"))
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
-          q.awaitTermination()
+          GraftSqlShim.awaitAndDetach(q)
           val nBatches = q.recentProgress.count(_.numInputRows > 0)
           publishBatches(s, dir, nBatches) // test-seam publish only
           val drops = q.recentProgress
@@ -834,14 +836,10 @@ object StreamOps extends OpGroup {
           })
         val exist = e.filter(col("vec_id") % 10 =!= 0)
           .select(col("vec_id"), col("label"), expr(quantExpr).as("qv"))
-          .localCheckpoint(false)
+          .cut(eager = false)
         val assign = PipelineOps.kmeansLoop(exist)
-        graft.Caches.track(s, dir, "stream_upsert_state",
-          Set("stream_index_upsert"),
-          () => { graft.Caches.releaseCheckpoint(exist)
-                  graft.Caches.releaseCheckpoint(assign) })
         val cOld = PipelineOps.trainedCellSums(exist, assign)
-          .localCheckpoint(true)
+          .cut
         try {
           // Nearest standing cell by the training L2 (ties → lowest cell)
           // — the SAME rule for every micro-batch and for the one-shot
@@ -888,10 +886,7 @@ object StreamOps extends OpGroup {
             assign.union(delta.select("vec_id", "c")),
             PipelineOps.centroidsFromSums(
               PipelineOps.vecSums(baseRows.union(delta.select("c", "qv")), "qv", "c")))
-            .localCheckpoint(true)
-          graft.Caches.track(s, dir, "stream_upsert_served",
-            Set("stream_index_upsert"),
-            () => graft.Caches.releaseCheckpoint(served))
+            .cut
           // One-shot truth: the whole batch upserted in one pass.
           val oneShot = assignToBase(e.filter(col("vec_id") % 10 === 0)
             .select(col("vec_id"), expr(quantExpr).as("qv")))
@@ -973,7 +968,7 @@ object StreamOps extends OpGroup {
           .unionByName(base.filter(col("o_orderkey") % 13 === 0)
             .select(col("o_orderkey"), lit(3).as("ver"), lit("D").as("op"),
               lit(BigDecimal(0).setScale(2)).cast(DecimalType(18, 2)).as("new_price")))
-          .localCheckpoint(true)
+          .cut
         try {
           val changeSchema =
             "o_orderkey BIGINT, ver INT, op STRING, new_price DECIMAL(18,2)"

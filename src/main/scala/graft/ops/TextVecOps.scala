@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Cut.CutOps
 import graft.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,7 +39,7 @@ object TextVecOps extends OpGroup {
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), col("lang"),
         expr("array_sort(transform(array_distinct(split(text, ' ')), t -> xxhash64(t)))").as("toks"))
-      .localCheckpoint(true)
+      .cut
   }
 
   /** Lossless AllPairs/PPJoin prefix-filtered exact-Jaccard pair join
@@ -153,11 +154,7 @@ object TextVecOps extends OpGroup {
               transform(sequence(1, size(w) - 2), i ->
                 concat_ws(' ', element_at(w, i), element_at(w, i + 1), element_at(w, i + 2)))),
               g -> xxhash64(g)))""").as("gs"))
-          .localCheckpoint(true)
-        // Per-invocation artifact: release its pinned blocks once this
-        // key's consumer (Bench/Verify) reports done — see graft.Caches.
-        graft.Caches.track(s, dir, "ngram_shingles", Set("text_ngram_jaccard"),
-          () => graft.Caches.releaseCheckpoint(d))
+          .cut
         // Same lossless prefix filter as the token op, over SHINGLE
         // hashes at t = 4/5 (prefixJaccardPairs) — block key cardinality
         // ∝ shingle vocabulary, so blocks stay bounded at any corpus

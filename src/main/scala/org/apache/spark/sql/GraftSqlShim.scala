@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge to the two `private[sql]` calls graft needs: `Dataset.ofRows`,
+/** Bridge to the `private[sql]` calls graft needs: `Dataset.ofRows`,
   * which hands a custom [[LogicalPlan]] node (graft.plans.AsOfJoinPlan) or
   * an already-analyzed plan back to the public Dataset API, and
   * `SparkSession.cloneSession`, which [[graft.Scoped]] uses to give a loop
@@ -43,4 +43,18 @@ object GraftSqlShim {
             .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
       }
   }
+
+  /** Wait for `q` to stop, then detach the listener bus of the internal
+    * session it ran on. Each query runs on its own clone of the session
+    * that started it (`sparkSessionForStream`), whose manager registers
+    * a bus on the context like any other; without this every query run
+    * leaves one behind. Detaches also when the query died.
+    */
+  def awaitAndDetach(q: streaming.StreamingQuery): Unit =
+    try q.awaitTermination()
+    finally q match {
+      case w: execution.streaming.runtime.StreamingQueryWrapper =>
+        dropStreamListenerBus(w.streamingQuery.sparkSessionForStream)
+      case _ => ()
+    }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Cut.CutOps
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared checkpoint caches (simhash sigs/edges/labels, n-gram
@@ -323,5 +324,114 @@ class CacheReleaseSuite extends AnyFunSuite {
     assert(released == 1, "no release at registration")
     Caches.keyDone(spark, dir, "kA")
     assert(released == 2, "rebuild releases at the next consumer report")
+  }
+
+  test("restricted schedule: every key that cuts releases all of its cuts at its keyDone") {
+    // Each key runs alone under its own schedule, as a restricted pass
+    // runs it: the cuts its body makes and the fixtures it builds must
+    // all be released by its own keyDone. A key that cut anything shows
+    // a tracked entry between its run and its keyDone.
+    val t0 = System.nanoTime()
+    val cutting = scala.collection.mutable.ArrayBuffer.empty[String]
+    val leaks = scala.collection.mutable.ArrayBuffer.empty[String]
+    try SparkEntry.queries.foreach { case (key, fn) =>
+      Caches.releaseAll(spark, dir)
+      Caches.schedule(spark, dir, Set(key))
+      val pinnedBefore = Caches.pinnedRddCount(spark)
+      fn(spark, dir).count()
+      if (Caches.activeEntries(spark, dir).nonEmpty) cutting += key
+      Caches.keyDone(spark, dir, key)
+      val live = Caches.activeEntries(spark, dir)
+      val pinnedAfter = Caches.pinnedRddCount(spark)
+      if (live.nonEmpty || pinnedAfter > pinnedBefore)
+        leaks += s"$key (entries $live, pinned $pinnedBefore -> $pinnedAfter)"
+    } finally Caches.releaseAll(spark, dir)
+    info(f"${SparkEntry.queries.size} keys, ${cutting.size} cut, " +
+      f"${(System.nanoTime() - t0) / 1e9}%.1f s: ${cutting.mkString(",")}")
+    assert(cutting.size > 50, s"only ${cutting.size} keys registered a cut: $cutting")
+    assert(leaks.isEmpty, s"keys left cuts pinned past their keyDone: ${leaks.mkString("; ")}")
+  }
+
+  /** RDD ids of the checkpoint leaves under `df`. */
+  private def cutIds(df: org.apache.spark.sql.Dataset[_]): Seq[Int] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+  private def pinned(id: Int): Boolean = spark.sparkContext.getPersistentRDDs.contains(id)
+  private val probeDir = "cut_probe_dir"
+
+  // Test fixtures name a real key as consumer: the fixture registry
+  // checks every declared consumer against the key registry.
+  private lazy val throwingFixture = Fixture("cut_probe_throwing", Set("agg_groupby_hash")) {
+    (s, _) =>
+      throwingCut = cutIds(s.range(10).toDF("id").cut).head
+      sys.error("fixture build fails after its cut")
+  }
+  private var throwingCut = -1
+  private lazy val sharedFixture = Fixture("cut_probe_shared", Set("agg_groupby_hash")) {
+    (s, _) => s.range(20).toDF("id").cut
+  }
+
+  test("a key body that cuts and then throws has its cuts released at keyDone") {
+    var id = -1
+    val op = ops.Op("cut_probe_throw", (s, _) => {
+      id = cutIds(s.range(10).toDF("id").cut).head
+      sys.error("key body fails after its cut")
+    }, None)
+    intercept[RuntimeException](op.fn(spark, probeDir))
+    assert(pinned(id), "the cut should stay pinned until the key reports done")
+    assert(Caches.activeEntries(spark, probeDir)("cuts:cut_probe_throw"))
+    Caches.keyDone(spark, probeDir, "cut_probe_throw")
+    assert(!pinned(id), "keyDone did not release the cut of a throwing body")
+    assert(!Caches.activeEntries(spark, probeDir)("cuts:cut_probe_throw"))
+  }
+
+  test("a fixture build that cuts and then throws releases its cuts at once and registers nothing") {
+    intercept[RuntimeException](throwingFixture(spark, probeDir))
+    assert(throwingCut >= 0)
+    assert(!pinned(throwingCut), "a failed fixture build left its cut pinned")
+    assert(!Caches.activeEntries(spark, probeDir)("cut_probe_throwing"))
+  }
+
+  test("inside a key, releasing a frame derived from a fixture leaves the fixture pinned") {
+    var own = -1
+    val op = ops.Op("cut_probe_derived", (s, d) => {
+      val shared = sharedFixture(s, d)
+      val mine = shared.filter("id % 2 = 0").cut
+      own = cutIds(mine).head
+      // Both leaves: the fixture's cut under `derived`, the key's own one.
+      val derived = shared.join(mine, "id")
+      Caches.releaseCheckpoint(derived)
+      shared
+    }, None)
+    val out = op.fn(spark, probeDir)
+    val fixtureIds = cutIds(sharedFixture(spark, probeDir))
+    assert(fixtureIds.nonEmpty && fixtureIds.forall(pinned), "the fixture's blocks were released")
+    assert(!pinned(own), "the key's own cut under the frame was not released")
+    assert(out.count() == 20)
+    Caches.keyDone(spark, probeDir, "cut_probe_derived")
+    Caches.keyDone(spark, probeDir, "agg_groupby_hash")
+    assert(!fixtureIds.exists(pinned), "the fixture's release did not release its cut")
+  }
+
+  test("a cut made on a DriverPool thread belongs to the key that created the pool") {
+    var id = -1
+    val op = ops.Op("cut_probe_pool", (s, _) => {
+      val pool = ops.DriverPool(1)
+      try pool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
+        def call() = {
+          val c = s.range(10).toDF("id").cut
+          id = cutIds(c).head
+          c
+        }
+      }).get()
+      finally pool.shutdownNow()
+    }, None)
+    val out = op.fn(spark, probeDir)
+    assert(Caches.activeEntries(spark, probeDir)("cuts:cut_probe_pool"),
+      "the pool thread's cut registered no owner entry for the key")
+    assert(pinned(id) && out.count() == 10)
+    Caches.keyDone(spark, probeDir, "cut_probe_pool")
+    assert(!pinned(id), "keyDone did not release the pool thread's cut")
   }
 }

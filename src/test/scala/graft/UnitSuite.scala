@@ -1447,4 +1447,39 @@ class UnitSuite extends AnyFunSuite {
     }
     assert(!listeners().exists(_ eq cloneBus))
   }
+
+  test("stream keys leave no listener bus behind per query run") {
+    import scala.jdk.CollectionConverters._
+    def buses(): Int = {
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethod("listeners").invoke(bus)
+        .asInstanceOf[java.util.List[AnyRef]].asScala
+        .count(_.getClass.getSimpleName == "StreamingQueryListenerBus")
+    }
+    def run(key: String): Unit = {
+      SparkEntry.queries(key)(spark, sf0001).collect()
+      Caches.keyDone(spark, sf0001, key)
+    }
+    run("stream_tumbling_watermark")
+    val after1 = buses()
+    run("stream_tumbling_watermark")
+    run("stream_tumbling_watermark")
+    run("stream_restart_recovery")
+    assert(buses() == after1, s"listener buses grew from $after1 to ${buses()}")
+  }
+
+  test("lint: op bodies cut through graft.Cut and never register their own cuts") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft/ops")
+    assert(java.nio.file.Files.isDirectory(root))
+    val files = java.nio.file.Files.list(root)
+    val hits =
+      try files.iterator().asScala.toSeq.flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains(".localCheckpoint(") || line.contains("Caches.track(") =>
+            s"${f.getFileName}:${i + 1}"
+        }
+      } finally files.close()
+    assert(hits.isEmpty, s"cut or track outside graft.Cut: ${hits.mkString(", ")}")
+  }
 }
