@@ -1,33 +1,40 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Dev utility: time a subset of keys in isolation (same session shape as
-  * [[Bench]]). `runMain graft.BenchOne key1 key2 ...` — each key is run
+  * [[Bench]], plus `SPARK_GRAFT_CONF`; see [[LocalSession]]).
+  * `runMain graft.BenchOne key1 key2 ...` — each key is run
   * `SPARK_GRAFT_REPS` times (default 2) so first-run codegen/IO warm-up is
-  * visible separately from steady state.
+  * visible separately from steady state. Each rep also reports the Spark
+  * jobs, stages and tasks its timed window ran.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    // Shuffle/spill scratch on tmpfs when available (Tables.scratchLocalDir).
-    Tables.scratchLocalDir.foreach(d => builder.config("spark.local.dir", d))
-    val spark = builder.getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Optional session confs for A/B runs, "k=v;k=v" (the PlanDump seam).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v)
-          case _ => sys.error(s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
-        }
-      })
+    val (jobs, stages, tasks) = (new AtomicInteger, new AtomicInteger, new AtomicInteger)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        tasks.addAndGet(st.stageInfo.numTasks)
+      }
+    })
+    // Listener delivery is asynchronous: wait until the counts hold still.
+    def settled(): (Int, Int, Int) = {
+      var last = (-1, -1, -1)
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(50)
+        val now = (jobs.get, stages.get, tasks.get)
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+      last
+    }
     try SparkEntry.queries.head._2(spark, sfDir).count()
     catch { case _: Throwable => () }
     // The warm-up key may have registered a shared checkpoint cache;
@@ -39,9 +46,13 @@ object BenchOne {
       // Mirror Bench's untimed fixture build — keyDone below releases the
       // layout after each rep, so every rep rebuilds it here, untimed.
       Setups.warm(spark, sfDir, Set(key))
+      settled()
+      Seq(jobs, stages, tasks).foreach(_.set(0))
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(key)(spark, sfDir).count()
-      println(f"$key rep$r: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
+      val secs = (System.nanoTime() - t0) / 1e9
+      val (j, st, tk) = settled()
+      println(f"$key rep$r: $secs%.3f s ($n rows, $j jobs, $st stages, $tk tasks)")
       // Outside the timer, mirroring Bench: release any shared cache
       // whose consumer set this rep completed.
       Caches.keyDone(spark, sfDir, key)

@@ -1,35 +1,23 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility for the one-shot-codegen-floor experiment (PERF_NOTES):
   * run the full key sweep under a configurable conf set and report wall
   * total alongside the JVM-wide janino compilation metrics
   * (`CodegenMetrics`: compilations, mean compile ms, generated source
   * bytes), so the compile share of the suite total is measured, not
-  * inferred. `GRAFT_PROBE_CONF="k=v;k=v"` lets one run pin STATIC confs
-  * (e.g. `spark.sql.codegen.cache.maxEntries`) that must be set at
-  * session build time.
+  * inferred. `SPARK_GRAFT_CONF="k=v;k=v"` ([[LocalSession]]) lets one
+  * run pin STATIC confs (e.g. `spark.sql.codegen.cache.maxEntries`) that
+  * must be set at session build time.
   *
   * `runMain graft.CodegenProbe` — env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
-  * GRAFT_PROBE_CONF.
+  * SPARK_GRAFT_CONF.
   */
 object CodegenProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val extra = sys.env.getOrElse("GRAFT_PROBE_CONF", "")
-      .split(';').filter(_.contains('=')).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.scratchLocalDir.foreach(d => builder.config("spark.local.dir", d))
-    extra.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Same untimed warm-ups as Bench so the probe measures the same loop.
     try SparkEntry.queries.head._2(spark, sfDir).count()
@@ -52,7 +40,7 @@ object CodegenProbe {
     val compileMs = snapshotTotalMs - s0
     val srcKb = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getSnapshot.getMean *
       CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount / 1024
-    val confStr = extra.map { case (k, v) => s"$k=$v" }.mkString(";")
+    val confStr = LocalSession.envConf.map { case (k, v) => s"$k=$v" }.mkString(";")
     println(f"""{"wall_sec":$wall%.2f,"compilations":$nCompile,"compile_sec_approx":${compileMs / 1000}%.2f,"gen_source_kb_total":$srcKb%.0f,"conf":"$confStr"}""")
     spark.stop()
   }

@@ -9,7 +9,7 @@ object Verify {
     // Optional trailing args restrict the dump to those keys (dev loop);
     // the driver passes exactly (sfDir, outDir) → all keys.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.cpus
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1690,7 +1690,7 @@ object PipelineOps extends OpGroup {
     * node. `fused` = exchange-free sort-merge inside one task (both
     * frames single-partition — the per-shard local-walk serving shape);
     * otherwise the state BROADCASTS into the distributed edge frame (the
-    * cross-shard point-lookup fallback). See [[batchHnswSearch]].
+    * cross-shard point-lookup fallback). See [[hnswWalk]].
     */
   private def walkHopJoin(
       edges: org.apache.spark.sql.DataFrame,
@@ -1700,9 +1700,8 @@ object PipelineOps extends OpGroup {
     else edges.join(broadcast(state), col("src") === col(key))
 
   /** ONE greedy (beam=1) hop — the navigable-graph step EVERY descent in
-    * the family takes (vec_hnsw_batch_search's layer walk, vec_hnsw_search
-    * and vec_graph_greedy_search as |Q|=1; round-15 verdict item 4 made
-    * this the single implementation). State (qid, qemb, cur) advances to
+    * the family takes (every level of the HNSW walk [[hnswWalk]], and
+    * vec_graph_greedy_search as |Q|=1). State (qid, qemb, cur) advances to
     * the argmax by (sim DESC, id ASC) of cur's neighbors; "stay" rides the
     * self-loop edges, so the state is referenced exactly ONCE per hop (no
     * 2^steps prefix re-execution) and a node at a local optimum is a
@@ -1734,45 +1733,41 @@ object PipelineOps extends OpGroup {
   }
 
   /** ONE ef=4 beam step — the production HNSW layer-0 search step,
-    * shared verbatim by vec_hnsw_batch_search, vec_hnsw_search and
-    * vec_graph_beam_search (|Q|=1). The state is the current top-4
-    * frontier (qid, qemb, cid, sim); a step scores the frontier's
-    * neighbors ∪ the frontier itself (self-loops) and keeps the top-4 by
-    * (sim DESC, id ASC) per query. Idempotent at a stable beam, so a
-    * fixed-step chain equals an early-stopped walk — beam AND visited
-    * set (repeats add nothing).
+    * shared verbatim by the HNSW walk and vec_graph_beam_search (|Q|=1).
+    * The state is the current top-4 frontier (qid, qemb, cid, sim); a
+    * step scores the frontier's neighbors ∪ the frontier itself
+    * (self-loops) and keeps the top-4 by (sim DESC, id ASC) per query.
+    * Idempotent at a stable beam, so a fixed-step chain equals an
+    * early-stopped walk — beam AND visited set (repeats add nothing).
+    * Every other state column is a per-query constant (qid, qemb, the
+    * HNSW walk's descent_nodes) and rides through unchanged.
     */
   private[graft] def beamStep(
       sym0: org.apache.spark.sql.DataFrame,
       state: org.apache.spark.sql.DataFrame,
-      fused: Boolean, trackSeen: Boolean = false): org.apache.spark.sql.DataFrame =
-    if (!trackSeen)
-      walkHopJoin(sym0, state.select("qid", "qemb", "cid"), "cid", fused)
-        .filter(col("dst") =!= col("qid"))
-        .withColumn("sim", walkSim)
-        .select(col("qid"), col("qemb"), col("dst").as("cid"), col("sim"))
-        .distinct()
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("sim"), asc("cid"))))
-        .filter(col("rk") <= 4).select("qid", "qemb", "cid", "sim")
+      fused: Boolean, trackSeen: Boolean = false): org.apache.spark.sql.DataFrame = {
+    val carry = state.columns.filterNot(Set("cid", "sim", "seen")).map(col)
+    val top = walkHopJoin(sym0, state.drop("sim"), "cid", fused)
+      .filter(col("dst") =!= col("qid"))
+      .withColumn("sim", walkSim)
+      .select(carry ++ Seq(col("dst").as("cid"), col("sim")) ++
+        (if (trackSeen) Seq(col("seen")) else Nil): _*)
+      .distinct()
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("qid").orderBy(desc("sim"), asc("cid"))))
+      .filter(col("rk") <= 4)
+      .drop("rk")
+    if (!trackSeen) top
     else
       // |Q|=1 keys additionally thread the EVER-BEAMED set through the
       // state as a `seen` array (every row of a query carries the same
       // set, so distinct/rank behave exactly as above): the visited
-      // count rides the final head() collect instead of a union of all
+      // count rides the walk's final row instead of a union of all
       // step frames — whose 21-subplan Catalyst analysis was the |Q|=1
       // walk's dominant driver-side cost.
-      walkHopJoin(sym0, state.select("qid", "qemb", "cid", "seen"), "cid", fused)
-        .filter(col("dst") =!= col("qid"))
-        .withColumn("sim", walkSim)
-        .select(col("qid"), col("qemb"), col("dst").as("cid"), col("sim"), col("seen"))
-        .distinct()
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("sim"), asc("cid"))))
-        .filter(col("rk") <= 4)
-        .withColumn("seen", array_union(col("seen"),
-          collect_set(col("cid")).over(Window.partitionBy("qid"))))
-        .select("qid", "qemb", "cid", "sim", "seen")
+      top.withColumn("seen", array_union(col("seen"),
+        collect_set(col("cid")).over(Window.partitionBy("qid"))))
+  }
 
   /** Materialize a walk edge frame: single-partition in the fused shape
     * (the whole layer graph lives in one task — how a real HNSW shard
@@ -1784,7 +1779,7 @@ object PipelineOps extends OpGroup {
   /** All-level HNSW edge frame (lvl, src, dst, demb): the symmetrized
     * upper-layer mutual-kNN edges plus per-level self-loops for every
     * corpus vector, endpoint vectors attached (vectors-in-the-index).
-    * Shared by the batched descent and vec_hnsw_search's |Q|=1 descent.
+    * Read by the descent of the HNSW walk ([[hnswWalk]]).
     */
   private def walkLevelEdges(
       s: org.apache.spark.sql.SparkSession, dir: String,
@@ -1803,8 +1798,8 @@ object PipelineOps extends OpGroup {
   }
 
   /** Layer-0 walk graph (src, dst, demb): the symmetrized mutual-kNN
-    * edges plus self-loops, endpoint vectors attached. Shared by the
-    * batched beam and all three |Q|=1 walk keys.
+    * edges plus self-loops, endpoint vectors attached. Read by the beam
+    * of the HNSW walk and by the greedy and beam walk keys.
     */
   private def walkSym0(
       s: org.apache.spark.sql.SparkSession, dir: String,
@@ -1842,93 +1837,42 @@ object PipelineOps extends OpGroup {
     walkLevelEdges(s, dir, hnswUpperEdges(s, dir), fused = true)
   }
 
-  /** The |Q|=1 multi-layer HNSW serve walk (vec_hnsw_search's body,
-    * factored so vec_hnsw_persist_search serves from RELOADED layer
-    * tables through literally the same code): greedy-descend the
-    * occupied levels 4→1 from `entry`, then the ef=4 beam at layer 0
-    * seeded at the descent endpoint. `levelEdges`/`sym0` are fused walk
-    * frames — the family caches or per-call builds over reloaded edges
-    * interchangeably. Returns (descent nodes, beamed nodes, found id,
-    * found sim). Runs inside [[narrowWalkConf]]; its cuts are released
-    * once the walk's answer is collected.
+  /** Walk start state (qid, qemb, cur[, path, cursim]): every query row
+    * of `q` (qid, qemb) starts at its first candidate of `entries`
+    * (vec_id, erk), by `erk`, that is not the query itself. The state is
+    * single-partition: SinglePartition satisfies the fused merge join's
+    * distribution, keeping the hop exchange-free. With `track`, the
+    * visited path starts at the entry and `cursim` is a placeholder the
+    * first hop's argmax overwrites (every walk takes ≥1 hop).
     */
-  private def hnswServeWalk(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      entry: Long, occupied: Set[Int],
-      levelEdges0: org.apache.spark.sql.DataFrame,
-      sym00: org.apache.spark.sql.DataFrame): (Long, Long, Long, Double) =
-    narrowWalkConf(s) { sc =>
-      val (levelEdges, sym0) = (sc(levelEdges0), sc(sym00))
-      // Descent cuts at the MID and FINAL descended level only
-      // (round-16 verdict item 6): the per-level checkpoint was the
-      // |Q|=1 walk's fixed-cost floor — each cut is a driver-blocking
-      // job on a 1-row frame — and the batched beam's own mid+final
-      // pattern bounds the plan just as well (≤12 chained hops per cut,
-      // codegen off under the walk conf). Byte-identical outputs:
-      // checkpoint placement never changes values.
-      val lvls = (4 to 1 by -1).filter(occupied)
-      var st = sc(singleState0(s, dir, entry, track = true))
-        .cut
-      var cur = st
-      var doneLvls = 0
-      for (level <- lvls) {
-        val eL = levelEdges.filter(col("lvl") === level)
-        for (_ <- 1 to 6)
-          cur = descentHop(eL, cur, fused = true, track = true)
-        doneLvls += 1
-        if (doneLvls == (lvls.size + 1) / 2 || doneLvls == lvls.size) {
-          val next = cur.cut
-          graft.Caches.releaseCheckpoint(st)
-          st = next
-          cur = next
-        }
-      }
-      val fin = st.head()
-      val descNodes =
-        fin.getAs[String]("path").split(',').distinct.length.toLong
-      // Layer-0 ef=4 beam seeded at the descent endpoint — NOT the
-      // global min id, which is the whole point: the descent has
-      // already navigated near the target before the wide search
-      // spends lookups. Mid-chain + final checkpoints only (the
-      // batched shape's plan-bounding cuts); the ever-beamed set
-      // rides the state as a `seen` array, so ONE head() collect
-      // ends the whole walk.
-      var beam = st.select(col("qid"), col("qemb"), col("cur").as("cid"),
-        array(col("cur")).as("seen"))
-      var midBeam: org.apache.spark.sql.DataFrame = null
-      for (i <- 1 to 6) {
-        beam = beamStep(sym0, beam, fused = true, trackSeen = true)
-        if (i == 3 || i == 6) {
-          beam = beam.cut
-          if (i == 3) midBeam = beam
-        }
-      }
-      val topRow = beam.orderBy(desc("sim"), asc("cid")).limit(1).head()
-      Seq(st, midBeam, beam).foreach(graft.Caches.releaseCheckpoint)
-      (descNodes, topRow.getAs[Seq[Long]]("seen").size.toLong,
-        topRow.getAs[Long]("cid"), topRow.getAs[Double]("sim"))
-    }
-
-  /** 1-row walk state (qid = 0, qemb, cur = entry[, path, cursim]) for
-    * the |Q|=1 keys: the query is vec_id 0 and the walk starts at the
-    * caller-probed entry node. With `track`, the visited path starts at
-    * the entry and `cursim` is a placeholder the first hop's argmax
-    * overwrites (every walk takes ≥1 hop).
-    */
-  private def singleState0(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      entry: Long, track: Boolean): org.apache.spark.sql.DataFrame = {
-    val q = Tables.t(s, dir, "embeddings")
-      .filter(col("vec_id") === 0).select(col("embedding").as("qemb"))
-    // Single-partition like the batched st0: SinglePartition satisfies the
-    // fused merge join's distribution, keeping the hop exchange-free.
-    val base = q.coalesce(1)
-      .select(lit(0L).as("qid"), col("qemb"), lit(entry).as("cur"))
+  private def walkState0(
+      q: org.apache.spark.sql.DataFrame,
+      entries: org.apache.spark.sql.DataFrame,
+      track: Boolean): org.apache.spark.sql.DataFrame = {
+    val st0 = q.crossJoin(broadcast(entries))
+      .filter(col("vec_id") =!= col("qid"))
+      .coalesce(1)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("qid").orderBy("erk")))
+      .filter(col("rk") === 1)
+      .select(col("qid"), col("qemb"), col("vec_id").as("cur"))
     if (track)
-      base.withColumn("path", lit(entry.toString))
+      st0.withColumn("path", col("cur").cast("string"))
         .withColumn("cursim", lit(0.0))
-    else base
+    else st0
   }
+
+  /** The query of the |Q|=1 walk keys: vec_id 0 of the corpus `e`, as
+    * a (qid, qemb) batch of one.
+    */
+  private def query0(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    e.filter(col("vec_id") === 0)
+      .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
+
+  /** A one-candidate entry list (vec_id, erk) for a walk from `id`. */
+  private def entry1(
+      s: org.apache.spark.sql.SparkSession, id: Long): org.apache.spark.sql.DataFrame =
+    s.range(1).select(lit(id).as("vec_id"), lit(1).as("erk"))
 
   /** The scoped conf every walk runs its |Q|-bounded frames in
     * ([[graft.Scoped]]): 2 shuffle partitions (the state is
@@ -1948,158 +1892,172 @@ object PipelineOps extends OpGroup {
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.codegen.wholeStage" -> "false")(body)
 
-  /** Batched HNSW descent body (vec_hnsw_batch_search), with the query
-    * modulus and the walk shape exposed so PlanSuite can prove both the
-    * hop-bounded-job claim (two batch sizes, identical job count) and
-    * the dual-shape result equality. Queries = vec_id ≡ 0 (mod `mod`).
+  /** Levels 1..4 that have upper-layer edges. An edgeless level is a
+    * provable no-op of the descent (every query sits on its self-loop),
+    * so the walk skips it exactly.
+    */
+  private def occupiedLevels(upper: org.apache.spark.sql.DataFrame): Set[Int] =
+    upper.groupBy("lvl").count().collect().map(_.getInt(0)).toSet
+
+  /** THE multi-layer HNSW walk — every HNSW search key runs it; they
+    * differ only in their inputs. `queries` (qid, qemb) is the query
+    * batch: the query axis is data, and all queries advance one hop per
+    * step, so the job count is hop-bounded, never query-bounded
+    * (vec_hnsw_batch_search passes vec_id ≡ 0 mod 97; vec_hnsw_search
+    * and vec_hnsw_persist_search pass the one query vec_id 0).
     *
-    * `fusedWalk = true` (the op default) is the PER-SHARD LOCAL-WALK
-    * serving shape: the layer's edge frame (endpoint vectors stored with
-    * the edges — the vectors-in-the-index HNSW layout) and the |Q|-row
-    * state are both single-partition, so every hop is an exchange-free
-    * sort-merge join + argmax inside ONE task and a whole 6-hop level
-    * materializes as ONE job. This is how real HNSW serves: each shard
-    * walks its own subgraph in memory; this corpus is one shard, and the
-    * label-blocked graph makes shards (labels) genuinely independent.
+    * The global entry comes from `layers` (vec_id, lay): the top-2 nodes
+    * by (lay DESC, vec_id), the second covering the query that IS the
+    * top node. Each query greedy-descends the `occupied` levels 4→1 over
+    * `levelEdges` (lvl, src, dst, demb), six [[descentHop]]s per level,
+    * then runs six ef=4 [[beamStep]]s at layer 0 over `sym0` (src, dst,
+    * demb), seeded at its descent endpoint. Both edge frames carry
+    * per-node self-loops, so the fixed-step chains equal the
+    * early-stopped walk (the step maps are idempotent at a fixpoint).
     *
-    * `fusedWalk = false` is the cross-shard fallback for when even one
-    * shard's layer graph exceeds a task: the state BROADCASTS into the
-    * distributed edge frame per hop (a |Q|·(k+1)-bounded point-lookup),
-    * one job per hop — hop-bounded, never query- or corpus-bounded.
-    * PlanSuite pins the two shapes result-equal.
+    * `fused = true` is the per-shard local-walk serving shape: the edge
+    * frames (endpoint vectors stored with the edges — the
+    * vectors-in-the-index layout) and the |Q|-row state are
+    * single-partition, so every hop is an exchange-free sort-merge join
+    * plus argmax inside ONE task; this is how real HNSW serves, each
+    * shard walking its own subgraph in memory. `fused = false` is the
+    * cross-shard fallback: the state BROADCASTS into the distributed
+    * edge frame per hop, a |Q|·(k+1)-bounded point lookup, one job per
+    * hop. PlanSuite pins the two shapes result-equal.
     *
-    * Both shapes are fully declarative — state is (qid, qemb, cur) /
-    * (qid, qemb, cid, sim) rows, never driver scalars; each hop
-    * references the state exactly once (the "stay" option rides
-    * self-loop edges), so there is no 2^steps prefix re-execution; and
-    * no `.head()` ever blocks on a per-query value.
+    * Cuts: the start state, the middle and the final descended level,
+    * beam step 3 and the answer — each bounds the plan (≤ 12 chained
+    * hops, codegen off under the walk conf) and supersedes everything
+    * upstream of it, so only the latest |Q|-row state holds storage and
+    * the returned frame replays nothing. Each edge frame is released
+    * once its phase is over; a fixture's release is a no-op, a per-call
+    * frame's frees its corpus-edge-sized blocks.
+    *
+    * Returns (qid, found_id, found_sim, exact_id, exact_sim, hit) in one
+    * partition sorted by qid, where the truth leg is the exact top-1
+    * over the corpus by ONE partial-aggregatable max_by pass (no
+    * per-query window). With
+    * `track`, the state also threads the descent's visited `path` and
+    * the beam's ever-beamed `seen` set, and descent_nodes and beam_nodes
+    * (distinct nodes each phase touched) follow found_sim. An empty
+    * query batch, corpus or entry set gives zero rows.
+    */
+  private def hnswWalk(
+      s: org.apache.spark.sql.SparkSession, dir: String,
+      queries: org.apache.spark.sql.DataFrame,
+      layers: org.apache.spark.sql.DataFrame,
+      occupied: Set[Int],
+      levelEdges: org.apache.spark.sql.DataFrame,
+      sym0: org.apache.spark.sql.DataFrame,
+      fused: Boolean, track: Boolean): org.apache.spark.sql.DataFrame =
+    narrowWalkConf(s) { sc =>
+      val q = broadcast(sc(queries))
+      val (descentEdges, beamEdges) = (sc(levelEdges), sc(sym0))
+      // TakeOrdered top-2, then an unpartitioned window over those 2 rows.
+      val entries = sc(layers).orderBy(desc("lay"), asc("vec_id")).limit(2)
+        .withColumn("erk", row_number().over(
+          Window.orderBy(desc("lay"), asc("vec_id"))))
+        .select("vec_id", "erk")
+      val lvls = (4 to 1 by -1).filter(occupied)
+      var st = walkState0(q, entries, track).cut
+      var cur = st
+      for ((level, i) <- lvls.zipWithIndex) {
+        val eL = descentEdges.filter(col("lvl") === level)
+        for (_ <- 1 to 6) cur = descentHop(eL, cur, fused, track)
+        if (i + 1 == (lvls.size + 1) / 2 || i + 1 == lvls.size) {
+          cur = cur.cut
+          graft.Caches.releaseCheckpoint(st)
+          st = cur
+        }
+      }
+      graft.Caches.releaseCheckpoint(levelEdges)
+      // The beam's per-query constants ride its state: the descent's
+      // distinct-node count is read off the final descent state here.
+      var beam = st.select(Seq(col("qid"), col("qemb"), col("cur").as("cid")) ++
+        (if (!track) Nil
+         else Seq(array(col("cur")).as("seen"),
+           size(array_distinct(split(col("path"), ","))).cast("long")
+             .as("descent_nodes"))): _*)
+      for (i <- 1 to 6) {
+        beam = beamStep(beamEdges, beam, fused, trackSeen = track)
+        if (i == 3) {
+          beam = beam.cut
+          graft.Caches.releaseCheckpoint(st)
+        }
+      }
+      val found = beam
+        .coalesce(1)
+        .withColumn("rk", row_number().over(
+          Window.partitionBy("qid").orderBy(desc("sim"), asc("cid"))))
+        .filter(col("rk") === 1)
+        .select(Seq(col("qid"), col("cid").as("found_id"),
+          (round(col("sim"), 3) + 0.0).as("found_sim")) ++
+          (if (!track) Nil
+           else Seq(col("descent_nodes"),
+             size(col("seen")).cast("long").as("beam_nodes"))): _*)
+      val exact = sc(Tables.t(s, dir, "embeddings")).crossJoin(q)
+        .filter(col("vec_id") =!= col("qid"))
+        .withColumn("sim", expr("vec_dot(embedding, qemb)")
+          / (Tables.safeNorm("embedding") * Tables.safeNorm("qemb")))
+        .groupBy("qid").agg(max(struct(col("sim").as("s"),
+          (-col("vec_id")).as("nc"))).as("m"))
+        .select(col("qid"), (-col("m.nc")).as("exact_id"),
+          (round(col("m.s"), 3) + 0.0).as("exact_sim"))
+      // The last cut takes beam steps 4-6 and the truth leg in ONE job
+      // under the walk conf — the corpus scan runs beside the beam chain —
+      // so the caller's action only reads the |Q| answer rows.
+      val out = found.join(exact, Seq("qid"))
+        .withColumn("hit", col("found_id") === col("exact_id"))
+        .coalesce(1).sortWithinPartitions("qid")
+        .cut
+      graft.Caches.releaseCheckpoint(beam)
+      graft.Caches.releaseCheckpoint(sym0)
+      out
+    }
+
+  /** vec_hnsw_batch_search's body: the walk over the queries vec_id ≡ 0
+    * (mod `mod`) and the in-session index. The modulus and the walk shape
+    * are exposed so PlanSuite can pin the hop-bounded job count (several
+    * batch sizes, one job count) and the dual-shape result equality.
     */
   private[graft] def batchHnswSearch(
       s: org.apache.spark.sql.SparkSession, dir: String,
       mod: Long, fusedWalk: Boolean = true): org.apache.spark.sql.DataFrame = {
-    // Walk frames are |Q|-bounded, so the walk runs under
-    // [[narrowWalkConf]], built EAGERLY (every state frame
-    // localCheckpoints). The corpus-side fixtures and the one bounded
-    // occupied-levels probe plan on the session: codegen + full
-    // parallelism for the O(N²/label) kNN joins.
+    val q = Tables.t(s, dir, "embeddings")
+      .filter(pmod(col("vec_id"), lit(mod)) === 0)
+      .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
     val upper = hnswUpperEdges(s, dir)
-    val m0 = mutualKnnEdges(s, dir)
-    val occupied = upper.groupBy("lvl").count()
-      .collect().map(_.getInt(0)).toSet
-    narrowWalkConf(s) { sc =>
-      batchHnswSearchBody(s, sc, dir, mod, fusedWalk, sc(upper), sc(m0), occupied)
-    }
+    val (levelEdges, sym0) =
+      if (fusedWalk) (walkLevelEdgesCached(s, dir), walkSym0Cached(s, dir))
+      else (walkLevelEdges(s, dir, upper, fused = false),
+        walkSym0(s, dir, mutualKnnEdges(s, dir), fused = false))
+    hnswWalk(s, dir, q, hnswLayerAssign(s, dir), occupiedLevels(upper),
+      levelEdges, sym0, fusedWalk, track = false)
   }
 
-  private def batchHnswSearchBody(
-      s: org.apache.spark.sql.SparkSession, sc: graft.Scope, dir: String,
-      mod: Long, fusedWalk: Boolean,
-      upper: org.apache.spark.sql.DataFrame,
-      m0: org.apache.spark.sql.DataFrame,
-      occupied: Set[Int]): org.apache.spark.sql.DataFrame = {
-    val e = sc(Tables.t(s, dir, "embeddings"))
-    val q = broadcast(e.filter(pmod(col("vec_id"), lit(mod)) === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qemb")))
-    val lay = sc(hnswLayerAssign(s, dir))
-    // Global entry candidates: TakeOrdered top-2 by (layer DESC, id) —
-    // the 2-deep list covers the query that IS the entry node. The
-    // unpartitioned window ranks a 2-row frame (post-limit), not data.
-    val entTop = lay.orderBy(desc("lay"), asc("vec_id")).limit(2)
-      .withColumn("erk", row_number().over(
-        Window.orderBy(desc("lay"), asc("vec_id"))))
-      .select("vec_id", "erk")
-    val st0 = q.select("qid", "qemb").crossJoin(broadcast(entTop))
-      .filter(col("vec_id") =!= col("qid"))
-      .coalesce(1)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy("erk")))
-      .filter(col("rk") === 1)
-      .select(col("qid"), col("qemb"), col("vec_id").as("cur"))
-    // ALL level edge frames in one checkpoint: (lvl, src, dst, demb) with
-    // per-level self-loops — "stay where you are" lives inside the edge
-    // relation so each hop references the state frame exactly once.
-    // Fused shape = the family-shared tracked cache (built by whichever
-    // walk key runs first, on the session's conf; released by Caches
-    // when the last family key reports done). The unfused fallback stays
-    // per-call and builds under the walk conf.
-    val levelEdges =
-      if (fusedWalk) sc(walkLevelEdgesCached(s, dir))
-      else walkLevelEdges(s, dir, upper, fused = false)
-    // (`occupied` — which levels have real edges — was probed on the
-    // session's conf by the wrapper; an edgeless level is provably a
-    // no-op: the greedy step map is the identity there — every query
-    // sits on its self-loop — so skipping is EXACT.)
-    var st = st0.cut
-    for (level <- 4 to 1 by -1 if occupied(level)) {
-      val eL = levelEdges.filter(col("lvl") === level)
-      var cur = st
-      // No dedup needed: max_by is insensitive to duplicate candidates.
-      for (_ <- 1 to 6) cur = descentHop(eL, cur, fusedWalk, track = false)
-      // One job per level: the 6-hop chain is exchange-free (fused) and
-      // the checkpoint bounds per-plan optimizer cost (a single 24-hop
-      // plan measured SLOWER — Catalyst cost grows superlinearly).
-      // The new checkpoint materializes eagerly, so the superseded
-      // state frame's blocks release immediately — only the latest
-      // |Q|-row state ever holds storage.
-      val next = cur.cut
-      graft.Caches.releaseCheckpoint(st)
-      st = next
-    }
-    // levelEdges fed only the descent above; the layer-0 beam reads
-    // sym0. The per-call (unfused) copy's corpus-edge-sized blocks are
-    // dead once the final descent state is checkpointed (the fused copy
-    // is a fixture, which this release leaves alone).
-    graft.Caches.releaseCheckpoint(levelEdges)
-    // Layer-0 batched ef=4 beam over the shared mutual-kNN graph
-    // ([[walkSym0]]/[[beamStep]], shared with the |Q|=1 walk keys).
-    val sym0 =
-      if (fusedWalk) sc(walkSym0Cached(s, dir))
-      else walkSym0(s, dir, m0, fused = false)
-    var beam = st.select(col("qid"), col("qemb"), col("cur").as("cid"))
-    var midBeam: org.apache.spark.sql.DataFrame = null
-    for (i <- 1 to 6) {
-      beam = beamStep(sym0, beam, fusedWalk)
-      // Mid-chain cut bounds the plan; the final cut pins the whole walk
-      // materialized under the walk conf (the returned lazy tail plans on
-      // the caller's session, and would otherwise replay steps 4-6 there).
-      // Each cut supersedes everything upstream of it: after i==3 the
-      // descent's final state frame is dead; after i==6 the mid-chain
-      // beam and the corpus-edge-sized sym0 are dead — only the returned
-      // frame's backing checkpoint survives the call.
-      if (i == 3) {
-        beam = beam.cut
-        midBeam = beam
-        graft.Caches.releaseCheckpoint(st)
-      } else if (i == 6) {
-        beam = beam.cut
-        graft.Caches.releaseCheckpoint(midBeam)
-        graft.Caches.releaseCheckpoint(sym0)
-      }
-    }
-    val found = beam
-      .coalesce(1)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("sim"), asc("cid"))))
-      .filter(col("rk") === 1)
-      .select(col("qid"), col("cid").as("found_id"),
-        (round(col("sim"), 3) + 0.0).as("found_sim"))
-
-    // Truth leg: exact per-query top-1 via ONE partial-aggregatable
-    // max_by pass over the scored corpus — no per-query corpus window.
-    val exact = e.crossJoin(q)
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", expr("vec_dot(embedding, qemb)")
-        / (Tables.safeNorm("embedding") * Tables.safeNorm("qemb")))
-      .groupBy("qid").agg(max(struct(col("sim").as("s"),
-        (-col("vec_id")).as("nc"))).as("m"))
-      .select(col("qid"), (-col("m.nc")).as("exact_id"),
-        (round(col("m.s"), 3) + 0.0).as("exact_sim"))
-    found.join(exact, Seq("qid"))
-      .select(col("qid"), col("found_id"), col("found_sim"),
-        col("exact_id"), col("exact_sim"),
-        (col("found_id") === col("exact_id")).as("hit"))
-      .orderBy("qid")
+  /** The single-query HNSW serve row (vec_hnsw_search and
+    * vec_hnsw_persist_search): the walk over the one query vec_id 0 with
+    * `track`, under the entry's layer `topLayer`. The two keys pass the
+    * in-session index or the reloaded one.
+    */
+  private def hnswSearchQuery0(
+      s: org.apache.spark.sql.SparkSession, dir: String, topLayer: Int,
+      layers: org.apache.spark.sql.DataFrame, occupied: Set[Int],
+      levelEdges: org.apache.spark.sql.DataFrame,
+      sym0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    hnswWalk(s, dir, query0(Tables.t(s, dir, "embeddings")), layers, occupied, levelEdges, sym0, fused = true, track = true)
+      .select(lit(topLayer).as("top_layer"), col("descent_nodes"),
+        col("beam_nodes"), col("found_id"), col("found_sim"),
+        col("exact_id"), col("exact_sim"), col("hit"))
   }
+
+  /** Layer of the top node other than the query vec_id 0 — the walk's
+    * entry for query 0 (0 for a corpus of only the query, whose walk
+    * gives no row).
+    */
+  private def hnswTopLayer(layers: org.apache.spark.sql.DataFrame): Int =
+    layers.filter(col("vec_id") =!= 0)
+      .agg(coalesce(max("lay"), lit(0))).head().getInt(0)
 
   /** Convergence scalar for the label-propagation loop — one row to the
     * driver per round (never the data). Empty subgraph (no near-dup
@@ -9486,9 +9444,10 @@ object PipelineOps extends OpGroup {
           // and released by Caches after the last walk key (round 16 —
           // greedy/beam/hnsw/batch all read the same checkpoint).
           val sym0 = walkSym0Cached(s, dir)
+          val st0 = walkState0(query0(e), entry1(s, entryRow.getLong(0)), track = true)
           val (pathNodes, cur, curSim) = narrowWalkConf(s) { sc =>
             val edges = sc(sym0)
-            var st = sc(singleState0(s, dir, entryRow.getLong(0), track = true))
+            var st = sc(st0)
             for (_ <- 1 to 6) st = descentHop(edges, st, fused = true, track = true)
             // The ONLY driver action of the walk: the final 1-row state.
             val fin = st.head()
@@ -9627,7 +9586,7 @@ object PipelineOps extends OpGroup {
             // plan-bounding cuts; the ever-beamed set rides the state as
             // a `seen` array, so ONE head() collect ends the whole walk.
             val edges = sc(sym0)
-            var beam = sc(singleState0(s, dir, entryRow.getLong(0), track = false))
+            var beam = sc(walkState0(query0(e), entry1(s, entryRow.getLong(0)), track = false))
               .select(col("qid"), col("qemb"), col("cur").as("cid"),
                 array(col("cur")).as("seen"))
             var midBeam: org.apache.spark.sql.DataFrame = null
@@ -9738,13 +9697,13 @@ object PipelineOps extends OpGroup {
     // greedy/beam ops. Upper-layer graphs are label-blocked mutual-3NN
     // over 4×-shrinking populations (Σ cost ≈ 1/3 of one layer-0 build),
     // materialized once per invocation; layer 0 reuses the family's
-    // shared mutual-kNN checkpoint. The walk is vec_hnsw_batch_search's
-    // |Q|=1 case (round-15 verdict item 4): fixed-hop declarative chains
-    // sharing the batched op's hop builders — exact vs the oracle's
-    // fixed-6-step recursion because the step map is idempotent at a
-    // local optimum (the greedy op's argument, per layer). Walk state is
-    // a 1-row frame per level + a ≤4-row beam at layer 0 — never a data
-    // collect; the only driver scalars are the final state rows.
+    // shared mutual-kNN checkpoint. The walk is [[hnswWalk]] with the
+    // batch |Q| = {0}, the same walk vec_hnsw_batch_search runs —
+    // exact vs the oracle's fixed-6-step chains because the step map is
+    // idempotent at a local optimum (the greedy op's argument, per
+    // layer). Walk state is a 1-row frame per level + a ≤4-row beam at
+    // layer 0 — never a data collect; the one driver scalar is the
+    // entry's layer, reported as top_layer.
     // Output: the occupied top layer, distinct nodes the descent touched,
     // distinct nodes layer-0 ever beamed, and the found-vs-exact verdict
     // (brute-force truth leg, like the greedy/beam ops). At 100 TB: the
@@ -9754,94 +9713,12 @@ object PipelineOps extends OpGroup {
     // is sub-linear while the flat walks pay the full navigable diameter.
     Op("vec_hnsw_search",
       (s, dir) => {
-        val e = Tables.t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qemb"))
-        val lay = hnswLayerAssign(s, dir).filter(col("vec_id") =!= 0)
-        val exactTop = e.filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .withColumn("sim", expr("vec_dot(embedding, qemb)")
-            / (Tables.safeNorm("embedding") * Tables.safeNorm("qemb")))
-          .orderBy(desc("sim"), asc("vec_id")).limit(1)
-        // The brute-force truth leg is independent of the walk — compute
-        // its 1 row on a driver thread DURING the walk (guide §2.6)
-        // instead of at the consumer action after it. Values re-enter the
-        // output as literals fed through the SAME Spark expressions
-        // (round/comparison run in Spark on the identical doubles), with
-        // when(true, …) preserving the old columns' nullability so the
-        // dumped schema is byte-identical.
-        val exPool = DriverPool(1)
-        val fExact = exPool.submit(new java.util.concurrent.Callable[
-          Option[(Long, Double)]] {
-          def call() = exactTop.select(col("vec_id"), col("sim"))
-            .head(1).headOption.map(r => (r.getLong(0), r.getDouble(1)))
-        })
-        lay.orderBy(desc("lay"), asc("vec_id")).limit(1)
-          .select("lay", "vec_id").head(1).headOption match {
-          case None =>
-            // Empty corpus (nothing but the query): exactTop is empty too —
-            // the select below emits zero rows, matching the oracle's empty
-            // cross join. No layer, no walk, no throw (PropertySuite gate).
-            exPool.shutdownNow()
-            exactTop.select(
-              lit(0).as("top_layer"), lit(0L).as("descent_nodes"),
-              lit(0L).as("beam_nodes"),
-              col("vec_id").as("found_id"),
-              (round(col("sim"), 3) + 0.0).as("found_sim"),
-              col("vec_id").as("exact_id"),
-              (round(col("sim"), 3) + 0.0).as("exact_sim"),
-              lit(true).as("hit"))
-          case Some(top) =>
-            val topLayer = top.getInt(0)
-            val entry = top.getLong(1)
-            // Shared corpus-side fixtures: the per-layer edge checkpoint
-            // is built once for build+search+batch; kNN includes the query
-            // node per the layer-0 convention — query-touching edges are
-            // excluded by the hop's dst ≠ qid filter, exactly as in the
-            // batched shape. The walk itself is vec_hnsw_batch_search's
-            // |Q|=1 case (round-15 verdict item 4): the same
-            // [[walkLevelEdges]]/[[descentHop]] level descent and the
-            // same [[walkSym0]]/[[beamStep]] layer-0 beam, fixed-hop
-            // declarative chains with per-level checkpoints — no per-hop
-            // driver round-trips; two 1-row collects and one ≤25-row
-            // distinct-count are the walk's only actions.
-            val upper = hnswUpperEdges(s, dir)
-            val occupied = upper.groupBy("lvl").count()
-              .collect().map(_.getInt(0)).toSet
-            // Family-shared fused edge frames, built on the session's
-            // conf (round 16; released by Caches after the last walk
-            // key — greedy/beam/hnsw/batch all read the same checkpoints).
-            val levelEdges = walkLevelEdgesCached(s, dir)
-            val sym0 = walkSym0Cached(s, dir)
-            // The truth leg keeps planning on the session while the walk
-            // runs on its scoped clone, so it is joined after the walk.
-            val ((descNodes, beamed, foundId, foundSim), exact) =
-              try (hnswServeWalk(s, dir, entry, occupied, levelEdges, sym0),
-                fExact.get())
-              finally exPool.shutdownNow()
-            exact match {
-              case Some((vid, esim)) => s.range(1).select(
-                lit(topLayer).as("top_layer"),
-                lit(descNodes).as("descent_nodes"),
-                lit(beamed).as("beam_nodes"),
-                lit(foundId).as("found_id"),
-                (round(lit(foundSim), 3) + 0.0).as("found_sim"),
-                when(lit(true), lit(vid)).as("exact_id"),
-                (round(when(lit(true), lit(esim)), 3) + 0.0).as("exact_sim"),
-                (lit(foundId) === when(lit(true), lit(vid))).as("hit"))
-              case None =>
-                // Query vector absent: exactTop is empty — emit the
-                // empty frame through the old expressions.
-                exactTop.select(
-                  lit(topLayer).as("top_layer"),
-                  lit(descNodes).as("descent_nodes"),
-                  lit(beamed).as("beam_nodes"),
-                  lit(foundId).as("found_id"),
-                  (round(lit(foundSim), 3) + 0.0).as("found_sim"),
-                  col("vec_id").as("exact_id"),
-                  (round(col("sim"), 3) + 0.0).as("exact_sim"),
-                  (lit(foundId) === col("vec_id")).as("hit"))
-            }
-        }
+        val lay = hnswLayerAssign(s, dir)
+        val upper = hnswUpperEdges(s, dir)
+        // Family-shared fused edge frames, built on the session's conf
+        // and released by Caches after the last walk key.
+        hnswSearchQuery0(s, dir, hnswTopLayer(lay), lay, occupiedLevels(upper),
+          walkLevelEdgesCached(s, dir), walkSym0Cached(s, dir))
       },
       Some(hnswSearchOracleSql)),
 
@@ -9857,8 +9734,9 @@ object PipelineOps extends OpGroup {
     // serve session reads ONLY the reloaded sidecars + the corpus: the
     // entry node and occupied levels come from the reloaded metadata,
     // the walk frames are built from the reloaded edges, and the walk
-    // itself is [[hnswServeWalk]] — the SAME code vec_hnsw_search runs
-    // on the in-session caches, so the oracle is vec_hnsw_search's
+    // itself is the batched walk with |Q|={0} ([[hnswWalk]]) — the SAME
+    // code vec_hnsw_search runs on the in-session caches, so the oracle
+    // is vec_hnsw_search's
     // verbatim: the reloaded index must answer IDENTICALLY, which is
     // the whole point of persisting it. EquivalenceSuite additionally
     // pins row-equality between the two keys. At 100 TB: the layer
@@ -9867,41 +9745,21 @@ object PipelineOps extends OpGroup {
     // the O(N²/label) kNN build.
     Op("vec_hnsw_persist_search",
       (s, dir) => {
-        val e = Tables.t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qemb"))
-        val exactTop = e.filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .withColumn("sim", expr("vec_dot(embedding, qemb)")
-            / (Tables.safeNorm("embedding") * Tables.safeNorm("qemb")))
-          .orderBy(desc("sim"), asc("vec_id")).limit(1)
         // PERSIST the in-session index artifacts (family-shared builds),
-        // RELOAD them fresh, and derive the entry probe / occupied set /
+        // RELOAD them fresh, and derive the node table / occupied set /
         // fused walk frames — three INDEPENDENT per-artifact pipelines
         // (write -> reload -> derive), overlapped from driver threads
-        // (guide §2.6; round-19 verdict item 5: the three sidecar writes,
-        // the two reload probes and the two walk-frame checkpoints ran
-        // strictly sequentially). Shared in-session cache builds inside
-        // the legs are memo-locked (single build under a race). The walk
-        // plans on its own scoped clone ([[narrowWalkConf]]), so the
-        // truth leg keeps the session's conf while both run.
+        // (guide §2.6). Shared in-session cache builds inside the legs
+        // are memo-locked (single build under a race).
         val root = Tables.tmpDir("graft_hnsw_persist")
-        val pool = DriverPool(4)
-        // The brute-force truth leg is independent of everything below —
-        // overlap it too (the vec_hnsw_search treatment; same literal
-        // re-entry through identical Spark expressions).
-        val fExact = pool.submit(new java.util.concurrent.Callable[
-          Option[(Long, Double)]] {
-          def call() = exactTop.select(col("vec_id"), col("sim"))
-            .head(1).headOption.map(r => (r.getLong(0), r.getDouble(1)))
-        })
+        val pool = DriverPool(3)
         val fNodes = pool.submit(new java.util.concurrent.Callable[
-          Option[org.apache.spark.sql.Row]] {
+          (org.apache.spark.sql.DataFrame, Int)] {
           def call() = {
             writeSidecar(hnswLayerAssign(s, dir).select("vec_id", "label", "lay"),
               s"$root/hnsw_nodes")
-            s.read.parquet(s"$root/hnsw_nodes").filter(col("vec_id") =!= 0)
-              .orderBy(desc("lay"), asc("vec_id")).limit(1)
-              .select("lay", "vec_id").head(1).headOption
+            val nodes = s.read.parquet(s"$root/hnsw_nodes")
+            (nodes, hnswTopLayer(nodes))
           }
         })
         val fUpper = pool.submit(new java.util.concurrent.Callable[
@@ -9909,9 +9767,7 @@ object PipelineOps extends OpGroup {
           def call() = {
             writeSidecar(hnswUpperEdges(s, dir), s"$root/hnsw_upper")
             val rUpper = s.read.parquet(s"$root/hnsw_upper")
-            val occ = rUpper.groupBy("lvl").count()
-              .collect().map(_.getInt(0)).toSet
-            (occ, walkLevelEdges(s, dir, rUpper, fused = true))
+            (occupiedLevels(rUpper), walkLevelEdges(s, dir, rUpper, fused = true))
           }
         })
         val fM0 = pool.submit(new java.util.concurrent.Callable[
@@ -9924,76 +9780,28 @@ object PipelineOps extends OpGroup {
         })
         // Join the legs. If one fails, the daemon pool is abandoned to
         // shutdownNow; every leg's cuts belong to this key either way.
-        val (entryTop, occupied0, levelEdges0, sym00) =
-          try {
-            val nt = fNodes.get()
-            val (occ, le) = fUpper.get()
-            val sy = fM0.get()
-            // Join the truth leg too BEFORE the shutdown interrupts it
-            // (its value is only read in the Some branch, but the job
-            // runs regardless).
-            fExact.get()
-            (nt, occ, le, sy)
-          } finally pool.shutdownNow()
-        entryTop match {
-          case None =>
-            exactTop.select(
-              lit(0).as("top_layer"), lit(0L).as("descent_nodes"),
-              lit(0L).as("beam_nodes"),
-              col("vec_id").as("found_id"),
-              (round(col("sim"), 3) + 0.0).as("found_sim"),
-              col("vec_id").as("exact_id"),
-              (round(col("sim"), 3) + 0.0).as("exact_sim"),
-              lit(true).as("hit"))
-          case Some(top) =>
-            val topLayer = top.getInt(0)
-            val entry = top.getLong(1)
-            // The walk frames were built over the RELOADED edges inside
-            // the legs (the family caches are deliberately NOT consulted
-            // — the serve path must work in a session that never
-            // trained); released once the walk's scalars are out.
-            val (descNodes, beamed, foundId, foundSim) =
-              hnswServeWalk(s, dir, entry, occupied0, levelEdges0, sym00)
-            val exact = fExact.get()
-            graft.Caches.releaseCheckpoint(levelEdges0)
-            graft.Caches.releaseCheckpoint(sym00)
-            exact match {
-              case Some((vid, esim)) => s.range(1).select(
-                lit(topLayer).as("top_layer"),
-                lit(descNodes).as("descent_nodes"),
-                lit(beamed).as("beam_nodes"),
-                lit(foundId).as("found_id"),
-                (round(lit(foundSim), 3) + 0.0).as("found_sim"),
-                when(lit(true), lit(vid)).as("exact_id"),
-                (round(when(lit(true), lit(esim)), 3) + 0.0).as("exact_sim"),
-                (lit(foundId) === when(lit(true), lit(vid))).as("hit"))
-              case None =>
-                exactTop.select(
-                  lit(topLayer).as("top_layer"),
-                  lit(descNodes).as("descent_nodes"),
-                  lit(beamed).as("beam_nodes"),
-                  lit(foundId).as("found_id"),
-                  (round(lit(foundSim), 3) + 0.0).as("found_sim"),
-                  col("vec_id").as("exact_id"),
-                  (round(col("sim"), 3) + 0.0).as("exact_sim"),
-                  (lit(foundId) === col("vec_id")).as("hit"))
-            }
-        }
+        val ((nodes, topLayer), (occupied, levelEdges), sym0) =
+          try (fNodes.get(), fUpper.get(), fM0.get())
+          finally pool.shutdownNow()
+        // The walk frames are built over the RELOADED edges (the family
+        // caches are deliberately NOT consulted — the serve path must
+        // work in a session that never trained); the walk releases each
+        // once its phase is over.
+        hnswSearchQuery0(s, dir, topLayer, nodes, occupied, levelEdges, sym0)
       },
       Some(hnswSearchOracleSql)),
 
     // BATCHED MULTI-LAYER HNSW DESCENT — the serving shape of the graph
-    // family (round-14 verdict item 1): where vec_hnsw_search walks ONE
-    // query through up to 24 sequential driver-blocking micro-jobs, here
-    // the QUERY AXIS IS DATA — every vec_id ≡ 0 (mod 97) is a query row,
-    // and ALL queries advance one hop per distributed step. Per level the
-    // six greedy hops are ONE chained declarative plan (state referenced
-    // once per step via self-loop-augmented edges, so the prefix executes
-    // once — no 2^steps re-execution) materialized by a single
-    // localCheckpoint; layer 0 runs the batched ef=4 beam with a
-    // per-query windowed top-ef. Job count is therefore HOP-bounded
-    // (≈ 4 level checkpoints + the final action), never query-bounded —
-    // PlanSuite pins job parity between a 6-query and a 17-query batch.
+    // family ([[hnswWalk]]): the QUERY AXIS IS DATA — every vec_id ≡ 0
+    // (mod 97) is a query row, and ALL queries advance one hop per
+    // distributed step. The six greedy hops of a level are ONE chained
+    // declarative plan (state referenced once per step via
+    // self-loop-augmented edges, so the prefix executes once — no
+    // 2^steps re-execution), cut at the middle and final level; layer 0
+    // runs the batched ef=4 beam with a per-query windowed top-ef. Job
+    // count is therefore HOP-bounded, never query-bounded — PlanSuite
+    // pins job parity between a 6-query batch, a 17-query batch and
+    // vec_hnsw_search's batch of one.
     // Index convention: the batch serves from the SHARED layer graphs
     // (hnswUpperEdges / mutualKnnEdges, query nodes included — they are
     // corpus members); each query is excluded only from its OWN candidate
@@ -10005,10 +9813,9 @@ object PipelineOps extends OpGroup {
     // leg = brute-force exact top-1 via one partial-aggregatable
     // max_by pass (never a per-query window over the corpus). At 100 TB:
     // |Q| queries cost the SAME number of distributed jobs as one query —
-    // each step is a broadcast point-lookup join bounded by |Q|·(k+1)
-    // candidate rows, and that is precisely why batched descent is the
-    // production serving shape while the single-query walk is its debug
-    // probe.
+    // each step is a point-lookup join bounded by |Q|·(k+1) candidate
+    // rows, which is why the batched walk is the one serving shape and a
+    // single query is its batch of one.
     Op("vec_hnsw_batch_search",
       (s, dir) => batchHnswSearch(s, dir, 97L),
       Some {

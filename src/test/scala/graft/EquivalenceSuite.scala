@@ -1205,10 +1205,10 @@ class EquivalenceSuite extends AnyFunSuite {
   }
 
   test("vec_hnsw_batch_search: the shared query's walk is at least as good as the single-query descent") {
-    // Round-14 verdict item 1's recall pin. qid 0 is in both contracts
-    // (0 ≡ 0 mod 97): the batched walk over the shared index must land
-    // at least as close to the truth as vec_hnsw_search's sequential
-    // descent does for the same query — batching may not cost quality.
+    // qid 0 is in both contracts (0 ≡ 0 mod 97), and vec_hnsw_search is
+    // the same walk over the batch {0}: the qid-0 row's verdict columns
+    // (found_id, found_sim, exact_id, exact_sim, hit) must EQUAL the
+    // single-query row's — batching may not change a query's answer.
     // Every per-query found_sim is also bounded by its exact_sim (the
     // truth leg is a genuine upper bound, so hit ⇔ equality).
     val batch = SparkEntry.queries("vec_hnsw_batch_search")(spark, sf0001)
@@ -1217,9 +1217,9 @@ class EquivalenceSuite extends AnyFunSuite {
     val single = SparkEntry.queries("vec_hnsw_search")(spark, sf0001).head()
     val b0 = batch.find(_.getLong(0) == 0L)
       .getOrElse(fail("qid 0 missing from the batch"))
-    assert(b0.getDouble(2) >= single.getAs[Double]("found_sim") - 1e-9,
-      s"batched walk for qid 0 (${b0.getDouble(2)}) fell below the " +
-        s"single-query walk (${single.getAs[Double]("found_sim")})")
+    val verdict = Seq("found_id", "found_sim", "exact_id", "exact_sim", "hit")
+    assert(verdict.map(c => b0.getAs[Any](c)) == verdict.map(c => single.getAs[Any](c)),
+      s"batched walk for qid 0 ($b0) differs from the single-query walk ($single)")
     batch.foreach { r =>
       assert(r.getDouble(2) <= r.getDouble(4) + 1e-9,
         s"qid ${r.getLong(0)}: found_sim ${r.getDouble(2)} exceeds exact_sim ${r.getDouble(4)}")

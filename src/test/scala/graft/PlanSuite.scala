@@ -292,11 +292,14 @@ class PlanSuite extends AnyFunSuite {
         jobs.incrementAndGet()
     }
     graft.ops.PipelineOps.batchHnswSearch(spark, sf0001, 97L).count()
-    def measured(mod: Long): Int = {
+    SparkEntry.queries("vec_hnsw_search")(spark, sf0001).count()
+    def batch(mod: Long) =
+      graft.ops.PipelineOps.batchHnswSearch(spark, sf0001, mod).count()
+    def measured(run: => Long): Int = {
       spark.sparkContext.addSparkListener(listener)
       try {
         jobs.set(0)
-        graft.ops.PipelineOps.batchHnswSearch(spark, sf0001, mod).count()
+        run
         // Listener delivery is async — wait for the count to stabilize.
         var last = -1
         var stable = 0
@@ -308,16 +311,19 @@ class PlanSuite extends AnyFunSuite {
         last
       } finally spark.sparkContext.removeSparkListener(listener)
     }
-    val small = measured(97L) // 6 queries at sf0.001
-    val large = measured(31L) // 17 queries — ~3x the batch
-    // |Q|=1 (round-15 verdict item 4): the single-query keys ride the
-    // same hop builders, so the degenerate batch must cost the same jobs
-    // too — a mod larger than any vec_id selects only the query itself.
-    val one = measured(1000000007L)
+    val small = measured(batch(97L)) // 6 queries at sf0.001
+    val large = measured(batch(31L)) // 17 queries — ~3x the batch
+    // |Q|=1: the degenerate batch must cost the same jobs too — a mod
+    // larger than any vec_id selects only the query itself — and so must
+    // the single-query key, which is the same walk over the batch {0}.
+    val one = measured(batch(1000000007L))
+    val single = measured(SparkEntry.queries("vec_hnsw_search")(spark, sf0001).count())
     assert(math.abs(small - large) <= 2,
       s"job count must not scale with the query batch: mod97=$small mod31=$large")
     assert(math.abs(small - one) <= 2,
       s"|Q|=1 must cost the same jobs as a full batch: mod97=$small |Q|=1=$one")
+    assert(math.abs(small - single) <= 2,
+      s"vec_hnsw_search must cost the same jobs as a full batch: mod97=$small vec_hnsw_search=$single")
     assert(large <= 45, s"walk jobs must stay hop-bounded, got $large")
     // Dual-shape equality: the fused per-shard local walk and the
     // cross-shard broadcast point-lookup walk must return identical rows.

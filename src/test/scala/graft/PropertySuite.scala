@@ -98,6 +98,23 @@ class PropertySuite extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("the HNSW walk keys give zero rows when the query or the rest of the corpus is missing") {
+    // The walk takes the query set as a frame, so an absent query vector
+    // (no vec_id 0) or a corpus of only the query (no entry node) ends in
+    // an empty batched join — zero rows, no throw — like the oracle's
+    // empty truth leg.
+    def v(pos: Int): Array[Float] = { val a = Array.fill(64)(0f); a(pos) = 1f; a }
+    val noQuery = Seq((1L, v(0), 0), (2L, v(1), 0), (3L, v(2), 1)).toDF("vec_id", "embedding", "label")
+    val onlyQuery = Seq((0L, v(0), 0)).toDF("vec_id", "embedding", "label")
+    for ((name, emb) <- Seq("no query" -> noQuery, "only the query" -> onlyQuery)) {
+      val dir = miniDir("embeddings" -> emb)
+      for (k <- Seq("vec_hnsw_search", "vec_hnsw_persist_search", "vec_hnsw_batch_search")) {
+        val n = SparkEntry.queries(k)(spark, dir).count()
+        assert(n == 0, s"$k on a corpus with $name: $n rows")
+      }
+    }
+  }
+
   test("cardinality algebra: |A semi B| <= |A|, |A unionAll B| = |A|+|B|") {
     samples(4).grouped(2).collect { case Seq(a, b) =>
       val da = a.toDF("k", "v")
