@@ -679,12 +679,7 @@ object PipelineOps extends OpGroup {
       // O(log chain-length) to O(log #partition-spanning merges) — at
       // sf0.1 (one partition) the seed labeling is already the fixpoint
       // and the loop runs exactly one confirmation round.
-      val dbgT0 = System.nanoTime()
-      def dbgMark(what: String): Unit =
-        if (sys.env.contains("SPARK_GRAFT_DEBUG")) System.err.println(
-          f"[cc] $what: ${(System.nanoTime() - dbgT0) / 1e9}%.2f s cumulative")
       val edgeN = edges0.count()
-      dbgMark("edge count")
       val parts = math.max(1L, math.min(
         edges0.rdd.getNumPartitions.toLong, edgeN / ufRowsPerPartition + 1L)).toInt
       val aType = edges0.schema("a").dataType
@@ -724,7 +719,6 @@ object PipelineOps extends OpGroup {
       val symRaw = contracted.select(col("a").as("src"), col("b").as("dst"))
         .union(contracted.select(col("b").as("src"), col("a").as("dst")))
       val sym = symRaw.cut
-      dbgMark("uf contraction + sym checkpoint")
       val symN = sym.count()
       // Seed with the closed-neighborhood min directly (label_0(v) =
       // min(v ∪ N(v))) — one aggregate folded into the initial checkpoint,
@@ -750,7 +744,6 @@ object PipelineOps extends OpGroup {
       def lab(df: org.apache.spark.sql.DataFrame) =
         if (bcastLabels) broadcast(df) else df
       var iter = 0
-      val debug = sys.env.contains("SPARK_GRAFT_DEBUG")
       // One contraction sub-step: neighborhood min, then whole-cluster
       // relabel. The own-label rides through the union as a second column
       // (exactly one non-null per node) so no extra join is needed to
@@ -767,7 +760,6 @@ object PipelineOps extends OpGroup {
         prop.join(lab(cmin), Seq("label"))
           .select(col("node"), col("cmin").as("label"))
       }
-      dbgMark("seed checkpoint")
       var prevSum = -1L
       var curSum = sumLabels(labels)
       // 40 double-contraction rounds cover components whose cluster-chain
@@ -775,15 +767,12 @@ object PipelineOps extends OpGroup {
       // cap something is structurally broken, and wrong labels must never
       // ship silently.
       while (curSum != prevSum && iter < 40) {
-        val t0 = if (debug) System.nanoTime() else 0L
         // TWO contraction sub-steps per driver-blocking checkpoint round:
         // the cluster-chain shrinks 4× per round (re-measured after the
         // round-10 symmetric-edge/coalesce rework: 1 sub-step costs an
         // extra round's checkpoint+actions, 3 deepens the per-round plan
         // for no round saved on real convergence profiles).
         val next = contract(contract(labels)).cut
-        if (debug) System.err.println(
-          f"[cc] round $iter: ${(System.nanoTime() - t0) / 1e9}%.2f s")
         // The superseded round's blocks are unreachable the moment `next`
         // materializes — release them now instead of pinning one frame per
         // round for the life of the session.
@@ -1009,14 +998,8 @@ object PipelineOps extends OpGroup {
       .select(coalesce(col("ra"), col("a")).as("a"),
         coalesce(col("rb"), col("b")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val debug = sys.env.contains("SPARK_GRAFT_DEBUG")
-    val dbgT0 = System.nanoTime()
-    def dbgMark(what: String): Unit = if (debug) System.err.println(
-      f"[scc] $what: ${(System.nanoTime() - dbgT0) / 1e9}%.2f s cumulative")
-    dbgMark(s"edge count ($edgeN)")
     val (cond, condC) = ckptFresh(ea.coalesce(parts))
     val condN = cond.count()
-    dbgMark(s"tarjan + condensation ($condN edges)")
     // STAGE 2: refinement over the condensation.
     var rounds = 0
     val refined: org.apache.spark.sql.DataFrame = if (condN == 0) {
@@ -1028,7 +1011,6 @@ object PipelineOps extends OpGroup {
       // minima, so star roots here are global SCC minima directly.)
       val condEdges = cond.collect().map(r => (r.getLong(0), r.getLong(1)))
       val stars = tarjanStars(condEdges.iterator).toSeq
-      dbgMark(s"driver condensation solve (${stars.size} stars)")
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
       cond.sparkSession.createDataFrame(
         cond.sparkSession.sparkContext.parallelize(
@@ -1076,7 +1058,6 @@ object PipelineOps extends OpGroup {
         }
         if (curSum != prevSum) throw new IllegalStateException(
           s"SCC $what propagation did not converge in $iter rounds")
-        if (debug) System.err.println(s"[scc] $what fixpoint: $iter rounds")
         (f, fCkpt)
       }
       // Within smaller classes both F and B can only INCREASE (fewer
@@ -1109,8 +1090,6 @@ object PipelineOps extends OpGroup {
         labC = nextC
         prevScalar = curScalar
         curScalar = lab.agg(sum(col("cf") + col("cb"))).head().getLong(0)
-        if (debug) System.err.println(
-          s"[scc] refinement round $rounds: scalar $curScalar")
       }
       if (curScalar != prevScalar) {
         graft.Caches.releaseCheckpoint(labC)
@@ -1144,7 +1123,6 @@ object PipelineOps extends OpGroup {
     graft.Caches.releaseCheckpoint(mappingC)
     graft.Caches.releaseCheckpoint(condC)
     graft.Caches.releaseCheckpoint(edgesC)
-    dbgMark("expansion done")
     (out, rounds)
   }
 
@@ -1677,10 +1655,9 @@ object PipelineOps extends OpGroup {
 
   /** The walk family's per-candidate scorer: cosine of the edge's stored
     * endpoint vector (`demb` — the vectors-in-the-index HNSW layout)
-    * against the state row's query vector (`qemb`). ONE audited
-    * expression shared by every hop of every walk key, batched or
-    * single-query — the step cost each op's scaladoc quotes (k lookups,
-    * not |corpus|) has a single implementation.
+    * against the state row's query vector (`qemb`). One expression for
+    * every hop of [[hnswWalk]], so the step cost each walk key's comment
+    * quotes (k lookups, not |corpus|) has a single implementation.
     */
   private def walkSim: org.apache.spark.sql.Column =
     expr("vec_dot(demb, qemb)") /
@@ -1699,16 +1676,15 @@ object PipelineOps extends OpGroup {
     if (fused) edges.hint("merge").join(state, col("src") === col(key))
     else edges.join(broadcast(state), col("src") === col(key))
 
-  /** ONE greedy (beam=1) hop — the navigable-graph step EVERY descent in
-    * the family takes (every level of the HNSW walk [[hnswWalk]], and
-    * vec_graph_greedy_search as |Q|=1). State (qid, qemb, cur) advances to
-    * the argmax by (sim DESC, id ASC) of cur's neighbors; "stay" rides the
-    * self-loop edges, so the state is referenced exactly ONCE per hop (no
-    * 2^steps prefix re-execution) and a node at a local optimum is a
-    * fixpoint — which is why a fixed-step chain equals the early-stopped
-    * oracle. `track = true` (single-query keys) additionally threads a
-    * visited `path` string and the chosen node's `cursim` through the
-    * state — pure extra columns, the argmax itself is byte-identical.
+  /** ONE greedy (beam width 1) hop of a descent of [[hnswWalk]]. State
+    * (qid, qemb, cur) advances to the argmax by (sim DESC, id ASC) of
+    * cur's neighbors; "stay" rides the self-loop edges, so the state is
+    * referenced exactly ONCE per hop (no 2^steps prefix re-execution) and
+    * a node at a local optimum is a fixpoint — which is why a fixed-step
+    * chain equals the early-stopped oracle. `track = true` additionally
+    * threads a visited `path` string and the chosen node's `cursim`
+    * (the found_sim of a walk without a beam) through the state — pure
+    * extra columns, the argmax itself is byte-identical.
     */
   private[graft] def descentHop(
       eL: org.apache.spark.sql.DataFrame,
@@ -1732,15 +1708,14 @@ object PipelineOps extends OpGroup {
           col("m.s").as("cursim"))
   }
 
-  /** ONE ef=4 beam step — the production HNSW layer-0 search step,
-    * shared verbatim by the HNSW walk and vec_graph_beam_search (|Q|=1).
-    * The state is the current top-4 frontier (qid, qemb, cid, sim); a
-    * step scores the frontier's neighbors ∪ the frontier itself
-    * (self-loops) and keeps the top-4 by (sim DESC, id ASC) per query.
-    * Idempotent at a stable beam, so a fixed-step chain equals an
-    * early-stopped walk — beam AND visited set (repeats add nothing).
-    * Every other state column is a per-query constant (qid, qemb, the
-    * HNSW walk's descent_nodes) and rides through unchanged.
+  /** ONE ef=4 beam step of the layer-0 beam of [[hnswWalk]]. The state is
+    * the current top-4 frontier (qid, qemb, cid, sim); a step scores the
+    * frontier's neighbors ∪ the frontier itself (self-loops) and keeps
+    * the top-4 by (sim DESC, id ASC) per query. Idempotent at a stable
+    * beam, so a fixed-step chain equals an early-stopped walk — beam AND
+    * visited set (repeats add nothing). Every other state column is a
+    * per-query constant (qid, qemb, descent_nodes) and rides through
+    * unchanged.
     */
   private[graft] def beamStep(
       sym0: org.apache.spark.sql.DataFrame,
@@ -1759,12 +1734,9 @@ object PipelineOps extends OpGroup {
       .drop("rk")
     if (!trackSeen) top
     else
-      // |Q|=1 keys additionally thread the EVER-BEAMED set through the
-      // state as a `seen` array (every row of a query carries the same
-      // set, so distinct/rank behave exactly as above): the visited
-      // count rides the walk's final row instead of a union of all
-      // step frames — whose 21-subplan Catalyst analysis was the |Q|=1
-      // walk's dominant driver-side cost.
+      // The ever-beamed set rides the state as a `seen` array: every row
+      // of a query carries the same set, so distinct and rank behave
+      // exactly as above, and the walk's last state holds the count.
       top.withColumn("seen", array_union(col("seen"),
         collect_set(col("cid")).over(Window.partitionBy("qid"))))
   }
@@ -1779,7 +1751,7 @@ object PipelineOps extends OpGroup {
   /** All-level HNSW edge frame (lvl, src, dst, demb): the symmetrized
     * upper-layer mutual-kNN edges plus per-level self-loops for every
     * corpus vector, endpoint vectors attached (vectors-in-the-index).
-    * Read by the descent of the HNSW walk ([[hnswWalk]]).
+    * The HNSW keys' descent ([[hnswDescent]]).
     */
   private def walkLevelEdges(
       s: org.apache.spark.sql.SparkSession, dir: String,
@@ -1798,8 +1770,9 @@ object PipelineOps extends OpGroup {
   }
 
   /** Layer-0 walk graph (src, dst, demb): the symmetrized mutual-kNN
-    * edges plus self-loops, endpoint vectors attached. Read by the beam
-    * of the HNSW walk and by the greedy and beam walk keys.
+    * edges plus self-loops, endpoint vectors attached. The beam of the
+    * HNSW keys and of vec_graph_beam_search, and the descent of
+    * vec_graph_greedy_search.
     */
   private def walkSym0(
       s: org.apache.spark.sql.SparkSession, dir: String,
@@ -1814,16 +1787,14 @@ object PipelineOps extends OpGroup {
       .join(emb, Seq("dst")), fused)
   }
 
-  /** Cached FUSED walk edge frames, shared across the whole walk family
-    * (round-16): sym0 (layer-0 graph) is consumed by all four walk keys
-    * and levelEdges by both HNSW keys, but each op used to rebuild and
-    * release its own copy — 6 corpus-edge joins + checkpoints per bench
-    * pass for two identical artifacts. The fused (single-partition)
-    * shape is deterministic, so it memoizes exactly like
-    * [[mutualKnnEdges]]; [[graft.Caches.track]] releases the blocks when
-    * the last family key reports done. Like every fixture they build
-    * through the parent session, so on its conf, even when first called
-    * from a walk body. The unfused (distributed) shape
+  /** The FUSED walk edge frames as fixtures: `walk_sym0` for the in-session
+    * layer-0 graph (read by every walk key but vec_hnsw_persist_search,
+    * which walks its reloaded index) and `walk_level_edges` for the
+    * in-session upper levels. The fused (single-partition) shape is
+    * deterministic, so each is built once per (session, sfDir) and
+    * released after its last consumer key ([[graft.Fixture]]). Like every
+    * fixture they build through the parent session, so on its conf, even
+    * when first called from a walk body. The unfused (distributed) shape
     * stays per-call: only PlanSuite's dual-shape equality run uses it.
     */
   private val walkSym0Cached = graft.Fixture("walk_sym0",
@@ -1839,11 +1810,13 @@ object PipelineOps extends OpGroup {
 
   /** Walk start state (qid, qemb, cur[, path, cursim]): every query row
     * of `q` (qid, qemb) starts at its first candidate of `entries`
-    * (vec_id, erk), by `erk`, that is not the query itself. The state is
-    * single-partition: SinglePartition satisfies the fused merge join's
-    * distribution, keeping the hop exchange-free. With `track`, the
-    * visited path starts at the entry and `cursim` is a placeholder the
-    * first hop's argmax overwrites (every walk takes ≥1 hop).
+    * (vec_id, erk), by `erk`, that is not the query itself; a query
+    * without one has no state row. The state is single-partition:
+    * SinglePartition satisfies the fused merge join's distribution,
+    * keeping the hop exchange-free. With `track`, the visited path starts
+    * at the entry and `cursim` is a placeholder the first descent hop
+    * overwrites (it is read only by a walk without a beam, which always
+    * descends).
     */
   private def walkState0(
       q: org.apache.spark.sql.DataFrame,
@@ -1862,17 +1835,12 @@ object PipelineOps extends OpGroup {
     else st0
   }
 
-  /** The query of the |Q|=1 walk keys: vec_id 0 of the corpus `e`, as
-    * a (qid, qemb) batch of one.
+  /** The query of the single-query walk keys: vec_id 0 of the corpus `e`,
+    * as a (qid, qemb) batch of one.
     */
   private def query0(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     e.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-
-  /** A one-candidate entry list (vec_id, erk) for a walk from `id`. */
-  private def entry1(
-      s: org.apache.spark.sql.SparkSession, id: Long): org.apache.spark.sql.DataFrame =
-    s.range(1).select(lit(id).as("vec_id"), lit(1).as("erk"))
 
   /** The scoped conf every walk runs its |Q|-bounded frames in
     * ([[graft.Scoped]]): 2 shuffle partitions (the state is
@@ -1892,28 +1860,42 @@ object PipelineOps extends OpGroup {
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.codegen.wholeStage" -> "false")(body)
 
-  /** Levels 1..4 that have upper-layer edges. An edgeless level is a
-    * provable no-op of the descent (every query sits on its self-loop),
-    * so the walk skips it exactly.
-    */
+  /** Levels 1..4 that have upper-layer edges. */
   private def occupiedLevels(upper: org.apache.spark.sql.DataFrame): Set[Int] =
     upper.groupBy("lvl").count().collect().map(_.getInt(0)).toSet
 
-  /** THE multi-layer HNSW walk — every HNSW search key runs it; they
-    * differ only in their inputs. `queries` (qid, qemb) is the query
-    * batch: the query axis is data, and all queries advance one hop per
-    * step, so the job count is hop-bounded, never query-bounded
-    * (vec_hnsw_batch_search passes vec_id ≡ 0 mod 97; vec_hnsw_search
-    * and vec_hnsw_persist_search pass the one query vec_id 0).
+  /** The HNSW keys' descent: the `occupied` levels of `levelEdges`, 4→1.
+    * An edgeless level is a provable no-op of the descent (every query
+    * sits on its self-loop), so the walk skips it exactly.
+    */
+  private def hnswDescent(
+      levelEdges: org.apache.spark.sql.DataFrame,
+      occupied: Set[Int]): Seq[org.apache.spark.sql.DataFrame] =
+    (4 to 1 by -1).filter(occupied).map(l => levelEdges.filter(col("lvl") === l))
+
+  /** THE graph walk — all five graph-search keys run it and differ only
+    * in their inputs:
     *
-    * The global entry comes from `layers` (vec_id, lay): the top-2 nodes
-    * by (lay DESC, vec_id), the second covering the query that IS the
-    * top node. Each query greedy-descends the `occupied` levels 4→1 over
-    * `levelEdges` (lvl, src, dst, demb), six [[descentHop]]s per level,
-    * then runs six ef=4 [[beamStep]]s at layer 0 over `sym0` (src, dst,
-    * demb), seeded at its descent endpoint. Both edge frames carry
-    * per-node self-loops, so the fixed-step chains equal the
-    * early-stopped walk (the step maps are idempotent at a fixpoint).
+    *  - `queries` (qid, qemb), the query batch. The query axis is data and
+    *    all queries advance one hop per step, so the job count is
+    *    hop-bounded, never query-bounded. vec_hnsw_batch_search passes
+    *    vec_id ≡ 0 (mod 97); the other keys pass the one query vec_id 0.
+    *  - `entries` (vec_id, lay), the entry candidates. Each query enters
+    *    at the first of the top two by (lay DESC, vec_id) that is not
+    *    itself. The HNSW keys pass the layer table; the flat keys pass the
+    *    endpoints of the mutual edges that avoid the query, at lay 0.
+    *  - `descent`, edge frames (src, dst, demb) walked in order by six
+    *    greedy [[descentHop]]s each, every frame seeded at the previous
+    *    one's endpoint: the occupied upper levels 4→1 for the HNSW keys
+    *    ([[hnswDescent]]), the layer-0 graph for vec_graph_greedy_search,
+    *    none for vec_graph_beam_search.
+    *  - `beam`, the layer-0 graph walked by six ef=4 [[beamStep]]s seeded
+    *    at the descent's endpoint: for the HNSW keys and
+    *    vec_graph_beam_search, none for vec_graph_greedy_search.
+    *
+    * Every edge frame carries per-node self-loops, so the fixed-step
+    * chains equal the early-stopped walk (the step maps are idempotent at
+    * a fixpoint).
     *
     * `fused = true` is the per-shard local-walk serving shape: the edge
     * frames (endpoint vectors stored with the edges — the
@@ -1925,67 +1907,67 @@ object PipelineOps extends OpGroup {
     * edge frame per hop, a |Q|·(k+1)-bounded point lookup, one job per
     * hop. PlanSuite pins the two shapes result-equal.
     *
-    * Cuts: the start state, the middle and the final descended level,
-    * beam step 3 and the answer — each bounds the plan (≤ 12 chained
-    * hops, codegen off under the walk conf) and supersedes everything
-    * upstream of it, so only the latest |Q|-row state holds storage and
-    * the returned frame replays nothing. Each edge frame is released
-    * once its phase is over; a fixture's release is a no-op, a per-call
-    * frame's frees its corpus-edge-sized blocks.
+    * Cuts: the start state, the middle and the final descent frame, beam
+    * step 3 and the answer — each bounds the plan (≤ 12 chained hops,
+    * codegen off under the walk conf) and supersedes everything upstream
+    * of it, so only the latest |Q|-row state holds storage and the
+    * returned frame replays nothing. Each edge frame is released once its
+    * phase is over; a fixture's release is a no-op, a per-call frame's
+    * frees its corpus-edge-sized blocks.
     *
     * Returns (qid, found_id, found_sim, exact_id, exact_sim, hit) in one
-    * partition sorted by qid, where the truth leg is the exact top-1
-    * over the corpus by ONE partial-aggregatable max_by pass (no
-    * per-query window). With
-    * `track`, the state also threads the descent's visited `path` and
-    * the beam's ever-beamed `seen` set, and descent_nodes and beam_nodes
-    * (distinct nodes each phase touched) follow found_sim. An empty
-    * query batch, corpus or entry set gives zero rows.
+    * partition sorted by qid, one row per query with an exact top-1 (the
+    * best other corpus vector, by ONE partial-aggregatable max_by pass —
+    * no per-query window). The found row is the best of the walk's last
+    * state: the final beam, or without a beam the descent's endpoint and
+    * its `cursim` (so such a walk needs `track`). A query without an entry
+    * has no found row and answers its exact top-1, the oracle's COALESCE
+    * tail. With `track`, the state also threads the descent's visited
+    * `path` and the ever-beamed `seen` set (seeded with the descent's
+    * endpoint), and descent_nodes and beam_nodes (distinct nodes each
+    * phase touched, 0 without an entry) follow found_sim.
     */
   private def hnswWalk(
       s: org.apache.spark.sql.SparkSession, dir: String,
       queries: org.apache.spark.sql.DataFrame,
-      layers: org.apache.spark.sql.DataFrame,
-      occupied: Set[Int],
-      levelEdges: org.apache.spark.sql.DataFrame,
-      sym0: org.apache.spark.sql.DataFrame,
+      entries: org.apache.spark.sql.DataFrame,
+      descent: Seq[org.apache.spark.sql.DataFrame],
+      beam: Option[org.apache.spark.sql.DataFrame],
       fused: Boolean, track: Boolean): org.apache.spark.sql.DataFrame =
     narrowWalkConf(s) { sc =>
       val q = broadcast(sc(queries))
-      val (descentEdges, beamEdges) = (sc(levelEdges), sc(sym0))
       // TakeOrdered top-2, then an unpartitioned window over those 2 rows.
-      val entries = sc(layers).orderBy(desc("lay"), asc("vec_id")).limit(2)
+      val top2 = sc(entries).orderBy(desc("lay"), asc("vec_id")).limit(2)
         .withColumn("erk", row_number().over(
           Window.orderBy(desc("lay"), asc("vec_id"))))
         .select("vec_id", "erk")
-      val lvls = (4 to 1 by -1).filter(occupied)
-      var st = walkState0(q, entries, track).cut
+      var st = walkState0(q, top2, track).cut
       var cur = st
-      for ((level, i) <- lvls.zipWithIndex) {
-        val eL = descentEdges.filter(col("lvl") === level)
-        for (_ <- 1 to 6) cur = descentHop(eL, cur, fused, track)
-        if (i + 1 == (lvls.size + 1) / 2 || i + 1 == lvls.size) {
+      for ((edges, i) <- descent.map(sc(_)).zipWithIndex) {
+        for (_ <- 1 to 6) cur = descentHop(edges, cur, fused, track)
+        if (i + 1 == (descent.size + 1) / 2 || i + 1 == descent.size) {
           cur = cur.cut
           graft.Caches.releaseCheckpoint(st)
           st = cur
         }
       }
-      graft.Caches.releaseCheckpoint(levelEdges)
-      // The beam's per-query constants ride its state: the descent's
-      // distinct-node count is read off the final descent state here.
-      var beam = st.select(Seq(col("qid"), col("qemb"), col("cur").as("cid")) ++
+      descent.foreach(graft.Caches.releaseCheckpoint)
+      // The last state, in the beam's shape: the per-query constants ride
+      // it, and the descent's distinct-node count is read off its path.
+      var last = st.select(Seq(col("qid"), col("qemb"), col("cur").as("cid")) ++
+        (if (beam.isEmpty) Seq(col("cursim").as("sim")) else Nil) ++
         (if (!track) Nil
          else Seq(array(col("cur")).as("seen"),
            size(array_distinct(split(col("path"), ","))).cast("long")
              .as("descent_nodes"))): _*)
-      for (i <- 1 to 6) {
-        beam = beamStep(beamEdges, beam, fused, trackSeen = track)
+      for (edges <- beam.map(sc(_)); i <- 1 to 6) {
+        last = beamStep(edges, last, fused, trackSeen = track)
         if (i == 3) {
-          beam = beam.cut
+          last = last.cut
           graft.Caches.releaseCheckpoint(st)
         }
       }
-      val found = beam
+      val found = last
         .coalesce(1)
         .withColumn("rk", row_number().over(
           Window.partitionBy("qid").orderBy(desc("sim"), asc("cid"))))
@@ -2003,15 +1985,22 @@ object PipelineOps extends OpGroup {
           (-col("vec_id")).as("nc"))).as("m"))
         .select(col("qid"), (-col("m.nc")).as("exact_id"),
           (round(col("m.s"), 3) + 0.0).as("exact_sim"))
-      // The last cut takes beam steps 4-6 and the truth leg in ONE job
-      // under the walk conf — the corpus scan runs beside the beam chain —
+      // The last cut takes the walk's tail and the truth leg in ONE job
+      // under the walk conf — the corpus scan runs beside the walk chain —
       // so the caller's action only reads the |Q| answer rows.
-      val out = found.join(exact, Seq("qid"))
-        .withColumn("hit", col("found_id") === col("exact_id"))
+      val foundId = coalesce(col("found_id"), col("exact_id"))
+      val out = exact.join(found, Seq("qid"), "left")
+        .select(Seq(col("qid"), foundId.as("found_id"),
+          coalesce(col("found_sim"), col("exact_sim")).as("found_sim")) ++
+          (if (!track) Nil
+           else Seq("descent_nodes", "beam_nodes")
+             .map(c => coalesce(col(c), lit(0L)).as(c))) ++
+          Seq(col("exact_id"), col("exact_sim"),
+            (foundId === col("exact_id")).as("hit")): _*)
         .coalesce(1).sortWithinPartitions("qid")
         .cut
-      graft.Caches.releaseCheckpoint(beam)
-      graft.Caches.releaseCheckpoint(sym0)
+      graft.Caches.releaseCheckpoint(last)
+      beam.foreach(graft.Caches.releaseCheckpoint)
       out
     }
 
@@ -2031,8 +2020,8 @@ object PipelineOps extends OpGroup {
       if (fusedWalk) (walkLevelEdgesCached(s, dir), walkSym0Cached(s, dir))
       else (walkLevelEdges(s, dir, upper, fused = false),
         walkSym0(s, dir, mutualKnnEdges(s, dir), fused = false))
-    hnswWalk(s, dir, q, hnswLayerAssign(s, dir), occupiedLevels(upper),
-      levelEdges, sym0, fusedWalk, track = false)
+    hnswWalk(s, dir, q, hnswLayerAssign(s, dir),
+      hnswDescent(levelEdges, occupiedLevels(upper)), Some(sym0), fusedWalk, track = false)
   }
 
   /** The single-query HNSW serve row (vec_hnsw_search and
@@ -2044,11 +2033,32 @@ object PipelineOps extends OpGroup {
       s: org.apache.spark.sql.SparkSession, dir: String, topLayer: Int,
       layers: org.apache.spark.sql.DataFrame, occupied: Set[Int],
       levelEdges: org.apache.spark.sql.DataFrame,
-      sym0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    hnswWalk(s, dir, query0(Tables.t(s, dir, "embeddings")), layers, occupied, levelEdges, sym0, fused = true, track = true)
+      sym0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    hnswWalk(s, dir, query0(Tables.t(s, dir, "embeddings")), layers,
+      hnswDescent(levelEdges, occupied), Some(sym0), fused = true, track = true)
       .select(lit(topLayer).as("top_layer"), col("descent_nodes"),
         col("beam_nodes"), col("found_id"), col("found_sim"),
         col("exact_id"), col("exact_sim"), col("hit"))
+
+  /** The flat graph-search walk of query vec_id 0 over the in-session
+    * layer-0 graph — six greedy hops with `greedy`
+    * (vec_graph_greedy_search), six ef=4 beam steps otherwise
+    * (vec_graph_beam_search) — entered at the least endpoint of the
+    * mutual edges that avoid the query: the oracle's MIN(src) of its
+    * query-free graph. A graph without such an edge has no entry, and the
+    * answer is the exact top-1 with zero node counts.
+    */
+  private def flatGraphWalk(
+      s: org.apache.spark.sql.SparkSession, dir: String,
+      greedy: Boolean): org.apache.spark.sql.DataFrame = {
+    val m = mutualKnnEdges(s, dir).filter(col("a") =!= 0 && col("b") =!= 0)
+    val entries = m.select(col("a").as("vec_id"))
+      .union(m.select(col("b").as("vec_id")))
+      .withColumn("lay", lit(0))
+    val sym0 = walkSym0Cached(s, dir)
+    hnswWalk(s, dir, query0(Tables.t(s, dir, "embeddings")), entries,
+      descent = if (greedy) Seq(sym0) else Nil,
+      beam = if (greedy) None else Some(sym0), fused = true, track = true)
   }
 
   /** Layer of the top node other than the query vec_id 0 — the walk's
@@ -9399,70 +9409,24 @@ object PipelineOps extends OpGroup {
     // to vec_ivf_topk (cells), vec_pq_topk (compressed scan) and
     // vec_lsh_topk (buckets): best-first walk over the shared mutual-3NN
     // graph (HNSW's base-layer search, beam = 1). From the minimum-id
-    // entry node, six fixed [[descentHop]] steps — the SAME hop the
-    // batched serving shape (vec_hnsw_batch_search) takes, run as its
-    // |Q|=1 case (round-15 verdict item 4): the whole walk is ONE chained
-    // declarative plan whose state is referenced once per hop ("stay"
-    // rides the self-loop edges), so there is no 2^steps prefix
-    // re-execution and no per-hop driver round-trip — a single 1-row
-    // collect ends the walk. Fixed 6 hops equal the early-stopped walk
-    // exactly: the step map is idempotent at a local optimum, so endpoint
-    // AND distinct-node path match the oracle's fixed-6-step recursion.
-    // Reports the walk endpoint vs the exact top-1 (the eval half —
-    // brute force like vec_recall_eval's truth leg) + how many distinct
-    // nodes the walk touched. At 100 TB: per-step cost is k lookups
-    // against the shard's edge frame, total ≈ k·steps vectors scored per
-    // query — the navigable-graph promise; the label-blocked graph build
-    // amortizes across the whole graph_* family (shared Caches
-    // checkpoint), built on the session's conf, not the walk's.
+    // entry node of the query-free graph, six fixed greedy hops — the
+    // graph walk [[hnswWalk]] with the layer-0 graph as its one descent
+    // frame and no beam ([[flatGraphWalk]]). Fixed 6 hops equal the
+    // early-stopped walk exactly: the step map is idempotent at a local
+    // optimum, so endpoint AND distinct-node path match the oracle's
+    // fixed-6-step recursion. Reports the walk endpoint vs the exact
+    // top-1 (the eval half — brute force like vec_recall_eval's truth
+    // leg) + how many distinct nodes the walk touched; a graph with no
+    // mutual edge off the query has no entry and answers the exact top-1
+    // with path_nodes = 0, as the oracle's COALESCE tail does. At 100 TB:
+    // per-step cost is k lookups against the shard's edge frame, total ≈
+    // k·steps vectors scored per query — the navigable-graph promise; the
+    // label-blocked graph build amortizes across the whole graph_* family
+    // (shared fixture), built on the session's conf, not the walk's.
     Op("vec_graph_greedy_search",
-      (s, dir) => {
-        val e = Tables.t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qemb"))
-        val m = mutualKnnEdges(s, dir).filter(col("a") =!= 0 && col("b") =!= 0)
-        val exactTop = e.filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .withColumn("sim", expr("vec_dot(embedding, qemb)")
-            / (Tables.safeNorm("embedding") * Tables.safeNorm("qemb")))
-          .orderBy(desc("sim"), asc("vec_id")).limit(1)
-        // Degenerate-corpus guard (round-12 advice): a graph with no
-        // non-query mutual edges has no entry node — short-circuit to the
-        // exact top-1 with path_nodes=0 instead of head()-crashing. The
-        // oracle's recursive walk degrades to a NULL cur in the same case
-        // and its COALESCE tail lands on the identical row.
-        val entryRow = m.agg(min(least(col("a"), col("b"))).as("mn")).head()
-        if (entryRow.isNullAt(0)) {
-          exactTop.select(
-            lit(0L).as("path_nodes"),
-            col("vec_id").as("found_id"),
-            (round(col("sim"), 3) + 0.0).as("found_sim"),
-            col("vec_id").as("exact_id"),
-            (round(col("sim"), 3) + 0.0).as("exact_sim"),
-            lit(true).as("hit"))
-        } else {
-          // Family-shared fused edge frame, built on the session's conf
-          // and released by Caches after the last walk key (round 16 —
-          // greedy/beam/hnsw/batch all read the same checkpoint).
-          val sym0 = walkSym0Cached(s, dir)
-          val st0 = walkState0(query0(e), entry1(s, entryRow.getLong(0)), track = true)
-          val (pathNodes, cur, curSim) = narrowWalkConf(s) { sc =>
-            val edges = sc(sym0)
-            var st = sc(st0)
-            for (_ <- 1 to 6) st = descentHop(edges, st, fused = true, track = true)
-            // The ONLY driver action of the walk: the final 1-row state.
-            val fin = st.head()
-            (fin.getAs[String]("path").split(',').distinct.length.toLong,
-              fin.getAs[Long]("cur"), fin.getAs[Double]("cursim"))
-          }
-          exactTop.select(
-            lit(pathNodes).as("path_nodes"),
-            lit(cur).as("found_id"),
-            (round(lit(curSim), 3) + 0.0).as("found_sim"),
-            col("vec_id").as("exact_id"),
-            (round(col("sim"), 3) + 0.0).as("exact_sim"),
-            (lit(cur) === col("vec_id")).as("hit"))
-        }
-      },
+      (s, dir) => flatGraphWalk(s, dir, greedy = true)
+        .select(col("descent_nodes").as("path_nodes"), col("found_id"),
+          col("found_sim"), col("exact_id"), col("exact_sim"), col("hit")),
       Some(s"""
         WITH RECURSIVE $ivfKnnCtes,
         mutual AS MATERIALIZED (
@@ -9536,81 +9500,27 @@ object PipelineOps extends OpGroup {
     // away (and whose miss it measures: the greedy walk can stop at a
     // local optimum of the navigable graph; an ef-sized frontier carries
     // enough alternatives to climb out). Same shared mutual-3NN graph,
-    // same min-id entry node, six fixed [[beamStep]]s — the SAME step the
-    // batched serving shape (vec_hnsw_batch_search) takes, run as its
-    // |Q|=1 case (round-15 verdict item 4): all-declarative, the state
-    // referenced once per step, no per-step driver round-trip. Each step
-    // scores ONLY the frontier's neighbors ∪ frontier (self-loops; ≤
-    // ef·(k+1) rows — never a corpus scan) and keeps the top-ef. A fixed
-    // 6-step chain equals the early-stopped walk — the update is
-    // idempotent at a stable beam, so the oracle (recursive CTE carrying
-    // the beam as a LIST) lands on the identical final beam AND the
-    // identical ever-beamed set (repeats add nothing); the per-step ≤4-row
-    // checkpoints exist only to count that set without replaying the
-    // chain. Output: distinct nodes ever beamed, the beam's best vs the
-    // exact top-1 (brute-force truth leg), hit flag. UnitSuite pins the
-    // semantics on a hand-built graph where beam=1 provably stops at a
-    // local optimum and beam=4 reaches the true top-1. At 100 TB:
-    // per-step cost is ef·k lookups — ef trades recall for lookups, the
-    // HNSW knob; the graph build amortizes across the graph_* family
-    // (shared Caches checkpoint), built on the session's conf, not the
-    // walk's.
+    // same min-id entry node, six fixed ef=4 beam steps — the graph walk
+    // [[hnswWalk]] with no descent and the layer-0 graph as its beam
+    // ([[flatGraphWalk]]). Each step scores ONLY the frontier's neighbors
+    // ∪ frontier (self-loops; ≤ ef·(k+1) rows — never a corpus scan) and
+    // keeps the top-ef. A fixed 6-step chain equals the early-stopped
+    // walk — the update is idempotent at a stable beam, so the oracle
+    // (recursive CTE carrying the beam as a LIST) lands on the identical
+    // final beam AND the identical ever-beamed set (repeats add nothing),
+    // which the walk's state carries as its `seen` array. Output:
+    // distinct nodes ever beamed, the beam's best vs the exact top-1
+    // (brute-force truth leg), hit flag; without an entry node, the exact
+    // top-1 with beam_nodes = 0. UnitSuite pins the semantics on a
+    // hand-built graph where beam=1 provably stops at a local optimum and
+    // beam=4 reaches the true top-1. At 100 TB: per-step cost is ef·k
+    // lookups — ef trades recall for lookups, the HNSW knob; the graph
+    // build amortizes across the graph_* family (shared fixture), built
+    // on the session's conf, not the walk's.
     Op("vec_graph_beam_search",
-      (s, dir) => {
-        val e = Tables.t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qemb"))
-        val m = mutualKnnEdges(s, dir).filter(col("a") =!= 0 && col("b") =!= 0)
-        val exactTop = e.filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .withColumn("sim", expr("vec_dot(embedding, qemb)")
-            / (Tables.safeNorm("embedding") * Tables.safeNorm("qemb")))
-          .orderBy(desc("sim"), asc("vec_id")).limit(1)
-        // Degenerate corpus: no mutual edges → no walk; exact top-1
-        // with beam_nodes=0 (the greedy op's round-12 guard, mirrored
-        // by the oracle's NULL-beam COALESCE tail).
-        val entryRow = m.agg(min(least(col("a"), col("b"))).as("mn")).head()
-        if (entryRow.isNullAt(0)) {
-          exactTop.select(
-            lit(0L).as("beam_nodes"),
-            col("vec_id").as("found_id"),
-            (round(col("sim"), 3) + 0.0).as("found_sim"),
-            col("vec_id").as("exact_id"),
-            (round(col("sim"), 3) + 0.0).as("exact_sim"),
-            lit(true).as("hit"))
-        } else {
-          // Family-shared fused edge frame, built on the session's conf
-          // (round 16; released by Caches after the last walk key).
-          val sym0 = walkSym0Cached(s, dir)
-          val (beamed, foundId, foundSim) = narrowWalkConf(s) { sc =>
-            // Mid-chain + final checkpoints only — the batched shape's
-            // plan-bounding cuts; the ever-beamed set rides the state as
-            // a `seen` array, so ONE head() collect ends the whole walk.
-            val edges = sc(sym0)
-            var beam = sc(walkState0(query0(e), entry1(s, entryRow.getLong(0)), track = false))
-              .select(col("qid"), col("qemb"), col("cur").as("cid"),
-                array(col("cur")).as("seen"))
-            var midBeam: org.apache.spark.sql.DataFrame = null
-            for (i <- 1 to 6) {
-              beam = beamStep(edges, beam, fused = true, trackSeen = true)
-              if (i == 3 || i == 6) {
-                beam = beam.cut
-                if (i == 3) midBeam = beam
-              }
-            }
-            val top = beam.orderBy(desc("sim"), asc("cid")).limit(1).head()
-            Seq(midBeam, beam).foreach(graft.Caches.releaseCheckpoint)
-            (top.getAs[Seq[Long]]("seen").size.toLong,
-              top.getAs[Long]("cid"), top.getAs[Double]("sim"))
-          }
-          exactTop.select(
-            lit(beamed).as("beam_nodes"),
-            lit(foundId).as("found_id"),
-            (round(lit(foundSim), 3) + 0.0).as("found_sim"),
-            col("vec_id").as("exact_id"),
-            (round(col("sim"), 3) + 0.0).as("exact_sim"),
-            (lit(foundId) === col("vec_id")).as("hit"))
-        }
-      },
+      (s, dir) => flatGraphWalk(s, dir, greedy = false)
+        .select(col("beam_nodes"), col("found_id"), col("found_sim"),
+          col("exact_id"), col("exact_sim"), col("hit")),
       Some(s"""
         WITH RECURSIVE $ivfKnnCtes,
         mutual AS MATERIALIZED (
@@ -9684,8 +9594,7 @@ object PipelineOps extends OpGroup {
 
 
     // MULTI-LAYER HNSW DESCENT — the search that consumes vec_hnsw_build's
-    // layered artifact (its scaladoc's promised composition; round-13
-    // verdict item 1): start at the min-id node of the HIGHEST occupied
+    // layered artifact: start at the min-id node of the HIGHEST occupied
     // layer, greedy-descend layer 4→1 (each layer's endpoint seeds the
     // next — the express-lane hops that make HNSW log-like), then run the
     // production ef=4 beam at layer 0 ([[beamStep]], seeded — NOT from the
@@ -9693,8 +9602,8 @@ object PipelineOps extends OpGroup {
     // navigated near the target before the wide search spends lookups).
     // Layer membership is the build op's deterministic geometric recipe
     // (md5 base-4 digits), so the two keys describe the same index; the
-    // query node (vec_id 0) is excluded from every layer, mirroring the
-    // greedy/beam ops. Upper-layer graphs are label-blocked mutual-3NN
+    // query node (vec_id 0) is never a candidate of its own walk, as in
+    // the greedy/beam keys. Upper-layer graphs are label-blocked mutual-3NN
     // over 4×-shrinking populations (Σ cost ≈ 1/3 of one layer-0 build),
     // materialized once per invocation; layer 0 reuses the family's
     // shared mutual-kNN checkpoint. The walk is [[hnswWalk]] with the

@@ -99,16 +99,18 @@ class PropertySuite extends AnyFunSuite {
   }
 
   test("the HNSW walk keys give zero rows when the query or the rest of the corpus is missing") {
-    // The walk takes the query set as a frame, so an absent query vector
-    // (no vec_id 0) or a corpus of only the query (no entry node) ends in
-    // an empty batched join — zero rows, no throw — like the oracle's
-    // empty truth leg.
+    // The walk takes the query set as a frame and anchors its answer on
+    // the exact leg, so an absent query vector (no vec_id 0) or a corpus
+    // of only the query (no other vector) gives zero rows, no throw — like
+    // the oracle's empty truth leg. The flat greedy and beam keys run the
+    // same walk.
     def v(pos: Int): Array[Float] = { val a = Array.fill(64)(0f); a(pos) = 1f; a }
     val noQuery = Seq((1L, v(0), 0), (2L, v(1), 0), (3L, v(2), 1)).toDF("vec_id", "embedding", "label")
     val onlyQuery = Seq((0L, v(0), 0)).toDF("vec_id", "embedding", "label")
     for ((name, emb) <- Seq("no query" -> noQuery, "only the query" -> onlyQuery)) {
       val dir = miniDir("embeddings" -> emb)
-      for (k <- Seq("vec_hnsw_search", "vec_hnsw_persist_search", "vec_hnsw_batch_search")) {
+      for (k <- Seq("vec_hnsw_search", "vec_hnsw_persist_search", "vec_hnsw_batch_search",
+          "vec_graph_greedy_search", "vec_graph_beam_search")) {
         val n = SparkEntry.queries(k)(spark, dir).count()
         assert(n == 0, s"$k on a corpus with $name: $n rows")
       }
@@ -571,7 +573,7 @@ class PropertySuite extends AnyFunSuite {
       // series), and the vote-window confusion rollup.
       "vec_mips_via_cosine", "text_bpe_apply", "corpus_temperature_sample",
       "vec_ivf_batch_topk", "ts_holt_linear", "text_langid_confusion",
-      "text_dedup_incremental", "vec_graph_greedy_search")
+      "text_dedup_incremental", "vec_graph_greedy_search", "vec_graph_beam_search")
     val conf = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(conf)
     try keys.foreach { k =>

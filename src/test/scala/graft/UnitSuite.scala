@@ -895,8 +895,8 @@ class UnitSuite extends AnyFunSuite {
     // the beam, expands its neighborhood, and surfaces 9 — the
     // recall-vs-lookups trade beam width exists for. Fixed 6 steps stand
     // in for the ops' early-stop: both maps are idempotent at stability.
-    // (The no-edges-at-all guard is the ops' entry probe — each
-    // short-circuits to its exact fallback before any hop runs.)
+    // (A graph with no entry node is the next test's case: the walk has
+    // no state row and the ops answer the exact top-1.)
     Tables.conf(spark) // the hops score via the registered vec_dot/vec_norm_sq
     val sims = Seq(1L -> 0.1, 2L -> 0.5, 3L -> 0.4, 5L -> 0.45, 9L -> 0.9)
     def v(s: Double) = Array(s.toFloat, math.sqrt(1 - s * s).toFloat)
@@ -940,6 +940,30 @@ class UnitSuite extends AnyFunSuite {
     assert(iso.getAs[Long]("cur") == 5L
       && iso.getAs[String]("path").split(',').distinct.length == 1,
       "isolated seed lands on itself")
+  }
+
+  test("graph greedy and beam search: no mutual edge off the query answers the exact top-1") {
+    // Corpus {0, 1}: the only possible mutual edge touches the query, so
+    // the query-free graph has no entry node and neither walk runs. Each
+    // flat key answers the exact top-1 (vec 1, cos 30° ≈ 0.866) with zero
+    // visited nodes and hit = true — the oracle's COALESCE tail.
+    def at(deg: Double) = {
+      val r = math.toRadians(deg)
+      Array(math.cos(r).toFloat, math.sin(r).toFloat)
+    }
+    val dir = miniDir("embeddings" -> Seq((0L, at(0), 0), (1L, at(30), 0))
+      .toDF("vec_id", "embedding", "label"))
+    for ((k, nodes) <- Seq("vec_graph_greedy_search" -> "path_nodes",
+        "vec_graph_beam_search" -> "beam_nodes")) {
+      val rows = SparkEntry.queries(k)(spark, dir).collect()
+      assert(rows.length == 1, s"$k: ${rows.length} rows")
+      val r = rows.head
+      assert(r.schema.fieldNames.toSeq ==
+        Seq(nodes, "found_id", "found_sim", "exact_id", "exact_sim", "hit"), k)
+      assert((r.getLong(0), r.getLong(1), r.getLong(3), r.getBoolean(5)) ==
+        ((0L, 1L, 1L, true)), s"$k: $r")
+      assert(r.getDouble(2) == r.getDouble(4) && r.getDouble(4) == 0.866, s"$k: $r")
+    }
   }
 
   test("temperature sample: sqrt weights flatten the mix, md5 coin decides membership") {
@@ -1481,5 +1505,21 @@ class UnitSuite extends AnyFunSuite {
         }
       } finally files.close()
     assert(hits.isEmpty, s"cut or track outside graft.Cut: ${hits.mkString(", ")}")
+  }
+
+  test("lint: op bodies never read the environment") {
+    // An op's behaviour is fixed by its inputs and the session conf; an
+    // environment read is a knob no test, script or benchmark can see.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft/ops")
+    assert(java.nio.file.Files.isDirectory(root))
+    val files = java.nio.file.Files.list(root)
+    val hits =
+      try files.iterator().asScala.toSeq.flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("sys.env") => s"${f.getFileName}:${i + 1}"
+        }
+      } finally files.close()
+    assert(hits.isEmpty, s"sys.env read in an op file: ${hits.mkString(", ")}")
   }
 }
