@@ -263,34 +263,28 @@ object PipelineOps extends OpGroup {
       rounds: Int, thrDen: Option[Int])
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     // Round 1 comes from the shared prefix ([[bpePrefix]] — identical
-    // for both trainer keys). The merge ledger lives on the DRIVER —
-    // |langs| scalars per round, the occupied-levels pattern thrMap
-    // already used; the merge table returned to callers is ONE local
-    // relation built from it (identical rows; consumers normalize order
-    // with orderBy(lang, rk)).
+    // for both trainer keys).
     val (st1, pc2, r1) = bpePrefix(s, dir)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Int, String, String, Long)]
-    merges ++= r1.map(t => (t._1, 1, t._2, t._3, t._4))
     val thrMap: Map[String, Long] = thrDen match {
       case Some(den) => r1.map(t => t._1 -> ((t._4 + den - 1) / den)).toMap
       case None      => Map.empty
     }
-    var st = sc(st1)
-    var pc = sc(pc2)
-    var done = false
-    for (r <- 2 to rounds if !done) {
+    // A round's merges: the per-language tops that clear their floor.
+    def kept(pc: org.apache.spark.sql.DataFrame) = {
       val topRows = bpeTopOf(pc)
-      val kept = thrDen match {
-        case None => topRows
-        case Some(_) =>
-          val k = topRows.filter(t =>
-            t._4 >= thrMap.getOrElse(t._1, Long.MaxValue))
-          if (k.isEmpty) done = true
-          k
-      }
-      if (!done) {
-        merges ++= kept.map(t => (t._1, r, t._2, t._3, t._4))
+      if (thrDen.isEmpty) topRows
+      else topRows.filter(t => t._4 >= thrMap.getOrElse(t._1, Long.MaxValue))
+    }
+    def stops(k: Seq[(String, String, String, Long)]) = thrDen.isDefined && k.isEmpty
+    // State (corpus, maintained counts, next round's merges): the top a
+    // round merges is collected at the end of the round before (round
+    // 2's here), so the stop test reads it before a round is paid for.
+    val (st0, pc0) = (sc(st1), sc(pc2))
+    val kept2 = if (rounds >= 2) kept(pc0) else Nil
+    val ((st, pc, _), tops, _) = graft.Loop.fixpoint(
+        (st0, pc0, kept2), if (stops(kept2)) 0 else rounds - 1)({
+      case ((st, pc, merge), i) =>
+        val r = i + 1
         // ONE corpus pass applies the merge AND emits the signed pair
         // deltas ([[bpeApplyWithDelta]]); the fold into the maintained
         // count frame is a vocab-sized job over the checkpointed deltas,
@@ -299,23 +293,24 @@ object PipelineOps extends OpGroup {
         // round (explode-recount + replace); EquivalenceSuite pins
         // maintained == recounted after every round.
         val ck = bpeApplyWithDelta(st,
-          kept.map(t => t._1 -> t._2).toMap,
-          kept.map(t => t._1 -> t._3).toMap,
+          merge.map(t => t._1 -> t._2).toMap,
+          merge.map(t => t._1 -> t._3).toMap,
           withDelta = r < rounds)
           .cut
         if (r < rounds) {
           val pcNext = bpeFoldCounts(pc, ck).cut
-          graft.Caches.releaseCheckpoint(pc)
-          pc = pcNext
-        }
-        graft.Caches.releaseCheckpoint(st)
-        st = ck.select("lang", "merged")
-      }
-    }
+          (ck.select("lang", "merged"), pcNext, kept(pcNext))
+        } else (ck.select("lang", "merged"), pc, Nil)
+    })(_._3, kept2)((_, k) => stops(k))
     graft.Caches.releaseCheckpoint(pc)
-    // The merge table as one local relation (nullability mirrors the old
-    // per-round aggregate + union shape exactly: only rk was
-    // non-nullable).
+    // The merge ledger lives on the DRIVER — |langs| scalars per round;
+    // the merge table returned to callers is ONE local relation built
+    // from it (nullability mirrors the old per-round aggregate + union
+    // shape exactly: only rk was non-nullable; consumers normalize order
+    // with orderBy(lang, rk)).
+    val merges = (Seq(r1, kept2) ++ tops).zipWithIndex.flatMap { case (k, i) =>
+      k.map(t => (t._1, i + 1, t._2, t._3, t._4))
+    }
     import org.apache.spark.sql.types._
     val fields = Seq(
       StructField("lang", StringType, nullable = true),
@@ -728,7 +723,7 @@ object PipelineOps extends OpGroup {
       // contraction sub-step in here too was measured SLOWER in round 10 —
       // it deepens the un-checkpointed seed job without saving a round on
       // the real convergence profiles.)
-      var labels = sym.select(col("dst").as("node"), col("src").as("label"))
+      val labels0 = sym.select(col("dst").as("node"), col("src").as("label"))
         .union(sym.select(col("dst").as("node"), col("dst").as("label")))
         .groupBy("node").agg(min("label").as("label"))
         .cut
@@ -743,7 +738,6 @@ object PipelineOps extends OpGroup {
       val bcastLabels = symN <= BroadcastLabelCap
       def lab(df: org.apache.spark.sql.DataFrame) =
         if (bcastLabels) broadcast(df) else df
-      var iter = 0
       // One contraction sub-step: neighborhood min, then whole-cluster
       // relabel. The own-label rides through the union as a second column
       // (exactly one non-null per node) so no extra join is needed to
@@ -760,31 +754,19 @@ object PipelineOps extends OpGroup {
         prop.join(lab(cmin), Seq("label"))
           .select(col("node"), col("cmin").as("label"))
       }
-      var prevSum = -1L
-      var curSum = sumLabels(labels)
       // 40 double-contraction rounds cover components whose cluster-chain
       // length exceeds 2^80 — unreachable; if the sum still moves at the
       // cap something is structurally broken, and wrong labels must never
-      // ship silently.
-      while (curSum != prevSum && iter < 40) {
-        // TWO contraction sub-steps per driver-blocking checkpoint round:
-        // the cluster-chain shrinks 4× per round (re-measured after the
-        // round-10 symmetric-edge/coalesce rework: 1 sub-step costs an
-        // extra round's checkpoint+actions, 3 deepens the per-round plan
-        // for no round saved on real convergence profiles).
-        val next = contract(contract(labels)).cut
-        // The superseded round's blocks are unreachable the moment `next`
-        // materializes — release them now instead of pinning one frame per
-        // round for the life of the session.
-        graft.Caches.releaseCheckpoint(labels)
-        labels = next
-        prevSum = curSum
-        curSum = sumLabels(labels)
-        iter += 1
-      }
+      // ship silently. TWO contraction sub-steps per driver-blocking
+      // checkpoint round: the cluster-chain shrinks 4× per round
+      // (re-measured after the round-10 symmetric-edge/coalesce rework: 1
+      // sub-step costs an extra round's checkpoint+actions, 3 deepens the
+      // per-round plan for no round saved on real convergence profiles).
+      val (labels, sums, converged) = graft.Loop.fixpoint(labels0, 40)(
+        (cur, _) => contract(contract(cur)).cut)(sumLabels, sumLabels(labels0))(_ == _)
       graft.Caches.releaseCheckpoint(sym)
-      if (curSum != prevSum) throw new IllegalStateException(
-        s"connectedComponents did not converge in $iter rounds — refusing to return partial labels")
+      if (!converged) throw new IllegalStateException(
+        s"connectedComponents did not converge in ${sums.size} rounds — refusing to return partial labels")
       // Callers may release their input edge frame as soon as this
       // returns (clusterLabels does), so the self-loop singletons must
       // materialize NOW, not ride the returned plan lazily. The isEmpty
@@ -1001,10 +983,9 @@ object PipelineOps extends OpGroup {
     val (cond, condC) = ckptFresh(ea.coalesce(parts))
     val condN = cond.count()
     // STAGE 2: refinement over the condensation.
-    var rounds = 0
-    val refined: org.apache.spark.sql.DataFrame = if (condN == 0) {
-      cond.select(col("a").as("node"), col("b").as("scc")).limit(0)
-        .cut
+    val (refined, rounds) = if (condN == 0) {
+      (cond.select(col("a").as("node"), col("b").as("scc")).limit(0)
+        .cut, 0)
     } else if (condN <= condenseDriverCap) {
       // The condensation is metadata-sized: solve it on the driver with
       // the same Tarjan the partitions ran. (Supernode ids are component
@@ -1012,22 +993,24 @@ object PipelineOps extends OpGroup {
       val condEdges = cond.collect().map(r => (r.getLong(0), r.getLong(1)))
       val stars = tarjanStars(condEdges.iterator).toSeq
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      cond.sparkSession.createDataFrame(
+      (cond.sparkSession.createDataFrame(
         cond.sparkSession.sparkContext.parallelize(
           stars.map(s => org.apache.spark.sql.Row(s._1, s._2)), 1),
         StructType(Seq(StructField("node", LongType), StructField("scc", LongType))))
-        .cut
+        .cut, 0)
     } else {
       val nodes = cond.select(col("a").as("node"))
         .union(cond.select(col("b").as("node"))).distinct()
-      var (lab, labC) = ckptFresh(
+      val lab0 = ckptFresh(
         nodes.select(col("node"), lit(0L).as("cf"), lit(0L).as("cb")))
-      val nodeN = lab.count()
+      val nodeN = lab0._1.count()
       def lb(df: org.apache.spark.sql.DataFrame) =
         if (nodeN <= BroadcastLabelCap) broadcast(df) else df
-      // Min-label fixpoint along (src, dst); the caller owns the handle.
+      // Min-label fixpoint along (src, dst), as a (view, handle) pair;
+      // the caller owns the handle.
       def minFix(
           fixEdges: org.apache.spark.sql.DataFrame,
+          lab: org.apache.spark.sql.DataFrame,
           what: String)
           : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
         def step(cur: org.apache.spark.sql.DataFrame) = {
@@ -1039,74 +1022,52 @@ object PipelineOps extends OpGroup {
             .select(col("node"), col("ff").as("f"))
           cur.union(hop).union(jump).groupBy("node").agg(min("f").as("f"))
         }
-        var (f, fCkpt) = ckptFresh(lab.select(col("node"), col("node").as("f")))
-        def fsum(df: org.apache.spark.sql.DataFrame): Long =
-          df.agg(sum("f")).head().getLong(0)
-        var prevSum = -1L
-        var curSum = fsum(f)
-        var iter = 0
-        while (curSum != prevSum && iter < 64) {
-          // Two sub-steps per driver-blocking checkpoint round (the CC
-          // cadence): one round quadruples the collapsed path length.
-          val (nf, nc) = ckptFresh(step(step(f)))
-          graft.Caches.releaseCheckpoint(fCkpt)
-          f = nf
-          fCkpt = nc
-          prevSum = curSum
-          curSum = fsum(f)
-          iter += 1
-        }
-        if (curSum != prevSum) throw new IllegalStateException(
-          s"SCC $what propagation did not converge in $iter rounds")
-        (f, fCkpt)
+        def fsum(fc: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)): Long =
+          fc._1.agg(sum("f")).head().getLong(0)
+        val f0 = ckptFresh(lab.select(col("node"), col("node").as("f")))
+        // Two sub-steps per driver-blocking checkpoint round (the CC
+        // cadence): one round quadruples the collapsed path length.
+        val (f, sums, converged) = graft.Loop.fixpoint(f0, 64)(
+          (cur, _) => ckptFresh(step(step(cur._1))))(fsum, fsum(f0))(_ == _)
+        if (!converged) throw new IllegalStateException(
+          s"SCC $what propagation did not converge in ${sums.size} rounds")
+        f
       }
       // Within smaller classes both F and B can only INCREASE (fewer
       // reachers / reachable), so sum(F) + sum(B) is a monotone
       // convergence scalar — equality means no label moved.
-      var prevScalar = -1L
-      var curScalar = 0L
-      while (curScalar != prevScalar && rounds < maxRounds) {
-        rounds += 1
-        val (re, reC) = ckptFresh(cond
-          .join(lb(lab.select(col("node").as("a"),
-            col("cf").as("cfa"), col("cb").as("cba"))), "a")
-          .join(lb(lab.select(col("node").as("b"),
-            col("cf").as("cfb"), col("cb").as("cbb"))), "b")
-          .filter(col("cfa") === col("cfb") && col("cba") === col("cbb"))
-          .select(col("a"), col("b")))
-        val (f, fC) = minFix(
-          re.select(col("a").as("src"), col("b").as("dst")), "forward")
-        val (b, bC) = minFix(
-          re.select(col("b").as("src"), col("a").as("dst")), "backward")
-        val (next, nextC) = ckptFresh(
-          f.withColumnRenamed("f", "cf")
-            .join(b.withColumnRenamed("f", "cb"), "node")
-            .select(col("node"), col("cf"), col("cb")))
-        graft.Caches.releaseCheckpoint(reC)
-        graft.Caches.releaseCheckpoint(fC)
-        graft.Caches.releaseCheckpoint(bC)
-        graft.Caches.releaseCheckpoint(labC)
-        lab = next
-        labC = nextC
-        prevScalar = curScalar
-        curScalar = lab.agg(sum(col("cf") + col("cb"))).head().getLong(0)
-      }
-      if (curScalar != prevScalar) {
-        graft.Caches.releaseCheckpoint(labC)
-        throw new IllegalStateException(
-          s"SCC refinement did not converge in $maxRounds rounds — refusing partial labels")
-      }
+      val ((lab, labC), scalars, converged) = graft.Loop.fixpoint(lab0, maxRounds)({
+        case ((lab, _), _) =>
+          val (re, reC) = ckptFresh(cond
+            .join(lb(lab.select(col("node").as("a"),
+              col("cf").as("cfa"), col("cb").as("cba"))), "a")
+            .join(lb(lab.select(col("node").as("b"),
+              col("cf").as("cfb"), col("cb").as("cbb"))), "b")
+            .filter(col("cfa") === col("cfb") && col("cba") === col("cbb"))
+            .select(col("a"), col("b")))
+          val (f, fC) = minFix(
+            re.select(col("a").as("src"), col("b").as("dst")), lab, "forward")
+          val (b, bC) = minFix(
+            re.select(col("b").as("src"), col("a").as("dst")), lab, "backward")
+          val next = ckptFresh(
+            f.withColumnRenamed("f", "cf")
+              .join(b.withColumnRenamed("f", "cb"), "node")
+              .select(col("node"), col("cf"), col("cb")))
+          graft.Caches.releaseCheckpoint(reC)
+          graft.Caches.releaseCheckpoint(fC)
+          graft.Caches.releaseCheckpoint(bC)
+          next
+      })(_._1.agg(sum(col("cf") + col("cb"))).head().getLong(0), 0L)(_ == _)
+      if (!converged) throw new IllegalStateException(
+        s"SCC refinement did not converge in $maxRounds rounds — refusing partial labels")
       // Stability forces F = B on every class (scaladoc proof); anything
       // else is a bug that must never ship silently.
       val bad = lab.filter(col("cf") =!= col("cb")).count()
-      if (bad > 0) {
-        graft.Caches.releaseCheckpoint(labC)
-        throw new IllegalStateException(
-          s"SCC refinement stabilized with $bad split (F, B) pairs — algorithm invariant broken")
-      }
+      if (bad > 0) throw new IllegalStateException(
+        s"SCC refinement stabilized with $bad split (F, B) pairs — algorithm invariant broken")
       val r = lab.select(col("node"), col("cf").as("scc")).cut
       graft.Caches.releaseCheckpoint(labC)
-      r
+      (r, scalars.size)
     }
     // Expand supernode labels back to members: root from the contraction
     // (identity when uncontracted), scc from the refinement (identity
@@ -2306,24 +2267,6 @@ object PipelineOps extends OpGroup {
       WHERE (SELECT ok FROM cc_guard) = 1)"""
   }
 
-  /** Damped PageRank iterated to an EXACT INTEGER fixpoint over an
-    * (src, dst) edge frame — graph_pagerank_converge's loop, extracted
-    * so UnitSuite can pin a hand-derived trace on an injected graph (the
-    * connectedComponents precedent). Precondition: every node has ≥1
-    * out-edge (the caller symmetrizes), so the per-round groupBy(dst)
-    * covers every node. Update rule, all BIGINT: r'(v) = (15·SCALE) DIV
-    * (100·N) + (85 · Σ_{u→v} r(u) DIV deg(u)) DIV 100 — integer
-    * division makes "converged" rank EQUALITY, not an epsilon. Stops at
-    * the first round whose ranks equal the previous round's, capped at
-    * `maxRounds`; a fixpoint of the deterministic map stays fixed, so
-    * the cap is exact-vs-oracle (an always-maxRounds unroll lands on
-    * the identical frame). Per round: one keyed join of ranks against
-    * the degree-annotated checkpointed edge frame, one
-    * partial-aggregating sum, one changed-row scalar to the driver;
-    * superseded checkpoints released as the next materializes. Returns
-    * (converged checkpointed (node, r) frame and the data-dependent
-    * round count).
-    */
   /** Build-side row cap for the pagerank fixpoint's per-round joins: the
     * rank/degree tables (|V| rows, ~24 B each) are BROADCAST while the
     * node count is at/below this, turning every round into one map-side
@@ -2502,6 +2445,27 @@ object PipelineOps extends OpGroup {
       .join(small(visited.select("n")), Seq("n"), "leftanti")
       .withColumn("hop", lit(hop))
 
+  /** Hop distances from `seeds` (n) along `sym` (src, dst), up to
+    * `maxHops`: the cut visited frame (n, hop), hop 0 for the seeds. Each
+    * round re-cuts visited ∪ one [[bfsHop]] from the last hop's frontier;
+    * the probe is the new frontier's emptiness, and an empty frontier
+    * stops the loop (it generates nothing forever). The caller releases
+    * the returned frame.
+    */
+  private def bfsReach(
+      sym: org.apache.spark.sql.DataFrame,
+      seeds: org.apache.spark.sql.DataFrame,
+      small: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      maxHops: Int): org.apache.spark.sql.DataFrame = {
+    val vis0 = seeds.withColumn("hop", lit(0)).cut
+    val ((vis, _), _, _) = graft.Loop.fixpoint((vis0, vis0), maxHops)({
+      case ((vis, frontier), hop) =>
+        val nv = vis.union(bfsHop(sym, frontier, vis, small, hop)).cut
+        (nv, nv.filter(col("hop") === hop))
+    })(_._2.isEmpty, false)((_, emptied) => emptied)
+    vis
+  }
+
   /** Artifact writer for the persist/reload keys with output-file sizing
     * (guide §6): the sidecar frames inherit 32 post-shuffle/checkpoint
     * partitions, so each KB-to-MB artifact was written as up to 32 tiny
@@ -2538,6 +2502,23 @@ object PipelineOps extends OpGroup {
       .join(small(r.select(col("node"), col("r").as("prev"),
         col("deg"))), "node")
 
+  /** Damped PageRank iterated to an EXACT INTEGER fixpoint over an
+    * (src, dst) edge frame — graph_pagerank_converge's loop, extracted
+    * so UnitSuite can pin a hand-derived trace on an injected graph (the
+    * connectedComponents precedent). Precondition: every node has ≥1
+    * out-edge (the caller symmetrizes), so the per-round groupBy(dst)
+    * covers every node. Update rule, all BIGINT: r'(v) = (15·SCALE) DIV
+    * (100·N) + (85 · Σ_{u→v} r(u) DIV deg(u)) DIV 100 — integer
+    * division makes "converged" rank EQUALITY, not an epsilon. Stops at
+    * the first round whose ranks equal the previous round's, capped at
+    * `maxRounds`; a fixpoint of the deterministic map stays fixed, so
+    * the cap is exact-vs-oracle (an always-maxRounds unroll lands on
+    * the identical frame). Per round: one keyed join of ranks against
+    * the degree-annotated checkpointed edge frame, one
+    * partial-aggregating sum, one changed-row scalar to the driver.
+    * Returns (converged checkpointed (node, r) frame and the
+    * data-dependent round count).
+    */
   private[graft] def pagerankLoop(
       edges: org.apache.spark.sql.DataFrame,
       maxRounds: Int): (org.apache.spark.sql.DataFrame, Int) = {
@@ -2562,43 +2543,34 @@ object PipelineOps extends OpGroup {
     val cap = PagerankBroadcastCap
     def small(df: org.apache.spark.sql.DataFrame) =
       if (n <= cap) broadcast(df) else df
-    var rounds = 0
     // Per-round exchanges are partial-aggregated to |V| rows — run the
     // round loop under [[graphStateConf]] (same small-graph gate as the
     // broadcast); the final ranks come back on the session.
-    val r = graphStateConf(e0.sparkSession, n <= cap) { sc =>
+    val (r, changed, _) = graphStateConf(e0.sparkSession, n <= cap) { sc =>
       val e = sc(e0)
       val scale = 1000000000000L
       val teleport = (15L * scale) / (100L * n)
       // Rank state carries the node's static out-degree so the round
       // join touches ONE small side, not two.
-      var r = sc(deg).select(col("src").as("node"), lit(scale / n).as("r"),
+      val r0 = sc(deg).select(col("src").as("node"), lit(scale / n).as("r"),
           col("deg"))
         .cut
-      var converged = false
-      while (rounds < maxRounds && !converged) {
-        // The previous rank rides the checkpoint as `prev` (attached by
-        // the same single small-side join that re-attaches deg), so the
-        // convergence scalar is a bare filter-count over the fresh
-        // checkpoint's |V| rows — the old shape ran a second join job
-        // per round just to compare rank frames (measured 0.27-0.43 s
-        // of the 0.59 s round).
-        val next = pagerankRound(e, r, small, teleport)
-          .cut
-        val changed = next.filter(col("r") =!= col("prev")).count()
-        graft.Caches.releaseCheckpoint(r)
-        r = next
-        rounds += 1
-        if (changed == 0) converged = true
-      }
-      r
+      // The previous rank rides the checkpoint as `prev` (attached by
+      // the same single small-side join that re-attaches deg), so the
+      // convergence scalar is a bare filter-count over the fresh
+      // checkpoint's |V| rows — the old shape ran a second join job
+      // per round just to compare rank frames (measured 0.27-0.43 s
+      // of the 0.59 s round).
+      graft.Loop.fixpoint(r0, maxRounds)(
+        (r, _) => pagerankRound(e, r, small, teleport).cut)(
+        _.filter(col("r") =!= col("prev")).count(), -1L)((_, c) => c == 0)
     }
     graft.Caches.releaseCheckpoint(deg)
     graft.Caches.releaseCheckpoint(e0)
     // Drop the carried deg column: callers see the original (node, r)
     // contract (the projection sits above the checkpoint, so
     // releaseCheckpoint still finds the LogicalRDD underneath).
-    (r.select("node", "r"), rounds)
+    (r.select("node", "r"), changed.size)
   }
 
   /** The graph SERVE plan of graph_pagerank_persist_serve, factored so
@@ -2607,11 +2579,11 @@ object PipelineOps extends OpGroup {
     * nodes at/above the EXACT integer mean rank (sum div count — no
     * float), restrict edges to high-high endpoints, BFS 3 hops from the
     * single top-ranked node (ties to the lower id), and report per hop
-    * the node count and distinct CC labels reached. The per-round
-    * checkpoint discipline is graph_bfs_hops'; the ≤4-row report
-    * materializes BEFORE the walk state releases (the louvain rule — no
-    * reach-back into dropped checkpoints), so the returned frame holds
-    * no checkpoint at all.
+    * the node count and distinct CC labels reached. The walk is
+    * graph_bfs_hops' [[bfsReach]]; the ≤4-row report materializes
+    * BEFORE the walk state releases (the louvain rule — no reach-back
+    * into dropped checkpoints), so the returned frame holds no
+    * checkpoint at all.
     */
   private def rankFilteredBfs(
       s: org.apache.spark.sql.SparkSession,
@@ -2634,24 +2606,10 @@ object PipelineOps extends OpGroup {
       .join(small(high.select(col("node").as("src"))), "src")
       .join(small(high.select(col("node").as("dst"))), "dst")
       .select("src", "dst")
-    val seed = ranks.orderBy(desc("r"), asc("node")).limit(1).select("node")
-    var visited = seed.withColumn("hop", lit(0)).cut
-    var frontier = visited
-    var hop = 0
-    var emptied = false
-    while (hop < 3 && !emptied) {
-      hop += 1
-      val next = he.join(small(frontier.select(col("node").as("src"))), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(small(visited.select("node")), Seq("node"), "leftanti")
-        .withColumn("hop", lit(hop))
-      val nv = visited.union(next).cut
-      frontier = nv.filter(col("hop") === hop)
-      emptied = frontier.isEmpty
-      graft.Caches.releaseCheckpoint(visited)
-      visited = nv
-    }
-    val rep = visited.join(comps, "node")
+    val seed = ranks.orderBy(desc("r"), asc("node")).limit(1)
+      .select(col("node").as("n"))
+    val visited = bfsReach(he, seed, small, 3)
+    val rep = visited.join(comps.withColumnRenamed("node", "n"), "n")
       .groupBy("hop")
       .agg(count(lit(1)).as("n_nodes"),
         countDistinct("label").as("n_comps"))
@@ -5266,8 +5224,7 @@ object PipelineOps extends OpGroup {
     // "converged" is rank EQUALITY, not an epsilon. Loop: per round ONE
     // keyed join of ranks against the degree-annotated checkpointed edge
     // frame + one partial-aggregating sum + a changed-row count to the
-    // driver (the convergence scalar); previous round's blocks released
-    // as the next materializes — the text_dedup_clusters discipline.
+    // driver (the convergence scalar; [[pagerankLoop]]).
     // Stops at the first round whose ranks equal the previous round's,
     // capped at 8; the cap is exact-or-equal vs the oracle because a
     // fixpoint of the deterministic map stays fixed, so the oracle's
@@ -8262,9 +8219,7 @@ object PipelineOps extends OpGroup {
     // does not (converged=false reports the truncation honestly — a
     // 7-long chain peels one end per round). Per label cell: endpoint
     // nodes, 2-core survivors, peeled count. At 100 TB: each round is a
-    // degree aggregate + two semi-joins over a SHRINKING edge set, every
-    // round checkpointed and the predecessor released (the kmeansLoop
-    // lineage discipline).
+    // degree aggregate + two semi-joins over a SHRINKING edge set.
     Op("graph_kcore_peel",
       (s, dir) => {
         val mutual = mutualKnnEdges(s, dir)
@@ -8282,32 +8237,15 @@ object PipelineOps extends OpGroup {
         // small-graph gate as the broadcast).
         graphStateConf(s, narrow) { sc =>
         val e0 = sc(edges0)
-        var edges = e0
-        var keep: org.apache.spark.sql.DataFrame = null
-        var prevEdges: org.apache.spark.sql.DataFrame = null
-        var prevN = -1L
-        var lastN = -1L
-        var converged = false
-        for (_ <- 1 to 6 if !converged) {
-          val nk = kcoreSurvivors(edges).cut
-          // The prior round's survivor set feeds nothing once its induced
-          // edge set exists — release it (only the FINAL one outlives the
-          // loop, pinned until the key reports done).
-          Option(keep).foreach(graft.Caches.releaseCheckpoint)
-          keep = nk
-          val ne = kcoreInduce(edges, keep, small)
-            .cut
-          Option(prevEdges).foreach(graft.Caches.releaseCheckpoint)
-          prevEdges = edges
-          edges = ne
-          prevN = lastN
-          lastN = keep.count()
-          converged = lastN == prevN
-        }
+        // State (edges, survivors); round 1 replaces the survivor slot
+        // before anything reads it.
+        val ((edges, keep), _, converged) = graft.Loop.fixpoint((e0, e0), 6)({
+          case ((edges, _), _) =>
+            val keep = kcoreSurvivors(edges).cut
+            (kcoreInduce(edges, keep, small).cut, keep)
+        })(_._2.count(), -1L)(_ == _)
         // The returned plan references ONLY keep (and the shared mutual
-        // cache): the edge chain's tail frames can go now; keep stays
-        // pinned until the key completes.
-        graft.Caches.releaseCheckpoint(prevEdges)
+        // cache); keep stays pinned until the key completes.
         graft.Caches.releaseCheckpoint(edges)
         labels
           .join(keep.withColumn("in_core", lit(true)), Seq("n"), "left")
@@ -8477,18 +8415,13 @@ object PipelineOps extends OpGroup {
         graphStateConf(s, narrow) { sc =>
         val (mutual, sym, deg) = (sc(mutualP), sc(symP), sc(degP))
         val nodes = sym.select(col("a").as("n")).distinct()
-        var comm = nodes.withColumn("c", col("n")).cut
-        var moves = Vector.empty[Long]
-        var converged = false
-        for (_ <- 1 to 4 if !converged) {
-          val next = louvainSweep(sym, deg, mVal, small, comm)
-            .cut
-          val moved = next.filter(col("moved")).count()
-          graft.Caches.releaseCheckpoint(comm)
-          comm = next.select("n", "c")
-          moves :+= moved
-          converged = moved == 0
-        }
+        // State: the cut sweep output (n, c, moved); the moved flag
+        // rides the checkpoint, so the probe reads checkpointed blocks.
+        val (last, moves, converged) = graft.Loop.fixpoint(
+            nodes.withColumn("c", col("n")).cut, 4)(
+          (comm, _) => louvainSweep(sym, deg, mVal, small, comm.select("n", "c")).cut)(
+          _.filter(col("moved")).count(), -1L)((_, moved) => moved == 0)
+        val comm = last.select("n", "c")
         graft.Caches.releaseCheckpoint(deg) // sweeps done — coarse phase reads comm only
         val cB = comm
         // Contract: canonical (least, greatest) community pairs weighted
@@ -8987,12 +8920,10 @@ object PipelineOps extends OpGroup {
     // per hop 0..6, how many nodes the frontier reaches, plus the
     // unreachable remainder (hop −1). Per round: one keyed join of the
     // frontier against the shared checkpointed edge set + an anti-join
-    // against the visited set — never a whole-graph pass; the visited
-    // frame re-checkpoints per round with the predecessor released (the
-    // kcore-loop lineage discipline) and the convergence signal is one
-    // driver scalar (frontier count). Early-stop on an empty frontier is
-    // exact vs the oracle's fixed 6 unrolled rounds (an empty frontier
-    // generates nothing forever). At 100 TB: each round shuffles only
+    // against the visited set — never a whole-graph pass ([[bfsReach]]);
+    // the convergence signal is one driver scalar (frontier emptiness).
+    // Early-stop on an empty frontier is exact vs the oracle's fixed 6
+    // unrolled rounds (an empty frontier generates nothing forever). At 100 TB: each round shuffles only
     // frontier-adjacent edges — BFS cost is O(Σ frontier degrees), the
     // property every distributed traversal (Pregel superstep) relies on.
     Op("graph_bfs_hops",
@@ -9011,23 +8942,8 @@ object PipelineOps extends OpGroup {
           if (narrow) broadcast _ else identity _
         // Hop-loop micro-jobs under [[graphStateConf]] (same
         // small-graph gate as the broadcast).
-        val vFinal = graphStateConf(s, narrow) { sc =>
-        val edges = sc(sym)
-        var vis = sc(seeds).withColumn("hop", lit(0)).cut
-        var frontier = vis
-        var hop = 0
-        var emptied = false
-        while (hop < 6 && !emptied) {
-          hop += 1
-          val nv = vis.union(bfsHop(edges, frontier, vis, small, hop))
-            .cut
-          frontier = nv.filter(col("hop") === hop)
-          emptied = frontier.isEmpty
-          graft.Caches.releaseCheckpoint(vis)
-          vis = nv
-        }
-        vis
-        }
+        val vFinal = graphStateConf(s, narrow)(sc =>
+          bfsReach(sc(sym), sc(seeds), small, 6))
         val nodes = sym.select(col("src").as("n")).distinct()
         val reach = nodes.join(vFinal, Seq("n"), "left")
           .groupBy(coalesce(col("hop"), lit(-1)).as("hop"))

@@ -45,6 +45,76 @@ class UnitSuite extends AnyFunSuite {
     assert(g2.values.sum <= 1000000000000L, s"rank mass grew: ${g2.values.sum}")
   }
 
+  test("Loop.fixpoint: only the final state stays cut, the cap reports converged = false, the seed is round 1's previous probe, a throwing step leaks nothing") {
+    import Cut.CutOps
+    def cutIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    var steps = 0
+    // A counting step: every round adds 1 to the single value v, cut.
+    def countUp(cur: org.apache.spark.sql.DataFrame, round: Int) = {
+      steps += 1
+      cur.select((col("v") + 1).as("v")).cut
+    }
+    def v(df: org.apache.spark.sql.DataFrame): Long = df.head().getLong(0)
+    // (a) The cap: exactly maxRounds steps and probes, converged = false,
+    // and only the final state's cut is still persisted.
+    val ((last, probes, converged), owner) = Cut.owned {
+      Loop.fixpoint(Seq(0L).toDF("v").cut, maxRounds = 3)(countUp)(v, -1L)((_, _) => false)
+    }
+    assert(steps == 3 && probes == Seq(1L, 2L, 3L) && !converged,
+      s"steps=$steps probes=$probes converged=$converged")
+    assert(persisted -- before == cutIds(last),
+      s"pinned ${persisted -- before}, final state ${cutIds(last)}")
+    owner.releaseAll()
+    assert(persisted -- before == Set.empty)
+    // (b) The seed is the previous probe of round 1: an identity step
+    // stops after round 1 when the seed equals the state, after round 2
+    // otherwise.
+    def same(seed: Long) = {
+      val ((_, ps, conv), o) = Cut.owned {
+        Loop.fixpoint(Seq(5L).toDF("v").cut, maxRounds = 10)(
+          (cur, _) => cur.select("v").cut)(v, seed)(_ == _)
+      }
+      o.releaseAll()
+      (ps, conv)
+    }
+    assert(same(5L) == (Seq(5L), true))
+    assert(same(-1L) == (Seq(5L, 5L), true))
+    // (c) A step that throws in round 2 leaves nothing pinned once its
+    // owner is released.
+    val e = intercept[IllegalStateException] {
+      Cut.owned {
+        Loop.fixpoint(Seq(0L).toDF("v").cut, maxRounds = 5)((cur, round) =>
+          if (round == 2) throw new IllegalStateException("round 2")
+          else countUp(cur, round))(v, -1L)((_, _) => false)
+      }
+    }
+    assert(e.getMessage == "round 2")
+    assert(persisted -- before == Set.empty)
+  }
+
+  test("stronglyConnectedComponents throws at the refinement cap instead of returning partial labels") {
+    // The (F, B) counterexample diamond needs a second refinement round
+    // (round 1 leaves 5 and 6 in one class); condenseDriverCap = 0 forces
+    // the distributed refinement loop, and maxRounds = 1 cuts it short.
+    val es = Seq((1L, 5L), (1L, 6L), (5L, 2L), (6L, 2L)).toDF("a", "b")
+    val e = intercept[IllegalStateException] {
+      Cut.owned(ops.PipelineOps.stronglyConnectedComponents(
+        es, maxRounds = 1, condenseDriverCap = 0L))
+    }
+    assert(e.getMessage.contains("did not converge in 1 rounds"), e.getMessage)
+    val (got, rounds) = ops.PipelineOps.stronglyConnectedComponents(
+      es, condenseDriverCap = 0L)
+    val gm = got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Caches.releaseCheckpoint(got)
+    assert(rounds >= 2 && gm == Map(1L -> 1L, 2L -> 2L, 5L -> 5L, 6L -> 6L),
+      s"rounds=$rounds labels=$gm")
+  }
+
   test("ns→µs recipe: 1706657176220708106 → 2024-01-30T23:26:16.220708") {
     // miniEvents stores raw nanosecond longs exactly like the real table
     // does under nanosAsLong.
