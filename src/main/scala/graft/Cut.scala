@@ -26,7 +26,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    unpersists every checkpoint leaf that no owner holds, so it never
   *    frees a fixture either.
   *  - Superseded loop state is still released where the loop supersedes
-  *    it, so block residency while a key runs is what its body makes it.
+  *    it: [[Loop.fixpoint]] releases each superseded state of the
+  *    iterative loops, so block residency while a key runs is what its
+  *    body makes it.
   *  - Threads of a [[ops.DriverPool]] run under the owner of the thread
   *    that created the pool: the pool captures it at creation and binds
   *    it in each thread it starts. The current owner is a plain (not

@@ -25,18 +25,8 @@ case class VecDot(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_dot"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += a.getFloat(i).toDouble * b.getFloat(i).toDouble
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VecMath.dot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -67,18 +57,8 @@ case class VecNormSq(child: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_norm_sq"
 
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble
-      acc += x * x
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(input: Any): Any =
+    VecMath.normSq(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
@@ -175,6 +155,36 @@ case class VecL2QDist(first: Expression, second: Expression, third: Expression)
 }
 
 object VecMath {
+
+  /** Σ a_i·b_i over the common prefix, double accumulation in index
+    * order: the interpreted body of `vec_dot` and the scorer of
+    * `PipelineOps.graphWalk`.
+    */
+  def dot(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += a.getFloat(i).toDouble * b.getFloat(i).toDouble
+      i += 1
+    }
+    acc
+  }
+
+  /** Σ a_i², double accumulation in index order: the interpreted body
+    * of `vec_norm_sq` and the scorer of `PipelineOps.graphWalk`.
+    */
+  def normSq(a: ArrayData): Double = {
+    val n = a.numElements()
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a.getFloat(i).toDouble
+      acc += x * x
+      i += 1
+    }
+    acc
+  }
 
   /** Analysis-time input validation shared by the vector expressions.
     * `ExpectsInputTypes` would be the idiomatic carrier, but its

@@ -1614,188 +1614,6 @@ object PipelineOps extends OpGroup {
       .orderBy("doc_id")
   }
 
-  /** The walk family's per-candidate scorer: cosine of the edge's stored
-    * endpoint vector (`demb` — the vectors-in-the-index HNSW layout)
-    * against the state row's query vector (`qemb`). One expression for
-    * every hop of [[hnswWalk]], so the step cost each walk key's comment
-    * quotes (k lookups, not |corpus|) has a single implementation.
-    */
-  private def walkSim: org.apache.spark.sql.Column =
-    expr("vec_dot(demb, qemb)") /
-      (Tables.safeNorm("demb") * Tables.safeNorm("qemb"))
-
-  /** Hop join of a walk: state rows meet the edges of their current
-    * node. `fused` = exchange-free sort-merge inside one task (both
-    * frames single-partition — the per-shard local-walk serving shape);
-    * otherwise the state BROADCASTS into the distributed edge frame (the
-    * cross-shard point-lookup fallback). See [[hnswWalk]].
-    */
-  private def walkHopJoin(
-      edges: org.apache.spark.sql.DataFrame,
-      state: org.apache.spark.sql.DataFrame,
-      key: String, fused: Boolean): org.apache.spark.sql.DataFrame =
-    if (fused) edges.hint("merge").join(state, col("src") === col(key))
-    else edges.join(broadcast(state), col("src") === col(key))
-
-  /** ONE greedy (beam width 1) hop of a descent of [[hnswWalk]]. State
-    * (qid, qemb, cur) advances to the argmax by (sim DESC, id ASC) of
-    * cur's neighbors; "stay" rides the self-loop edges, so the state is
-    * referenced exactly ONCE per hop (no 2^steps prefix re-execution) and
-    * a node at a local optimum is a fixpoint — which is why a fixed-step
-    * chain equals the early-stopped oracle. `track = true` additionally
-    * threads a visited `path` string and the chosen node's `cursim`
-    * (the found_sim of a walk without a beam) through the state — pure
-    * extra columns, the argmax itself is byte-identical.
-    */
-  private[graft] def descentHop(
-      eL: org.apache.spark.sql.DataFrame,
-      state: org.apache.spark.sql.DataFrame,
-      fused: Boolean, track: Boolean): org.apache.spark.sql.DataFrame = {
-    val j = walkHopJoin(eL, state, "cur", fused)
-      .filter(col("dst") =!= col("qid"))
-      .withColumn("sim", walkSim)
-    if (!track)
-      j.groupBy("qid").agg(
-          max(struct(col("sim").as("s"), (-col("dst")).as("nc"))).as("m"),
-          first(col("qemb")).as("qemb"))
-        .select(col("qid"), col("qemb"), (-col("m.nc")).as("cur"))
-    else
-      j.groupBy("qid").agg(
-          max(struct(col("sim").as("s"), (-col("dst")).as("nc"))).as("m"),
-          first(col("qemb")).as("qemb"),
-          first(col("path")).as("path0"))
-        .select(col("qid"), col("qemb"), (-col("m.nc")).as("cur"),
-          concat(col("path0"), lit(","), (-col("m.nc")).cast("string")).as("path"),
-          col("m.s").as("cursim"))
-  }
-
-  /** ONE ef=4 beam step of the layer-0 beam of [[hnswWalk]]. The state is
-    * the current top-4 frontier (qid, qemb, cid, sim); a step scores the
-    * frontier's neighbors ∪ the frontier itself (self-loops) and keeps
-    * the top-4 by (sim DESC, id ASC) per query. Idempotent at a stable
-    * beam, so a fixed-step chain equals an early-stopped walk — beam AND
-    * visited set (repeats add nothing). Every other state column is a
-    * per-query constant (qid, qemb, descent_nodes) and rides through
-    * unchanged.
-    */
-  private[graft] def beamStep(
-      sym0: org.apache.spark.sql.DataFrame,
-      state: org.apache.spark.sql.DataFrame,
-      fused: Boolean, trackSeen: Boolean = false): org.apache.spark.sql.DataFrame = {
-    val carry = state.columns.filterNot(Set("cid", "sim", "seen")).map(col)
-    val top = walkHopJoin(sym0, state.drop("sim"), "cid", fused)
-      .filter(col("dst") =!= col("qid"))
-      .withColumn("sim", walkSim)
-      .select(carry ++ Seq(col("dst").as("cid"), col("sim")) ++
-        (if (trackSeen) Seq(col("seen")) else Nil): _*)
-      .distinct()
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("sim"), asc("cid"))))
-      .filter(col("rk") <= 4)
-      .drop("rk")
-    if (!trackSeen) top
-    else
-      // The ever-beamed set rides the state as a `seen` array: every row
-      // of a query carries the same set, so distinct and rank behave
-      // exactly as above, and the walk's last state holds the count.
-      top.withColumn("seen", array_union(col("seen"),
-        collect_set(col("cid")).over(Window.partitionBy("qid"))))
-  }
-
-  /** Materialize a walk edge frame: single-partition in the fused shape
-    * (the whole layer graph lives in one task — how a real HNSW shard
-    * serves), distributed otherwise.
-    */
-  private def walkShaped(df: org.apache.spark.sql.DataFrame, fused: Boolean) =
-    (if (fused) df.coalesce(1) else df).cut
-
-  /** All-level HNSW edge frame (lvl, src, dst, demb): the symmetrized
-    * upper-layer mutual-kNN edges plus per-level self-loops for every
-    * corpus vector, endpoint vectors attached (vectors-in-the-index).
-    * The HNSW keys' descent ([[hnswDescent]]).
-    */
-  private def walkLevelEdges(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      upper: org.apache.spark.sql.DataFrame,
-      fused: Boolean): org.apache.spark.sql.DataFrame = {
-    val e = Tables.t(s, dir, "embeddings")
-    val emb = e.select(col("vec_id").as("dst"), col("embedding").as("demb"))
-    val loops = e.select(col("vec_id").as("src"), col("vec_id").as("dst"))
-    val sym = upper.select(col("lvl"), col("a").as("src"), col("b").as("dst"))
-      .union(upper.select(col("lvl"), col("b").as("src"), col("a").as("dst")))
-    val lvls = s.range(1, 5).select(col("id").cast("int").as("lvl"))
-    val lvlLoops = loops.crossJoin(broadcast(lvls))
-      .select(col("lvl"), col("src"), col("dst"))
-    walkShaped(sym.union(lvlLoops).join(emb, Seq("dst"))
-      .select("lvl", "src", "dst", "demb"), fused)
-  }
-
-  /** Layer-0 walk graph (src, dst, demb): the symmetrized mutual-kNN
-    * edges plus self-loops, endpoint vectors attached. The beam of the
-    * HNSW keys and of vec_graph_beam_search, and the descent of
-    * vec_graph_greedy_search.
-    */
-  private def walkSym0(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      m0: org.apache.spark.sql.DataFrame,
-      fused: Boolean): org.apache.spark.sql.DataFrame = {
-    val e = Tables.t(s, dir, "embeddings")
-    val emb = e.select(col("vec_id").as("dst"), col("embedding").as("demb"))
-    val loops = e.select(col("vec_id").as("src"), col("vec_id").as("dst"))
-    walkShaped(m0.select(col("a").as("src"), col("b").as("dst"))
-      .union(m0.select(col("b").as("src"), col("a").as("dst")))
-      .union(loops)
-      .join(emb, Seq("dst")), fused)
-  }
-
-  /** The FUSED walk edge frames as fixtures: `walk_sym0` for the in-session
-    * layer-0 graph (read by every walk key but vec_hnsw_persist_search,
-    * which walks its reloaded index) and `walk_level_edges` for the
-    * in-session upper levels. The fused (single-partition) shape is
-    * deterministic, so each is built once per (session, sfDir) and
-    * released after its last consumer key ([[graft.Fixture]]). Like every
-    * fixture they build through the parent session, so on its conf, even
-    * when first called from a walk body. The unfused (distributed) shape
-    * stays per-call: only PlanSuite's dual-shape equality run uses it.
-    */
-  private val walkSym0Cached = graft.Fixture("walk_sym0",
-      Set("vec_graph_greedy_search", "vec_graph_beam_search", "vec_hnsw_search",
-        "vec_hnsw_batch_search")) { (s, dir) =>
-    walkSym0(s, dir, mutualKnnEdges(s, dir), fused = true)
-  }
-
-  private val walkLevelEdgesCached = graft.Fixture("walk_level_edges",
-      Set("vec_hnsw_search", "vec_hnsw_batch_search")) { (s, dir) =>
-    walkLevelEdges(s, dir, hnswUpperEdges(s, dir), fused = true)
-  }
-
-  /** Walk start state (qid, qemb, cur[, path, cursim]): every query row
-    * of `q` (qid, qemb) starts at its first candidate of `entries`
-    * (vec_id, erk), by `erk`, that is not the query itself; a query
-    * without one has no state row. The state is single-partition:
-    * SinglePartition satisfies the fused merge join's distribution,
-    * keeping the hop exchange-free. With `track`, the visited path starts
-    * at the entry and `cursim` is a placeholder the first descent hop
-    * overwrites (it is read only by a walk without a beam, which always
-    * descends).
-    */
-  private def walkState0(
-      q: org.apache.spark.sql.DataFrame,
-      entries: org.apache.spark.sql.DataFrame,
-      track: Boolean): org.apache.spark.sql.DataFrame = {
-    val st0 = q.crossJoin(broadcast(entries))
-      .filter(col("vec_id") =!= col("qid"))
-      .coalesce(1)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy("erk")))
-      .filter(col("rk") === 1)
-      .select(col("qid"), col("qemb"), col("vec_id").as("cur"))
-    if (track)
-      st0.withColumn("path", col("cur").cast("string"))
-        .withColumn("cursim", lit(0.0))
-    else st0
-  }
-
   /** The query of the single-query walk keys: vec_id 0 of the corpus `e`,
     * as a (qid, qemb) batch of one.
     */
@@ -1803,201 +1621,193 @@ object PipelineOps extends OpGroup {
     e.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
 
-  /** The scoped conf every walk runs its |Q|-bounded frames in
-    * ([[graft.Scoped]]): 2 shuffle partitions (the state is
-    * query-batch-sized, never corpus-sized), AQE off (the plans are fully
-    * known; adaptive re-planning only serializes the hop cascade),
-    * whole-stage codegen off (a fused multi-hop level is one deep
-    * single-task stage over single-digit rows — janino compilation costs
-    * ~10x its interpreted runtime, every level). The body rebinds the
-    * walk's edge and state frames with `sc(_)`. The shared corpus-side
-    * fixtures build through the parent session, under its conf, wherever
-    * they are first called.
+  /** The layer-0 graph `m0` (a, b) as walk edges (lvl, a, b). */
+  private def layer0(m0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    m0.select(lit(0).as("lvl"), col("a"), col("b"))
+
+  /** The graph walk as one in-task operator. Every input is read into ONE
+    * Spark task (single-partition coalesces zipped together, no
+    * exchange), which builds the adjacency once and walks every query in
+    * memory — each shard walking its own subgraph, as HNSW serves:
+    *
+    *  - `edges` (lvl, a, b), undirected, walked in both directions;
+    *  - `corpus` (vec_id, embedding), the vectors, fetched by id;
+    *  - `queries` (qid, qemb), the query batch — the query axis is data;
+    *  - `entries` (vec_id, lay): each query enters at the first of the top
+    *    two by (lay DESC, vec_id ASC) that is not itself.
+    *
+    * The descent walks `levels` in order, six greedy hops each; then, with
+    * `beam`, six ef=4 steps at level 0. A hop's candidates are its
+    * frontier ∪ the frontier's neighbours at that level, deduplicated,
+    * minus the query and any id without a corpus vector, ranked by
+    * (sim DESC, id ASC) under Spark's double ordering (a null sim below
+    * every double, NaN above); a greedy hop keeps the top 1, a beam step
+    * the top 4. The frontier is always a candidate, so a node at a local
+    * optimum is a fixpoint, an edgeless level is a no-op and the fixed
+    * step counts equal an early-stopped walk. sim is the cosine
+    * `vec_dot(d, q) / (sqrt(max(vec_norm_sq(d), 1e-300)) *
+    * sqrt(max(vec_norm_sq(q), 1e-300)))` by the [[VecMath]] kernels the
+    * SQL expressions run, so it is bit-identical to theirs.
+    *
+    * Emits (qid, found_id, sim, descent_nodes, beam_nodes, entry_lay): the
+    * best of the last frontier, the distinct nodes of the descent path
+    * (entry included), |{descent endpoint} ∪ every beam frontier| (1
+    * without a beam) and the entry's layer. A query without an entry, or
+    * whose frontier runs out of candidates, has no row.
     */
-  private def narrowWalkConf[T](s: org.apache.spark.sql.SparkSession)(
-      body: graft.Scope => T): T =
-    graft.Scoped(s,
-      "spark.sql.shuffle.partitions" -> "2",
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.codegen.wholeStage" -> "false")(body)
+  private[graft] def graphWalk(
+      edges: org.apache.spark.sql.DataFrame,
+      corpus: org.apache.spark.sql.DataFrame,
+      queries: org.apache.spark.sql.DataFrame,
+      entries: org.apache.spark.sql.DataFrame,
+      levels: Seq[Int], beam: Boolean): org.apache.spark.sql.DataFrame = {
+    import scala.collection.mutable
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+    import graft.functions.VecMath
+    // One partition per input; an empty plan may have none to coalesce.
+    def one(df: org.apache.spark.sql.DataFrame, cols: org.apache.spark.sql.Column*) = {
+      val rdd = df.select(cols: _*).queryExecution.toRdd
+      if (rdd.getNumPartitions > 0) rdd.coalesce(1)
+      else rdd.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+    }
+    val rows = one(edges, col("lvl").cast("int"), col("a").cast("long"), col("b").cast("long"))
+      .zipPartitions(
+        one(corpus, col("vec_id").cast("long"), col("embedding")),
+        one(queries, col("qid").cast("long"), col("qemb")),
+        one(entries, col("vec_id").cast("long"), col("lay").cast("int"))) { (e, c, q, t) =>
+      val adj = mutable.Map.empty[Int, mutable.LongMap[mutable.ArrayBuffer[Long]]]
+      e.foreach { r =>
+        val g = adj.getOrElseUpdate(r.getInt(0), mutable.LongMap.empty)
+        g.getOrElseUpdate(r.getLong(1), mutable.ArrayBuffer.empty) += r.getLong(2)
+        g.getOrElseUpdate(r.getLong(2), mutable.ArrayBuffer.empty) += r.getLong(1)
+      }
+      def vector(r: InternalRow) = if (r.isNullAt(1)) null else r.getArray(1).copy()
+      val vec = mutable.LongMap.empty[ArrayData]
+      c.foreach(r => vec(r.getLong(0)) = vector(r))
+      // (-lay, vec_id) ascending is (lay DESC, vec_id ASC); duplicates kept.
+      val top2 = t.map(r => (-r.getInt(1), r.getLong(0)))
+        .foldLeft(List.empty[(Int, Long)])((acc, x) => (x :: acc).sorted.take(2))
+      def norm(v: ArrayData) = math.sqrt(math.max(VecMath.normSq(v), 1e-300))
+      def sign(s: java.lang.Double) = if (s == null) 0 else 1
+      def before(x: (Long, java.lang.Double), y: (Long, java.lang.Double)) = {
+        val cmp = if (x._2 == null || y._2 == null) sign(x._2) - sign(y._2)
+          else SQLOrderingUtil.compareDoubles(x._2, y._2)
+        cmp > 0 || (cmp == 0 && x._1 < y._1)
+      }
+      q.map(r => (r.getLong(0), vector(r))).flatMap { case (qid, qv) =>
+        def sim(id: Long): java.lang.Double = {
+          val d = vec(id)
+          if (d == null || qv == null) null else VecMath.dot(d, qv) / (norm(d) * norm(qv))
+        }
+        def step(front: Seq[(Long, java.lang.Double)], lvl: Int, width: Int) = {
+          val g = adj.getOrElse(lvl, mutable.LongMap.empty[mutable.ArrayBuffer[Long]])
+          val ids = front.map(_._1)
+          (ids ++ ids.flatMap(g.getOrElse(_, Nil))).distinct
+            .filter(n => n != qid && vec.contains(n))
+            .map(n => (n, sim(n))).sortWith(before).take(width)
+        }
+        top2.find(_._2 != qid).flatMap { case (negLay, entry) =>
+          var front = Seq[(Long, java.lang.Double)]((entry, null))
+          val path = mutable.Set(entry)
+          for (l <- levels; _ <- 1 to 6 if front.nonEmpty) {
+            front = step(front, l, 1)
+            path ++= front.map(_._1)
+          }
+          val seen = mutable.Set(front.map(_._1): _*)
+          if (beam) for (_ <- 1 to 6 if front.nonEmpty) {
+            front = step(front, 0, 4)
+            seen ++= front.map(_._1)
+          }
+          front.headOption.map { case (id, s) =>
+            org.apache.spark.sql.Row(qid, id, s, path.size.toLong, seen.size.toLong, -negLay)
+          }
+        }
+      }
+    }
+    corpus.sparkSession.createDataFrame(rows, org.apache.spark.sql.types.StructType.fromDDL(
+      "qid BIGINT, found_id BIGINT, sim DOUBLE, descent_nodes BIGINT, beam_nodes BIGINT, entry_lay INT"))
+  }
 
-  /** Levels 1..4 that have upper-layer edges. */
-  private def occupiedLevels(upper: org.apache.spark.sql.DataFrame): Set[Int] =
-    upper.groupBy("lvl").count().collect().map(_.getInt(0)).toSet
-
-  /** The HNSW keys' descent: the `occupied` levels of `levelEdges`, 4→1.
-    * An edgeless level is a provable no-op of the descent (every query
-    * sits on its self-loop), so the walk skips it exactly.
-    */
-  private def hnswDescent(
-      levelEdges: org.apache.spark.sql.DataFrame,
-      occupied: Set[Int]): Seq[org.apache.spark.sql.DataFrame] =
-    (4 to 1 by -1).filter(occupied).map(l => levelEdges.filter(col("lvl") === l))
-
-  /** THE graph walk — all five graph-search keys run it and differ only
-    * in their inputs:
-    *
-    *  - `queries` (qid, qemb), the query batch. The query axis is data and
-    *    all queries advance one hop per step, so the job count is
-    *    hop-bounded, never query-bounded. vec_hnsw_batch_search passes
-    *    vec_id ≡ 0 (mod 97); the other keys pass the one query vec_id 0.
-    *  - `entries` (vec_id, lay), the entry candidates. Each query enters
-    *    at the first of the top two by (lay DESC, vec_id) that is not
-    *    itself. The HNSW keys pass the layer table; the flat keys pass the
-    *    endpoints of the mutual edges that avoid the query, at lay 0.
-    *  - `descent`, edge frames (src, dst, demb) walked in order by six
-    *    greedy [[descentHop]]s each, every frame seeded at the previous
-    *    one's endpoint: the occupied upper levels 4→1 for the HNSW keys
-    *    ([[hnswDescent]]), the layer-0 graph for vec_graph_greedy_search,
-    *    none for vec_graph_beam_search.
-    *  - `beam`, the layer-0 graph walked by six ef=4 [[beamStep]]s seeded
-    *    at the descent's endpoint: for the HNSW keys and
-    *    vec_graph_beam_search, none for vec_graph_greedy_search.
-    *
-    * Every edge frame carries per-node self-loops, so the fixed-step
-    * chains equal the early-stopped walk (the step maps are idempotent at
-    * a fixpoint).
-    *
-    * `fused = true` is the per-shard local-walk serving shape: the edge
-    * frames (endpoint vectors stored with the edges — the
-    * vectors-in-the-index layout) and the |Q|-row state are
-    * single-partition, so every hop is an exchange-free sort-merge join
-    * plus argmax inside ONE task; this is how real HNSW serves, each
-    * shard walking its own subgraph in memory. `fused = false` is the
-    * cross-shard fallback: the state BROADCASTS into the distributed
-    * edge frame per hop, a |Q|·(k+1)-bounded point lookup, one job per
-    * hop. PlanSuite pins the two shapes result-equal.
-    *
-    * Cuts: the start state, the middle and the final descent frame, beam
-    * step 3 and the answer — each bounds the plan (≤ 12 chained hops,
-    * codegen off under the walk conf) and supersedes everything upstream
-    * of it, so only the latest |Q|-row state holds storage and the
-    * returned frame replays nothing. Each edge frame is released once its
-    * phase is over; a fixture's release is a no-op, a per-call frame's
-    * frees its corpus-edge-sized blocks.
-    *
-    * Returns (qid, found_id, found_sim, exact_id, exact_sim, hit) in one
-    * partition sorted by qid, one row per query with an exact top-1 (the
-    * best other corpus vector, by ONE partial-aggregatable max_by pass —
-    * no per-query window). The found row is the best of the walk's last
-    * state: the final beam, or without a beam the descent's endpoint and
-    * its `cursim` (so such a walk needs `track`). A query without an entry
-    * has no found row and answers its exact top-1, the oracle's COALESCE
-    * tail. With `track`, the state also threads the descent's visited
-    * `path` and the ever-beamed `seen` set (seeded with the descent's
-    * endpoint), and descent_nodes and beam_nodes (distinct nodes each
-    * phase touched, 0 without an entry) follow found_sim.
+  /** THE graph walk of the five graph-search keys: [[graphWalk]] over
+    * `queries`, `entries` and `edges` with the corpus's vectors, anchored
+    * on the exact leg — the best other corpus vector per query, by ONE
+    * partial-aggregatable max_by pass (no per-query window). A query
+    * without a walk row answers its exact top-1 with 0 node counts, the
+    * oracle's COALESCE tail. Returns (qid, found_id, found_sim,
+    * descent_nodes, beam_nodes, entry_lay, exact_id, exact_sim, hit), one
+    * row per query with an exact top-1, cut in one partition sorted by
+    * qid.
     */
   private def hnswWalk(
       s: org.apache.spark.sql.SparkSession, dir: String,
       queries: org.apache.spark.sql.DataFrame,
       entries: org.apache.spark.sql.DataFrame,
-      descent: Seq[org.apache.spark.sql.DataFrame],
-      beam: Option[org.apache.spark.sql.DataFrame],
-      fused: Boolean, track: Boolean): org.apache.spark.sql.DataFrame =
-    narrowWalkConf(s) { sc =>
-      val q = broadcast(sc(queries))
-      // TakeOrdered top-2, then an unpartitioned window over those 2 rows.
-      val top2 = sc(entries).orderBy(desc("lay"), asc("vec_id")).limit(2)
-        .withColumn("erk", row_number().over(
-          Window.orderBy(desc("lay"), asc("vec_id"))))
-        .select("vec_id", "erk")
-      var st = walkState0(q, top2, track).cut
-      var cur = st
-      for ((edges, i) <- descent.map(sc(_)).zipWithIndex) {
-        for (_ <- 1 to 6) cur = descentHop(edges, cur, fused, track)
-        if (i + 1 == (descent.size + 1) / 2 || i + 1 == descent.size) {
-          cur = cur.cut
-          graft.Caches.releaseCheckpoint(st)
-          st = cur
-        }
-      }
-      descent.foreach(graft.Caches.releaseCheckpoint)
-      // The last state, in the beam's shape: the per-query constants ride
-      // it, and the descent's distinct-node count is read off its path.
-      var last = st.select(Seq(col("qid"), col("qemb"), col("cur").as("cid")) ++
-        (if (beam.isEmpty) Seq(col("cursim").as("sim")) else Nil) ++
-        (if (!track) Nil
-         else Seq(array(col("cur")).as("seen"),
-           size(array_distinct(split(col("path"), ","))).cast("long")
-             .as("descent_nodes"))): _*)
-      for (edges <- beam.map(sc(_)); i <- 1 to 6) {
-        last = beamStep(edges, last, fused, trackSeen = track)
-        if (i == 3) {
-          last = last.cut
-          graft.Caches.releaseCheckpoint(st)
-        }
-      }
-      val found = last
-        .coalesce(1)
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("qid").orderBy(desc("sim"), asc("cid"))))
-        .filter(col("rk") === 1)
-        .select(Seq(col("qid"), col("cid").as("found_id"),
-          (round(col("sim"), 3) + 0.0).as("found_sim")) ++
-          (if (!track) Nil
-           else Seq(col("descent_nodes"),
-             size(col("seen")).cast("long").as("beam_nodes"))): _*)
-      val exact = sc(Tables.t(s, dir, "embeddings")).crossJoin(q)
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("sim", expr("vec_dot(embedding, qemb)")
-          / (Tables.safeNorm("embedding") * Tables.safeNorm("qemb")))
-        .groupBy("qid").agg(max(struct(col("sim").as("s"),
-          (-col("vec_id")).as("nc"))).as("m"))
-        .select(col("qid"), (-col("m.nc")).as("exact_id"),
-          (round(col("m.s"), 3) + 0.0).as("exact_sim"))
-      // The last cut takes the walk's tail and the truth leg in ONE job
-      // under the walk conf — the corpus scan runs beside the walk chain —
-      // so the caller's action only reads the |Q| answer rows.
-      val foundId = coalesce(col("found_id"), col("exact_id"))
-      val out = exact.join(found, Seq("qid"), "left")
-        .select(Seq(col("qid"), foundId.as("found_id"),
-          coalesce(col("found_sim"), col("exact_sim")).as("found_sim")) ++
-          (if (!track) Nil
-           else Seq("descent_nodes", "beam_nodes")
-             .map(c => coalesce(col(c), lit(0L)).as(c))) ++
-          Seq(col("exact_id"), col("exact_sim"),
-            (foundId === col("exact_id")).as("hit")): _*)
-        .coalesce(1).sortWithinPartitions("qid")
-        .cut
-      graft.Caches.releaseCheckpoint(last)
-      beam.foreach(graft.Caches.releaseCheckpoint)
-      out
-    }
+      edges: org.apache.spark.sql.DataFrame,
+      levels: Seq[Int], beam: Boolean): org.apache.spark.sql.DataFrame = {
+    val e = Tables.t(s, dir, "embeddings")
+    val found = graphWalk(edges, e, queries, entries, levels, beam)
+    val exact = e.crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("sim", expr("vec_dot(embedding, qemb)")
+        / (Tables.safeNorm("embedding") * Tables.safeNorm("qemb")))
+      .groupBy("qid").agg(max(struct(col("sim").as("s"),
+        (-col("vec_id")).as("nc"))).as("m"))
+      .select(col("qid"), (-col("m.nc")).as("exact_id"),
+        (round(col("m.s"), 3) + 0.0).as("exact_sim"))
+    val foundId = coalesce(col("found_id"), col("exact_id"))
+    exact.join(found, Seq("qid"), "left")
+      .select(col("qid"), foundId.as("found_id"),
+        coalesce(round(col("sim"), 3) + 0.0, col("exact_sim")).as("found_sim"),
+        coalesce(col("descent_nodes"), lit(0L)).as("descent_nodes"),
+        coalesce(col("beam_nodes"), lit(0L)).as("beam_nodes"),
+        col("entry_lay"), col("exact_id"), col("exact_sim"),
+        (foundId === col("exact_id")).as("hit"))
+      .coalesce(1).sortWithinPartitions("qid")
+      .cut
+  }
 
-  /** vec_hnsw_batch_search's body: the walk over the queries vec_id ≡ 0
-    * (mod `mod`) and the in-session index. The modulus and the walk shape
-    * are exposed so PlanSuite can pin the hop-bounded job count (several
-    * batch sizes, one job count) and the dual-shape result equality.
+  /** The HNSW search of `queries` over the index (`nodes` (vec_id, lay),
+    * `upper` (lvl, a, b), layer-0 graph `m0` (a, b)): the greedy descent
+    * of levels 4→1, then the ef=4 beam at layer 0.
+    */
+  private def hnswSearch(
+      s: org.apache.spark.sql.SparkSession, dir: String,
+      queries: org.apache.spark.sql.DataFrame,
+      nodes: org.apache.spark.sql.DataFrame,
+      upper: org.apache.spark.sql.DataFrame,
+      m0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    hnswWalk(s, dir, queries, nodes, upper.select("lvl", "a", "b").union(layer0(m0)),
+      levels = 4 to 1 by -1, beam = true)
+
+  /** vec_hnsw_batch_search's body: the HNSW search of the queries
+    * vec_id ≡ 0 (mod `mod`) over the in-session index. The modulus is
+    * exposed so PlanSuite can pin the fixed job count (several
+    * batch sizes, one job count).
     */
   private[graft] def batchHnswSearch(
       s: org.apache.spark.sql.SparkSession, dir: String,
-      mod: Long, fusedWalk: Boolean = true): org.apache.spark.sql.DataFrame = {
+      mod: Long): org.apache.spark.sql.DataFrame = {
     val q = Tables.t(s, dir, "embeddings")
       .filter(pmod(col("vec_id"), lit(mod)) === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-    val upper = hnswUpperEdges(s, dir)
-    val (levelEdges, sym0) =
-      if (fusedWalk) (walkLevelEdgesCached(s, dir), walkSym0Cached(s, dir))
-      else (walkLevelEdges(s, dir, upper, fused = false),
-        walkSym0(s, dir, mutualKnnEdges(s, dir), fused = false))
-    hnswWalk(s, dir, q, hnswLayerAssign(s, dir),
-      hnswDescent(levelEdges, occupiedLevels(upper)), Some(sym0), fusedWalk, track = false)
+    hnswSearch(s, dir, q, hnswLayerAssign(s, dir), hnswUpperEdges(s, dir),
+      mutualKnnEdges(s, dir))
+      .select("qid", "found_id", "found_sim", "exact_id", "exact_sim", "hit")
   }
 
   /** The single-query HNSW serve row (vec_hnsw_search and
-    * vec_hnsw_persist_search): the walk over the one query vec_id 0 with
-    * `track`, under the entry's layer `topLayer`. The two keys pass the
+    * vec_hnsw_persist_search): the HNSW search of the one query vec_id 0,
+    * reporting the entry's layer as `top_layer`. The two keys pass the
     * in-session index or the reloaded one.
     */
   private def hnswSearchQuery0(
-      s: org.apache.spark.sql.SparkSession, dir: String, topLayer: Int,
-      layers: org.apache.spark.sql.DataFrame, occupied: Set[Int],
-      levelEdges: org.apache.spark.sql.DataFrame,
-      sym0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    hnswWalk(s, dir, query0(Tables.t(s, dir, "embeddings")), layers,
-      hnswDescent(levelEdges, occupied), Some(sym0), fused = true, track = true)
-      .select(lit(topLayer).as("top_layer"), col("descent_nodes"),
+      s: org.apache.spark.sql.SparkSession, dir: String,
+      nodes: org.apache.spark.sql.DataFrame,
+      upper: org.apache.spark.sql.DataFrame,
+      m0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    hnswSearch(s, dir, query0(Tables.t(s, dir, "embeddings")), nodes, upper, m0)
+      .select(col("entry_lay").as("top_layer"), col("descent_nodes"),
         col("beam_nodes"), col("found_id"), col("found_sim"),
         col("exact_id"), col("exact_sim"), col("hit"))
 
@@ -2012,23 +1822,14 @@ object PipelineOps extends OpGroup {
   private def flatGraphWalk(
       s: org.apache.spark.sql.SparkSession, dir: String,
       greedy: Boolean): org.apache.spark.sql.DataFrame = {
-    val m = mutualKnnEdges(s, dir).filter(col("a") =!= 0 && col("b") =!= 0)
+    val m0 = mutualKnnEdges(s, dir)
+    val m = m0.filter(col("a") =!= 0 && col("b") =!= 0)
     val entries = m.select(col("a").as("vec_id"))
       .union(m.select(col("b").as("vec_id")))
       .withColumn("lay", lit(0))
-    val sym0 = walkSym0Cached(s, dir)
-    hnswWalk(s, dir, query0(Tables.t(s, dir, "embeddings")), entries,
-      descent = if (greedy) Seq(sym0) else Nil,
-      beam = if (greedy) None else Some(sym0), fused = true, track = true)
+    hnswWalk(s, dir, query0(Tables.t(s, dir, "embeddings")), entries, layer0(m0),
+      levels = if (greedy) Seq(0) else Nil, beam = !greedy)
   }
-
-  /** Layer of the top node other than the query vec_id 0 — the walk's
-    * entry for query 0 (0 for a corpus of only the query, whose walk
-    * gives no row).
-    */
-  private def hnswTopLayer(layers: org.apache.spark.sql.DataFrame): Int =
-    layers.filter(col("vec_id") =!= 0)
-      .agg(coalesce(max("lay"), lit(0))).head().getInt(0)
 
   /** Convergence scalar for the label-propagation loop — one row to the
     * driver per round (never the data). Empty subgraph (no near-dup
@@ -2313,8 +2114,7 @@ object PipelineOps extends OpGroup {
     * exchange in a round is then a partial-aggregated |V|/|C|-bounded
     * frame, so the default core-count shuffle width and AQE's per-stage
     * re-planning only add scheduling latency to each of the loop's many
-    * small jobs (the [[narrowWalkConf]] precedent): 8 shuffle
-    * partitions, AQE off, codegen on. Above the cap the body runs on the
+    * small jobs: 8 shuffle partitions, AQE off, codegen on. Above the cap the body runs on the
     * session itself — the shuffled fallback keeps full width and AQE
     * (skew handling matters there) — and `sc(_)` is the identity.
     */
@@ -9327,7 +9127,7 @@ object PipelineOps extends OpGroup {
     // graph (HNSW's base-layer search, beam = 1). From the minimum-id
     // entry node of the query-free graph, six fixed greedy hops — the
     // graph walk [[hnswWalk]] with the layer-0 graph as its one descent
-    // frame and no beam ([[flatGraphWalk]]). Fixed 6 hops equal the
+    // level and no beam ([[flatGraphWalk]]). Fixed 6 hops equal the
     // early-stopped walk exactly: the step map is idempotent at a local
     // optimum, so endpoint AND distinct-node path match the oracle's
     // fixed-6-step recursion. Reports the walk endpoint vs the exact
@@ -9335,10 +9135,10 @@ object PipelineOps extends OpGroup {
     // leg) + how many distinct nodes the walk touched; a graph with no
     // mutual edge off the query has no entry and answers the exact top-1
     // with path_nodes = 0, as the oracle's COALESCE tail does. At 100 TB:
-    // per-step cost is k lookups against the shard's edge frame, total ≈
-    // k·steps vectors scored per query — the navigable-graph promise; the
-    // label-blocked graph build amortizes across the whole graph_* family
-    // (shared fixture), built on the session's conf, not the walk's.
+    // per-step cost is k lookups in the shard's in-memory adjacency, total
+    // ≈ k·steps vectors scored per query — the navigable-graph promise;
+    // the graph build amortizes across the whole graph_* family (shared
+    // fixture).
     Op("vec_graph_greedy_search",
       (s, dir) => flatGraphWalk(s, dir, greedy = true)
         .select(col("descent_nodes").as("path_nodes"), col("found_id"),
@@ -9419,20 +9219,18 @@ object PipelineOps extends OpGroup {
     // same min-id entry node, six fixed ef=4 beam steps — the graph walk
     // [[hnswWalk]] with no descent and the layer-0 graph as its beam
     // ([[flatGraphWalk]]). Each step scores ONLY the frontier's neighbors
-    // ∪ frontier (self-loops; ≤ ef·(k+1) rows — never a corpus scan) and
-    // keeps the top-ef. A fixed 6-step chain equals the early-stopped
-    // walk — the update is idempotent at a stable beam, so the oracle
-    // (recursive CTE carrying the beam as a LIST) lands on the identical
-    // final beam AND the identical ever-beamed set (repeats add nothing),
-    // which the walk's state carries as its `seen` array. Output:
+    // ∪ frontier (≤ ef·(k+1) candidates — never a corpus scan) and keeps
+    // the top-ef. A fixed 6-step chain equals the early-stopped walk —
+    // the update is idempotent at a stable beam, so the oracle (recursive
+    // CTE carrying the beam as a LIST) lands on the identical final beam
+    // AND the identical ever-beamed set (repeats add nothing). Output:
     // distinct nodes ever beamed, the beam's best vs the exact top-1
     // (brute-force truth leg), hit flag; without an entry node, the exact
     // top-1 with beam_nodes = 0. UnitSuite pins the semantics on a
     // hand-built graph where beam=1 provably stops at a local optimum and
     // beam=4 reaches the true top-1. At 100 TB: per-step cost is ef·k
     // lookups — ef trades recall for lookups, the HNSW knob; the graph
-    // build amortizes across the graph_* family (shared fixture), built
-    // on the session's conf, not the walk's.
+    // build amortizes across the graph_* family (shared fixture).
     Op("vec_graph_beam_search",
       (s, dir) => flatGraphWalk(s, dir, greedy = false)
         .select(col("beam_nodes"), col("found_id"), col("found_sim"),
@@ -9513,7 +9311,7 @@ object PipelineOps extends OpGroup {
     // layered artifact: start at the min-id node of the HIGHEST occupied
     // layer, greedy-descend layer 4→1 (each layer's endpoint seeds the
     // next — the express-lane hops that make HNSW log-like), then run the
-    // production ef=4 beam at layer 0 ([[beamStep]], seeded — NOT from the
+    // production ef=4 beam at layer 0 (seeded — NOT from the
     // global min id, which is the whole point: the descent has already
     // navigated near the target before the wide search spends lookups).
     // Layer membership is the build op's deterministic geometric recipe
@@ -9521,14 +9319,13 @@ object PipelineOps extends OpGroup {
     // query node (vec_id 0) is never a candidate of its own walk, as in
     // the greedy/beam keys. Upper-layer graphs are label-blocked mutual-3NN
     // over 4×-shrinking populations (Σ cost ≈ 1/3 of one layer-0 build),
-    // materialized once per invocation; layer 0 reuses the family's
-    // shared mutual-kNN checkpoint. The walk is [[hnswWalk]] with the
-    // batch |Q| = {0}, the same walk vec_hnsw_batch_search runs —
-    // exact vs the oracle's fixed-6-step chains because the step map is
-    // idempotent at a local optimum (the greedy op's argument, per
-    // layer). Walk state is a 1-row frame per level + a ≤4-row beam at
-    // layer 0 — never a data collect; the one driver scalar is the
-    // entry's layer, reported as top_layer.
+    // a shared fixture; layer 0 reuses the family's shared mutual-kNN
+    // checkpoint. The walk is [[hnswWalk]] with the batch |Q| = {0}, the
+    // same walk vec_hnsw_batch_search runs — exact vs the oracle's
+    // fixed-6-step chains because the step map is idempotent at a local
+    // optimum (the greedy op's argument, per layer). It runs in one task
+    // over the in-memory adjacency ([[graphWalk]]) — no driver probe; the
+    // entry's layer it reports is top_layer.
     // Output: the occupied top layer, distinct nodes the descent touched,
     // distinct nodes layer-0 ever beamed, and the found-vs-exact verdict
     // (brute-force truth leg, like the greedy/beam ops). At 100 TB: the
@@ -9537,14 +9334,8 @@ object PipelineOps extends OpGroup {
     // sees the neighborhood the descent chose — exactly why HNSW search
     // is sub-linear while the flat walks pay the full navigable diameter.
     Op("vec_hnsw_search",
-      (s, dir) => {
-        val lay = hnswLayerAssign(s, dir)
-        val upper = hnswUpperEdges(s, dir)
-        // Family-shared fused edge frames, built on the session's conf
-        // and released by Caches after the last walk key.
-        hnswSearchQuery0(s, dir, hnswTopLayer(lay), lay, occupiedLevels(upper),
-          walkLevelEdgesCached(s, dir), walkSym0Cached(s, dir))
-      },
+      (s, dir) => hnswSearchQuery0(s, dir, hnswLayerAssign(s, dir),
+        hnswUpperEdges(s, dir), mutualKnnEdges(s, dir)),
       Some(hnswSearchOracleSql)),
 
     // PERSISTED HNSW LAYERS — the graph-index half of the
@@ -9557,11 +9348,10 @@ object PipelineOps extends OpGroup {
     // ids only, no floats (vectors stay in the corpus table; the serve
     // path fetches them by id, the vectors-in-the-corpus layout). The
     // serve session reads ONLY the reloaded sidecars + the corpus: the
-    // entry node and occupied levels come from the reloaded metadata,
-    // the walk frames are built from the reloaded edges, and the walk
-    // itself is the batched walk with |Q|={0} ([[hnswWalk]]) — the SAME
-    // code vec_hnsw_search runs on the in-session caches, so the oracle
-    // is vec_hnsw_search's
+    // walk ([[hnswWalk]], the batch |Q|={0}) takes its entries from the
+    // reloaded node table and its adjacency from the reloaded edges — the
+    // SAME code vec_hnsw_search runs on the in-session caches, so the
+    // oracle is vec_hnsw_search's
     // verbatim: the reloaded index must answer IDENTICALLY, which is
     // the whole point of persisting it. EquivalenceSuite additionally
     // pins row-equality between the two keys. At 100 TB: the layer
@@ -9570,63 +9360,42 @@ object PipelineOps extends OpGroup {
     // the O(N²/label) kNN build.
     Op("vec_hnsw_persist_search",
       (s, dir) => {
-        // PERSIST the in-session index artifacts (family-shared builds),
-        // RELOAD them fresh, and derive the node table / occupied set /
-        // fused walk frames — three INDEPENDENT per-artifact pipelines
-        // (write -> reload -> derive), overlapped from driver threads
-        // (guide §2.6). Shared in-session cache builds inside the legs
-        // are memo-locked (single build under a race).
+        // PERSIST the in-session index artifacts (family-shared builds)
+        // and RELOAD them fresh — three INDEPENDENT per-artifact legs
+        // (write -> reload), overlapped from driver threads (guide §2.6).
+        // Shared in-session cache builds inside the legs are memo-locked
+        // (single build under a race).
         val root = Tables.tmpDir("graft_hnsw_persist")
         val pool = DriverPool(3)
-        val fNodes = pool.submit(new java.util.concurrent.Callable[
-          (org.apache.spark.sql.DataFrame, Int)] {
-          def call() = {
-            writeSidecar(hnswLayerAssign(s, dir).select("vec_id", "label", "lay"),
-              s"$root/hnsw_nodes")
-            val nodes = s.read.parquet(s"$root/hnsw_nodes")
-            (nodes, hnswTopLayer(nodes))
-          }
-        })
-        val fUpper = pool.submit(new java.util.concurrent.Callable[
-          (Set[Int], org.apache.spark.sql.DataFrame)] {
-          def call() = {
-            writeSidecar(hnswUpperEdges(s, dir), s"$root/hnsw_upper")
-            val rUpper = s.read.parquet(s"$root/hnsw_upper")
-            (occupiedLevels(rUpper), walkLevelEdges(s, dir, rUpper, fused = true))
-          }
-        })
-        val fM0 = pool.submit(new java.util.concurrent.Callable[
-          org.apache.spark.sql.DataFrame] {
-          def call() = {
-            writeSidecar(mutualKnnEdges(s, dir).select("a", "b"),
-              s"$root/hnsw_m0")
-            walkSym0(s, dir, s.read.parquet(s"$root/hnsw_m0"), fused = true)
-          }
-        })
+        def leg(df: => org.apache.spark.sql.DataFrame, name: String) =
+          pool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
+            def call() = {
+              writeSidecar(df, s"$root/$name")
+              s.read.parquet(s"$root/$name")
+            }
+          })
+        val fNodes = leg(hnswLayerAssign(s, dir).select("vec_id", "label", "lay"), "hnsw_nodes")
+        val fUpper = leg(hnswUpperEdges(s, dir), "hnsw_upper")
+        val fM0 = leg(mutualKnnEdges(s, dir).select("a", "b"), "hnsw_m0")
         // Join the legs. If one fails, the daemon pool is abandoned to
         // shutdownNow; every leg's cuts belong to this key either way.
-        val ((nodes, topLayer), (occupied, levelEdges), sym0) =
+        val (nodes, upper, m0) =
           try (fNodes.get(), fUpper.get(), fM0.get())
           finally pool.shutdownNow()
-        // The walk frames are built over the RELOADED edges (the family
-        // caches are deliberately NOT consulted — the serve path must
-        // work in a session that never trained); the walk releases each
-        // once its phase is over.
-        hnswSearchQuery0(s, dir, topLayer, nodes, occupied, levelEdges, sym0)
+        // The walk reads the RELOADED index (the family caches are
+        // deliberately NOT consulted — the serve path must work in a
+        // session that never trained).
+        hnswSearchQuery0(s, dir, nodes, upper, m0)
       },
       Some(hnswSearchOracleSql)),
 
     // BATCHED MULTI-LAYER HNSW DESCENT — the serving shape of the graph
     // family ([[hnswWalk]]): the QUERY AXIS IS DATA — every vec_id ≡ 0
-    // (mod 97) is a query row, and ALL queries advance one hop per
-    // distributed step. The six greedy hops of a level are ONE chained
-    // declarative plan (state referenced once per step via
-    // self-loop-augmented edges, so the prefix executes once — no
-    // 2^steps re-execution), cut at the middle and final level; layer 0
-    // runs the batched ef=4 beam with a per-query windowed top-ef. Job
-    // count is therefore HOP-bounded, never query-bounded — PlanSuite
-    // pins job parity between a 6-query batch, a 17-query batch and
-    // vec_hnsw_search's batch of one.
+    // (mod 97) is a query row, and ALL queries walk in the one task of
+    // [[graphWalk]]: six greedy hops per level 4→1, then the ef=4 beam
+    // at layer 0. The job count is therefore fixed, never query-bounded —
+    // PlanSuite pins job parity between a 6-query batch, a 17-query batch
+    // and vec_hnsw_search's batch of one.
     // Index convention: the batch serves from the SHARED layer graphs
     // (hnswUpperEdges / mutualKnnEdges, query nodes included — they are
     // corpus members); each query is excluded only from its OWN candidate
@@ -9638,9 +9407,9 @@ object PipelineOps extends OpGroup {
     // leg = brute-force exact top-1 via one partial-aggregatable
     // max_by pass (never a per-query window over the corpus). At 100 TB:
     // |Q| queries cost the SAME number of distributed jobs as one query —
-    // each step is a point-lookup join bounded by |Q|·(k+1) candidate
-    // rows, which is why the batched walk is the one serving shape and a
-    // single query is its batch of one.
+    // each step scores |Q|·(k+1) candidates in memory, which is why the
+    // batched walk is the one serving shape and a single query is its
+    // batch of one.
     Op("vec_hnsw_batch_search",
       (s, dir) => batchHnswSearch(s, dir, 97L),
       Some {

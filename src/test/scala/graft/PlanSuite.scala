@@ -3,7 +3,7 @@ package graft
 import graft.functions.{VecDot, VecNormSq}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.{col, expr, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regressions (SURVEY.md §4): the properties that make these
@@ -225,31 +225,52 @@ class PlanSuite extends AnyFunSuite {
       "broadcast and shuffled incremental-dedup paths must collect identically")
   }
 
-  test("hnsw/beam hop: state broadcasts as a point lookup, never a corpus shuffle or cartesian") {
-    // The walk family's step-cost claim (k lookups per step) lives in
-    // the shared descentHop (round-15 verdict item 4 — one hop for the
-    // batched AND single-query walks). In the cross-shard (unfused)
-    // shape the |Q|-bounded STATE must be the BROADCAST side of a hash
-    // join against the edge frame: no CartesianProduct, no
-    // BroadcastNestedLoopJoin (qemb rides the state — there is no 1-row
-    // query crossJoin left in the hop), and the edge frame reaches the
-    // join exchange-free — the only shuffle is the candidate-sized
-    // argmax partial aggregate on qid, never the corpus.
-    import spark.implicits._
-    Tables.conf(spark) // the hop scores via the registered vec_dot/vec_norm_sq
+  test("graph walk: one single-task stage, never a cartesian or nested-loop join") {
+    // The walk family's step-cost claim (k lookups per step) lives in the
+    // one in-task operator, graphWalk: its four inputs are coalesced to
+    // one partition each WITHOUT a shuffle and zipped, so the whole walk —
+    // adjacency build, every query's descent and beam — is ONE task of ONE
+    // stage, and no join (let alone a cartesian or nested-loop one) plans
+    // a hop. The edge input here spans four partitions, so the pin also
+    // covers the no-shuffle coalesce.
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    val edges = e.select(col("vec_id").as("src"), col("vec_id").as("dst"),
-      col("embedding").as("demb"))
-    val st = Seq((0L, Array(1f, 0f), 5L)).toDF("qid", "qemb", "cur")
-    val p = graft.ops.PipelineOps.descentHop(edges, st, fused = false, track = false)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(p.contains("BroadcastHashJoin"),
-      "the walk state must broadcast into a hash join against the edges")
+    val edges = spark.range(0, 200, 1, 4)
+      .select(lit(0).as("lvl"), col("id").as("a"), (col("id") + 1).as("b"))
+    val q = e.filter(pmod(col("vec_id"), lit(97L)) === 0)
+      .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
+    val walk = graft.ops.PipelineOps.graphWalk(edges, e, q,
+      e.select(col("vec_id"), lit(0).as("lay")), levels = Seq(0), beam = true)
+    val p = walk.queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "a walk step must never go cartesian or nested-loop")
-    assert(!p.contains("Exchange hashpartitioning(src")
-      && !p.contains("Exchange hashpartitioning(dst"),
-      "a walk step must not shuffle the edge frame; only the qid argmax may exchange")
+    val (jobs, stages, tasks) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger, new java.util.concurrent.atomic.AtomicInteger)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(
+          st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        tasks.addAndGet(st.stageInfo.numTasks)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val n = try {
+      val rows = walk.collect().length
+      // Listener delivery is async — wait for the counts to stabilize.
+      var last = (-1, -1, -1)
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(50)
+        val now = (jobs.get, stages.get, tasks.get)
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+      rows
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(n > 0, "the walk answered no query")
+    assert((jobs.get, stages.get, tasks.get) == ((1, 1, 1)),
+      s"the walk must run as one single-task stage: jobs/stages/tasks = " +
+        s"${jobs.get}/${stages.get}/${tasks.get}")
   }
 
   test("round-14 ops: no plan ever goes cartesian") {
@@ -279,10 +300,10 @@ class PlanSuite extends AnyFunSuite {
     }
   }
 
-  test("vec_hnsw_batch_search: jobs are hop-bounded, not query-bounded; walk shapes agree") {
+  test("vec_hnsw_batch_search: jobs are hop-bounded, not query-bounded") {
     // The whole point of the batched op (round-14 verdict item 1): a
     // 3x-larger query batch must cost the SAME number of Spark jobs —
-    // the walk advances all queries one hop per job, it never loops per
+    // the walk runs every query in its one task, it never loops per
     // query. Warm the shared family caches first so both measured runs
     // count only walk + action jobs.
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -325,14 +346,6 @@ class PlanSuite extends AnyFunSuite {
     assert(math.abs(small - single) <= 2,
       s"vec_hnsw_search must cost the same jobs as a full batch: mod97=$small vec_hnsw_search=$single")
     assert(large <= 45, s"walk jobs must stay hop-bounded, got $large")
-    // Dual-shape equality: the fused per-shard local walk and the
-    // cross-shard broadcast point-lookup walk must return identical rows.
-    val fused = graft.ops.PipelineOps.batchHnswSearch(spark, sf0001, 97L)
-      .collect().map(_.toString).toSeq
-    val bcast = graft.ops.PipelineOps
-      .batchHnswSearch(spark, sf0001, 97L, fusedWalk = false)
-      .collect().map(_.toString).toSeq
-    assert(fused == bcast, "fused and broadcast walk shapes diverged")
     assert(!plan("vec_hnsw_batch_search").contains("CartesianProduct"))
   }
 

@@ -957,59 +957,72 @@ class UnitSuite extends AnyFunSuite {
     // Hand-built navigable graph: 1–2, 2–3, 2–5, 3–9 with query sims
     // 1→0.1, 2→0.5, 3→0.4, 5→0.45, 9→0.9 — realized as 2-d unit float
     // vectors (s, √(1−s²)) against the query (1, 0), whose cosine is s up
-    // to float casting. From entry node 1 the greedy walk ([[descentHop]],
-    // the shared hop of every descent in the walk family) reaches 2 and
-    // stops — every neighbor of 2 (1, 3, 5) scores below it, yet the TRUE
-    // top-1 (9, sim 0.9) sits behind the downhill hop 2→3. An ef=4
-    // frontier ([[beamStep]], the shared layer-0 step) keeps 3 alive in
-    // the beam, expands its neighborhood, and surfaces 9 — the
-    // recall-vs-lookups trade beam width exists for. Fixed 6 steps stand
-    // in for the ops' early-stop: both maps are idempotent at stability.
-    // (A graph with no entry node is the next test's case: the walk has
-    // no state row and the ops answer the exact top-1.)
-    Tables.conf(spark) // the hops score via the registered vec_dot/vec_norm_sq
+    // to float casting. From entry node 1 the greedy walk (six greedy
+    // hops of [[graphWalk]], the one walk of the graph-search keys)
+    // reaches 2 and stops — every neighbor of 2 (1, 3, 5) scores below
+    // it, yet the TRUE top-1 (9, sim 0.9) sits behind the downhill hop
+    // 2→3. An ef=4 frontier (six beam steps) keeps 3 alive in the beam,
+    // expands its neighborhood, and surfaces 9 — the recall-vs-lookups
+    // trade beam width exists for. Fixed 6 steps stand in for the ops'
+    // early-stop: both maps are idempotent at stability. (A graph with no
+    // entry node is the next test's case: the walk has no row and the
+    // ops answer the exact top-1.)
     val sims = Seq(1L -> 0.1, 2L -> 0.5, 3L -> 0.4, 5L -> 0.45, 9L -> 0.9)
     def v(s: Double) = Array(s.toFloat, math.sqrt(1 - s * s).toFloat)
-    val und = Seq((1L, 2L), (2L, 3L), (2L, 5L), (3L, 9L))
-    val simOf = sims.toMap
-    val edges = (und ++ und.map(_.swap) ++ sims.map { case (n, _) => (n, n) })
-      .map { case (a, b) => (a, b, v(simOf(b))) }.toDF("src", "dst", "demb")
-    val qv = Array(1f, 0f)
-    def st0(entry: Long) =
-      Seq((0L, qv, entry, entry.toString, 0.0))
-        .toDF("qid", "qemb", "cur", "path", "cursim")
-    def walk(e: org.apache.spark.sql.DataFrame, entry: Long) =
-      (1 to 6).foldLeft(st0(entry)) { (st, _) =>
-        ops.PipelineOps.descentHop(e, st, fused = false, track = true)
-      }.head()
-    val g = walk(edges, 1L)
-    assert(g.getAs[Long]("cur") == 2L, "beam=1 must stop at the local optimum 2")
-    assert(g.getAs[String]("path").split(',').distinct.length == 2) // {1, 2}
-    assert(math.abs(g.getAs[Double]("cursim") - 0.5) < 1e-6)
-    // ef=4 beam from the same entry escapes the ridge.
-    val seed = Seq((0L, qv, 1L)).toDF("qid", "qemb", "cid")
-    var beam = seed
-    val seen = scala.collection.mutable.Set(1L)
-    for (_ <- 1 to 6) {
-      beam = ops.PipelineOps.beamStep(edges, beam, fused = false)
-      seen ++= beam.select("cid").collect().map(_.getLong(0))
+    val corpus = sims.map { case (n, s) => (n, v(s)) }.toDF("vec_id", "embedding")
+    val edges = Seq((1L, 2L), (2L, 3L), (2L, 5L), (3L, 9L))
+      .map { case (a, b) => (0, a, b) }.toDF("lvl", "a", "b")
+    def walk(e: org.apache.spark.sql.DataFrame, entry: Long, greedy: Boolean) = {
+      val rows = ops.PipelineOps.graphWalk(e, corpus,
+        Seq((0L, Array(1f, 0f))).toDF("qid", "qemb"), Seq((entry, 0)).toDF("vec_id", "lay"),
+        levels = if (greedy) Seq(0) else Nil, beam = !greedy).collect()
+      assert(rows.length == 1, s"one walk row per query, got ${rows.length}")
+      rows.head
     }
-    val top = beam.orderBy(desc("sim"), asc("cid")).limit(1).head()
-    assert(top.getAs[Long]("cid") == 9L, "ef=4 must escape to the true top-1")
-    assert(math.abs(top.getAs[Double]("sim") - 0.9) < 1e-6)
-    assert(seen.size == 5, "every node entered the beam along the way")
+    val g = walk(edges, 1L, greedy = true)
+    assert(g.getAs[Long]("found_id") == 2L, "beam=1 must stop at the local optimum 2")
+    assert(g.getAs[Long]("descent_nodes") == 2L) // {1, 2}
+    assert(math.abs(g.getAs[Double]("sim") - 0.5) < 1e-6)
+    // ef=4 beam from the same entry escapes the ridge.
+    val b = walk(edges, 1L, greedy = false)
+    assert(b.getAs[Long]("found_id") == 9L, "ef=4 must escape to the true top-1")
+    assert(math.abs(b.getAs[Double]("sim") - 0.9) < 1e-6)
+    assert(b.getAs[Long]("beam_nodes") == 5L, "every node entered the beam along the way")
     // Seeded form (vec_hnsw_search's layer-0 entry): starting PAST the
     // ridge at 3, even beam=1 reaches the true top-1 — the value the
     // upper-layer descent adds before the beam spends lookups.
-    val sd = walk(edges, 3L)
-    assert(sd.getAs[Long]("cur") == 9L, "a seed past the ridge must reach 9 at beam=1")
-    assert(sd.getAs[String]("path").split(',').distinct.length == 2) // {3, 9}
-    // A seed whose node has only its self-loop stays put: candidates are
-    // the seed itself, the walk is idempotent there.
-    val iso = walk(edges.filter(col("src") === 5 && col("dst") === 5), 5L)
-    assert(iso.getAs[Long]("cur") == 5L
-      && iso.getAs[String]("path").split(',').distinct.length == 1,
+    val sd = walk(edges, 3L, greedy = true)
+    assert(sd.getAs[Long]("found_id") == 9L, "a seed past the ridge must reach 9 at beam=1")
+    assert(sd.getAs[Long]("descent_nodes") == 2L) // {3, 9}
+    // A seed without edges stays put: its only candidate is itself, the
+    // walk is idempotent there.
+    val iso = walk(edges.filter(lit(false)), 5L, greedy = true)
+    assert(iso.getAs[Long]("found_id") == 5L && iso.getAs[Long]("descent_nodes") == 1L,
       "isolated seed lands on itself")
+  }
+
+  test("graph walk: bit-identical sims go to the smaller id, in the greedy hop and the beam's fourth slot") {
+    // Twins 6 and 8 share one vector, so their sims are bit-identical;
+    // only 6 links on to 10, the true top-1. Each edge list names 8
+    // before 6, so only the (sim DESC, id ASC) order can pick 6.
+    val sims = Seq(1L -> 0.1, 2L -> 0.5, 3L -> 0.4, 5L -> 0.45, 6L -> 0.3, 8L -> 0.3, 10L -> 0.95)
+    def v(s: Double) = Array(s.toFloat, math.sqrt(1 - s * s).toFloat)
+    val corpus = sims.map { case (n, s) => (n, v(s)) }.toDF("vec_id", "embedding")
+    def walk(und: Seq[(Long, Long)], greedy: Boolean) =
+      ops.PipelineOps.graphWalk(und.map { case (a, b) => (0, a, b) }.toDF("lvl", "a", "b"),
+        corpus, Seq((0L, Array(1f, 0f))).toDF("qid", "qemb"), Seq((1L, 0)).toDF("vec_id", "lay"),
+        levels = if (greedy) Seq(0) else Nil, beam = !greedy).head()
+    // Greedy from 1, whose only neighbors are the twins: 1 → 6 → 10. Had
+    // 8 won the tie, the walk would stop at 8 (its only neighbor is 1).
+    val g = walk(Seq((1L, 8L), (1L, 6L), (6L, 10L)), greedy = true)
+    assert(g.getAs[Long]("found_id") == 10L && g.getAs[Long]("descent_nodes") == 3L,
+      s"the greedy hop must take 6 over its twin 8: $g")
+    // Beam from 1: step 1 ranks 2, 5, 3 and then the twins for the fourth
+    // slot; 6 takes it, so step 2 reaches 10. Had 8 taken it, the beam
+    // would stay {2, 5, 3, 8} and answer 2.
+    val b = walk(Seq((1L, 2L), (1L, 3L), (1L, 5L), (1L, 8L), (1L, 6L), (6L, 10L)), greedy = false)
+    assert(b.getAs[Long]("found_id") == 10L, s"the beam's fourth slot must go to 6: $b")
+    assert(b.getAs[Long]("beam_nodes") == 6L) // {1, 2, 3, 5, 6, 10}
   }
 
   test("graph greedy and beam search: no mutual edge off the query answers the exact top-1") {
@@ -1591,5 +1604,36 @@ class UnitSuite extends AnyFunSuite {
         }
       } finally files.close()
     assert(hits.isEmpty, s"sys.env read in an op file: ${hits.mkString(", ")}")
+  }
+
+  test("lint: every Scaladoc [[link]] in src/main names a declaration in src/main or an import of its file") {
+    // A link to a deleted or renamed name points the reader at code that
+    // no longer exists. A link's last dotted segment must be declared on
+    // a code line somewhere in src/main, or be imported by the linking file.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root))
+    val walk = java.nio.file.Files.walk(root)
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val lines = files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toSeq)
+    def code(ls: Seq[String]) = ls.filterNot { l =>
+      val t = l.trim; t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+    }
+    val ident = "[A-Za-z_][A-Za-z0-9_]*".r
+    val decl = s"\\b(?:def|val|var|class|object|trait|type)\\s+($ident)".r
+    val declared = lines.flatMap { case (_, ls) =>
+      code(ls).flatMap(l => decl.findAllMatchIn(l).map(_.group(1)))
+    }.toSet
+    val link = "\\[\\[([^\\]]+)\\]\\]".r
+    val bad = lines.flatMap { case (f, ls) =>
+      val imported = code(ls).map(_.trim).filter(_.startsWith("import "))
+        .flatMap(ident.findAllIn(_)).toSet
+      ls.flatMap(link.findAllMatchIn(_).map(_.group(1)))
+        .filterNot { l => val n = l.split('.').last; declared(n) || imported(n) }
+        .map(l => s"${root.relativize(f)}: [[$l]]")
+    }.distinct
+    assert(bad.isEmpty, s"Scaladoc links to no declaration or import: ${bad.mkString(", ")}")
   }
 }
